@@ -296,15 +296,14 @@ object SparkEntry {
 
     // ---- session windows (30m gap) per user ----
     // Batch-native lag→cumsum sessionize (see sessionizeLag): round-15
-    // A/B vs the `session_window` form (tools/Q18Probe, interleaved
-    // fresh JVMs) — parity at sf0.1 (sw 0.69 vs lag 0.76 min, floor
+    // A/B vs the `session_window` form (BASELINE.md, Round 15, "q18
+    // sessionize A/B") — parity at sf0.1 (sw 0.69 vs lag 0.76 min, floor
     // noise both ways), lag ahead at sf1 (1.53 vs 1.64), and
     // DECISIVE at sf10: lag 5.7/6.8 s stable vs sw 8.2/8.4 s mins
     // with 16–36 s spill-prone reps — `session_window`'s
     // Updating/MergingSessions execs degrade under memory pressure
-    // exactly where the 100 TB grade is decided. `session_window`
-    // remains the STREAMING sessionize (EventStreams), where merging
-    // state incrementally is the point.
+    // exactly where the 100 TB grade is decided. The STREAMING
+    // sessionize is EventStreams.sessionizeStateful (explicit state).
     "q18_sessionize" -> ((s, dir) => sessionizeLag(s, dir)),
 
     // ---- JSON extraction (F11 analog) ----
@@ -2060,11 +2059,12 @@ object SparkEntry {
     // q36/q55 pin fixed (bits, bands) knobs; this carrier runs the
     // policy a production ingest actually uses — bits grown with the
     // corpus so expected bucket occupancy stays ~8 and candidate pairs
-    // stay LINEAR in n (tools/OccupancyBitsProbe measured ×17–20 pairs
-    // per ×10 corpus vs ×100 under fixed bits). One count job sizes the
-    // code; the oracle recomputes the identical width from COUNT(*) in
-    // SQL, so the policy arithmetic AND the plane codes at that width
-    // are both value-checked at every scale factor (the chosen width
+    // stay LINEAR in n (BASELINE.md, "The `occupancyBits` production
+    // knob, measured end-to-end": ×17–20 pairs per ×10 corpus vs ×100
+    // under fixed bits). One count job sizes the code; the oracle
+    // recomputes the identical width from COUNT(*) in SQL, so the
+    // policy arithmetic AND the plane codes at that width are both
+    // value-checked at every scale factor (the chosen width
     // rides along as a column). Occupancy summary per band on top: the
     // policy's TARGET (mean occupancy ≈ 8, never a quadratic bucket)
     // is what the carrier asserts, not just the code bits. The mean is
@@ -2101,7 +2101,8 @@ object SparkEntry {
     // aggregate. q56 stays the salting≡plain equivalence carrier; this
     // carrier oracles the plan production code should actually run.
     // Plan pin (partial Aggregate BELOW the join) in ScaleOpsSpec;
-    // salted/plain/pre-agg A/B in BASELINE.md (tools/Q56Probe).
+    // salted/plain/pre-agg A/B in BASELINE.md, Round 20, "q56
+    // production plan A/B".
     "q100_agg_through_join" -> ((s, dir) => {
       val large = Tables.orders(s, dir)
         .select(col("o_custkey").as("custkey"), col("o_totalprice"))
@@ -2123,10 +2124,11 @@ object SparkEntry {
   private val RawFixtureCsv = "/root/repo/data/fixtures/sea_surface_raw.csv"
 
   /** The q18 batch sessionize (accepted over `session_window` on the
-    * round-15 A/B — tools/Q18Probe): break when the gap to the
-    * previous event is >= 30 min (lag), session id = running break
-    * count (cumsum), then one aggregation. Plan shape: ONE user_id
-    * exchange serves both window passes AND the (user_id, sid)
+    * round-15 A/B — BASELINE.md, Round 15, "q18 sessionize A/B"):
+    * break when the gap to the previous event is >= 30 min (lag),
+    * session id = running break count (cumsum), then one aggregation.
+    * Plan shape: ONE user_id exchange serves both window passes AND
+    * the (user_id, sid)
     * aggregation (hash-partitioning on a PREFIX of the grouping keys
     * satisfies ClusteredDistribution, so no re-shuffle), where
     * `session_window` plans UpdatingSessions/MergingSessions execs —
@@ -2134,7 +2136,7 @@ object SparkEntry {
     * 16–36 s reps) while this stays flat at ~6 s. Tie rows (equal ts)
     * are gap-0 — session assignment is order-independent, so the
     * result is deterministic. */
-  private[graft] def sessionizeLag(s: SparkSession, dir: String): DataFrame = {
+  private def sessionizeLag(s: SparkSession, dir: String): DataFrame = {
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts")
     val prev = lag(col("ts"), 1).over(byUser)
@@ -2164,11 +2166,11 @@ object SparkEntry {
     * (the exact stage's bloom-blob collect + confirm join, the near
     * stage's signing, the semantic stage's coding) — without the
     * checkpoint each consumer re-runs the documents ⋈ embeddings
-    * join (measured in tools/Q87Probe; the re-derivation was ~30% of
-    * the cell at sf0.1). In the STREAMING twin this materialize-once
-    * role is played by the landing dir itself. */
-  private[graft] def fullIngestBase(s: SparkSession, dir: String,
-      checkpointCorpus: Boolean = true): (DataFrame, DataFrame) = {
+    * join (BASELINE.md, Round 15, "q87 phase table": the
+    * re-derivation was ~30% of the cell at sf0.1). In the STREAMING
+    * twin this materialize-once role is played by the landing dir
+    * itself. */
+  private def fullIngestBase(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // r21: materialize the doc⨝embedding base ONCE — it feeds THREE
     // subtrees (base, corpus, batch), and without the checkpoint the
     // r20 executed plan re-ran the two scans + the join per subtree
@@ -2183,8 +2185,7 @@ object SparkEntry {
     val base = de.filter(col("doc_id") % 20 === 0)
       .select(col("doc_id").as("base_id"), col("text").as("base_text"),
               col("vec").as("base_v"))
-    val corpus0 = de.filter(col("doc_id") % 20 === 0)
-    val corpus = if (checkpointCorpus) corpus0.localCheckpoint() else corpus0
+    val corpus = de.filter(col("doc_id") % 20 === 0).localCheckpoint()
     val batch = de.filter(col("doc_id") % 20 =!= 0)
       .join(base, col("base_id") === col("doc_id") - (col("doc_id") % 20))
       .select(col("doc_id"),
@@ -2202,10 +2203,8 @@ object SparkEntry {
     (corpus, batch)
   }
 
-  /** The three per-stage is_new flag frames of the q87 carrier —
-    * exposed so tools/Q87Probe times each chain against the SAME code
-    * the carrier runs. */
-  private[graft] def fullIngestFlags(corpus: DataFrame, batch: DataFrame)
+  /** The three per-stage is_new flag frames of the q87 carrier. */
+  private def fullIngestFlags(corpus: DataFrame, batch: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val exactFlag = ops.IncrementalDedup.newDocs(
         corpus.select("doc_id", "text"), batch.select("doc_id", "text"))
@@ -2245,8 +2244,8 @@ object SparkEntry {
     * on). Only worth it when the per-row expression dominates the
     * exchange cost — minhash_sigs (4 perms × every shingle) gains
     * 0.38 → 0.19 s at sf0.1, while bpe_token_count / gram-hash
-    * scans LOSE ~40 ms to the added exchange (RepartProbe A/B), so
-    * only the signature frame opts in. */
+    * scans LOSE ~40 ms to the added exchange (OPTIMIZATION_r21.md,
+    * "Change 5"), so only the signature frame opts in. */
   private[graft] def spreadSmallScan(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // r22 (VERDICT r21 item 6): BYTES bound before the partition-count
@@ -2271,10 +2270,14 @@ object SparkEntry {
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         df.sparkSession.conf.get("spark.graft.spread.maxBytes", "256m")))
       .getOrElse(256L * 1024 * 1024)
+    // saturating: non-file relations may report Long.MaxValue, and two
+    // of those must not wrap negative and slip under the veto
     val fileLeafBytes = df.queryExecution.optimizedPlan.collectLeaves().collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation.sizeInBytes
-    }.sum
+    }.foldLeft(0L) { (acc, b) =>
+      if (b >= Long.MaxValue - acc) Long.MaxValue else acc + b
+    }
     if (fileLeafBytes > maxBytes) df
     // partition probe: the INITIAL (non-adaptive) split count — plan-
     // time file-split arithmetic, no job. That is the right quantity

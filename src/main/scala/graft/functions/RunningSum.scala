@@ -88,5 +88,8 @@ object RunningSum {
   val description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("running_sum"),
     new ExpressionInfo(classOf[RunningSum].getName, "running_sum"),
-    (children: Seq[Expression]) => RunningSum(children.head))
+    (children: Seq[Expression]) => {
+      require(children.length == 1, "running_sum(value) takes exactly 1 argument")
+      RunningSum(children.head)
+    })
 }

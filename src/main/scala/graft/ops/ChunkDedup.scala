@@ -46,32 +46,13 @@ object ChunkDedup {
   /** Per-document dedup report: total chunk count, surviving chunk
     * count, and the reassembled text of the survivors (empty when
     * every chunk of the document appeared earlier in the corpus).
-    *
-    * `fingerprintKey` prefixes the first-occurrence window's partition
-    * key with `xxhash64(chunk)`: grouping by (hash, chunk) is exactly
-    * grouping by chunk (equal chunks hash equal), but the in-partition
-    * sort then resolves almost every DISTINCT-chunk comparison on the
-    * 8-byte prefix instead of a full text memcmp — the fingerprint
-    * discipline q35/q49 use on their gram joins. Exactness is
-    * unchanged: the full chunk stays in the key, so a hash collision
-    * merely shares a sort neighborhood, never a group. A/B'd via
-    * [[graft.tools.ChunkKeyProbe]] (round 13) and REJECTED as the
-    * default: the shuffled row carries the chunk text either way
-    * (reassembly needs it), and at w=8 the chunks are short enough
-    * that sort comparisons don't dominate — sf1 0.629→0.616 s, sf10
-    * 1.412→1.354 s mins with medians inside noise, no material win at
-    * either scale (BASELINE round 13). Kept as a measured knob with an
-    * equivalence test (ChunkDedupSpec); a corpus with much longer
-    * chunk texts is where it would earn its keep. */
+    * An `xxhash64(chunk)`-prefixed window key was measured and rejected
+    * (BASELINE.md, Round 13 first session, "q73 keeper-window key A/B"). */
   def dedup(docs: DataFrame, textCol: String = "text",
-            idCol: String = "doc_id", w: Int = 8,
-            fingerprintKey: Boolean = false): DataFrame = {
-    val partKey =
-      if (fingerprintKey) Seq(xxhash64(col("chunk")), col("chunk"))
-      else Seq(col("chunk"))
+            idCol: String = "doc_id", w: Int = 8): DataFrame =
     chunks(docs, textCol, idCol, w)
       .withColumn("keep", row_number().over(
-        Window.partitionBy(partKey: _*).orderBy(col(idCol), col("pos"))) === 1)
+        Window.partitionBy(col("chunk")).orderBy(col(idCol), col("pos"))) === 1)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_chunks"),
            sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -88,5 +69,4 @@ object ChunkDedup {
                  struct(col("pos"), col("chunk"))))),
                s => s.getField("chunk")), " ").as("text_dedup"))
       .select(col(idCol), col("n_chunks"), col("n_kept"), col("text_dedup"))
-  }
 }

@@ -243,15 +243,13 @@ object NgramLm {
     * open-addressing maps per position — no explode (the relational
     * path materializes ~2(t−1) entry rows per doc), no join, no
     * doc-regroup exchange, nothing shuffled at any scale. Above the
-    * bound (or under SPARK_GRAFT_LM_JOIN=1, the A/B probe switch) it
-    * falls back to [[score]], which shuffle-joins the slim 8-byte
+    * bound it falls back to [[score]], which shuffle-joins the slim 8-byte
     * keys — per-row and per-group semantics agree under the
     * uniqueness contract, so the fallback is seamless. */
   def scoreRows(docs: DataFrame, trained: TrainedLm,
                 textCol: String = "text", idCol: String = "doc_id",
                 langCol: String = "lang"): DataFrame =
-    if (trained.entries > BroadcastEntries ||
-        sys.env.get("SPARK_GRAFT_LM_JOIN").contains("1"))
+    if (trained.entries > BroadcastEntries)
       score(docs, trained, textCol, idCol, langCol)
     else {
       import org.apache.spark.sql.graftbridge.ColumnBridge

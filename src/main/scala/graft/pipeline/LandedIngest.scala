@@ -76,32 +76,22 @@ object LandedIngest {
   /** The landing side of [[ingest]] without the read-back: callers that
     * immediately run their own pruned query over the landed dir (the
     * q59 carrier) should not pay a second directory listing for a
-    * DataFrame they discard. */
+    * DataFrame they discard. Its build/write phase split is recorded
+    * in BASELINE.md, Round 8, "q59 cause". */
   def land(spark: SparkSession, landingDir: String,
-           points: Seq[(Double, Double)] = Points): Unit =
-    graft.sources.ZOrderLanding.land(
-      cleanedFrame(spark, points),
-      landingDir, bucketShift = 6, overwrite = true,
-      extraPartitionCols = Seq("month"))
-
-  /** The landing's INPUT frame — fetch + clean + the month / grid-index
-    * partition-key derivations — as one shared builder, so the q59
-    * carrier ([[land]]) and the phase-timing probe
-    * ([[graft.tools.Q59Probe]]) are guaranteed to measure the SAME
-    * pipeline: the probe times this builder as its "build" phase and
-    * [[graft.sources.ZOrderLanding.land]] as its "write" phase, and any
-    * future change here flows to both automatically. */
-  def cleanedFrame(spark: SparkSession,
-                   points: Seq[(Double, Double)] = Points): DataFrame = {
+           points: Seq[(Double, Double)] = Points): Unit = {
     val fx = fixtures(points)
     val fetched = ErddapSource.fetchMany(
       spark, points, StartDate, EndDate,
       backendFactory = () => new FixtureBackend(fx),
       minIntervalMs = 0L, sleeper = _ => ())
-    Clean.cleanApiResponse(fetched.rows.drop("req_lat", "req_lon"))
+    val cleaned = Clean.cleanApiResponse(fetched.rows.drop("req_lat", "req_lon"))
       .withColumn("month", date_format(col("time"), "yyyy-MM"))
       .withColumn("lat_idx", Grid.latIdxCol(col("latitude")).cast("long"))
       .withColumn("lon_idx", Grid.lonIdxCol(col("longitude")).cast("long"))
+    graft.sources.ZOrderLanding.land(
+      cleaned, landingDir, bucketShift = 6, overwrite = true,
+      extraPartitionCols = Seq("month"))
   }
 
   /** The pruned point query over the landed table: one month, one grid

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming surface over the `events` stream (SURVEY §2.9
   * extended scope; the reference is batch-only, so semantics are
   * spec'd from Spark's event-time model and oracled by the batch
-  * analogs q16–q18, which run the SAME transforms below on a static
+  * analogs q16 and q18, which run the SAME transforms below on a static
   * frame).
   *
   * Design rule: every transform is `DataFrame => DataFrame` so one
@@ -68,25 +68,6 @@ object EventStreams {
               lit(1.8446744073709552e19)))
           .as("n_distinct_est"))
   }
-
-  /** Sliding 1 h window every 15 min (streaming form of q17). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("n"))
-
-  /** Session windows with a 30 min gap, per user (streaming form of
-    * q18, via the built-in session_window). */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", WatermarkDelay)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-              col("session_window.end").as("session_end"),
-              col("user_id"), col("n_events"))
 
   // ---------- custom state: flatMapGroupsWithState sessionization ----------
 

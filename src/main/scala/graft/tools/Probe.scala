@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
-import graft.core.{GraftSession, Tables}
+import graft.core.GraftSession
 
 /** Dev-loop profiler: time named SparkEntry queries (min of N runs,
   * after warm-up) and optionally dump their formatted plans.
   *
   *   graft.tools.Probe q01_pricing_summary q03_join_segment
   *   graft.tools.Probe --explain q32_describe
-  *   graft.tools.Probe --adhoc   (runs the inline experiments below)
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -18,7 +15,6 @@ object Probe {
     val explain = args.contains("--explain")
     val names = args.filterNot(_.startsWith("--"))
 
-    if (args.contains("--adhoc")) adhoc(spark, sfDir)
     if (args.contains("--entry")) {
       val n = graft.SparkEntry.entry(spark).count()
       println(s"[probe] entry() rows = $n")
@@ -39,28 +35,5 @@ object Probe {
       println(f"$name%-24s min ${times.min}%6.3f  runs ${times.map(t => f"$t%.3f").mkString(" ")}")
     }
     spark.stop()
-  }
-
-  /** Scratch space for micro-experiments; edit freely between runs. */
-  private def adhoc(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    // r22: the q98 structural claim, demonstrated directly (VERDICT
-    // r21 item 1) — landManifests' marginal cost per EXTRA epoch vs
-    // the one-epoch base. r20 shape: each epoch re-ran the corpus
-    // text scan (marginal epoch ~ the full base). r21+r22 shape: one
-    // text scan + one shared range exchange for all epochs, so the
-    // marginal epoch is the slim keying/packing work only.
-    val docs = Tables.documents(spark, sfDir)
-    def time(label: String)(f: => Unit): Unit = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[adhoc] $label%-44s min ${ts.min}%6.3f")
-    }
-    for (e <- Seq(1, 2, 4, 8)) {
-      val epochs = (7 until 7 + e)
-      time(s"landManifests epochs=$e") {
-        graft.ops.EpochShuffle.landManifests(docs, s"/tmp/q98probe_$e", epochs, 2000L)
-      }
-    }
   }
 }

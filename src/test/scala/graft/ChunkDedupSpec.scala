@@ -47,24 +47,6 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestSession {
     assert(r(1L) == ((3L, 2L, "a b z w")))
   }
 
-  test("fingerprint-prefixed window key is result-identical") {
-    // Grouping by (xxhash64(chunk), chunk) IS grouping by chunk —
-    // equal chunks hash equal — so the fingerprintKey=true plan must
-    // return exactly the same report on a corpus exercising in-batch,
-    // cross-doc, and within-doc duplication.
-    val docs = Seq(
-      (0L, "m m a b c d"), (1L, "a b m m z w"), (2L, "a b a b"),
-      (3L, ""), (4L, "z w q r"), (5L, "m m"))
-    for (w <- Seq(1, 2, 3)) {
-      val base = ChunkDedup.dedup(docs.toDF("doc_id", "text"), "text", "doc_id", w)
-        .collect().map(_.toSeq).sortBy(_.head.toString)
-      val fp = ChunkDedup.dedup(docs.toDF("doc_id", "text"), "text", "doc_id", w,
-          fingerprintKey = true)
-        .collect().map(_.toSeq).sortBy(_.head.toString)
-      assert(base.toSeq == fp.toSeq, s"w=$w variant mismatch")
-    }
-  }
-
   test("native word_chunks equals the split/slice/join composition") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

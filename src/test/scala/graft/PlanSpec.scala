@@ -102,7 +102,30 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       val p = vetoed.queryExecution.explainString(FormattedMode)
       assert(!p.contains("REPARTITION_BY_NUM") && !p.contains("RoundRobinPartitioning"),
              s"payload above the bytes bound still spread:\n$p")
-    } finally conf.set("spark.graft.spread.maxBytes", "256m")
+    } finally conf.unset("spark.graft.spread.maxBytes")
+  }
+
+  test("spreadSmallScan: unknown-size relations saturate the bytes sum instead of wrapping") {
+    // Non-file relations report Long.MaxValue; summed naively, two of
+    // them wrap negative and slip under the veto, and this under-filled
+    // union would then be round-robin spread.
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.{Row, SQLContext}
+    import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val rel = new BaseRelation with TableScan {
+      override def sqlContext: SQLContext = spark.sqlContext
+      override def schema: StructType = StructType(Seq(StructField("id", LongType)))
+      override def sizeInBytes: Long = Long.MaxValue
+      override def buildScan(): RDD[Row] = spark.sparkContext.parallelize(Seq(Row(1L)), 1)
+    }
+    val df = spark.baseRelationToDataFrame(rel).union(spark.baseRelationToDataFrame(rel))
+    assert(df.rdd.getNumPartitions * 2 <= spark.sparkContext.defaultParallelism,
+      "precondition: the partition probe alone would spread this frame")
+    val out = SparkEntry.spreadSmallScan(df)
+    val p = out.queryExecution.explainString(FormattedMode)
+    assert((out eq df) && !p.contains("RoundRobinPartitioning"),
+      s"Long.MaxValue leaves slipped under the bytes veto:\n$p")
   }
 
   test("q08: rank window and output sort share ONE range exchange") {

@@ -27,6 +27,16 @@ class PrefixSumSpec extends AnyFunSuite with SparkTestSession {
     assert(got == want)
   }
 
+  test("running_sum rejects a wrong argument count with a clear message") {
+    for (call <- Seq("running_sum()", "running_sum(id, id)")) {
+      val e = intercept[Exception](spark.range(3).selectExpr(call).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("running_sum(value) takes exactly 1 argument")),
+        s"$call: ${msgs.mkString(" / ")}")
+    }
+  }
+
   test("range exchange is reused across the offsets and ranked consumers") {
     import spark.implicits._
     // same pinning as PercentilesSpec: both consumers of the

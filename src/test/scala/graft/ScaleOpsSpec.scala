@@ -203,8 +203,8 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("skew mitigation equivalence: AQE-split join and salted join agree with plain") {
-    // The measurement behind BASELINE.md's skew paragraph
-    // (tools/SkewBench at 20M rows, 90% hot key): unmitigated 6.7s,
+    // The measurement behind BASELINE.md's "Skew mitigation, measured
+    // (r5 verdict item 7)" (20M rows, 90% hot key): unmitigated 6.7s,
     // AQE-split 1.0s (wins when its thresholds engage), salted 2.2s
     // (wins over unmitigated; pays small-side replication vs AQE).
     // Timing is environment-bound, so what this spec pins is the
@@ -277,9 +277,10 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestSession {
     // (boilerplate duplicated millions of times at 100 TB) puts that
     // bucket's whole membership on a single join key — in the
     // hub-onto-members join-back AND in every CC propagation round's
-    // `bidir JOIN labels ON b`. This pins the mitigation measured by
-    // tools/CcSkewProbe (4M-member bucket: star edges 5.6→2.1 s, CC
-    // 8.1→3.1 s once AQE splits the hot partition): with skew
+    // `bidir JOIN labels ON b`. This pins the mitigation measured in
+    // BASELINE.md's "q60 star-hub skew, measured (r9)" (4M-member
+    // bucket: star edges 5.6→2.1 s, CC 8.1→3.1 s once AQE splits the
+    // hot partition): with skew
     // thresholds scaled to the data, the propagation join is marked
     // skew=true, and the labeling stays CORRECT and converges in the
     // star's diameter (2 rounds + fixpoint confirm) — the mega bucket
