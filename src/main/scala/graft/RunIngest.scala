@@ -156,68 +156,83 @@ object RunIngest {
     if (code != 0) sys.exit(code)
   }
 
+  /** The flags a maintenance form or stream mode requires, and the
+    * further flags it accepts. */
+  private final case class Flags(required: Seq[String], accepted: Seq[String] = Nil)
+
+  /** One table of who takes which flag. Maintenance forms take ONLY
+    * their own flags: a co-passed stream flag means the user expected a
+    * stream to run too, and any flag the chosen form or mode would
+    * silently ignore exits 0 on intent never honored — so every flag
+    * outside a row is a usage error, as is a missing required one. */
+  private val maintenanceForms = scala.collection.immutable.ListMap(
+    "land-benchmark" -> Flags(Seq("benchmark", "from"), Seq("text-col")),
+    "compact" -> Flags(Seq("corpus"), Seq("target-files", "leaf-parallel")),
+    "stats" -> Flags(Seq("corpus")),
+    "repair" -> Flags(Seq("corpus")),
+    "expire" -> Flags(Seq("corpus", "partition-col", "before")))
+
+  private def stream(required: Seq[String], accepted: String*): Flags =
+    Flags(Seq("in", "corpus", "checkpoint") ++ required,
+      Seq("once", "mode", "id-col") ++ accepted)
+
+  private val streamModes = Map(
+    "exact" -> stream(Nil, "text-col", "partition-by"),
+    "near" -> stream(Nil, "text-col", "partition-by"),
+    "both" -> stream(Nil, "text-col", "partition-by"),
+    "semantic" -> stream(Nil, "vec-col", "tau", "partition-by"),
+    "full" -> stream(Nil, "text-col", "vec-col", "tau", "partition-by"),
+    "index" -> stream(Seq("train"), "vec-col", "coarse-k", "m", "ksub"),
+    "quality" -> stream(Seq("ref", "max-xent"), "text-col", "lang-col"),
+    "dsir" -> stream(Seq("train", "target-pred"), "text-col", "min-logw"),
+    "decontaminate" -> stream(Seq("benchmark"), "text-col", "max-shared"))
+
   /** CLI minus session lifecycle and process exit — IngestCliSpec
     * drives this in-JVM. */
   private[graft] def execute(spark: SparkSession, args: Array[String]): Int = {
+    def usageError(msg: String): Int = {
+      System.err.println(s"[ingest] $msg\n$usage")
+      2
+    }
+    def failing(run: => Int): Int =
+      try run
+      catch {
+        case e: Exception =>
+          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
+          1
+      }
     val opts =
       try parse(args.toList, Map.empty)
-      catch {
-        case e: RuntimeException =>
-          System.err.println(s"[ingest] ${e.getMessage}\n$usage")
-          return 2
-      }
-    // maintenance forms take ONLY their own flags: a co-passed
-    // streaming flag means the user expected a stream to run too, and
-    // silently skipping it would exit 0 on work never done
-    val forms = Seq("compact", "expire", "repair", "stats", "land-benchmark")
-      .filter(opts.contains)
-    if (forms.nonEmpty) {
-      val streamFlags =
-        (Seq("in", "checkpoint", "once", "mode", "id-col",
-             "vec-col", "tau", "partition-by") ++
-         // --land-benchmark legitimately picks the gram column
-         (if (opts.contains("land-benchmark")) Nil else Seq("text-col")))
-          .filter(opts.contains)
-      if (streamFlags.nonEmpty) {
-        System.err.println(
-          s"[ingest] ${streamFlags.map("--" + _).mkString(", ")} cannot be " +
-          s"combined with --${forms.head} (maintenance runs no stream)\n$usage")
-        return 2
+      catch { case e: RuntimeException => return usageError(e.getMessage) }
+    val form = maintenanceForms.keys.find(opts.contains)
+    val mode = opts.getOrElse("mode", "both")
+    val (runName, flags) = form match {
+      case Some(f) => (s"--$f", maintenanceForms(f))
+      case None => streamModes.get(mode) match {
+        case Some(fl) => (s"--mode $mode", fl)
+        case None => return usageError(s"unknown --mode '$mode'")
       }
     }
-    if (forms.length > 1) {
-      System.err.println(
-        s"[ingest] ${forms.map("--" + _).mkString(", ")} are separate maintenance " +
-        s"runs; pass one at a time\n$usage")
-      return 2
-    }
-    val crossForm =
-      (if (opts.contains("expire") || opts.contains("repair") ||
-           opts.contains("stats") || opts.contains("land-benchmark"))
-         Seq("target-files", "leaf-parallel") else Nil) ++
-      (if (opts.contains("compact") || opts.contains("repair") ||
-           opts.contains("stats") || opts.contains("land-benchmark"))
-         Seq("partition-col", "before") else Nil) ++
-      (if (forms.nonEmpty && !opts.contains("land-benchmark"))
-         Seq("benchmark", "from", "max-shared") else Nil) ++
-      (if (opts.contains("land-benchmark"))
-         // all stream-gate value flags: silently dropping one would
-         // exit 0 on intent never honored (the block's own rule)
-         Seq("corpus", "max-shared", "train", "target-pred", "min-logw",
-             "ref", "max-xent", "lang-col", "coarse-k", "m", "ksub") else Nil)
-    val crossed = crossForm.filter(opts.contains)
-    if (crossed.nonEmpty) {
-      System.err.println(
-        s"[ingest] ${crossed.map("--" + _).mkString(", ")} belongs to another " +
-        s"maintenance form\n$usage")
-      return 2
-    }
-    if (opts.contains("land-benchmark")) {
-      if (!(opts.contains("benchmark") && opts.contains("from"))) {
-        System.err.println(s"[ingest] --land-benchmark needs --benchmark DIR and --from PATH\n$usage")
-        return 2
+    val missing = flags.required.filterNot(opts.contains)
+    if (missing.nonEmpty)
+      return usageError(s"$runName needs ${missing.map("--" + _).mkString(", ")}")
+    val stray = opts.keys.filterNot(k =>
+      form.contains(k) || flags.required.contains(k) || flags.accepted.contains(k))
+    if (stray.nonEmpty)
+      return usageError(s"${stray.toSeq.sorted.map("--" + _).mkString(", ")} " +
+        s"not accepted by $runName")
+
+    // positive ints, usage-error on junk
+    def posInt(name: String, default: Int): Either[String, Int] =
+      opts.get(name) match {
+        case None => Right(default)
+        case Some(v) => v.toIntOption match {
+          case Some(n) if n > 0 => Right(n)
+          case _ => Left(s"--$name must be a positive integer, got '$v'")
+        }
       }
-      return try {
+    form match {
+      case Some("land-benchmark") => return failing {
         graft.ops.Decontaminate.landBenchmark(
           spark.read.parquet(opts("from")), opts("benchmark"),
           textCol = opts.getOrElse("text-col", "text"))
@@ -225,60 +240,24 @@ object RunIngest {
         println(s"[ingest] landed $n distinct benchmark gram fingerprint(s) " +
           s"at ${opts("benchmark")}")
         0
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-          1
       }
-    }
-    if (opts.contains("compact")) {
-      if (!opts.contains("corpus")) {
-        System.err.println(s"[ingest] --compact needs --corpus\n$usage")
-        return 2
-      }
-      val target =
-        try opts.getOrElse("target-files", "4").toInt
-        catch {
-          case _: NumberFormatException =>
-            System.err.println(s"[ingest] --target-files must be an integer\n$usage")
-            return 2
+      case Some("compact") =>
+        val (target, leafPar) =
+          (for (t <- posInt("target-files", 4); p <- posInt("leaf-parallel", 4)) yield (t, p)) match {
+            case Left(msg) => return usageError(msg)
+            case Right(tp) => tp
+          }
+        return failing {
+          val s = EventStreams.compactLanding(spark, opts("corpus"), target, leafPar)
+          if (s.rows < 0L)
+            println(s"[ingest] compaction no-op: ${s.filesBefore} file(s) already <= $target")
+          else
+            println(s"[ingest] compacted ${opts("corpus")}: ${s.filesBefore} -> " +
+              s"${s.filesAfter} file(s), ${s.rows} rows, carries " +
+              (if (s.carriesKept) "kept" else "DROPPED (stale carry, or a foreign write detected in the window — next batch reseeds)"))
+          0
         }
-      if (target <= 0) {
-        System.err.println(s"[ingest] --target-files must be positive, got $target\n$usage")
-        return 2
-      }
-      val leafPar =
-        try opts.getOrElse("leaf-parallel", "4").toInt
-        catch {
-          case _: NumberFormatException =>
-            System.err.println(s"[ingest] --leaf-parallel must be an integer\n$usage")
-            return 2
-        }
-      if (leafPar <= 0) {
-        System.err.println(s"[ingest] --leaf-parallel must be positive, got $leafPar\n$usage")
-        return 2
-      }
-      return try {
-        val s = EventStreams.compactLanding(spark, opts("corpus"), target, leafPar)
-        if (s.rows < 0L)
-          println(s"[ingest] compaction no-op: ${s.filesBefore} file(s) already <= $target")
-        else
-          println(s"[ingest] compacted ${opts("corpus")}: ${s.filesBefore} -> " +
-            s"${s.filesAfter} file(s), ${s.rows} rows, carries " +
-            (if (s.carriesKept) "kept" else "DROPPED (stale carry, or a foreign write detected in the window — next batch reseeds)"))
-        0
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-          1
-      }
-    }
-    if (opts.contains("stats")) {
-      if (!opts.contains("corpus")) {
-        System.err.println(s"[ingest] --stats needs --corpus\n$usage")
-        return 2
-      }
-      return try {
+      case Some("stats") => return failing {
         val s = EventStreams.landingStats(spark, opts("corpus"))
         println(f"[ingest] ${opts("corpus")}: ${s.totalFiles} visible file(s), " +
           f"${s.totalBytes / 1e6}%.1f MB across ${s.leaves.size} dir(s)" +
@@ -292,18 +271,8 @@ object RunIngest {
           s.debris.foreach(d => println(s"[ingest]   $d"))
         }
         0
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-          1
       }
-    }
-    if (opts.contains("repair")) {
-      if (!opts.contains("corpus")) {
-        System.err.println(s"[ingest] --repair needs --corpus\n$usage")
-        return 2
-      }
-      return try {
+      case Some("repair") => return failing {
         val s = EventStreams.repairLanding(spark, opts("corpus"))
         println(s"[ingest] repair of ${opts("corpus")}: ${s.oldsRestored} aside " +
           s"dir(s) restored, ${s.oldsDeleted} completed swap(s) finished, " +
@@ -315,20 +284,8 @@ object RunIngest {
           s.unresolved.foreach(p => System.err.println(s"[ingest]   $p"))
           1
         } else 0
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-          1
       }
-    }
-    if (opts.contains("expire")) {
-      val needed = Seq("corpus", "partition-col", "before").filterNot(opts.contains)
-      if (needed.nonEmpty) {
-        System.err.println(
-          s"[ingest] --expire needs ${needed.map("--" + _).mkString(", ")}\n$usage")
-        return 2
-      }
-      return try {
+      case Some("expire") => return failing {
         val s = EventStreams.expireLanding(
           spark, opts("corpus"), opts("partition-col"), opts("before"))
         if (s.dirsDropped == 0)
@@ -339,117 +296,26 @@ object RunIngest {
             s"${s.filesDropped} file(s) from ${opts("corpus")}, carries " +
             (if (s.carriesKept) "kept" else "DROPPED (stale carry, or a foreign write detected in the window — next batch reseeds)"))
         0
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-          1
       }
-    }
-    val compactOnly = Seq("target-files", "leaf-parallel").filter(opts.contains)
-    if (compactOnly.nonEmpty) {
-      // only meaningful under --compact; ignoring it would silently
-      // run a full stream when the user meant a maintenance rewrite
-      System.err.println(
-        s"[ingest] ${compactOnly.map("--" + _).mkString(", ")} needs --compact\n$usage")
-      return 2
-    }
-    val expireOnly = Seq("partition-col", "before").filter(opts.contains)
-    if (expireOnly.nonEmpty) {
-      // only meaningful under --expire — same no-silent-default rule
-      System.err.println(
-        s"[ingest] ${expireOnly.map("--" + _).mkString(", ")} needs --expire\n$usage")
-      return 2
-    }
-    val required = Seq("in", "corpus", "checkpoint")
-    val missing = required.filterNot(opts.contains)
-    if (missing.nonEmpty) {
-      System.err.println(
-        s"[ingest] missing ${missing.map("--" + _).mkString(", ")}\n$usage")
-      return 2
-    }
-    val mode = opts.getOrElse("mode", "both")
-    if (!Seq("exact", "near", "both", "semantic", "full", "index", "quality",
-             "dsir", "decontaminate").contains(mode)) {
-      System.err.println(s"[ingest] unknown --mode '$mode'\n$usage")
-      return 2
-    }
-    // a dedup-relevant flag the chosen mode would silently ignore is
-    // the same bug class as a co-passed stream flag on --compact
-    val wrongModeFlags =
-      (if (mode == "semantic") Seq("text-col").filter(opts.contains)
-       else if (mode == "full") Nil
-       else if (mode == "index")
-         Seq("text-col", "tau", "partition-by").filter(opts.contains)
-       else if (mode == "quality")
-         Seq("vec-col", "tau", "partition-by").filter(opts.contains)
-       else if (mode == "dsir" || mode == "decontaminate")
-         Seq("vec-col", "tau", "partition-by").filter(opts.contains)
-       else Seq("vec-col", "tau").filter(opts.contains)) ++
-      (if (mode != "index" && mode != "dsir")
-         Seq("train").filter(opts.contains) else Nil) ++
-      (if (mode != "index")
-         Seq("coarse-k", "m", "ksub").filter(opts.contains)
-       else Nil) ++
-      (if (mode != "quality")
-         Seq("ref", "max-xent", "lang-col").filter(opts.contains)
-       else Nil) ++
-      (if (mode != "dsir")
-         Seq("target-pred", "min-logw").filter(opts.contains)
-       else Nil) ++
-      (if (mode != "decontaminate")
-         Seq("benchmark", "max-shared").filter(opts.contains)
-       else Nil) ++
-      Seq("from").filter(opts.contains)
-    if (wrongModeFlags.nonEmpty) {
-      System.err.println(
-        s"[ingest] ${wrongModeFlags.map("--" + _).mkString(", ")} " +
-        s"not applicable to mode=$mode\n$usage")
-      return 2
-    }
-    if (mode == "index" && !opts.contains("train")) {
-      System.err.println("[ingest] --mode index requires --train PATH " +
-        s"(codebooks are trained once from a fixed source, not the stream)\n$usage")
-      return 2
-    }
-    if (mode == "quality" && !(opts.contains("ref") && opts.contains("max-xent"))) {
-      System.err.println("[ingest] --mode quality requires --ref PATH and " +
-        "--max-xent X (the LM is trained once from a fixed reference, " +
-        s"not the stream)\n$usage")
-      return 2
-    }
-    if (mode == "dsir" && !(opts.contains("train") && opts.contains("target-pred"))) {
-      System.err.println("[ingest] --mode dsir requires --train PATH and " +
-        "--target-pred EXPR (the histograms are trained once from a fixed " +
-        s"corpus, not the stream)\n$usage")
-      return 2
-    }
-    if (mode == "decontaminate" && !opts.contains("benchmark")) {
-      System.err.println("[ingest] --mode decontaminate requires --benchmark DIR " +
-        s"(a gram set previously landed by --land-benchmark)\n$usage")
-      return 2
+      case _ => ()
     }
     val maxShared = opts.get("max-shared").map(_.toLongOption) match {
       case Some(Some(n)) if n >= 0 => n
       case Some(_) =>
-        System.err.println("[ingest] --max-shared needs a non-negative " +
-          s"integer (a shared-gram count)\n$usage")
-        return 2
+        return usageError("--max-shared needs a non-negative integer (a shared-gram count)")
       case None => 0L
     }
     val minLogw = opts.get("min-logw").map(_.toLongOption) match {
       case Some(Some(n)) => n
       case Some(None) =>
-        System.err.println("[ingest] --min-logw needs an integer " +
-          s"(fixed-point micro-nats)\n$usage")
-        return 2
+        return usageError("--min-logw needs an integer (fixed-point micro-nats)")
       case None => 1L // the paper's strict w > 1 rule
     }
     val maxXent = opts.get("max-xent").map(_.toDoubleOption) match {
       case Some(Some(x)) if !x.isNaN && x >= 0 => x
       case Some(_) =>
-        System.err.println("[ingest] --max-xent needs a non-negative number " +
-          s"(per-token cross-entropy is non-negative)\n$usage")
-        return 2
+        return usageError("--max-xent needs a non-negative number " +
+          "(per-token cross-entropy is non-negative)")
       case None => 0.0 // unused outside quality mode
     }
     val langCol = opts.getOrElse("lang-col", "lang")
@@ -457,30 +323,18 @@ object RunIngest {
     val idCol = opts.getOrElse("id-col", "doc_id")
     val vecCol = opts.getOrElse("vec-col", "embedding")
     val tau = opts.get("tau").map(_.toDoubleOption) match {
-      case Some(None) =>
-        System.err.println(s"[ingest] --tau needs a number\n$usage")
-        return 2
+      case Some(None) => return usageError("--tau needs a number")
       case Some(Some(t)) => t
       case None => 0.9
     }
-    // index-mode codebook geometry (positive ints, usage-error on junk)
-    def posInt(name: String, default: Int): Either[String, Int] =
-      opts.get(name) match {
-        case None => Right(default)
-        case Some(v) => v.toIntOption match {
-          case Some(n) if n > 0 => Right(n)
-          case _ => Left(s"--$name must be a positive integer, got '$v'")
-        }
-      }
+    // index-mode codebook geometry
     val geometry = for {
       ck <- posInt("coarse-k", 4)
       m <- posInt("m", 4)
       ks <- posInt("ksub", 16)
     } yield (ck, m, ks)
     val (coarseK, pqM, pqKsub) = geometry match {
-      case Left(msg) =>
-        System.err.println(s"[ingest] $msg\n$usage")
-        return 2
+      case Left(msg) => return usageError(msg)
       case Right(g) => g
     }
     // landing layout: comma-separated partition columns (e.g. an
@@ -488,26 +342,14 @@ object RunIngest {
     val partCols = opts.get("partition-by")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
-    if (opts.contains("partition-by") && partCols.isEmpty) {
-      System.err.println(s"[ingest] --partition-by needs at least one column\n$usage")
-      return 2
-    }
+    if (opts.contains("partition-by") && partCols.isEmpty)
+      return usageError("--partition-by needs at least one column")
 
-    try {
+    failing {
       // schema bootstrap: the file source needs a fixed schema, taken
-      // from whatever is already in --in (the seed batch)
+      // from whatever is already in --in (the seed batch); each ingest
+      // entry refuses a schema missing its key columns at start
       val schema = spark.read.parquet(opts("in")).schema
-      val keyCols = mode match {
-        case "semantic" | "index" => Seq(vecCol, idCol)
-        case "full"               => Seq(textCol, vecCol, idCol)
-        case "quality"            => Seq(textCol, idCol, langCol)
-        case "dsir" | "decontaminate" => Seq(textCol, idCol)
-        case _                    => Seq(textCol, idCol)
-      }
-      val absent = keyCols.filterNot(schema.fieldNames.contains)
-      require(absent.isEmpty,
-        s"input schema must contain ${keyCols.map("'" + _ + "'").mkString(", ")}; " +
-        s"got ${schema.fieldNames.mkString(",")}")
       val docs = spark.readStream.schema(schema).parquet(opts("in"))
       val q = mode match {
         case "exact" => EventStreams.ingestDedup(docs, opts("corpus"), opts("checkpoint"), textCol, idCol, partitionCols = partCols)
@@ -545,10 +387,6 @@ object RunIngest {
         q.awaitTermination()
       }
       0
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[ingest] FAILED: ${e.getMessage}")
-        1
     }
   }
 

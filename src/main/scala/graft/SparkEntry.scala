@@ -564,10 +564,10 @@ object SparkEntry {
       // machinery (histograms, range sort) cannot ride a global agg.
       val qtyFused = regimes("l_quantity") == "value-map"
       val qtyPcts =
-        if (qtyFused) null
-        else ops.Percentiles.exactByRegime(regimes("l_quantity"),
+        if (qtyFused) None
+        else Some(ops.Percentiles.exactByRegime(regimes("l_quantity"),
           li.select(col("l_quantity")), "l_quantity",
-          Seq(0.25, 0.5, 0.75), prefix = "qq")
+          Seq(0.25, 0.5, 0.75), prefix = "qq"))
       val pricePcts = ops.Percentiles.exactByRegime(regimes("l_extendedprice"),
         li.select(col("l_extendedprice")), "l_extendedprice",
         Seq(0.25, 0.5, 0.75), prefix = "pp")
@@ -591,12 +591,9 @@ object SparkEntry {
           round(pct(2), 6).as(s"q75_$label"),
           col(s"max_$suffix").as(s"max_$label"))
       }
-      val joined =
-        if (qtyFused) agg.crossJoin(pricePcts)
-        else agg.crossJoin(pricePcts).crossJoin(qtyPcts)
-      val qtyPick: Int => Column =
-        if (qtyFused) i => col("qpcts").getItem(i)
-        else i => col(s"qq${25 * (i + 1)}")
+      val joined = qtyPcts.foldLeft(agg.crossJoin(pricePcts))(_ crossJoin _)
+      val qtyPick = qtyPcts.fold[Int => Column](
+        i => col("qpcts").getItem(i))(_ => i => col(s"qq${25 * (i + 1)}"))
       joined.select((col("n") +:
         (out("q", "qty", qtyPick) ++
          out("p", "price", i => col(s"pp${25 * (i + 1)}")))): _*)

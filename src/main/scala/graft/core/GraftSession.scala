@@ -24,7 +24,6 @@ object GraftSession {
   val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   def build(appName: String, cpus: String = DefaultCpus): SparkSession = {
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val spark = SparkSession.builder()
       .appName(appName)
       // Engine-native functions (custom Catalyst expressions) are
@@ -80,13 +79,11 @@ object GraftSession {
       // count is — a cluster at the 100 TB design point raises it back
       // toward the default to keep task counts sane.
       .config("spark.sql.files.maxPartitionBytes", "16m")
-      // SPARK_GRAFT_AQE=false is a MEASUREMENT knob (the floor-
-      // decomposition A/B in BASELINE round 13) — the shipped default
-      // stays on: AQE's runtime coalescing/skew handling is what lets
-      // one config serve both the 10 MB bench and the 100 TB design
-      // point (the q35 heap ceiling above is managed by AQE).
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+      // AQE stays on: its runtime coalescing/skew handling is what
+      // lets one config serve both the 10 MB bench and the 100 TB
+      // design point (the q35 heap ceiling above is managed by AQE).
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // The INITIAL shuffle partition count is the ceiling AQE can
       // coalesce DOWN from — with it equal to shuffle.partitions(32),
       // 32 was both floor and ceiling, so a fat-row exchange at 10×

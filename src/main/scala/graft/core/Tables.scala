@@ -28,7 +28,7 @@ object Tables {
     * fingerprint): a regeneration that rewrites the fixture in place —
     * the driver did it three times in round 12 alone — changes the
     * fingerprint and re-infers automatically, with no manual
-    * [[invalidate]] required (serving a stale schema after an
+    * invalidation required (serving a stale schema after an
     * in-place regeneration is the round-10 breakage class). The
     * fingerprint is a recursive file-status walk (path/length/mtime
     * per file — the same file set the scan's own listing sees),
@@ -255,25 +255,4 @@ object Tables {
     srcNames.computeIfAbsent((d, fingerprint(s, s"$d/documents.parquet")),
       _ => documents(s, d).select("source").distinct().collect()
         .map(_.getString(0)).toSeq.sorted)
-
-  /** Drops every memo entry for `d`. All four memos now
-    * self-invalidate on file-status change (fingerprint keys), so this
-    * exists only as the explicit escape hatch for callers that mutate
-    * a dir in ways a stat cannot see (none known — a same-size
-    * same-mtime rewrite needs deliberate effort) and for test
-    * hygiene. */
-  def invalidate(d: String): Unit = {
-    docCounts.keySet.removeIf(_._1 == d); srcNames.keySet.removeIf(_._1 == d)
-    schemas.keySet.removeIf(_._1.startsWith(d + "/"))
-    relations.synchronized {
-      relations.values.forEach(_.keySet.removeIf(_._1.startsWith(d + "/")))
-    }
-  }
-
-  /** Clears every memoized entry — the coarse hammer for test suites
-    * that recycle many temp dirs. */
-  def invalidateAll(): Unit = {
-    docCounts.clear(); srcNames.clear(); schemas.clear()
-    relations.synchronized { relations.values.forEach(_.clear()); relations.clear() }
-  }
 }

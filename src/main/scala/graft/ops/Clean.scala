@@ -90,11 +90,6 @@ object Clean {
     if (keyVars.isEmpty) typed else typed.na.drop("any", keyVars)
   }
 
-  /** P4: per-variable null drop used before plots/stats
-    * (`app.py:240-241`). */
-  def dropNullsIn(df: DataFrame, column: String): DataFrame =
-    df.filter(col(column).isNotNull)
-
   /** P5: numeric-dtype projection (`app.py:660-663`). */
   def numericProjection(df: DataFrame): DataFrame = {
     val numeric = df.schema.fields.collect {

@@ -98,6 +98,23 @@ object IvfPqIndex {
                   cb: (Seq[Long], Seq[Seq[Double]], Seq[Seq[Double]]),
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   overwrite: Boolean = true): Unit = {
+    encode(emb, m, cb, idCol, vecCol)
+      .write.partitionBy("centroid")
+      // task-side commit only under overwrite: the re-run clears a
+      // failed job's partial v2 output wholesale. A failed APPEND
+      // re-run would NOT — search has no dedup-on-read, so append
+      // keeps the job-side atomic committer (v1).
+      .options(graft.core.Committers.forRerun(overwrite))
+      .mode(if (overwrite) "overwrite" else "append")
+      .parquet(dir)
+    lastDirVar = dir
+  }
+
+  /** The `(idCol, centroid, code_0…code_{m−1})` rows [[landEncoded]]
+    * writes, unwritten — the streaming index gate lands them itself. */
+  def encode(emb: DataFrame, m: Int,
+             cb: (Seq[Long], Seq[Seq[Double]], Seq[Seq[Double]]),
+             idCol: String, vecCol: String): DataFrame = {
     val (coarseIds, coarse, pq) = cb
     val dim = coarse.headOption.map(_.length).getOrElse(0)
     require(coarse.isEmpty || dim % m == 0,
@@ -121,15 +138,6 @@ object IvfPqIndex {
     // CollapseProject cannot inline it per field (pqEncode discipline)
     assigned.select(col(idCol) +: col("centroid") +: ams: _*)
       .select(col(idCol) +: col("centroid") +: codes: _*)
-      .write.partitionBy("centroid")
-      // task-side commit only under overwrite: the re-run clears a
-      // failed job's partial v2 output wholesale. A failed APPEND
-      // re-run would NOT — search has no dedup-on-read, so append
-      // keeps the job-side atomic committer (v1).
-      .options(graft.core.Committers.forRerun(overwrite))
-      .mode(if (overwrite) "overwrite" else "append")
-      .parquet(dir)
-    lastDirVar = dir
   }
 
   /** Search the landed index: per-probe LUT spec rows broadcast

@@ -35,7 +35,9 @@ object PrefixSum {
   /** Adds `cumCol` = inclusive running total of `valueCol` in
     * `orderCol` order. `orderCol` must be unique per row (ties would
     * make the within-tie running order nondeterministic). The value
-    * column must be integral (sums as long). */
+    * column must be integral (sums as long). A NULL value adds 0, so
+    * `cumCol` is never NULL: a NULL row carries the total of the rows
+    * before it. */
   def runningTotal(df: DataFrame, orderCol: String, valueCol: String,
                    cumCol: String): DataFrame =
     runningTotal(df, Seq(orderCol), valueCol, cumCol)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OceanEngine
 import graft.cache.ResultCache
 import graft.ops.{Clean, Quality}
 import graft.sources.ErddapSource
@@ -123,29 +124,24 @@ final class PipelineOrchestrator(
   val tableName = "sea_surface"
 
   /** EXTRACT (`run_pipeline.py:171-188` → `extract.py:340-364`): fetch
-    * the reference's fixed point, clean, quality-report, cache, land
-    * as the raw CSV artifact. Returns the quality report. */
+    * the reference's fixed point, clean, quality-report, cache — the
+    * one [[graft.OceanEngine.fetchObservations]] path — then land as
+    * the raw CSV artifact. Returns the quality report.
+    *
+    * The engine caches only a positive quality score, which matches
+    * the reference's `if use_cache and not df_clean.empty` guard
+    * (extract.py:179): with the default variables every row the clean
+    * keeps has a temperature or salinity (completeness > 0), and the
+    * four possible issues cost 0.1 each, so the score is positive
+    * exactly when the frame is non-empty. */
   def extract(lat: Double = 32.5, lon: Double = -70.0,
               start: String = "1960-01-01", end: String = "1960-02-01")
       : Quality.QualityReport = {
-    val (snappedLat, snappedLon) = graft.core.Grid.snap(lat, lon)
-    val cached = cache.flatMap(_.get(snappedLat, snappedLon, start, end,
-                                     graft.sources.ErddapUrl.DefaultVariables))
-    val cleaned = cached.getOrElse {
-      val (body, _) = source.fetchRaw(lat, lon, start, end)
-      val df = Clean.cleanApiResponse(source.toRawDataFrame(spark, body))
-      // cache only non-empty results (the reference guards with
-      // `if use_cache and not df_clean.empty`, extract.py:179): an
-      // empty API response must not be replayed for the next 24 h
-      if (!df.isEmpty)
-        cache.foreach(_.put(snappedLat, snappedLon, start, end,
-                            graft.sources.ErddapUrl.DefaultVariables, df))
-      df
-    }
-    val report = Quality.report(cleaned)
-    CsvIo.writeSingle(cleaned, rawPath)
+    val fetched = new OceanEngine(spark, source, cache)
+      .fetchObservations(lat, lon, start, end)
+    CsvIo.writeSingle(fetched.data, rawPath)
     Gates.validateRaw(spark, rawPath)
-    report
+    fetched.quality
   }
 
   /** TRANSFORM (`run_pipeline.py:190-212` → `transform.py:30-41`). */

@@ -2195,6 +2195,31 @@ object EventStreams {
       "dedup; restart with the mode that landed them")
   }
 
+  /** Start-time refusal shared by both ingest families: a key column
+    * missing from the stream would otherwise fail the first batch. */
+  private def requireStreamCols(docs: DataFrame, keyCols: Seq[String]): Unit =
+    require(keyCols.forall(docs.schema.fieldNames.contains),
+      s"stream schema must contain ${keyCols.map("'" + _ + "'").mkString(", ")}; got " +
+      docs.schema.fieldNames.mkString(", "))
+
+  /** THE start path of the dedup family ([[ingestDedup]],
+    * [[ingestNearDup]], [[ingestSemantic]], [[ingestPipeline]]): the
+    * shared start-time refusals run once here, before the stream
+    * starts, then the landing's canonical key ([[landingKey]]) drives
+    * [[runIngestStream]] over the entry's stage list. */
+  private def startDedup(docs: DataFrame, landingDir: String, checkpointDir: String,
+                         entry: String, keyCols: Seq[String], appendFiles: Int,
+                         partitionCols: Seq[String], stages: Seq[IngestStage],
+                         obsPrefix: String)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
+    requireStreamCols(docs, keyCols)
+    requireNoReservedCols(docs, entry)
+    requirePartitionCols(docs, partitionCols, keyCols)
+    runIngestStream(docs, landingKey(docs.sparkSession, landingDir), checkpointDir,
+      appendFiles, partitionCols, stages, obsPrefix)
+  }
+
   /** Continuous corpus ingest with CROSS-BATCH exact dedup — the
     * streaming face of [[graft.ops.IncrementalDedup]] (q74) and the
     * contract a training-data pipeline actually needs: a document is
@@ -2221,20 +2246,9 @@ object EventStreams {
                   textCol: String = "text", idCol: String = "doc_id",
                   appendFiles: Int = 4,
                   partitionCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
-    requireNoReservedCols(docs, "ingestDedup")
-    requirePartitionCols(docs, partitionCols, Seq(textCol, idCol))
-    ingestDedupImpl(docs, landingKey(docs.sparkSession, landingDir),
-      checkpointDir, textCol, idCol, appendFiles, partitionCols)
-  }
-
-  private def ingestDedupImpl(docs: DataFrame, landingDir: String, checkpointDir: String,
-                              textCol: String, idCol: String, appendFiles: Int,
-                              partitionCols: Seq[String])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    runIngestStream(docs, landingDir, checkpointDir, appendFiles, partitionCols,
-      Seq(exactIngestStage(textCol, idCol)), "ingest")
+    startDedup(docs, landingDir, checkpointDir, "ingestDedup", Seq(textCol, idCol),
+      appendFiles, partitionCols, Seq(exactIngestStage(textCol, idCol)), "ingest")
 
   /** Cross-batch NEAR-dup ingest — [[ingestDedup]]'s MinHash/LSH twin
     * ([[graft.ops.NearDupIncremental]]): a batch doc is dropped when
@@ -2261,20 +2275,9 @@ object EventStreams {
                     textCol: String = "text", idCol: String = "doc_id",
                     appendFiles: Int = 4,
                     partitionCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
-    requireNoReservedCols(docs, "ingestNearDup")
-    requirePartitionCols(docs, partitionCols, Seq(textCol, idCol))
-    ingestNearDupImpl(docs, landingKey(docs.sparkSession, landingDir),
-      checkpointDir, textCol, idCol, appendFiles, partitionCols)
-  }
-
-  private def ingestNearDupImpl(docs: DataFrame, landingDir: String, checkpointDir: String,
-                                textCol: String, idCol: String, appendFiles: Int,
-                                partitionCols: Seq[String])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    runIngestStream(docs, landingDir, checkpointDir, appendFiles, partitionCols,
-      Seq(nearIngestStage(textCol, idCol)), "ingest_nd")
+    startDedup(docs, landingDir, checkpointDir, "ingestNearDup", Seq(textCol, idCol),
+      appendFiles, partitionCols, Seq(nearIngestStage(textCol, idCol)), "ingest_nd")
 
   /** Continuous corpus ingest with CROSS-BATCH SEMANTIC dedup — the
     * streaming face of [[graft.ops.SemanticIncremental]] (q86), for
@@ -2326,21 +2329,10 @@ object EventStreams {
                      bits: Int = 8, bands: Int = 2,
                      appendFiles: Int = 4,
                      partitionCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
-    require(bits >= 1 && bits <= 30, s"bits must be in [1, 30], got $bits")
-    require(bands >= 1 && bands <= 16, s"bands must be in [1, 16], got $bands")
-    require(!tau.isNaN && tau >= -1.0 && tau <= 1.0,
-      s"tau must be a cosine in [-1, 1], got $tau")
-    val fields = docs.schema.fieldNames.toSet
-    require(fields.contains(vecCol) && fields.contains(idCol),
-      s"stream schema must contain '$vecCol' and '$idCol'; got " +
-      docs.schema.fieldNames.mkString(", "))
-    requireNoReservedCols(docs, "ingestSemantic")
-    requirePartitionCols(docs, partitionCols, Seq(vecCol, idCol))
-    ingestSemanticImpl(docs, landingKey(docs.sparkSession, landingDir),
-      checkpointDir, tau, vecCol, idCol, bits, bands, appendFiles, partitionCols)
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startDedup(docs, landingDir, checkpointDir, "ingestSemantic", Seq(vecCol, idCol),
+      appendFiles, partitionCols,
+      Seq(semIngestStage(SemanticStage(tau, vecCol, bits, bands), idCol)), "ingest_sem")
 
   /** A landing read back by [[ingestSemantic]] must carry exactly this
     * stream's band-code columns: fewer means it was landed by another
@@ -2361,15 +2353,64 @@ object EventStreams {
       "use the landing's band count")
   }
 
-  private def ingestSemanticImpl(docs: DataFrame, landingDir: String,
-                                 checkpointDir: String, tau: Double,
-                                 vecCol: String, idCol: String,
-                                 bits: Int, bands: Int, appendFiles: Int,
-                                 partitionCols: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runIngestStream(docs, landingDir, checkpointDir, appendFiles, partitionCols,
-      Seq(semIngestStage(SemanticStage(tau, vecCol, bits, bands), idCol)),
-      "ingest_sem")
+  // ---------- the frozen-state gates ----------
+
+  /** THE start path of the frozen-state gates ([[ingestIndex]],
+    * [[ingestQuality]], [[ingestDsir]], [[ingestDecontaminate]]) — the
+    * gate family's twin of [[runIngestStream]]. In order: refuse a
+    * stream missing a key column, or carrying `batch` or a column of
+    * `reserved` (the gate's own partition, working and score columns —
+    * refused at start, not with a per-batch ambiguous reference: the
+    * round-14 reserved-column discipline); take the landing's
+    * single-writer slot and cross-JVM writer lock; build the frozen
+    * state INSIDE the guard (`freeze`), so a refused start never pays
+    * for training. `freeze` registers each frozen-state release
+    * through its argument as soon as that state exists; every
+    * registered release runs on a failed start and, via
+    * [[registerFrozen]], on termination (r17 verdict #7: frozen state
+    * must not hold executor storage past the stream's lifetime).
+    *
+    * Per batch: heartbeat the writer lock, score (`pin` persists a
+    * frame until the batch's write has finished), and land under
+    * `batch=<id>` in overwrite mode with the re-run committer, so a
+    * crashed attempt's partial output is cleared by its own retry —
+    * exactly-once with no dedup-on-read. */
+  private def runGateStream(docs: DataFrame, landingDir: String, checkpointDir: String,
+                            gate: String, keyCols: Seq[String], reserved: Seq[String],
+                            landPartitions: Seq[String] = Nil)
+                           (freeze: ((() => Unit) => Unit) =>
+                             (DataFrame, DataFrame => DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    requireStreamCols(docs, keyCols)
+    ("batch" +: reserved).foreach { c =>
+      require(!docs.schema.fieldNames.contains(c),
+        s"stream schema must not carry '$c' — the $gate reserves it as a " +
+        "landing partition, working or score column")
+    }
+    val key = landingKey(docs.sparkSession, landingDir)
+    var frozen: List[() => Unit] = Nil
+    val q = try startGuarded(docs.sparkSession, key) {
+      val score = freeze(release => frozen :+= release)
+      docs.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          heartbeatIngestLock(key)
+          var pinned: List[DataFrame] = Nil
+          try {
+            val w = score(batch, df => { pinned ::= df.persist(); pinned.head })
+              .write.options(graft.core.Committers.forRerun(overwrite = true))
+            (if (landPartitions.isEmpty) w else w.partitionBy(landPartitions: _*))
+              .mode("overwrite").parquet(s"$key/batch=$batchId")
+          } finally pinned.foreach(_.unpersist())
+          ()
+        }
+        .start()
+    } catch {
+      case t: Throwable => frozen.foreach(runCleanup); throw t
+    }
+    registerFrozen(q, frozen)
+    q
+  }
 
   /** Streaming maintenance of the persisted IVF-PQ index
     * ([[graft.ops.IvfPqIndex]]): each micro-batch of arriving vectors
@@ -2390,33 +2431,17 @@ object EventStreams {
   def ingestIndex(docs: DataFrame, indexDir: String, checkpointDir: String,
                   trainingSource: DataFrame, coarseK: Int, m: Int, ksub: Int,
                   idCol: String = "vec_id", vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fields = docs.schema.fieldNames.toSet
-    require(fields.contains(vecCol) && fields.contains(idCol),
-      s"stream schema must contain '$vecCol' and '$idCol'; got " +
-      docs.schema.fieldNames.mkString(", "))
-    require(!fields.contains("batch") && !fields.contains("centroid"),
-      "stream schema must not carry 'batch'/'centroid' — both are the " +
-      "index's partition columns")
-    val indexKey = landingKey(docs.sparkSession, indexDir)
-    startGuarded(docs.sparkSession, indexKey) {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    runGateStream(docs, indexDir, checkpointDir, "index stream", Seq(vecCol, idCol),
+      Seq("centroid"), landPartitions = Seq("centroid")) { _ =>
       // codebooks are FROZEN state (the ingestQuality LM discipline):
       // derived once inside the guard — per-batch re-derivation would
       // collect a training-frame scan on every micro-batch for
       // byte-identical deterministic codebooks
       val cb = graft.ops.IvfPqIndex.trainCodebooks(
         trainingSource, coarseK, ksub, idCol, vecCol)
-      docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeatIngestLock(indexKey)
-          graft.ops.IvfPqIndex.landEncoded(batch, s"$indexKey/batch=$batchId",
-            m, cb, idCol, vecCol, overwrite = true)
-          ()
-        }
-        .start()
+      (batch, _) => graft.ops.IvfPqIndex.encode(batch, m, cb, idCol, vecCol)
     }
-  }
 
   /** Streaming quality gate — the CCNet deployment shape of q93's LM
     * perplexity filter: the per-language Laplace bigram LM is trained
@@ -2447,73 +2472,39 @@ object EventStreams {
                     textCol: String = "text", idCol: String = "doc_id",
                     langCol: String = "lang")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fields = docs.schema.fieldNames.toSet
-    require(Seq(textCol, idCol, langCol).forall(fields.contains),
-      s"stream schema must contain '$textCol', '$idCol', '$langCol'; got " +
-      docs.schema.fieldNames.mkString(", "))
-    require(!fields.contains("batch"),
-      "stream schema must not carry 'batch' — it is the landing's partition column")
     require(!maxXentPerToken.isNaN, "maxXentPerToken must be a number")
     require(maxXentPerToken >= 0,
       s"per-token cross-entropy is non-negative, so a threshold of " +
       s"$maxXentPerToken would reject every document")
-    require(!docs.schema.fieldNames.contains("__qid"),
-      "stream schema must not carry '__qid' — the gate's working column")
-    // the gate lands its score columns alongside the stream's own; a
-    // stream already carrying one of those names would otherwise die
-    // with an ambiguous-reference error on every micro-batch instead
-    // of refusing loudly at start (round-14 reserved-column discipline)
-    Seq("n_pos", "xent_micronats", "xent_micronats_per_pos", "xent_per_token")
-      .foreach { c =>
-        require(!fields.contains(c),
-          s"stream schema must not carry '$c' — the quality gate lands it " +
-          "as a score column")
-      }
-    val key = landingKey(docs.sparkSession, landingDir)
-    // the trained LM's checkpointed frame + probe-map broadcast,
-    // registered for release when the query terminates (r17 verdict
-    // #7: frozen state must not hold executor storage past the
-    // stream's lifetime)
-    var frozen: List[() => Unit] = Nil
-    val q = try startGuarded(docs.sparkSession, key) {
-      // train INSIDE the guard: a refused start (foreign writer lock)
-      // must fail before paying the reference scan + materialization
+    runGateStream(docs, landingDir, checkpointDir, "quality gate",
+      Seq(textCol, idCol, langCol),
+      Seq("__qid", "n_pos", "xent_micronats", "xent_micronats_per_pos",
+        "xent_per_token")) { release =>
+      // the trained LM's checkpointed frame + probe-map broadcast
       val trained = graft.ops.NgramLm.train(reference, textCol, langCol)
-      frozen = List(frameCleanup(trained.counts), () => trained.releaseMaps())
-      docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeatIngestLock(key)
-          // The gate sits BEFORE the dedup family, so repeated doc ids
-          // in one batch are legitimate input: each ROW is scored
-          // independently under a synthetic per-row key (an id-keyed
-          // join would merge duplicate ids' entries and cross-multiply
-          // a doc id appearing under two languages). The persist is
-          // load-bearing twice over — it pins the synthetic ids so the
-          // score side and the join side see the SAME assignment (each
-          // use of an unpersisted batch re-plans the source, which may
-          // renumber), and it halves the per-batch input scans.
-          val keyed = batch.withColumn("__qid", monotonically_increasing_id()).persist()
-          try {
-            // scoreRows' unique-key contract holds by construction:
-            // __qid is monotonically_increasing_id, one per row
-            val scored = graft.ops.NgramLm.scoreRows(keyed, trained, textCol, "__qid", langCol)
-              .select(col("__qid"), col("n_pos"), col("xent_micronats"),
-                col("xent_micronats_per_pos"), col("xent_per_token"))
-            keyed.join(scored, Seq("__qid"))
-              .filter(col("xent_per_token") <= maxXentPerToken)
-              .drop("__qid")
-              .write.options(graft.core.Committers.forRerun(overwrite = true))
-              .mode("overwrite").parquet(s"$key/batch=$batchId")
-          } finally { keyed.unpersist(); () }
-          ()
-        }
-        .start()
-    } catch {
-      case t: Throwable => frozen.foreach(runCleanup); throw t
+      release(frameCleanup(trained.counts))
+      release(() => trained.releaseMaps())
+      (batch, pin) => {
+        // The gate sits BEFORE the dedup family, so repeated doc ids
+        // in one batch are legitimate input: each ROW is scored
+        // independently under a synthetic per-row key (an id-keyed
+        // join would merge duplicate ids' entries and cross-multiply
+        // a doc id appearing under two languages). The persist is
+        // load-bearing twice over — it pins the synthetic ids so the
+        // score side and the join side see the SAME assignment (each
+        // use of an unpersisted batch re-plans the source, which may
+        // renumber), and it halves the per-batch input scans.
+        val keyed = pin(batch.withColumn("__qid", monotonically_increasing_id()))
+        // scoreRows' unique-key contract holds by construction:
+        // __qid is monotonically_increasing_id, one per row
+        val scored = graft.ops.NgramLm.scoreRows(keyed, trained, textCol, "__qid", langCol)
+          .select(col("__qid"), col("n_pos"), col("xent_micronats"),
+            col("xent_micronats_per_pos"), col("xent_per_token"))
+        keyed.join(scored, Seq("__qid"))
+          .filter(col("xent_per_token") <= maxXentPerToken)
+          .drop("__qid")
+      }
     }
-    registerFrozen(q, frozen)
-    q
   }
 
   /** Streaming DSIR gate — the deployment shape of q94's importance
@@ -2550,39 +2541,13 @@ object EventStreams {
                  minLogwMicronats: Long = 1L,
                  textCol: String = "text", idCol: String = "doc_id",
                  buckets: Int = 4096)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fields = docs.schema.fieldNames.toSet
-    require(Seq(textCol, idCol).forall(fields.contains),
-      s"stream schema must contain '$textCol', '$idCol'; got " +
-      docs.schema.fieldNames.mkString(", "))
-    require(!fields.contains("batch"),
-      "stream schema must not carry 'batch' — it is the landing's partition column")
-    // the gate lands its score columns alongside the stream's own
-    // (round-14 reserved-column discipline: refuse at start, not with
-    // a per-batch ambiguous-reference error)
-    Seq("n_grams", "logw_micronats", "selected").foreach { c =>
-      require(!fields.contains(c),
-        s"stream schema must not carry '$c' — the DSIR gate lands it as " +
-        "a score column")
-    }
-    val key = landingKey(docs.sparkSession, landingDir)
-    startGuarded(docs.sparkSession, key) {
-      // train INSIDE the guard: a refused start (foreign writer lock)
-      // must fail before paying the corpus histogram pass
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    runGateStream(docs, landingDir, checkpointDir, "DSIR gate", Seq(textCol, idCol),
+      Seq("n_grams", "logw_micronats", "selected")) { _ =>
       val model = graft.ops.Dsir.train(trainCorpus, targetPred, textCol, buckets)
-      docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeatIngestLock(key)
-          graft.ops.Dsir.withScores(batch, model, textCol)
-            .filter(col("logw_micronats") >= minLogwMicronats)
-            .write.options(graft.core.Committers.forRerun(overwrite = true))
-            .mode("overwrite").parquet(s"$key/batch=$batchId")
-          ()
-        }
-        .start()
+      (batch, _) => graft.ops.Dsir.withScores(batch, model, textCol)
+        .filter(col("logw_micronats") >= minLogwMicronats)
     }
-  }
 
   /** Streaming decontamination gate — probe every micro-batch against
     * a LANDED benchmark gram set ([[graft.ops.Decontaminate]]),
@@ -2615,27 +2580,10 @@ object EventStreams {
                           maxSharedGrams: Long = 0L,
                           textCol: String = "text", idCol: String = "doc_id")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fields = docs.schema.fieldNames.toSet
-    require(Seq(textCol, idCol).forall(fields.contains),
-      s"stream schema must contain '$textCol', '$idCol'; got " +
-      docs.schema.fieldNames.mkString(", "))
-    require(!fields.contains("batch"),
-      "stream schema must not carry 'batch' — it is the landing's partition column")
-    require(!fields.contains("__qid"),
-      "stream schema must not carry '__qid' — the gate's working column")
-    Seq("n_shared", "clean").foreach { c =>
-      require(!fields.contains(c),
-        s"stream schema must not carry '$c' — the decontamination gate " +
-        "lands it as a report column")
-    }
     require(maxSharedGrams >= 0,
       s"maxSharedGrams must be non-negative, got $maxSharedGrams")
-    val spark0 = docs.sparkSession
-    val key = landingKey(spark0, landingDir)
-    // set inside the guard, registered for unpersist-on-termination
-    // once the started query's runId is known (r17 verdict #7)
-    var frozen: List[() => Unit] = Nil
-    val q = try startGuarded(spark0, key) {
+    runGateStream(docs, landingDir, checkpointDir, "decontamination gate",
+      Seq(textCol, idCol), Seq("__qid", "n_shared", "clean")) { release =>
       // frozen state, loaded INSIDE the guard: a refused start must
       // fail before touching the artifact; a missing artifact fails
       // the start loudly (a gate with no benchmark gates nothing).
@@ -2654,60 +2602,46 @@ object EventStreams {
       // fingerprint must match the files pinned here, so a re-land
       // completing between the two reads refuses the start instead of
       // silently pairing an old Bloom with a new confirm set
-      val (blob, gxFiles) =
-        graft.ops.Decontaminate.loadBloomPinned(spark0, benchDir)
-      val bench = spark0.read.parquet(gxFiles: _*)
-        .select("gx").persist()
-      frozen = List(frameCleanup(bench))
+      val spark = docs.sparkSession
+      val (blob, gxFiles) = graft.ops.Decontaminate.loadBloomPinned(spark, benchDir)
+      val bench = spark.read.parquet(gxFiles: _*).select("gx").persist()
+      // registered before the count: a failure inside it still releases
+      release(frameCleanup(bench))
       val broadcastable =
         bench.count() <= graft.ops.Decontaminate.BroadcastableRows
-      docs.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeatIngestLock(key)
-          // persists pin the synthetic per-row ids across the gram
-          // side and the re-attach side (the ingestQuality argument),
-          // and stop the emptiness probe from paying the gram hashing
-          // + bloom probes a second time in the confirm pass
-          val keyed = batch.withColumn("__qid", monotonically_increasing_id()).persist()
-          val cand = keyed
-            .select(col("__qid"),
-              explode_outer(graft.ops.Decontaminate.gramKeys(col(textCol))).as("gx"))
-            .filter(coalesce(
-              call_function("bloom_might_contain", lit(blob), col("gx")),
-              lit(false)))
-            .persist()
-          try {
-            // bloom-negative is DEFINITIVE absence: a clean batch
-            // never reads the landed benchmark set
-            val scored =
-              if (cand.isEmpty)
-                keyed.select(col("__qid")).withColumn("n_shared", lit(0L))
-              else {
-                val hits = cand
-                  .join(if (broadcastable) broadcast(bench) else bench,
-                    Seq("gx"), "left_semi")
-                  .groupBy("__qid").agg(count(lit(1)).as("n_shared"))
-                keyed.select(col("__qid"))
-                  .join(hits, Seq("__qid"), "left")
-                  .select(col("__qid"),
-                    coalesce(col("n_shared"), lit(0L)).as("n_shared"))
-              }
-            keyed.join(scored, Seq("__qid"))
-              .filter(col("n_shared") <= maxSharedGrams)
-              .withColumn("clean", (col("n_shared") === 0L).cast("bigint"))
-              .drop("__qid")
-              .write.options(graft.core.Committers.forRerun(overwrite = true))
-              .mode("overwrite").parquet(s"$key/batch=$batchId")
-          } finally { cand.unpersist(); keyed.unpersist(); () }
-          ()
-        }
-        .start()
-    } catch {
-      case t: Throwable => frozen.foreach(runCleanup); throw t
+      (batch, pin) => {
+        // pins keep the synthetic per-row ids stable across the gram
+        // side and the re-attach side (the ingestQuality argument),
+        // and stop the emptiness probe from paying the gram hashing
+        // + bloom probes a second time in the confirm pass
+        val keyed = pin(batch.withColumn("__qid", monotonically_increasing_id()))
+        val cand = pin(keyed
+          .select(col("__qid"),
+            explode_outer(graft.ops.Decontaminate.gramKeys(col(textCol))).as("gx"))
+          .filter(coalesce(
+            call_function("bloom_might_contain", lit(blob), col("gx")),
+            lit(false))))
+        // bloom-negative is DEFINITIVE absence: a clean batch
+        // never reads the landed benchmark set
+        val scored =
+          if (cand.isEmpty)
+            keyed.select(col("__qid")).withColumn("n_shared", lit(0L))
+          else {
+            val hits = cand
+              .join(if (broadcastable) broadcast(bench) else bench,
+                Seq("gx"), "left_semi")
+              .groupBy("__qid").agg(count(lit(1)).as("n_shared"))
+            keyed.select(col("__qid"))
+              .join(hits, Seq("__qid"), "left")
+              .select(col("__qid"),
+                coalesce(col("n_shared"), lit(0L)).as("n_shared"))
+          }
+        keyed.join(scored, Seq("__qid"))
+          .filter(col("n_shared") <= maxSharedGrams)
+          .withColumn("clean", (col("n_shared") === 0L).cast("bigint"))
+          .drop("__qid")
+      }
     }
-    registerFrozen(q, frozen)
-    q
   }
 
   /** The production ingest shape: EXACT dedup then NEAR-dup, composed
@@ -2745,36 +2679,20 @@ object EventStreams {
     * the two-stage form applies (each stage's flag depends only on
     * the doc and the landed corpus). */
   final case class SemanticStage(tau: Double = 0.9, vecCol: String = "embedding",
-                                 bits: Int = 8, bands: Int = 2)
+                                 bits: Int = 8, bands: Int = 2) {
+    // checked on construction, so every semantic entry refuses a bad
+    // stage at start without restating the bounds
+    require(bits >= 1 && bits <= 30, s"bits must be in [1, 30], got $bits")
+    require(bands >= 1 && bands <= 16, s"bands must be in [1, 16], got $bands")
+    require(!tau.isNaN && tau >= -1.0 && tau <= 1.0,
+      s"tau must be a cosine in [-1, 1], got $tau")
+  }
 
   def ingestPipeline(docs: DataFrame, landingDir: String, checkpointDir: String,
                      textCol: String = "text", idCol: String = "doc_id",
                      appendFiles: Int = 4,
                      partitionCols: Seq[String] = Nil,
                      semantic: Option[SemanticStage] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
-    semantic.foreach { sem =>
-      require(sem.bits >= 1 && sem.bits <= 30, s"bits must be in [1, 30], got ${sem.bits}")
-      require(sem.bands >= 1 && sem.bands <= 16, s"bands must be in [1, 16], got ${sem.bands}")
-      require(!sem.tau.isNaN && sem.tau >= -1.0 && sem.tau <= 1.0,
-        s"tau must be a cosine in [-1, 1], got ${sem.tau}")
-      val fields = docs.schema.fieldNames.toSet
-      require(fields.contains(sem.vecCol),
-        s"stream schema must contain '${sem.vecCol}'; got " +
-        docs.schema.fieldNames.mkString(", "))
-    }
-    requireNoReservedCols(docs, "ingestPipeline")
-    requirePartitionCols(docs, partitionCols,
-      Seq(textCol, idCol) ++ semantic.map(_.vecCol))
-    ingestPipelineImpl(docs, landingKey(docs.sparkSession, landingDir),
-      checkpointDir, textCol, idCol, appendFiles, partitionCols, semantic)
-  }
-
-  private def ingestPipelineImpl(docs: DataFrame, landingDir: String, checkpointDir: String,
-                                 textCol: String, idCol: String, appendFiles: Int,
-                                 partitionCols: Seq[String],
-                                 semantic: Option[SemanticStage] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     // cheapest stage first, each consuming only the previous stage's
     // survivors: exact-equal reposts are the bulk of real ingest
@@ -2783,7 +2701,8 @@ object EventStreams {
     // holds text + mh1..mh4 (+ sb*) and is every stage's state; the
     // landed corpus is exactly the final survivors, so the exact bloom
     // folds the post-near(-sem) `fresh` — see [[runIngestStream]].
-    runIngestStream(docs, landingDir, checkpointDir, appendFiles, partitionCols,
+    startDedup(docs, landingDir, checkpointDir, "ingestPipeline",
+      Seq(textCol, idCol) ++ semantic.map(_.vecCol), appendFiles, partitionCols,
       Seq(exactIngestStage(textCol, idCol), nearIngestStage(textCol, idCol)) ++
         semantic.map(sem => semIngestStage(sem, idCol)),
       "ingest_pipe")

@@ -379,6 +379,12 @@ class IngestCliSpec extends AnyFunSuite with SparkTestSession {
     assert(RunIngest.execute(spark, Array("--stats", "--corpus", dir, "--once")) == 2)
     assert(RunIngest.execute(spark, Array("--stats", "--compact", "--corpus", dir)) == 2)
     assert(RunIngest.execute(spark, Array("--stats", "--corpus", dir + "/nope")) == 1)
+    // a stream-gate flag on a maintenance form would be silently
+    // ignored: refused like every other flag outside the form's row
+    assert(RunIngest.execute(spark, Array("--stats", "--corpus", dir, "--train", "x")) == 2)
+    assert(RunIngest.execute(spark, Array("--compact", "--corpus", dir, "--ref", "y")) == 2)
+    assert(RunIngest.execute(spark, Array("--repair", "--corpus", dir,
+      "--coarse-k", "2")) == 2)
   }
 
   test("--repair: restores a crashed swap; flag hygiene") {

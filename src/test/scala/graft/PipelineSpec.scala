@@ -94,4 +94,27 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     p.extract()                      // cache hit: no second fetch
     assert(backend.attempts == 1)
   }
+
+  test("extract goes through the engine's fetch path: a repo fixture, the second call served from the cache") {
+    // the in-repo raw fixture (units row, bad dates, partial nulls) as
+    // the ERDDAP body, so this case needs no reference sample
+    val body = new String(Files.readAllBytes(
+      java.nio.file.Paths.get("data/fixtures/sea_surface_raw.csv")), "UTF-8")
+    val url = ErddapUrl.build(32.5, -70.0, "1960-01-01", "1960-02-01")
+    val backend = new FixtureBackend(Map(url -> body))
+    val source = new ErddapSource(backend, minIntervalMs = 0, sleeper = _ => ())
+    val dir = Files.createTempDirectory("graft-pipeline-fx").toString
+    val cache = new graft.cache.ResultCache(spark, s"$dir/cache")
+    val p = new PipelineOrchestrator(spark, source, dir, Some(cache))
+    def rawRows(): Seq[String] =
+      spark.read.option("header", "true").csv(p.rawPath)
+        .collect().map(_.mkString("|")).sorted.toSeq
+    val first = p.extract()
+    val rows1 = rawRows()
+    assert(rows1.nonEmpty && first.qualityScore > 0.0)
+    val second = p.extract()
+    assert(backend.attempts == 1, "the second extract must be a cache hit")
+    assert(rawRows() == rows1, "the cached frame must land the same raw rows")
+    assert(second.qualityScore == first.qualityScore)
+  }
 }

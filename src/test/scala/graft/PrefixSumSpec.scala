@@ -27,6 +27,15 @@ class PrefixSumSpec extends AnyFunSuite with SparkTestSession {
     assert(got == want)
   }
 
+  test("runningTotal: a NULL value adds 0 and the cumulative column is never NULL") {
+    import spark.implicits._
+    val df = Seq((1, Some(2L)), (2, None), (3, Some(5L)), (4, None))
+      .toDF("k", "v").repartition(3)
+    val got = PrefixSum.runningTotal(df, "k", "v", "cum")
+      .select("k", "cum").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(got == Map(1 -> 2L, 2 -> 2L, 3 -> 7L, 4 -> 7L))
+  }
+
   test("running_sum rejects a wrong argument count with a clear message") {
     for (call <- Seq("running_sum()", "running_sum(id, id)")) {
       val e = intercept[Exception](spark.range(3).selectExpr(call).collect())

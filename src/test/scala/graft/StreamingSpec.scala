@@ -1984,4 +1984,48 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     } finally q2.stop()
     awaitReleased(before2, "ingestQuality")
   }
+
+  test("a gate whose start fails inside the guard leaves no writer slot or lock file; the landing restarts") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-gatefail").toString
+    val landing = root + "/corpus"
+    val lockFile = java.nio.file.Paths.get(root, ".ingest-writer-lock-corpus")
+    val key = EventStreams.landingKey(spark, landing)
+    def assertReleased(what: String): Unit = {
+      assert(!EventStreams.activeIngests.containsKey(key),
+        s"$what: a failed start left the single-writer slot held")
+      assert(!java.nio.file.Files.exists(lockFile),
+        s"$what: a failed start left the writer lock file")
+    }
+    // decontaminate: the benchmark artifact is missing
+    val inD = MemoryStream[(Long, String)]
+    intercept[java.io.FileNotFoundException] {
+      EventStreams.ingestDecontaminate(inD.toDF().toDF("doc_id", "text"),
+        landing, root + "/ck-d", root + "/nowhere")
+    }
+    assertReleased("ingestDecontaminate")
+    // quality: the reference lacks its language column, so training fails
+    val noLang = Seq((0L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val inQ = MemoryStream[(Long, String, String)]
+    intercept[Exception] {
+      EventStreams.ingestQuality(inQ.toDF().toDF("doc_id", "text", "lang"),
+        landing, root + "/ck-q", noLang, maxXentPerToken = 2.0)
+    }
+    assertReleased("ingestQuality")
+    // the landing is free: a correct start on it runs
+    val ref = (0L until 10L).map(i =>
+      (i, "the quick brown fox jumps over the lazy dog", "en"))
+      .toDF("doc_id", "text", "lang")
+    val in = MemoryStream[(Long, String, String)]
+    val q = EventStreams.ingestQuality(in.toDF().toDF("doc_id", "text", "lang"),
+      landing, root + "/ck-ok", ref, maxXentPerToken = 2.0)
+    try {
+      in.addData((1L, "the quick brown fox jumps over the lazy dog", "en"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.read.parquet(landing).select("doc_id")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
 }
