@@ -37,20 +37,45 @@ object IncrementalDedup {
       if (java.lang.Long.bitCount(clamped) == 1) clamped else clamped << 1).toInt
   }
 
+  /** Probe-hash count k of every dedup bloom the engine builds:
+    * [[newDocs]]' prefilter and the streaming ingest carries
+    * ([[graft.streaming.EventStreams]]). One constant — a carried
+    * blob is built, folded AND probed assuming this k; a mismatch
+    * between build and probe sites would raise the false-negative
+    * rate, i.e. silently admit duplicates. */
+  private[graft] val ProbeHashes = 3
+
   /** Mark each batch row `is_new` = its `textCol` value appears
-    * nowhere in `corpus`. `bits` sizes the prefilter; pass 0 (the
-    * default) to derive it from `corpus.count()` — ~16 bits per
-    * corpus row ([[sizedBits]]), which keeps the false-positive
-    * confirm traffic ~0.5% regardless of corpus size. The count is
-    * one cheap extra job (parquet row-count metadata, no text read);
-    * callers that already know the cardinality pass `bits` explicitly
-    * and skip it. */
+    * nowhere in `corpus`. The prefilter is sized from
+    * `corpus.count()` — ~16 bits per corpus row ([[sizedBits]]),
+    * which keeps the false-positive confirm traffic ~0.5% regardless
+    * of corpus size. The count is one cheap extra job (parquet
+    * row-count metadata, no text read). */
   def newDocs(corpus: DataFrame, batch: DataFrame,
-              textCol: String = "text", idCol: String = "doc_id",
-              bits: Int = 0, hashes: Int = 3): DataFrame = {
-    val nbits = if (bits > 0) bits else sizedBits(corpus.count())
-    newDocsWithBloom(corpus, batch, buildBloom(corpus, textCol, nbits, hashes),
-      textCol, idCol)
+              textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    val blob = buildBloom(corpus, textCol, sizedBits(corpus.count()))
+    // the bloom is ONLY an optimization: a false positive is removed
+    // by the exact confirm join below
+    val probed = batch.withColumn("maybe_dup",
+      coalesce(call_function("bloom_might_contain", lit(blob),
+        textHash(col(textCol))), lit(false)))
+    // exact confirmation for the bloom-positive minority only. The
+    // dup side is consumed ONCE and stays fully lazy: nothing is
+    // persisted (a cached-but-never-unpersisted frame would pin
+    // CacheManager blocks for the session's lifetime) and no
+    // broadcast hint is forced (the dup side is bounded by the DUP
+    // RATE, not the batch, but a pathological ~all-dup
+    // multi-million-row batch would overwhelm the driver). AQE's
+    // runtime size check converts the join to broadcast whenever the
+    // confirmed set is actually small — the common case — which is
+    // exactly the adaptive form of the size guard a hand-picked
+    // row-count constant approximated.
+    val confirmed = probed.filter(col("maybe_dup"))
+      .join(corpus.select(col(textCol)).distinct(), Seq(textCol), "left_semi")
+      .select(col(idCol).as("dup_id"))
+    probed
+      .join(confirmed, col(idCol) === col("dup_id"), "left")
+      .select(col(idCol), col("dup_id").isNull.as("is_new"))
   }
 
   /** xxhash64 of a text value, NULL-GATED. Spark's `xxhash64` SKIPS
@@ -66,14 +91,11 @@ object IncrementalDedup {
   private[graft] def textHash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(c.isNotNull, xxhash64(c))
 
-  /** Aggregate the corpus texts into a bloom blob — ONE corpus scan.
-    * Exposed so a streaming caller can build it once and CARRY it
-    * across micro-batches ([[graft.streaming.EventStreams]]) instead
-    * of paying this scan per batch. */
-  def buildBloom(corpus: DataFrame, textCol: String, bits: Int, hashes: Int): Array[Byte] =
+  /** Aggregate the corpus texts into a bloom blob — ONE corpus scan. */
+  private def buildBloom(corpus: DataFrame, textCol: String, bits: Int): Array[Byte] =
     corpus
       .agg(call_function("bloom_agg",
-        textHash(col(textCol)), lit(bits), lit(hashes)).as("bf"))
+        textHash(col(textCol)), lit(bits), lit(ProbeHashes)).as("bf"))
       .collect()(0).getAs[Array[Byte]](0)
 
   /** Bitwise union of two same-shape blooms: the union of the sets
@@ -98,35 +120,5 @@ object IncrementalDedup {
     var i = 16
     while (i < a.length) { out(i) = (a(i) | b(i)).toByte; i += 1 }
     out
-  }
-
-  /** [[newDocs]] with a caller-supplied prefilter blob. The bloom is
-    * ONLY an optimization: a false positive is removed by the exact
-    * confirm join; a blob that is missing corpus texts, however, WOULD
-    * admit duplicates — carrying one across batches therefore requires
-    * a consistency check on the corpus (see the EventStreams carried-
-    * bloom fingerprint discipline). */
-  def newDocsWithBloom(corpus: DataFrame, batch: DataFrame, blob: Array[Byte],
-                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val probed = batch.withColumn("maybe_dup",
-      coalesce(call_function("bloom_might_contain", lit(blob),
-        textHash(col(textCol))), lit(false)))
-    // exact confirmation for the bloom-positive minority only. The
-    // dup side is consumed ONCE and stays fully lazy: nothing is
-    // persisted (`ingestDedup` calls this every micro-batch — a
-    // cached-but-never-unpersisted frame would pin CacheManager
-    // blocks for the stream's lifetime) and no broadcast hint is
-    // forced (the dup side is bounded by the DUP RATE, not the batch,
-    // but a pathological ~all-dup multi-million-row batch would
-    // overwhelm the driver). AQE's runtime size check converts the
-    // join to broadcast whenever the confirmed set is actually small
-    // — the common case — which is exactly the adaptive form of the
-    // size guard a hand-picked row-count constant approximated.
-    val confirmed = probed.filter(col("maybe_dup"))
-      .join(corpus.select(col(textCol)).distinct(), Seq(textCol), "left_semi")
-      .select(col(idCol).as("dup_id"))
-    probed
-      .join(confirmed, col(idCol) === col("dup_id"), "left")
-      .select(col(idCol), col("dup_id").isNull.as("is_new"))
   }
 }

@@ -245,13 +245,14 @@ object EventStreams {
       .select(col("r.*"))
   }
 
-  /** A bloom blob carried across micro-batches, keyed by landing dir.
-    * Two instances exist per landing: the EXACT-stage bloom over
-    * landed text hashes ([[carriedBlooms]]) and the NEAR-stage bloom
-    * over landed LSH bucket hashes ([[carriedBuckets]]). Rebuilding
-    * either per batch is a full corpus scan per micro-batch —
+  /** A bloom blob carried across micro-batches, one per dedup stage
+    * per landing ([[carries]]): the EXACT stage's over landed text
+    * hashes, the NEAR stage's over landed LSH bucket hashes, the
+    * SEMANTIC stage's over landed hyperplane band-bucket hashes — each
+    * the stage's [[IngestStage.keys]]. Rebuilding any of them per
+    * batch is a full corpus scan per micro-batch —
     * O(corpus), the clearest scale-killer in a long-running ingest —
-    * so both are seeded at most once and then FOLDED forward: after
+    * so each is seeded at most once and then FOLDED forward: after
     * each append, a bloom of just the appended rows (computed by the
     * write's own Observation — no second pass) is OR'd in.
     *
@@ -261,8 +262,8 @@ object EventStreams {
     * whose rows all probe bloom-negative touches the landing not at
     * all. A batch with bloom-positive rows still pays a confirm join
     * whose corpus side is a scan of the landing's text (exact stage)
-    * or signature columns (near stage) — bounded in frequency by the
-    * dup/FP rate of the probe side, not eliminated.
+    * or state columns (near/semantic stages) — bounded in frequency
+    * by the dup/FP rate of the probe side, not eliminated.
     *
     * Exactness discipline — a bloom MISSING landed rows would admit
     * duplicates (the false-NEGATIVE direction the confirm join cannot
@@ -281,32 +282,29 @@ object EventStreams {
     * Capacity: blobs are sized for 4× the seed-time corpus (~16
     * bits/key keeps confirm traffic ~0.5%); growing past that drops
     * the carry so the next batch reseeds at the new size — amortized
-    * one corpus scan per 4× growth. */
+    * one corpus scan per 4× growth. Every carry is built with
+    * [[graft.ops.IncrementalDedup.ProbeHashes]] probe hashes. */
   private[graft] final case class CarriedBloom(
-    blob: Array[Byte], bits: Int, hashes: Int, capacity: Long, landingFp: String)
+    blob: Array[Byte], bits: Int, capacity: Long, landingFp: String)
 
-  /** Exact-stage carry: bloom over xxhash64 of landed text. */
-  private[graft] val carriedBlooms =
-    new java.util.concurrent.ConcurrentHashMap[String, CarriedBloom]()
+  /** Every carried bloom: landing dir → (stage name → carry). A key
+    * COLLISION in a stage's bloom only costs a confirm probe (the row
+    * looks like a candidate and the exact confirm clears it); it can
+    * never admit a duplicate, which is what makes a bloom a sound
+    * carrier for a landed key set. One entry per landing, so whatever
+    * poisons a landing drops all of its carries with one `remove`. */
+  private[graft] val carries =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, CarriedBloom]]()
 
-  /** Near-stage carry: bloom over the landed corpus's LSH bucket
-    * hashes (two buckets per doc — band 1 = (mh1,mh2), band 2 =
-    * (mh3,mh4), hashed as xxhash64(band, x, y)). A bucket-hash
-    * COLLISION only costs a confirm probe (the row looks like a
-    * candidate and the exact bucket join clears it); it can never
-    * admit a duplicate, which is what makes a bloom a sound carrier
-    * for the bucket set. */
-  private[graft] val carriedBuckets =
-    new java.util.concurrent.ConcurrentHashMap[String, CarriedBloom]()
+  private def carriesOf(landingDir: String): Map[String, CarriedBloom] =
+    carries.getOrDefault(landingDir, Map.empty)
 
-  /** Semantic-stage carry ([[ingestSemantic]]): bloom over the landed
-    * corpus's hyperplane band-bucket hashes (one bucket per band per
-    * doc, hashed as xxhash64(band, code)). Same soundness argument as
-    * [[carriedBuckets]]: a collision only nominates a confirm
-    * candidate — the exact cosine join decides — so a bloom can carry
-    * the bucket set without ever admitting a duplicate it shouldn't. */
-  private[graft] val carriedSemBuckets =
-    new java.util.concurrent.ConcurrentHashMap[String, CarriedBloom]()
+  private[graft] def carryOf(landingDir: String, stage: String): Option[CarriedBloom] =
+    carriesOf(landingDir).get(stage)
+
+  /** Replace the landing's carries; an empty set removes its entry. */
+  private def setCarries(landingDir: String, m: Map[String, CarriedBloom]): Unit =
+    if (m.isEmpty) carries.remove(landingDir) else carries.put(landingDir, m)
 
   /** One canonical form per physical landing dir — `makeQualified`
     * resolves scheme/authority/trailing-slash spellings ('/a/b/',
@@ -421,58 +419,38 @@ object EventStreams {
 
   /** After a successful append: re-list the landing, verify the delta
     * is exactly this batch's own committed part files, and either fold
-    * the observed append-blooms into both carries under the validated
-    * listing's fingerprint, or — on ANY unexpected delta — drop the
-    * carries so the next batch reseeds from the landing (which then
-    * includes whatever landed out-of-band). Also drops a carry whose
-    * capacity the landed count outgrew (next batch reseeds larger). */
+    * each `observed` append-bloom (stage name → blob of the appended
+    * rows' keys) into that stage's carry under the validated listing's
+    * fingerprint, or — on ANY unexpected delta — drop the carries so
+    * the next batch reseeds from the landing (which then includes
+    * whatever landed out-of-band). Also drops a carry whose capacity
+    * the landed count outgrew (next batch reseeds larger). */
   private def foldCarries(spark: SparkSession, landingDir: String,
                           preParts: Seq[String], appendedRows: Long,
                           landedCount: Long,
-                          folds: Seq[(java.util.concurrent.ConcurrentHashMap[String, CarriedBloom],
-                                      Option[Array[Byte]])]): Unit = {
+                          observed: Map[String, Array[Byte]]): Unit = {
     val postParts = landingParts(spark, landingDir)
     val clean = appendOnlyDelta(preParts, postParts, appendedRows) &&
       (appendedRows > 0L ||
         deltaRowless(spark, landingDir, deltaPaths(preParts, postParts)))
     if (!clean) {
       // an unexplained delta poisons EVERY carry on this landing, not
-      // just the folding mode's — drop all three maps' entries
-      carriedBlooms.remove(landingDir)
-      carriedBuckets.remove(landingDir)
-      carriedSemBuckets.remove(landingDir)
+      // just the folding mode's
+      carries.remove(landingDir)
       return
     }
     val fp = fpOf(postParts)
-    folds.foreach { case (map, observed) =>
-      val cached = map.get(landingDir)
-      if (cached != null && observed.nonEmpty) {
-        if (landedCount > cached.capacity) { map.remove(landingDir); () }
-        else map.put(landingDir, cached.copy(
-          blob = graft.ops.IncrementalDedup.unionBloom(cached.blob, observed.get),
-          landingFp = fp))
+    setCarries(landingDir, observed.foldLeft(carriesOf(landingDir)) {
+      case (m, (stage, blob)) => m.get(stage) match {
+        case Some(c) if landedCount <= c.capacity => m.updated(stage,
+          c.copy(blob = graft.ops.IncrementalDedup.unionBloom(c.blob, blob), landingFp = fp))
+        case Some(_) => m - stage
+        case None    => m
       }
-    }
+    })
   }
 
-  // ---------- exact-stage carry ----------
-
-  /** Probe-hash count shared by every carried bloom. One constant —
-    * the blob is built, folded, AND probed assuming this k; a
-    * mismatch between build and probe sites would raise the
-    * false-negative rate, i.e. silently admit duplicates. */
-  private val CarryHashes = 3
-
-  /** The text-bloom metric to ride the append's Observation: the
-    * appended rows' bloom is computed DURING the write itself — no
-    * extra action, no re-execution of `fresh`'s plan. None when no
-    * carry exists (first batch seeds via [[seedCarryFromAppend]]). */
-  private def bloomMetricFor(landingDir: String, textCol: String): Option[Column] =
-    Option(carriedBlooms.get(landingDir)).map(c =>
-      call_function("bloom_agg", graft.ops.IncrementalDedup.textHash(col(textCol)),
-        lit(c.bits), lit(c.hashes)).as("bf"))
-
-  /** First batch only (no carry yet): seed the requested carries from
+  /** First batch only (no carry yet): seed every stage's carry from
     * the append itself — no corpus existed before it, so the append
     * IS the corpus, and `fresh`'s first-batch plan reads no landing
     * (the dir was absent), so re-running it here is landing-free
@@ -496,52 +474,95 @@ object EventStreams {
     if (!clean) return
     val fp = fpOf(post)
     val cap = math.max(landedCount, 1L) * 4
-    stages.foreach(s => s.carryMap.put(landingDir, s.buildCarry(fresh, cap, fp)))
+    setCarries(landingDir, stages.map(s => s.name -> buildCarry(s, fresh, cap, fp)).toMap)
   }
 
-  /** Two-phase cross-batch exact confirm over in-batch keepers
-    * `firsts`: (1) probe every row against the carried bloom — a
-    * batch-side map, no landing I/O; (2) ONLY if any row probed
-    * positive, confirm the positives with a semi-join against the
-    * landed text and anti-join the confirmed dups away. A clean batch
-    * (all rows bloom-negative — the common case in steady ingest)
-    * therefore executes NO plan that reads the landing at all (pinned
-    * by StreamingSpec's listener cases), which is the property that
-    * survives a 100 TB landing. `firsts` must be persisted by the
-    * caller (the probe count and the write both consume it). */
-  private def exactStage(probed: DataFrame, corpus: () => DataFrame,
-                         textCol: String, idCol: String): DataFrame = {
-    val nPositive = probed.filter(col("maybe_dup")).count()
-    if (nPositive == 0L) probed.drop("maybe_dup")
-    else {
-      // exact confirmation for the bloom-positive minority only; the
-      // corpus side is column-pruned to the text column, and AQE's
-      // runtime size check broadcasts whichever side is small
-      // no distinct on the corpus side: a left_semi join is already
-      // duplicate-insensitive on its right input, and the landed texts
-      // are unique by the dedup invariant anyway — a distinct here
-      // would add a full-corpus hash aggregation to every
-      // bloom-positive batch for nothing.
-      // the confirm AND the anti both key on the TEXT (the actual
-      // duplicate semantic), not idCol: an anti-join on idCol keeps
-      // every NULL-id row (null never equals null), so a confirmed
-      // duplicate with a null id would land duplicate text and break
-      // the landed-texts-unique invariant the optimization above
-      // relies on. Null-TEXT rows never probe bloom-positive (no
-      // bloom identity) and null anti-keys survive, so null-text
-      // rows still land exactly once per row, as before.
-      val dupTexts = probed.filter(col("maybe_dup"))
-        .join(corpus().select(col(textCol)), Seq(textCol), "left_semi")
-        .select(col(textCol))
-      // re-select in probed's column order: a USING join hoists its
-      // key first, and the landing's column order must not depend on
-      // which confirm branch a batch took
-      probed.join(dupTexts, Seq(textCol), "left_anti")
-        .select(probed.columns.filterNot(_ == "maybe_dup").map(col): _*)
+  // ---------- the carried key bloom (one path for every stage) ----------
+
+  /** One `bloom_agg` per stage key, aliased per stage so every stage's
+    * aggregates ride ONE append Observation side by side; the per-key
+    * blobs are unioned driver-side ([[keyBlob]]) — no explode in the
+    * write path. */
+  private def keyAggs(s: IngestStage, bits: Int): Seq[Column] =
+    s.keys.zipWithIndex.map { case (k, i) =>
+      call_function("bloom_agg", k, lit(bits),
+        lit(graft.ops.IncrementalDedup.ProbeHashes)).as(s"${s.name}_bloom$i")
     }
+
+  /** The union of the stage's per-key blobs out of one [[keyAggs]]
+    * result (a collected row or the append Observation). */
+  private def keyBlob(s: IngestStage, result: String => Any): Array[Byte] =
+    s.keys.indices.map(i => result(s"${s.name}_bloom$i").asInstanceOf[Array[Byte]])
+      .reduce(graft.ops.IncrementalDedup.unionBloom)
+
+  /** THE one carry constructor. The loop calls it from BOTH carry
+    * paths — the first-batch seed (rows = the persisted append) and
+    * the steady-state reseed (rows = the landed corpus; Catalyst
+    * prunes to the stage's key columns) — so bits sizing, probe-hash
+    * count and blob layout live in exactly one place. */
+  private def buildCarry(s: IngestStage, rows: DataFrame, cap: Long,
+                         fp: String): CarriedBloom = {
+    // sized for `cap` docs at keys.size keys each, overflow-clamped
+    val n = s.keys.size
+    val bits = graft.ops.IncrementalDedup.sizedBits(math.min(cap, Long.MaxValue / n) * n)
+    val aggs = keyAggs(s, bits)
+    val r = rows.agg(aggs.head, aggs.tail: _*).collect()(0)
+    CarriedBloom(keyBlob(s, (n: String) => r.getAs[Any](n)), bits, cap, fp)
   }
 
-  // ---------- near-stage carry (LSH bucket bloom) ----------
+  /** The stage's probe column: any of the row's keys possibly present
+    * in the carried bloom. All-negative is DEFINITIVE absence — no
+    * landed row shares a key, so the row cannot be a duplicate or a
+    * candidate against the corpus. A NULL key (no identity) probes
+    * null → false. */
+  private def probe(s: IngestStage, blob: Array[Byte]): Column =
+    s.keys.map(k =>
+      coalesce(call_function("bloom_might_contain", lit(blob), k), lit(false))
+    ).reduce(_ || _)
+
+  /** Cross-batch exact confirm over the probed in-batch keepers:
+    * confirm the bloom-positive rows with a semi-join against the
+    * landed text and anti-join the confirmed dups away. */
+  private def exactConfirm(probed: DataFrame, corpus: () => DataFrame,
+                           textCol: String): DataFrame = {
+    // exact confirmation for the bloom-positive minority only; the
+    // corpus side is column-pruned to the text column, and AQE's
+    // runtime size check broadcasts whichever side is small
+    // no distinct on the corpus side: a left_semi join is already
+    // duplicate-insensitive on its right input, and the landed texts
+    // are unique by the dedup invariant anyway — a distinct here
+    // would add a full-corpus hash aggregation to every
+    // bloom-positive batch for nothing.
+    // the confirm AND the anti both key on the TEXT (the actual
+    // duplicate semantic), not idCol: an anti-join on idCol keeps
+    // every NULL-id row (null never equals null), so a confirmed
+    // duplicate with a null id would land duplicate text and break
+    // the landed-texts-unique invariant the optimization above
+    // relies on. Null-TEXT rows never probe bloom-positive (no
+    // bloom identity) and null anti-keys survive, so null-text
+    // rows still land exactly once per row, as before.
+    val dupTexts = probed.filter(col("maybe_dup"))
+      .join(corpus().select(col(textCol)), Seq(textCol), "left_semi")
+      .select(col(textCol))
+    // re-select in probed's column order: a USING join hoists its
+    // key first, and the landing's column order must not depend on
+    // which confirm branch a batch took
+    probed.join(dupTexts, Seq(textCol), "left_anti")
+      .select(probed.columns.filterNot(_ == "maybe_dup").map(col): _*)
+  }
+
+  /** Cross-batch candidate confirm of the bucket stages (near,
+    * semantic): only the probe-positive rows go through the stage's
+    * exact `newDocs` against the landing, and the confirmed-new join
+    * the probe-negatives. */
+  private def candidateConfirm(probed: DataFrame, probeCol: String, idCol: String)
+                              (newDocs: DataFrame => DataFrame): DataFrame = {
+    val candidates = probed.filter(col(probeCol)).drop(probeCol)
+    val confirmedNew = candidates.join(
+      newDocs(candidates).filter(col("is_new")).select(col(idCol)),
+      Seq(idCol), "left_semi")
+    probed.filter(!col(probeCol)).drop(probeCol).unionByName(confirmedNew)
+  }
 
   /** 64-bit key of an LSH band bucket — the hashed form of the
     * (band, x, y) triples [[graft.ops.NearDupIncremental.bucketsFromSigs]]
@@ -556,161 +577,32 @@ object EventStreams {
     // skips it, and the probe treats null as definitively negative.
     when(x.isNotNull && y.isNotNull, xxhash64(lit(band), x, y))
 
-  /** `maybe_nd`: any of the row's two band buckets possibly present in
-    * the carried bucket bloom. Both-negative is DEFINITIVE absence —
-    * no landed doc shares a bucket, so the row cannot be an LSH
-    * candidate against the corpus. Null sigs probe null → false. */
-  private def bucketProbe(blob: Array[Byte]): Column =
-    coalesce(call_function("bloom_might_contain", lit(blob),
-      bucketHash(1, col("mh1"), col("mh2"))), lit(false)) ||
-    coalesce(call_function("bloom_might_contain", lit(blob),
-      bucketHash(2, col("mh3"), col("mh4"))), lit(false))
-
-  /** The two per-band bucket-bloom aggregates (one scan, union the
-    * blobs driver-side — no explode in the write path). */
-  private def bucketAggs(bits: Int, hashes: Int): Seq[Column] = Seq(
-    call_function("bloom_agg", bucketHash(1, col("mh1"), col("mh2")), lit(bits), lit(hashes)).as("bb1"),
-    call_function("bloom_agg", bucketHash(2, col("mh3"), col("mh4")), lit(bits), lit(hashes)).as("bb2"))
-
-  /** Bits for a bucket bloom covering `cap` docs (two buckets each),
-    * overflow-clamped. */
-  private def bucketBits(cap: Long): Int =
-    graft.ops.IncrementalDedup.sizedBits(math.min(cap, Long.MaxValue / 2) * 2)
-
-  private def buildBucketBloom(sigs: DataFrame, bits: Int, hashes: Int): Array[Byte] = {
-    val aggs = bucketAggs(bits, hashes)
-    val r = sigs.agg(aggs.head, aggs.tail: _*).collect()(0)
-    graft.ops.IncrementalDedup.unionBloom(
-      r.getAs[Array[Byte]]("bb1"), r.getAs[Array[Byte]]("bb2"))
-  }
-
-  /** Bucket-bloom metrics to ride the append's Observation (empty when
-    * no carry exists yet — the first batch seeds from the append). */
-  private def bucketMetricsFor(landingDir: String): Seq[Column] =
-    Option(carriedBuckets.get(landingDir)).toSeq.flatMap(c => bucketAggs(c.bits, c.hashes))
-
-  private def observedBucketBloom(landingDir: String,
-                                  obs: org.apache.spark.sql.Observation): Option[Array[Byte]] =
-    Option(carriedBuckets.get(landingDir)).map { _ =>
-      graft.ops.IncrementalDedup.unionBloom(
-        obs.get("bb1").asInstanceOf[Array[Byte]], obs.get("bb2").asInstanceOf[Array[Byte]])
-    }
-
-  /** Two-phase cross-batch near-dup confirm — the bucket-bloom twin of
-    * [[exactStage]]: probe each kept row's two band buckets (batch-side
-    * map, no landing I/O); only if any row probed positive, run the
-    * exact bucket join ([[graft.ops.NearDupIncremental.newDocs]])
-    * for the candidates against the landing's signature columns
-    * (column-pruned, 4 longs/row, text never re-read) and keep the
-    * confirmed-new. `probed` must be persisted by the caller. */
-  private def nearStage(probed: DataFrame, corpus: () => DataFrame,
-                        idCol: String): DataFrame = {
-    val nCandidates = probed.filter(col("maybe_nd")).count()
-    if (nCandidates == 0L) probed.drop("maybe_nd")
-    else {
-      val candidates = probed.filter(col("maybe_nd")).drop("maybe_nd")
-      val corpusSigs = corpus().select(col(idCol), col("mh1"), col("mh2"), col("mh3"), col("mh4"))
-      val confirmedNew = candidates.join(
-        graft.ops.NearDupIncremental.newDocs(corpusSigs, candidates, idCol)
-          .filter(col("is_new")).select(col(idCol)),
-        Seq(idCol), "left_semi")
-      probed.filter(!col("maybe_nd")).drop("maybe_nd").unionByName(confirmedNew)
-    }
-  }
-
-  // ---------- semantic-stage carry (hyperplane bucket bloom) ----------
-
   /** 64-bit key of a hyperplane band bucket: the `sb<band>` code
     * columns [[graft.ops.SemanticIncremental.withCodes]] lands. Null
     * code (null vector) → null hash (GATED — Spark's xxhash64 would
     * otherwise skip the null and hash `band` alone, one fixed value
-    * shared by every null-vector row), which [[semBucketProbe]]
-    * treats as not-a-candidate and `bloom_agg` skips. */
+    * shared by every null-vector row), which the probe treats as
+    * not-a-candidate and `bloom_agg` skips. */
   private def semBucketHash(band: Int, code: Column): Column =
     when(code.isNotNull, xxhash64(lit(band), code))
-
-  /** `maybe_sem`: any of the row's band buckets possibly present in
-    * the carried bucket bloom. All-negative is DEFINITIVE absence of
-    * any landed bucket-mate; a null-vector row can never collide. */
-  private def semBucketProbe(blob: Array[Byte], bands: Int): Column =
-    (0 until bands).map { t =>
-      coalesce(call_function("bloom_might_contain",
-        lit(blob), semBucketHash(t, col(s"sb$t"))), lit(false))
-    }.reduce(_ || _)
-
-  /** Per-band bucket-bloom aggregates (one scan; blobs unioned
-    * driver-side — no explode in the write path). */
-  private def semBucketAggs(bits: Int, hashes: Int, bands: Int): Seq[Column] =
-    (0 until bands).map { t =>
-      call_function("bloom_agg", semBucketHash(t, col(s"sb$t")),
-        lit(bits), lit(hashes)).as(s"sbb$t")
-    }
-
-  /** Bits for a bucket bloom covering `cap` docs at `bands` buckets
-    * each, overflow-clamped. */
-  private def semBucketBits(cap: Long, bands: Int): Int =
-    graft.ops.IncrementalDedup.sizedBits(
-      math.min(cap, Long.MaxValue / bands) * bands)
-
-  private def buildSemBucketBloom(coded: DataFrame, bands: Int,
-                                  bits: Int, hashes: Int): Array[Byte] = {
-    val aggs = semBucketAggs(bits, hashes, bands)
-    val r = coded.agg(aggs.head, aggs.tail: _*).collect()(0)
-    (0 until bands).map(t => r.getAs[Array[Byte]](s"sbb$t"))
-      .reduce(graft.ops.IncrementalDedup.unionBloom)
-  }
-
-  private def semBucketMetricsFor(landingDir: String, bands: Int): Seq[Column] =
-    Option(carriedSemBuckets.get(landingDir)).toSeq
-      .flatMap(c => semBucketAggs(c.bits, c.hashes, bands))
-
-  private def observedSemBucketBloom(landingDir: String, bands: Int,
-                                     obs: org.apache.spark.sql.Observation)
-      : Option[Array[Byte]] =
-    Option(carriedSemBuckets.get(landingDir)).map { _ =>
-      (0 until bands).map(t => obs.get(s"sbb$t").asInstanceOf[Array[Byte]])
-        .reduce(graft.ops.IncrementalDedup.unionBloom)
-    }
-
-  /** Two-phase cross-batch SEMANTIC confirm — the cosine-confirming
-    * sibling of [[nearStage]]: probe each kept row's band buckets
-    * against the carried bloom (batch-side map, no landing I/O); only
-    * if some row probed positive, run the exact bucket join + cosine
-    * confirm ([[graft.ops.SemanticIncremental.newDocsCoded]]) for the
-    * candidates. The corpus side contributes its landed `sb*` codes
-    * to the candidate join (one int per band per row — codes are
-    * READ, never recomputed from vectors) and its vectors only for
-    * distinct candidate pairs. `probed` must be persisted by the
-    * caller. */
-  private def semStage(probed: DataFrame, corpusCoded: () => DataFrame, tau: Double,
-                       idCol: String, vecCol: String, bands: Int): DataFrame = {
-    val nCandidates = probed.filter(col("maybe_sem")).count()
-    if (nCandidates == 0L) probed.drop("maybe_sem")
-    else {
-      val candidates = probed.filter(col("maybe_sem")).drop("maybe_sem")
-      val confirmedNew = candidates.join(
-        graft.ops.SemanticIncremental
-          .newDocsCoded(corpusCoded(), candidates, tau, idCol, vecCol, bands)
-          .filter(col("is_new")).select(col(idCol)),
-        Seq(idCol), "left_semi")
-      probed.filter(!col("maybe_sem")).drop("maybe_sem").unionByName(confirmedNew)
-    }
-  }
 
   // ---------- the shared ingest batch loop ----------
 
   /** One two-phase dedup stage of an ingest mode. The four public
     * ingest entries (exact / near / semantic / composed pipeline) are
     * all the SAME carry state machine — in-batch keepers, carried-
-    * bloom probe, confirm-join for positives, observed fold after the
+    * bloom probe, confirm for positives, observed fold after the
     * append — differing only in what each stage computes and which
-    * carry map it owns. One descriptor per stage, one generic loop
-    * ([[runIngestStream]]): a future change to the fold/seed/
-    * validation protocol lands in exactly one place instead of four
+    * keys identify a row to it. One descriptor per stage, one generic
+    * loop ([[runIngestStream]]) and one carry path ([[buildCarry]],
+    * [[probe]], [[foldCarries]]): a future change to the fold/seed/
+    * validation protocol lands in exactly one place instead of
     * hand-kept copies (this round's history shows why: the zero-row
     * fold rule, the single-listing seed, and the landingKey
     * canonicalization each had to be replicated four ways). */
   private final case class IngestStage(
+    /** The stage's key in [[carries]] and its Observation alias prefix. */
+    name: String,
     /** In-batch keeper + state-column computation (runs on the
       * previous stage's survivors; on the first batch the preps
       * compose with no cross-batch confirms between them). */
@@ -720,90 +612,65 @@ object EventStreams {
     stateCols: Set[String],
     /** Extra landed-schema contract, e.g. [[requireLandedSemCols]]. */
     landingCheck: (DataFrame, String) => Unit,
-    /** The carry map this stage's bloom lives in. */
-    carryMap: java.util.concurrent.ConcurrentHashMap[String, CarriedBloom],
-    /** THE one carry constructor: (rows, capacity, fp) → CarriedBloom.
-      * The loop calls it from BOTH carry paths — the first-batch seed
-      * (rows = the persisted append) and the steady-state reseed
-      * (rows = the landed corpus; Catalyst prunes to the stage's
-      * columns) — so bits sizing, [[CarryHashes]], and blob layout
-      * live in exactly one place per stage. */
-    buildCarry: (DataFrame, Long, String) => CarriedBloom,
+    /** The NULL-gated 64-bit keys that identify a row to this stage:
+      * the carry holds every landed row's keys, and a row probes
+      * positive when ANY of its keys might be in it. */
+    keys: Seq[Column],
     probeCol: String,
-    probe: CarriedBloom => Column,
-    /** (persisted probed frame, LAZY corpus) → surviving rows. The
-      * corpus thunk must only be forced on the bloom-positive path:
-      * a clean batch (the steady-state common case) must build no
-      * corpus relation at all — not even its file listing. */
-    confirm: (DataFrame, () => DataFrame) => DataFrame,
-    /** Observation metrics that compute the appended rows' bloom
-      * during the write (empty when no carry exists yet). */
-    metricsFor: String => Seq[Column],
-    /** Extract this stage's observed append bloom after the write. */
-    observed: (String, org.apache.spark.sql.Observation) => Option[Array[Byte]])
+    /** (persisted probed frame with at least one positive, LAZY
+      * corpus) → surviving rows. The corpus thunk must only be forced
+      * here: a clean batch (the steady-state common case) must build
+      * no corpus relation at all — not even its file listing. */
+    confirm: (DataFrame, () => DataFrame) => DataFrame)
 
   private def exactIngestStage(textCol: String, idCol: String): IngestStage =
-    IngestStage(
+    IngestStage("exact",
       prep = b => exactFirsts(b, textCol, idCol),
       stateCols = Set.empty,
       landingCheck = (_, _) => (),
-      carryMap = carriedBlooms,
-      buildCarry = (rows, cap, fp) => {
-        val bits = graft.ops.IncrementalDedup.sizedBits(cap)
-        CarriedBloom(
-          graft.ops.IncrementalDedup.buildBloom(rows, textCol, bits, CarryHashes),
-          bits, CarryHashes, cap, fp)
-      },
+      keys = Seq(graft.ops.IncrementalDedup.textHash(col(textCol))),
       probeCol = "maybe_dup",
-      probe = c => coalesce(call_function("bloom_might_contain", lit(c.blob),
-        graft.ops.IncrementalDedup.textHash(col(textCol))), lit(false)),
-      confirm = (probed, corpus) => exactStage(probed, corpus, textCol, idCol),
-      metricsFor = dir => bloomMetricFor(dir, textCol).toSeq,
-      observed = (dir, obs) => Option(carriedBlooms.get(dir))
-        .map(_ => obs.get("bf").asInstanceOf[Array[Byte]]))
+      confirm = (probed, corpus) => exactConfirm(probed, corpus, textCol))
 
+  /** Near stage: a doc's keys are its two band buckets — band 1 =
+    * (mh1,mh2), band 2 = (mh3,mh4). Candidates confirm through the
+    * exact bucket join ([[graft.ops.NearDupIncremental.newDocs]])
+    * against the landing's signature columns (column-pruned, 4
+    * longs/row, text never re-read). */
   private def nearIngestStage(textCol: String, idCol: String): IngestStage =
-    IngestStage(
+    IngestStage("near",
       prep = b => graft.ops.NearDupIncremental.keepBucketMins(
         graft.ops.NearDupIncremental.withSigs(b, textCol), idCol),
       stateCols = NearStateCols,
       landingCheck = (_, _) => (),
-      carryMap = carriedBuckets,
-      buildCarry = (rows, cap, fp) => {
-        val bits = bucketBits(cap)
-        CarriedBloom(
-          buildBucketBloom(rows.select("mh1", "mh2", "mh3", "mh4"), bits, CarryHashes),
-          bits, CarryHashes, cap, fp)
-      },
+      keys = Seq(bucketHash(1, col("mh1"), col("mh2")), bucketHash(2, col("mh3"), col("mh4"))),
       probeCol = "maybe_nd",
-      probe = c => bucketProbe(c.blob),
-      confirm = (probed, corpus) => nearStage(probed, corpus, idCol),
-      metricsFor = bucketMetricsFor,
-      observed = observedBucketBloom)
+      confirm = (probed, corpus) => candidateConfirm(probed, "maybe_nd", idCol)(cands =>
+        graft.ops.NearDupIncremental.newDocs(
+          corpus().select(col(idCol), col("mh1"), col("mh2"), col("mh3"), col("mh4")),
+          cands, idCol)))
 
+  /** Semantic stage: a doc's keys are its `bands` hyperplane band
+    * buckets. Candidates confirm through the exact bucket join +
+    * cosine ([[graft.ops.SemanticIncremental.newDocsCoded]]); the
+    * corpus side contributes its landed `sb*` codes to the candidate
+    * join (one int per band per row — codes are READ, never
+    * recomputed from vectors) and its vectors only for distinct
+    * candidate pairs. */
   private def semIngestStage(sem: SemanticStage, idCol: String): IngestStage = {
     val sbCols = (0 until sem.bands).map(t => s"sb$t")
-    IngestStage(
+    IngestStage("sem",
       prep = b => graft.ops.SemanticIncremental.keepSemanticMins(
         graft.ops.SemanticIncremental.withCodes(b, sem.vecCol, sem.bits, sem.bands),
         sem.tau, idCol, sem.vecCol, sem.bands),
       stateCols = sbCols.toSet,
       landingCheck = (corpus, dir) => requireLandedSemCols(corpus, sem.bands, dir),
-      carryMap = carriedSemBuckets,
-      buildCarry = (rows, cap, fp) => {
-        val bits = semBucketBits(cap, sem.bands)
-        CarriedBloom(
-          buildSemBucketBloom(rows.select(sbCols.map(col): _*), sem.bands,
-            bits, CarryHashes),
-          bits, CarryHashes, cap, fp)
-      },
+      keys = (0 until sem.bands).map(t => semBucketHash(t, col(s"sb$t"))),
       probeCol = "maybe_sem",
-      probe = c => semBucketProbe(c.blob, sem.bands),
-      confirm = (probed, corpus) => semStage(probed,
-        () => corpus().select((col(idCol) +: col(sem.vecCol) +: sbCols.map(col)): _*),
-        sem.tau, idCol, sem.vecCol, sem.bands),
-      metricsFor = dir => semBucketMetricsFor(dir, sem.bands),
-      observed = (dir, obs) => observedSemBucketBloom(dir, sem.bands, obs))
+      confirm = (probed, corpus) => candidateConfirm(probed, "maybe_sem", idCol)(cands =>
+        graft.ops.SemanticIncremental.newDocsCoded(
+          corpus().select((col(idCol) +: col(sem.vecCol) +: sbCols.map(col)): _*),
+          cands, sem.tau, idCol, sem.vecCol, sem.bands)))
   }
 
   /** THE ingest batch loop — every public ingest entry is this loop
@@ -852,9 +719,7 @@ object EventStreams {
               // landing dir (same JVM, new stream) must reset with
               // the dir, or sizedBits sizes off a ghost corpus.
               landed.set(0L)
-              carriedBlooms.remove(landingDir)
-              carriedBuckets.remove(landingDir)
-              carriedSemBuckets.remove(landingDir)
+              carries.remove(landingDir)
               // in-batch keepers only (nothing landed to probe);
               // persisted: the write and EVERY stage's seed consume
               // it — one computed pass, not stages+1
@@ -891,21 +756,27 @@ object EventStreams {
               val out = stages.foldLeft(batch) { (cur, s) =>
                 // valid carry: fingerprint-fresh and within capacity;
                 // else reseed from the landing (ONE stage-column-
-                // pruned corpus scan) via the stage's one constructor
-                val cached = s.carryMap.get(landingDir)
-                val carried =
-                  if (cached != null && cached.landingFp == fp &&
-                      landed.get() <= cached.capacity) cached
-                  else {
-                    val cap = math.max(landed.get(), 1L) * 4
-                    val c = s.buildCarry(corpus(), cap, fp)
-                    s.carryMap.put(landingDir, c)
+                // pruned corpus scan) via the one carry constructor
+                val carried = carryOf(landingDir, s.name)
+                  .filter(c => c.landingFp == fp && landed.get() <= c.capacity)
+                  .getOrElse {
+                    val c = buildCarry(s, corpus(), math.max(landed.get(), 1L) * 4, fp)
+                    setCarries(landingDir, carriesOf(landingDir).updated(s.name, c))
                     c
                   }
-                val probed = s.prep(cur).withColumn(s.probeCol, s.probe(carried))
+                // two-phase: (1) probe every row against the carry — a
+                // batch-side map, no landing I/O; (2) ONLY if a row
+                // probed positive, confirm against the landing. A clean
+                // batch (the steady-state common case) therefore runs
+                // NO plan that reads the landing at all (pinned by
+                // StreamingSpec's listener cases), the property that
+                // survives a 100 TB landing. Persisted: the count and
+                // the confirm/write both consume it.
+                val probed = s.prep(cur).withColumn(s.probeCol, probe(s, carried.blob))
                   .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                 persisted ::= probed
-                s.confirm(probed, corpus)
+                if (probed.filter(col(s.probeCol)).count() == 0L) probed.drop(s.probeCol)
+                else s.confirm(probed, corpus)
               }
               (out, pre)
             }
@@ -913,16 +784,18 @@ object EventStreams {
           // rows' bloom — inside the write action (no second
           // computation of `fresh`, no landing rescan)
           val obs = new org.apache.spark.sql.Observation(s"${obsPrefix}_landed_$batchId")
-          val metrics = count(lit(1)).as("n") +: stages.flatMap(_.metricsFor(landingDir))
+          val folding = stages.flatMap(s => carryOf(landingDir, s.name).map(c => (s, c.bits)))
+          val metrics = count(lit(1)).as("n") +: folding.flatMap { case (s, bits) => keyAggs(s, bits) }
           appendToLanding(fresh, landingDir, appendFiles, partitionCols, obs, metrics)
           postAppendHook(landingDir, batchId)
-          val appended = obs.get("n").asInstanceOf[Long]
+          val observed = obs.get
+          val appended = observed("n").asInstanceOf[Long]
           landed.addAndGet(appended)
           if (firstBatch)
             seedFromAppend(spark, landingDir, fresh, landed.get(), stages)
           else
             foldCarries(spark, landingDir, preParts, appended, landed.get(),
-              stages.map(s => (s.carryMap, s.observed(landingDir, obs))))
+              folding.map { case (s, _) => s.name -> keyBlob(s, observed) }.toMap)
         } finally persisted.foreach(_.unpersist(false))
         ()
       }
@@ -1583,16 +1456,12 @@ object EventStreams {
     * reseeds. Returns false iff a carry had to be dropped. */
   private def restampCarries(landingDir: String, preFp: String, postFp: String,
                              valid: Boolean): Boolean = {
-    var dropped = false
-    Seq(carriedBlooms, carriedBuckets, carriedSemBuckets).foreach { map =>
-      val cached = map.get(landingDir)
-      if (cached != null) {
-        if (valid && cached.landingFp == preFp)
-          map.put(landingDir, cached.copy(landingFp = postFp))
-        else { map.remove(landingDir); dropped = true }
-      }
+    val cur = carriesOf(landingDir)
+    val kept = cur.collect {
+      case (stage, c) if valid && c.landingFp == preFp => stage -> c.copy(landingFp = postFp)
     }
-    !dropped
+    setCarries(landingDir, kept)
+    kept.size == cur.size
   }
 
   /** The data-bearing leaf dirs of a landing: the dir itself when
@@ -2228,7 +2097,7 @@ object EventStreams {
     * regime). Each micro-batch first collapses its own internal
     * repeats (lowest id wins, the q21 keeper discipline), then checks
     * the ENTIRE landed corpus through the carried-bloom two-phase
-    * confirm ([[exactStage]]), and appends only genuinely-new rows.
+    * confirm ([[runIngestStream]]), and appends only genuinely-new rows.
     *
     * Steady-state cost per batch: one batch-side probe pass + the
     * append; the landing is read ONLY to confirm bloom-positive rows
@@ -2261,7 +2130,7 @@ object EventStreams {
     * retry (a partially-failed append publishes each surviving row
     * WITH its signatures, so a replayed batch collides with its own
     * landed buckets). Per-batch dedup is the carried bucket-bloom
-    * two-phase confirm ([[nearStage]]): steady-state clean batches
+    * two-phase confirm ([[runIngestStream]]): steady-state clean batches
     * never read the landing at all; candidate batches read only the
     * four signature columns. Within a batch the greedy bucket-min
     * keeper applies first (smallest id per bucket survives — see
@@ -2293,7 +2162,7 @@ object EventStreams {
     * recall or confirm traffic, never a wrong drop.
     *
     * Per-batch cost is the carried bucket-bloom two-phase confirm
-    * ([[semStage]]): probe-negative batches never read the landing;
+    * ([[runIngestStream]]): probe-negative batches never read the landing;
     * candidate batches read the landed codes (one int per band per
     * row) for the bucket join and landed VECTORS only for candidate
     * rows. In-batch, [[graft.ops.SemanticIncremental.keepSemanticMins]]

@@ -26,14 +26,19 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     spark.read.parquet(dir).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
 
-  test("compactLanding: accreted landing rewritten to targetFiles, rows and carry preserved") {
+  /** Land three batches through `ingest`, compact to 2 files, and
+    * check that every one of `stages`' carries survived re-stamped
+    * with the compacted listing's fingerprint — and still dedups. */
+  private def compactionKeepsCarries(
+      prefix: String, stages: Seq[String],
+      ingest: (org.apache.spark.sql.DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val landing = tmpDir("graft-compact") + "/corpus"
+    val landing = tmpDir(prefix) + "/corpus"
     val key = EventStreams.landingKey(spark, landing)
     val input = MemoryStream[(Long, String)]
-    val q = EventStreams.ingestDedup(
-      input.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-ck"))
+    val q = ingest(input.toDF().toDF("doc_id", "text"), landing, tmpDir(prefix + "-ck"))
     try {
       input.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
       q.processAllAvailable()
@@ -45,7 +50,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val before = landedTexts(landing)
     assert(before.size == 9)
     assert(visibleFiles(landing).size > 2, "fixture must actually be accreted")
-    assert(EventStreams.carriedBlooms.containsKey(key), "carry expected before compaction")
+    stages.foreach(st =>
+      assert(EventStreams.carryOf(key, st).isDefined, s"$st carry expected before compaction"))
 
     val stats = EventStreams.compactLanding(spark, landing, targetFiles = 2)
     assert(stats.filesBefore > 2 && stats.filesAfter <= 2)
@@ -53,22 +59,32 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     assert(visibleFiles(landing).size == stats.filesAfter)
     assert(landedTexts(landing) == before, "compaction must not change a row")
 
-    // the carry survived WITH the compacted listing's fingerprint —
+    // every carry survived WITH the compacted listing's fingerprint —
     // the next batch trusts it instead of paying a reseed scan
-    val carry = EventStreams.carriedBlooms.get(key)
-    assert(carry != null &&
-      carry.landingFp == graft.core.Tables.listing(spark, landing).mkString(";"))
+    val postFp = graft.core.Tables.listing(spark, landing).mkString(";")
+    stages.foreach(st =>
+      assert(EventStreams.carryOf(key, st).exists(_.landingFp == postFp),
+        s"$st carry not re-stamped with the post-compaction fingerprint"))
 
     // and it still deduplicates: a new stream on the compacted landing
     // rejects a landed text, admits a fresh one
     val in2 = MemoryStream[(Long, String)]
-    val q2 = EventStreams.ingestDedup(
-      in2.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-ck2"))
+    val q2 = ingest(in2.toDF().toDF("doc_id", "text"), landing, tmpDir(prefix + "-ck2"))
     try {
       in2.addData((10L, "alpha"), (11L, "kappa"))
       q2.processAllAvailable()
     } finally q2.stop()
     assert(landedTexts(landing) == (before :+ (11L, "kappa")).sorted)
+  }
+
+  test("compactLanding: accreted landing rewritten to targetFiles, rows and carry preserved") {
+    compactionKeepsCarries("graft-compact", Seq("exact"),
+      (docs, landing, ckpt) => EventStreams.ingestDedup(docs, landing, ckpt))
+  }
+
+  test("compactLanding keeps every stage's carry on an ingestPipeline landing") {
+    compactionKeepsCarries("graft-compact-pipe", Seq("exact", "near"),
+      (docs, landing, ckpt) => EventStreams.ingestPipeline(docs, landing, ckpt))
   }
 
   test("compactLanding: no-op when the landing is already at or under targetFiles") {
@@ -304,7 +320,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       input.addData((3L, "gamma"), (4L, "delta")); q.processAllAvailable()
       input.addData((5L, "epsilon")); q.processAllAvailable()
     } finally q.stop()
-    assert(EventStreams.carriedBlooms.containsKey(key))
+    assert(EventStreams.carryOf(key, "exact").isDefined)
     // a foreign writer lands 'sneaky' between the swap and the global
     // post listing: the compaction itself succeeds (those rows are
     // safe in the new dir), but the post listing now contains a file
@@ -318,7 +334,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       try EventStreams.compactLanding(spark, landing, targetFiles = 1)
       finally EventStreams.postSwapHook = _ => ()
     assert(!stats.carriesKept, "unexplained post-listing delta must drop the carry")
-    assert(!EventStreams.carriedBlooms.containsKey(key))
+    assert(EventStreams.carryOf(key, "exact").isEmpty)
     // every row survived — the compacted five plus the foreign one
     assert(landedTexts(landing).map(_._2).sorted ==
       Seq("alpha", "beta", "delta", "epsilon", "gamma", "sneaky"))
@@ -546,8 +562,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // SUPERSET, which the exact confirm join tolerates)
     val key = EventStreams.landingKey(spark, dir)
     val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
-    EventStreams.carriedBlooms.put(key,
-      EventStreams.CarriedBloom(new Array[Byte](32), 128, 2, 5L, preFp))
+    EventStreams.carries.put(key,
+      Map("exact" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 5L, preFp)))
     try {
       val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
       assert(stats.dirsDropped == 2 && stats.filesDropped >= 2 && stats.carriesKept)
@@ -559,13 +575,13 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
       assert(kept == Seq((4L, "2026-01", "keep1"), (5L, "2026-02", "keep2")))
       // the carry survived, restamped with the post-expiry listing
-      val carry = EventStreams.carriedBlooms.get(key)
+      val carry = EventStreams.carryOf(key, "exact").orNull
       assert(carry != null &&
         carry.landingFp == graft.core.Tables.listing(spark, dir).mkString(";"))
       // nothing sorts before the cutoff now: second run is a no-op
       val again = EventStreams.expireLanding(spark, dir, "month", "2026-01")
       assert(again.dirsDropped == 0 && again.filesDropped == 0 && again.carriesKept)
-    } finally EventStreams.carriedBlooms.remove(key)
+    } finally EventStreams.carries.remove(key)
   }
 
   test("expireLanding: nested layout expires the column at its level under every parent") {
@@ -596,8 +612,11 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       .write.partitionBy("month").parquet(dir)
     val key = EventStreams.landingKey(spark, dir)
     val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
-    EventStreams.carriedBlooms.put(key,
-      EventStreams.CarriedBloom(new Array[Byte](32), 128, 2, 2L, preFp))
+    // two stages' carries on the one landing entry: an unexplained
+    // delta must drop them both, i.e. the whole entry
+    EventStreams.carries.put(key, Map(
+      "exact" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 2L, preFp),
+      "near" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 2L, preFp)))
     // foreign rows land in the surviving month between the pre listing
     // and the deletes — the carried blob lacks their texts, so a
     // re-stamp would admit their duplicates; the carry must drop
@@ -608,13 +627,13 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     try {
       val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
       assert(stats.dirsDropped == 1 && !stats.carriesKept)
-      assert(!EventStreams.carriedBlooms.containsKey(key))
+      assert(!EventStreams.carries.containsKey(key), "landing's carry entry survived")
       // the raced-in row and the surviving month are both intact
       val kept = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
       assert(kept == Seq(2L, 99L))
     } finally {
       EventStreams.expireHook = _ => ()
-      EventStreams.carriedBlooms.remove(key)
+      EventStreams.carries.remove(key)
     }
   }
 

@@ -508,4 +508,17 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     } yield s"${f.getPath}:${i + 1}"
     assert(hits.isEmpty, s"environment reads in operator code: ${hits.mkString(", ")}")
   }
+
+  test("EventStreams keeps one carried-bloom build site and one carry probe site") {
+    // Every ingest dedup stage builds, folds and probes its carry
+    // through one generic path; a per-stage bloom twin would add a
+    // second `bloom_agg` site. The two `bloom_might_contain` sites are
+    // the carry probe and the decontaminate gate.
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/EventStreams.scala")), "UTF-8")
+    def sites(fn: String): Int = s"\"$fn\"".r.findAllIn(src).size
+    assert(sites("bloom_agg") == 1, s"bloom_agg call sites: ${sites("bloom_agg")}")
+    assert(sites("bloom_might_contain") == 2,
+      s"bloom_might_contain call sites: ${sites("bloom_might_contain")}")
+  }
 }

@@ -497,7 +497,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
         // a SEED is a standalone driver collect of a bloom aggregate
-        // over the landing (IncrementalDedup.buildBloom). The batch
+        // over the landing (EventStreams.buildCarry). The batch
         // WRITE also mentions bloom_agg (the observed append metric)
         // and reads the landing (the exact-confirm join) — that is the
         // legitimate confirm path, not a prefilter rebuild, so only
@@ -508,7 +508,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
-    EventStreams.carriedBlooms.remove(EventStreams.landingKey(spark, landing))
+    EventStreams.carries.remove(EventStreams.landingKey(spark, landing))
     spark.listenerManager.register(listener)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
@@ -525,7 +525,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       Thread.sleep(1500)
       assert(bloomScansOnLanding.get() == 0,
         s"expected 0 landing-scanning bloom builds, got ${bloomScansOnLanding.get()}")
-      assert(EventStreams.carriedBlooms.containsKey(EventStreams.landingKey(spark, landing)), "carry missing after 3 batches")
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined, "carry missing after 3 batches")
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
@@ -684,7 +684,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean near-dup batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carriedBuckets.containsKey(EventStreams.landingKey(spark, landing)), "bucket carry missing")
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "near").isDefined, "bucket carry missing")
       // and the carry still DEDUPS: a cross-batch near-dup (edited
       // repost of textA) is a candidate, confirmed against the
       // landing (a legitimate read, after disarm), and dropped
@@ -748,7 +748,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       input.addData((1L, "alpha"), (2L, "beta"))
       q.processAllAvailable()
-      assert(EventStreams.carriedBlooms.containsKey(EventStreams.landingKey(spark, landing)))
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined)
       // arm the race: right after batch 2's append returns and before
       // its fold re-lists, a second writer lands (99,"omega")
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -761,7 +761,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       EventStreams.postAppendHook = (_, _) => ()
       assert(fired.get(), "race hook did not fire")
       // the fold saw a delta with two write UUIDs → carry dropped
-      assert(!EventStreams.carriedBlooms.containsKey(EventStreams.landingKey(spark, landing)),
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isEmpty,
         "carry survived an out-of-band append inside the fold window")
       // next batch reseeds from the landing (which includes omega), so
       // the duplicate of the raced-in row is still rejected
@@ -771,7 +771,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(landed == Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"),
                            (5L, "epsilon"), (99L, "omega")))
-      assert(EventStreams.carriedBlooms.containsKey(EventStreams.landingKey(spark, landing)), "reseed did not restore the carry")
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined, "reseed did not restore the carry")
     } finally {
       EventStreams.postAppendHook = (_, _) => ()
       q.stop()
@@ -841,16 +841,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
     try {
       input.addData((1L, "alpha"), (2L, "beta")); q.processAllAvailable()
-      assert(EventStreams.carriedBlooms.containsKey(key))
-      val before = EventStreams.carriedBlooms.get(key)
+      assert(EventStreams.carryOf(key, "exact").isDefined)
+      val before = EventStreams.carryOf(key, "exact").orNull
       // batch 2: every row a cross-batch duplicate — appends 0 rows
       input.addData((3L, "alpha"), (4L, "beta")); q.processAllAvailable()
-      assert(EventStreams.carriedBlooms.containsKey(key),
+      assert(EventStreams.carryOf(key, "exact").isDefined,
         "carry dropped by an all-duplicate batch's empty append")
       // the blob folded nothing but the fingerprint advanced with the
       // (empty) part file — still the SAME filter content
       assert(java.util.Arrays.equals(
-        EventStreams.carriedBlooms.get(key).blob, before.blob))
+        EventStreams.carryOf(key, "exact").orNull.blob, before.blob))
       // and dedup continues exactly
       input.addData((5L, "alpha"), (6L, "gamma")); q.processAllAvailable()
       val landed = spark.read.parquet(landing)
@@ -1592,8 +1592,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean semantic batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carriedSemBuckets.containsKey(
-        EventStreams.landingKey(spark, landing)), "sem bucket carry missing")
+      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "sem").isDefined, "sem bucket carry missing")
       // and the carry still DEDUPS: a scaled repost is a candidate,
       // cosine-confirmed against the landing (legitimate read, after
       // disarm), and dropped
@@ -1684,6 +1683,57 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       assert(Seq("mh1", "mh2", "mh3", "mh4", "sb0", "sb1")
         .forall(landed.columns.contains))
     } finally q.stop()
+  }
+
+  test("folded carries equal a rebuild over the landing, for every stage") {
+    // Each carry is seeded from batch 1's append, then FOLDED with
+    // every later append's observed bloom. A fold that missed or
+    // mis-keyed an append would leave the blob short of landed keys
+    // (admitting duplicates). Rebuilt here from the landed columns
+    // with the same NULL-gated keys at the carry's bits, unioned
+    // across keys, each stage's blob must be byte-identical.
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    implicit val sq = spark.sqlContext
+    val landing = java.nio.file.Files.createTempDirectory("graft-fold").toString + "/corpus"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fold-ckpt").toString
+    // disjoint token sets and distinct directions: every row is fresh
+    def doc(i: Long) = (i, (0 until 40).map(j => s"w${i}t$j").mkString(" "),
+      Seq.tabulate(32)(d => math.sin(d * (1.1 + 0.37 * i) + i)))
+    val input = MemoryStream[(Long, String, Seq[Double])]
+    val q = EventStreams.ingestPipeline(
+      input.toDF().toDF("doc_id", "text", "embedding"), landing, ckpt,
+      semantic = Some(EventStreams.SemanticStage(tau = 0.9)))
+    try {
+      for (b <- 0L until 3L) {
+        input.addData((1L to 4L).map(j => doc(b * 4 + j)): _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val landed = spark.read.parquet(landing)
+    assert(landed.count() == 12L, "fixture rows must all be fresh")
+    val key = EventStreams.landingKey(spark, landing)
+    val stageKeys = Seq(
+      "exact" -> Seq(when(col("text").isNotNull, xxhash64(col("text")))),
+      "near" -> Seq((1, "mh1", "mh2"), (2, "mh3", "mh4")).map { case (band, x, y) =>
+        when(col(x).isNotNull && col(y).isNotNull, xxhash64(lit(band), col(x), col(y)))
+      },
+      "sem" -> (0 until 2).map(t =>
+        when(col(s"sb$t").isNotNull, xxhash64(lit(t), col(s"sb$t")))))
+    for ((stage, keys) <- stageKeys) {
+      val carry = EventStreams.carryOf(key, stage)
+        .getOrElse(fail(s"$stage carry missing after 3 batches"))
+      // seeded once from batch 1's 4 rows (capacity 4×4): a reseed
+      // would have sized for the larger landing, and would not be a fold
+      assert(carry.capacity == 16L, s"$stage carry was reseeded, not folded")
+      val rebuilt = keys.map(k => landed
+          .agg(call_function("bloom_agg", k, lit(carry.bits),
+            lit(graft.ops.IncrementalDedup.ProbeHashes)))
+          .collect()(0).getAs[Array[Byte]](0))
+        .reduce(graft.ops.IncrementalDedup.unionBloom)
+      assert(java.util.Arrays.equals(carry.blob, rebuilt),
+        s"$stage carry differs from a bloom rebuilt over the landing")
+    }
   }
 
   test("ingestIndex: streamed vector drops keep the persisted IVF-PQ index searchable") {
