@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -8,13 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Clean
 
 /** Clean-stage tests: golden against the reference's own committed
-  * raw/clean CSVs, plus the dropna-semantics difference (P2 `how=all`
-  * at `extract.py:216-221` vs P3 `how=any` at `transform.py:26`) over
-  * the dirty fixture. */
+  * raw/clean CSVs (the raw sample is committed here as
+  * `data/fixtures/sea_surface_sample.csv`), plus the dropna-semantics
+  * difference (P2 `how=all` at `extract.py:216-221` vs P3 `how=any` at
+  * `transform.py:26`) over the dirty fixture. */
 class CleanSpec extends AnyFunSuite with SparkTestSession {
 
-  private val refRaw = "/root/reference/data/sea_surface_sample.csv"
-  private val fixture = "/root/repo/data/fixtures/sea_surface_raw.csv"
+  private val refRaw = TestFixtures.SeaSurfaceSample
+  private val fixture = TestFixtures.SeaSurfaceRaw
 
   private def readCsv(path: String) =
     spark.read.option("header", "true").csv(path)
@@ -36,6 +38,12 @@ class CleanSpec extends AnyFunSuite with SparkTestSession {
     val got = Clean.cleanApiResponse(readCsv(refRaw)).collect()
     assert(got.length == 1)
     assert(got.head.getAs[Double]("temperature") == 21.36956)
+  }
+
+  test("provenance: the committed raw sample has the reference checkout's rows") {
+    val source = Paths.get("/root/reference/data/sea_surface_sample.csv")
+    assume(Files.exists(source), s"$source is not present")
+    assert(Files.readAllLines(Paths.get(refRaw)) == Files.readAllLines(source))
   }
 
   test("units row dies in BOTH variants, by different mechanisms") {

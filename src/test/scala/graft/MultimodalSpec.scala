@@ -90,7 +90,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
   // Committed real PNG, generated as a 7×5 TYPE_INT_RGB gradient with
   // R = x*36, G = y*51, B = (x+y)*17 — every pixel is predictable, so
   // the decode is asserted value-by-value, not just shape-by-shape.
-  private val PngFixture = "/root/repo/data/fixtures/tiny_rgb.png"
+  private val PngFixture = TestFixtures.TinyRgbPng
 
   test("ImageIO codec: real PNG decodes to exact dimensions and pixel bytes") {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(PngFixture))

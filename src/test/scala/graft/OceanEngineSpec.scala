@@ -11,9 +11,7 @@ import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
   * (SURVEY §3.2): fetch → clean+score, summary shape, cache behavior. */
 class OceanEngineSpec extends AnyFunSuite with SparkTestSession {
 
-  private val body =
-    new String(Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/sea_surface_sample.csv")), "UTF-8")
+  private val body = TestFixtures.text(TestFixtures.SeaSurfaceSample)
 
   private def engine(withCache: Boolean = false): (OceanEngine, FixtureBackend) = {
     val urls = Map(

@@ -10,12 +10,11 @@ import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
 /** End-to-end pipeline integration: fixture-replayed fetch → clean →
   * CSV artifacts → table, with every stage gate observed
   * (`run_pipeline.py:160-305`). Zero egress: the "ERDDAP response" is
-  * the reference's own committed double-header sample. */
+  * the reference's own double-header sample, committed as a repo
+  * fixture. */
 class PipelineSpec extends AnyFunSuite with SparkTestSession {
 
-  private def fixtureBody: String =
-    new String(Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/sea_surface_sample.csv")), "UTF-8")
+  private def fixtureBody: String = TestFixtures.text(TestFixtures.SeaSurfaceSample)
 
   private def makeOrchestrator(): PipelineOrchestrator = {
     // The reference's fixed extract point (extract.py:344-347)
@@ -98,8 +97,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   test("extract goes through the engine's fetch path: a repo fixture, the second call served from the cache") {
     // the in-repo raw fixture (units row, bad dates, partial nulls) as
     // the ERDDAP body, so this case needs no reference sample
-    val body = new String(Files.readAllBytes(
-      java.nio.file.Paths.get("data/fixtures/sea_surface_raw.csv")), "UTF-8")
+    val body = TestFixtures.text(TestFixtures.SeaSurfaceRaw)
     val url = ErddapUrl.build(32.5, -70.0, "1960-01-01", "1960-02-01")
     val backend = new FixtureBackend(Map(url -> body))
     val source = new ErddapSource(backend, minIntervalMs = 0, sleeper = _ => ())

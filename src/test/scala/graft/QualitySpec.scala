@@ -10,8 +10,7 @@ import graft.ops.{Clean, Quality}
 class QualitySpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val cleaned = Clean.cleanApiResponse(
-    spark.read.option("header", "true")
-      .csv("/root/repo/data/fixtures/sea_surface_raw.csv"))
+    spark.read.option("header", "true").csv(TestFixtures.SeaSurfaceRaw))
 
   test("report over the cleaned fixture: hand-computed score") {
     val r = Quality.report(cleaned)
