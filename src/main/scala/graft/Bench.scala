@@ -102,7 +102,7 @@ object Bench {
     // a BENCH_ONLY-filtered probe (the floor probe runs 5 queries at
     // sf0.1 and overwrote the 82-cell record; caught in round 12).
     val defaultOut =
-      if (sfDir.endsWith("/sf0.1") && only.isEmpty) "/root/repo/BENCH_FULL.json"
+      if (sfDir.endsWith("/sf0.1") && only.isEmpty) "BENCH_FULL.json"
       else s"/tmp/bench_full_${new java.io.File(sfDir).getName}.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     try java.nio.file.Files.write(

@@ -448,8 +448,7 @@ object SparkEntry {
     // Reads the committed dirty fixture (double header, unsorted,
     // coerce-failing cells, partial nulls) through the real Clean ops.
     "q28_clean_pipeline" -> ((s, _) => {
-      Clean.cleanApiResponse(
-        s.read.option("header", "true").csv(RawFixtureCsv))
+      Clean.cleanApiResponse(readRawFixture(s))
     }),
 
     // ---- quality report A8/P9 over the cleaned fixture ----
@@ -457,8 +456,7 @@ object SparkEntry {
     // flags and score expressed as Columns so the whole report is one
     // SQL-comparable row (formula: extract.py:287-288).
     "q29_quality_report" -> ((s, _) => {
-      val cleaned = Clean.cleanApiResponse(
-        s.read.option("header", "true").csv(RawFixtureCsv))
+      val cleaned = Clean.cleanApiResponse(readRawFixture(s))
       val a = Quality.aggPlan(cleaned)
       val n = col("n")
       val nn = Seq("time", "depth", "latitude", "longitude", "temperature", "salinity")
@@ -1468,7 +1466,7 @@ object SparkEntry {
     // doc_id >= 400 with every third document carrying the text of
     // corpus doc (doc_id − 400) — deterministic overlap constructed
     // identically by both engines. The native `bloom_agg` blob prunes
-    // the batch before the exact confirm join (ops/IncrementalDedup);
+    // the batch before the exact confirm join (ops/DedupStage);
     // pruning never changes the answer, so the oracle is the plain
     // NOT IN.
     "q74_incremental_dedup" -> ((s, dir) => {
@@ -1481,7 +1479,7 @@ object SparkEntry {
         .select(col("doc_id"),
           when(col("doc_id") % 3 === 0, col("donor_text"))
             .otherwise(col("text")).as("text"))
-      ops.IncrementalDedup.newDocs(corpus, batch).orderBy("doc_id")
+      ops.DedupStage.newDocs(corpus, batch).orderBy("doc_id")
     }),
 
     // ---- IVF-PQ probe-time ANN search (ADC) ----
@@ -1681,7 +1679,7 @@ object SparkEntry {
               concat(col("base_text"), lit(" ingest edit marker")))
             .otherwise(col("text")).as("text"))
         .localCheckpoint()
-      val exactFlag = ops.IncrementalDedup.newDocs(corpus, batch)
+      val exactFlag = ops.DedupStage.newDocs(corpus, batch)
         .select(col("doc_id"), col("is_new").as("exact_new"))
       val nearFlag = ops.NearDupIncremental.newDocs(
           ops.NearDupIncremental.withSigs(corpus),
@@ -2117,8 +2115,20 @@ object SparkEntry {
 
   /** Committed dirty sea_surface fixture exercising every clean-stage
     * edge: double header, mixed ISO offsets, coerce failures, partial
-    * and total key-var nulls, out-of-range measures, unsorted rows. */
-  private val RawFixtureCsv = "/root/repo/data/fixtures/sea_surface_raw.csv"
+    * and total key-var nulls, out-of-range measures, unsorted rows.
+    * Resolved against the working directory — the project root for
+    * `sbt run`/`Test` and `tools/verify.sh` — so the queries and their
+    * DuckDB oracles read the fixture of the checkout they run from. */
+  private def rawFixtureCsv: String =
+    java.nio.file.Paths.get("data/fixtures/sea_surface_raw.csv").toAbsolutePath.toString
+
+  /** q28/q29's input; a missing fixture fails the query naming the path. */
+  private def readRawFixture(s: SparkSession): DataFrame = {
+    val path = rawFixtureCsv
+    require(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path)),
+      s"raw sea_surface fixture not found at $path; run from the project root")
+    s.read.option("header", "true").csv(path)
+  }
 
   /** The q18 batch sessionize (accepted over `session_window` on the
     * round-15 A/B — BASELINE.md, Round 15, "q18 sessionize A/B"):
@@ -2203,7 +2213,7 @@ object SparkEntry {
   /** The three per-stage is_new flag frames of the q87 carrier. */
   private def fullIngestFlags(corpus: DataFrame, batch: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val exactFlag = ops.IncrementalDedup.newDocs(
+    val exactFlag = ops.DedupStage.newDocs(
         corpus.select("doc_id", "text"), batch.select("doc_id", "text"))
       .select(col("doc_id"), col("is_new").as("exact_new"))
     // NOT spread (unlike q83's near chain): measured three A/B pairs
@@ -2713,7 +2723,7 @@ object SparkEntry {
         |    TRY_CAST(longitude AS DOUBLE) AS longitude,
         |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
         |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
-        |  FROM read_csv('$RawFixtureCsv', header=true, all_varchar=true)
+        |  FROM read_csv('$rawFixtureCsv', header=true, all_varchar=true)
         |  WHERE time IS NULL OR time NOT IN ('UTC', 'units'))
         |SELECT * FROM typed
         |WHERE temperature IS NOT NULL OR salinity IS NOT NULL
@@ -2727,7 +2737,7 @@ object SparkEntry {
         |    TRY_CAST(longitude AS DOUBLE) AS longitude,
         |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
         |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
-        |  FROM read_csv('$RawFixtureCsv', header=true, all_varchar=true)
+        |  FROM read_csv('$rawFixtureCsv', header=true, all_varchar=true)
         |  WHERE time IS NULL OR time NOT IN ('UTC', 'units')),
         |cleaned AS (
         |  SELECT * FROM typed

@@ -35,7 +35,7 @@ object Clean {
   def normalizeName(c: String): String = c.trim.toLowerCase.replace(" ", "_")
 
   /** F1 over a whole frame. */
-  def normalizeColumns(df: DataFrame): DataFrame =
+  private def normalizeColumns(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(normalizeName): _*)
 
   /** P1: drop the ERDDAP units row — row whose first column is 'UTC' or

@@ -137,10 +137,8 @@ object Decontaminate {
     // from landed.count() without re-reading the files (and without
     // the r21 shape's separate count job over the checkpointed rows)
     val nbits =
-      if (bits > 0) bits else IncrementalDedup.sizedBits(nGrams)
-    val blob = landed
-      .agg(call_function("bloom_agg", col("gx"), lit(nbits), lit(3)).as("bf"))
-      .collect()(0).getAs[Array[Byte]](0)
+      if (bits > 0) bits else DedupStage.sizedBits(nGrams)
+    val blob = DedupStage.buildBloom(landed, "gx", Seq(col("gx")), nbits)
     val p = bloomPath(outDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)

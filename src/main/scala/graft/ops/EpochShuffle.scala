@@ -28,7 +28,7 @@ object EpochShuffle {
 
   /** 60-bit md5 permutation key (q88/q92 hash convention —
     * re-derivable in ANSI SQL) of a document id under an epoch salt. */
-  def epochKey(id: Column, epoch: Int): Column =
+  private def epochKey(id: Column, epoch: Int): Column =
     conv(substring(md5(concat(lit(s"epoch$epoch:"), id.cast("string"))), 1, 15), 16, 10)
       .cast("long")
 

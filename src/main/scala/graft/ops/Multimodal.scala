@@ -258,7 +258,7 @@ object Multimodal {
   /** Per-row codec dispatch on the container magic: real image bytes
     * go through [[ImageCodec]], GIMG test containers through
     * [[FakeCodec]]; anything neither can parse is corrupt. */
-  def decodeBytes(data: Array[Byte]): Option[(MediaMeta, Array[Byte])] =
+  private def decodeBytes(data: Array[Byte]): Option[(MediaMeta, Array[Byte])] =
     if (ImageCodec.looksLikeImage(data)) ImageCodec.decodePixels(data)
     else FakeCodec.decodePixels(data)
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental (cross-batch) NEAR-dup filtering — the MinHash/LSH twin
-  * of [[IncrementalDedup]]'s exact filter: which documents of an
+  * of [[DedupStage.newDocs]]' exact filter: which documents of an
   * incoming batch are near-duplicates of an already-accepted corpus?
   * A training-data pipeline runs BOTH on every crawl drop — exact
   * first (cheap, catches byte-identical mirrors), then this, so a

@@ -309,8 +309,8 @@ object Percentiles {
     // per query). Keyed by the source plan's semantic hash (stable
     // across identical reads of the same path) + the decision knobs;
     // a repeated describe over one table profiles once per JVM.
-    // Same staleness contract as core.Tables' memos: a fixture dir
-    // rewritten in place must call [[invalidateProfileCache]].
+    // The memo lives for the JVM: a table rewritten in place may keep
+    // its memoized regime until the JVM restarts.
     val keyBase = (src.semanticHash(), distinctCutoff, minBuckets, sampleFraction)
     val missing = valueCols.filterNot(c => profileMemo.containsKey((keyBase, c)))
     if (missing.nonEmpty) {
@@ -326,10 +326,6 @@ object Percentiles {
 
   private val profileMemo =
     new java.util.concurrent.ConcurrentHashMap[(Any, String), String]()
-
-  /** Drops every cached regime decision — required after rewriting a
-    * profiled table's files in place (tests, fixture regeneration). */
-  def invalidateProfileCache(): Unit = profileMemo.clear()
 
   /** [[exactAuto]]'s profile + decision (runs the one profiling job,
     * returns the regime name) — also used directly by tests to pin

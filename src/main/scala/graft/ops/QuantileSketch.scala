@@ -32,7 +32,7 @@ object QuantileSketch {
 
   /** 60-bit md5 sampling key of a row id (q88/q92 hash convention —
     * re-derivable in ANSI SQL). */
-  def sampleKey(id: Column): Column =
+  private def sampleKey(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("long")
 
   /** Per-group sketches: one row per `groupCols` combination with

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Incremental (cross-batch) SEMANTIC dedup — the embedding-space
   * member of the incremental-dedup family, next to
-  * [[IncrementalDedup]] (exact text) and [[NearDupIncremental]]
+  * [[DedupStage.newDocs]] (exact text) and [[NearDupIncremental]]
   * (MinHash/LSH text): which documents of an incoming batch are
   * *semantically* already in the accepted corpus? A training-data
   * pipeline runs this on embedded crawl drops so a paraphrased or

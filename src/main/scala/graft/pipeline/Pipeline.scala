@@ -81,7 +81,7 @@ object Gates {
     * parquet survives in the warehouse dir. Re-attach the surviving
     * parquet as a view so a fresh JVM (e.g. `--validate-only`) sees the
     * table, matching the reference's cross-process durability. */
-  def recoverFromWarehouse(spark: SparkSession, table: String): Boolean = {
+  private def recoverFromWarehouse(spark: SparkSession, table: String): Boolean = {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
     val path = Paths.get(warehouse, table)

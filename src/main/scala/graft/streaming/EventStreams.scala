@@ -6,6 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ops.DedupStage
+import graft.ops.DedupStage.CarriedBloom
+
 /** Structured Streaming surface over the `events` stream (SURVEY §2.9
   * extended scope; the reference is batch-only, so semantics are
   * spec'd from Spark's event-time model and oracled by the batch
@@ -234,27 +237,20 @@ object EventStreams {
   private[graft] val landedCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
-  /** In-batch exact keeper: lowest id per text (the q21 discipline);
-    * the id leads the struct so min() orders by it. Shared by
-    * [[ingestDedup]] and [[ingestPipeline]] — one copy of the keeper
-    * rule. */
-  private def exactFirsts(batch: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val fields = col(idCol) +: batch.columns.filterNot(_ == idCol).map(col).toSeq
-    batch.groupBy(col(textCol))
-      .agg(min(struct(fields: _*)).as("r"))
-      .select(col("r.*"))
-  }
-
-  /** A bloom blob carried across micro-batches, one per dedup stage
-    * per landing ([[carries]]): the EXACT stage's over landed text
-    * hashes, the NEAR stage's over landed LSH bucket hashes, the
-    * SEMANTIC stage's over landed hyperplane band-bucket hashes — each
-    * the stage's [[IngestStage.keys]]. Rebuilding any of them per
-    * batch is a full corpus scan per micro-batch —
-    * O(corpus), the clearest scale-killer in a long-running ingest —
-    * so each is seeded at most once and then FOLDED forward: after
-    * each append, a bloom of just the appended rows (computed by the
-    * write's own Observation — no second pass) is OR'd in.
+  /** Every carried bloom ([[graft.ops.DedupStage.CarriedBloom]]):
+    * landing dir → (stage name → carry). A key COLLISION in a stage's
+    * bloom only costs a confirm probe (the row looks like a candidate
+    * and the exact confirm clears it); it can never admit a duplicate,
+    * which is what makes a bloom a sound carrier for a landed key set.
+    * One entry per landing, so whatever poisons a landing drops all of
+    * its carries with one `remove`.
+    *
+    * Rebuilding a carry per batch is a full corpus scan per
+    * micro-batch — O(corpus), the clearest scale-killer in a
+    * long-running ingest — so each is seeded at most once and then
+    * FOLDED forward: after each append, a bloom of just the appended
+    * rows (computed by the write's own Observation — no second pass) is
+    * OR'd in.
     *
     * What the carry amortizes — and what it doesn't: the carry removes
     * the per-batch bloom-BUILD scan, and, with the two-phase confirm
@@ -283,16 +279,7 @@ object EventStreams {
     * bits/key keeps confirm traffic ~0.5%); growing past that drops
     * the carry so the next batch reseeds at the new size — amortized
     * one corpus scan per 4× growth. Every carry is built with
-    * [[graft.ops.IncrementalDedup.ProbeHashes]] probe hashes. */
-  private[graft] final case class CarriedBloom(
-    blob: Array[Byte], bits: Int, capacity: Long, landingFp: String)
-
-  /** Every carried bloom: landing dir → (stage name → carry). A key
-    * COLLISION in a stage's bloom only costs a confirm probe (the row
-    * looks like a candidate and the exact confirm clears it); it can
-    * never admit a duplicate, which is what makes a bloom a sound
-    * carrier for a landed key set. One entry per landing, so whatever
-    * poisons a landing drops all of its carries with one `remove`. */
+    * [[graft.ops.DedupStage.ProbeHashes]] probe hashes. */
   private[graft] val carries =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, CarriedBloom]]()
 
@@ -443,7 +430,7 @@ object EventStreams {
     setCarries(landingDir, observed.foldLeft(carriesOf(landingDir)) {
       case (m, (stage, blob)) => m.get(stage) match {
         case Some(c) if landedCount <= c.capacity => m.updated(stage,
-          c.copy(blob = graft.ops.IncrementalDedup.unionBloom(c.blob, blob), landingFp = fp))
+          c.copy(blob = DedupStage.unionBloom(c.blob, blob), landingFp = fp))
         case Some(_) => m - stage
         case None    => m
       }
@@ -466,7 +453,7 @@ object EventStreams {
     * includes them). */
   private def seedFromAppend(spark: SparkSession, landingDir: String,
                              fresh: DataFrame, landedCount: Long,
-                             stages: Seq[IngestStage]): Unit = {
+                             stages: Seq[DedupStage]): Unit = {
     val post = landingParts(spark, landingDir)
     val clean = appendOnlyDelta(Seq.empty, post, landedCount) &&
       (landedCount > 0L ||
@@ -474,204 +461,10 @@ object EventStreams {
     if (!clean) return
     val fp = fpOf(post)
     val cap = math.max(landedCount, 1L) * 4
-    setCarries(landingDir, stages.map(s => s.name -> buildCarry(s, fresh, cap, fp)).toMap)
+    setCarries(landingDir, stages.map(s => s.name -> s.buildCarry(fresh, cap, fp)).toMap)
   }
-
-  // ---------- the carried key bloom (one path for every stage) ----------
-
-  /** One `bloom_agg` per stage key, aliased per stage so every stage's
-    * aggregates ride ONE append Observation side by side; the per-key
-    * blobs are unioned driver-side ([[keyBlob]]) — no explode in the
-    * write path. */
-  private def keyAggs(s: IngestStage, bits: Int): Seq[Column] =
-    s.keys.zipWithIndex.map { case (k, i) =>
-      call_function("bloom_agg", k, lit(bits),
-        lit(graft.ops.IncrementalDedup.ProbeHashes)).as(s"${s.name}_bloom$i")
-    }
-
-  /** The union of the stage's per-key blobs out of one [[keyAggs]]
-    * result (a collected row or the append Observation). */
-  private def keyBlob(s: IngestStage, result: String => Any): Array[Byte] =
-    s.keys.indices.map(i => result(s"${s.name}_bloom$i").asInstanceOf[Array[Byte]])
-      .reduce(graft.ops.IncrementalDedup.unionBloom)
-
-  /** THE one carry constructor. The loop calls it from BOTH carry
-    * paths — the first-batch seed (rows = the persisted append) and
-    * the steady-state reseed (rows = the landed corpus; Catalyst
-    * prunes to the stage's key columns) — so bits sizing, probe-hash
-    * count and blob layout live in exactly one place. */
-  private def buildCarry(s: IngestStage, rows: DataFrame, cap: Long,
-                         fp: String): CarriedBloom = {
-    // sized for `cap` docs at keys.size keys each, overflow-clamped
-    val n = s.keys.size
-    val bits = graft.ops.IncrementalDedup.sizedBits(math.min(cap, Long.MaxValue / n) * n)
-    val aggs = keyAggs(s, bits)
-    val r = rows.agg(aggs.head, aggs.tail: _*).collect()(0)
-    CarriedBloom(keyBlob(s, (n: String) => r.getAs[Any](n)), bits, cap, fp)
-  }
-
-  /** The stage's probe column: any of the row's keys possibly present
-    * in the carried bloom. All-negative is DEFINITIVE absence — no
-    * landed row shares a key, so the row cannot be a duplicate or a
-    * candidate against the corpus. A NULL key (no identity) probes
-    * null → false. */
-  private def probe(s: IngestStage, blob: Array[Byte]): Column =
-    s.keys.map(k =>
-      coalesce(call_function("bloom_might_contain", lit(blob), k), lit(false))
-    ).reduce(_ || _)
-
-  /** Cross-batch exact confirm over the probed in-batch keepers:
-    * confirm the bloom-positive rows with a semi-join against the
-    * landed text and anti-join the confirmed dups away. */
-  private def exactConfirm(probed: DataFrame, corpus: () => DataFrame,
-                           textCol: String): DataFrame = {
-    // exact confirmation for the bloom-positive minority only; the
-    // corpus side is column-pruned to the text column, and AQE's
-    // runtime size check broadcasts whichever side is small
-    // no distinct on the corpus side: a left_semi join is already
-    // duplicate-insensitive on its right input, and the landed texts
-    // are unique by the dedup invariant anyway — a distinct here
-    // would add a full-corpus hash aggregation to every
-    // bloom-positive batch for nothing.
-    // the confirm AND the anti both key on the TEXT (the actual
-    // duplicate semantic), not idCol: an anti-join on idCol keeps
-    // every NULL-id row (null never equals null), so a confirmed
-    // duplicate with a null id would land duplicate text and break
-    // the landed-texts-unique invariant the optimization above
-    // relies on. Null-TEXT rows never probe bloom-positive (no
-    // bloom identity) and null anti-keys survive, so null-text
-    // rows still land exactly once per row, as before.
-    val dupTexts = probed.filter(col("maybe_dup"))
-      .join(corpus().select(col(textCol)), Seq(textCol), "left_semi")
-      .select(col(textCol))
-    // re-select in probed's column order: a USING join hoists its
-    // key first, and the landing's column order must not depend on
-    // which confirm branch a batch took
-    probed.join(dupTexts, Seq(textCol), "left_anti")
-      .select(probed.columns.filterNot(_ == "maybe_dup").map(col): _*)
-  }
-
-  /** Cross-batch candidate confirm of the bucket stages (near,
-    * semantic): only the probe-positive rows go through the stage's
-    * exact `newDocs` against the landing, and the confirmed-new join
-    * the probe-negatives. */
-  private def candidateConfirm(probed: DataFrame, probeCol: String, idCol: String)
-                              (newDocs: DataFrame => DataFrame): DataFrame = {
-    val candidates = probed.filter(col(probeCol)).drop(probeCol)
-    val confirmedNew = candidates.join(
-      newDocs(candidates).filter(col("is_new")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    probed.filter(!col(probeCol)).drop(probeCol).unionByName(confirmedNew)
-  }
-
-  /** 64-bit key of an LSH band bucket — the hashed form of the
-    * (band, x, y) triples [[graft.ops.NearDupIncremental.bucketsFromSigs]]
-    * joins on. */
-  private def bucketHash(band: Int, x: Column, y: Column): Column =
-    // NULL-GATED like IncrementalDedup.textHash: xxhash64 SKIPS null
-    // args, so ungated, every null-sig row (null text has null
-    // mh1..mh4) would share the fixed hash of `band` alone — one
-    // landed null-text row would make every later null-text row probe
-    // positive forever. Null sigs have no bucket identity (the bucket
-    // equi-join never matches them), so their hash is null: bloom_agg
-    // skips it, and the probe treats null as definitively negative.
-    when(x.isNotNull && y.isNotNull, xxhash64(lit(band), x, y))
-
-  /** 64-bit key of a hyperplane band bucket: the `sb<band>` code
-    * columns [[graft.ops.SemanticIncremental.withCodes]] lands. Null
-    * code (null vector) → null hash (GATED — Spark's xxhash64 would
-    * otherwise skip the null and hash `band` alone, one fixed value
-    * shared by every null-vector row), which the probe treats as
-    * not-a-candidate and `bloom_agg` skips. */
-  private def semBucketHash(band: Int, code: Column): Column =
-    when(code.isNotNull, xxhash64(lit(band), code))
 
   // ---------- the shared ingest batch loop ----------
-
-  /** One two-phase dedup stage of an ingest mode. The four public
-    * ingest entries (exact / near / semantic / composed pipeline) are
-    * all the SAME carry state machine — in-batch keepers, carried-
-    * bloom probe, confirm for positives, observed fold after the
-    * append — differing only in what each stage computes and which
-    * keys identify a row to it. One descriptor per stage, one generic
-    * loop ([[runIngestStream]]) and one carry path ([[buildCarry]],
-    * [[probe]], [[foldCarries]]): a future change to the fold/seed/
-    * validation protocol lands in exactly one place instead of
-    * hand-kept copies (this round's history shows why: the zero-row
-    * fold rule, the single-listing seed, and the landingKey
-    * canonicalization each had to be replicated four ways). */
-  private final case class IngestStage(
-    /** The stage's key in [[carries]] and its Observation alias prefix. */
-    name: String,
-    /** In-batch keeper + state-column computation (runs on the
-      * previous stage's survivors; on the first batch the preps
-      * compose with no cross-batch confirms between them). */
-    prep: DataFrame => DataFrame,
-    /** Landed state columns this stage owns (mh* / sb*) — the mode's
-      * union feeds [[requireNoForeignState]]. */
-    stateCols: Set[String],
-    /** Extra landed-schema contract, e.g. [[requireLandedSemCols]]. */
-    landingCheck: (DataFrame, String) => Unit,
-    /** The NULL-gated 64-bit keys that identify a row to this stage:
-      * the carry holds every landed row's keys, and a row probes
-      * positive when ANY of its keys might be in it. */
-    keys: Seq[Column],
-    probeCol: String,
-    /** (persisted probed frame with at least one positive, LAZY
-      * corpus) → surviving rows. The corpus thunk must only be forced
-      * here: a clean batch (the steady-state common case) must build
-      * no corpus relation at all — not even its file listing. */
-    confirm: (DataFrame, () => DataFrame) => DataFrame)
-
-  private def exactIngestStage(textCol: String, idCol: String): IngestStage =
-    IngestStage("exact",
-      prep = b => exactFirsts(b, textCol, idCol),
-      stateCols = Set.empty,
-      landingCheck = (_, _) => (),
-      keys = Seq(graft.ops.IncrementalDedup.textHash(col(textCol))),
-      probeCol = "maybe_dup",
-      confirm = (probed, corpus) => exactConfirm(probed, corpus, textCol))
-
-  /** Near stage: a doc's keys are its two band buckets — band 1 =
-    * (mh1,mh2), band 2 = (mh3,mh4). Candidates confirm through the
-    * exact bucket join ([[graft.ops.NearDupIncremental.newDocs]])
-    * against the landing's signature columns (column-pruned, 4
-    * longs/row, text never re-read). */
-  private def nearIngestStage(textCol: String, idCol: String): IngestStage =
-    IngestStage("near",
-      prep = b => graft.ops.NearDupIncremental.keepBucketMins(
-        graft.ops.NearDupIncremental.withSigs(b, textCol), idCol),
-      stateCols = NearStateCols,
-      landingCheck = (_, _) => (),
-      keys = Seq(bucketHash(1, col("mh1"), col("mh2")), bucketHash(2, col("mh3"), col("mh4"))),
-      probeCol = "maybe_nd",
-      confirm = (probed, corpus) => candidateConfirm(probed, "maybe_nd", idCol)(cands =>
-        graft.ops.NearDupIncremental.newDocs(
-          corpus().select(col(idCol), col("mh1"), col("mh2"), col("mh3"), col("mh4")),
-          cands, idCol)))
-
-  /** Semantic stage: a doc's keys are its `bands` hyperplane band
-    * buckets. Candidates confirm through the exact bucket join +
-    * cosine ([[graft.ops.SemanticIncremental.newDocsCoded]]); the
-    * corpus side contributes its landed `sb*` codes to the candidate
-    * join (one int per band per row — codes are READ, never
-    * recomputed from vectors) and its vectors only for distinct
-    * candidate pairs. */
-  private def semIngestStage(sem: SemanticStage, idCol: String): IngestStage = {
-    val sbCols = (0 until sem.bands).map(t => s"sb$t")
-    IngestStage("sem",
-      prep = b => graft.ops.SemanticIncremental.keepSemanticMins(
-        graft.ops.SemanticIncremental.withCodes(b, sem.vecCol, sem.bits, sem.bands),
-        sem.tau, idCol, sem.vecCol, sem.bands),
-      stateCols = sbCols.toSet,
-      landingCheck = (corpus, dir) => requireLandedSemCols(corpus, sem.bands, dir),
-      keys = (0 until sem.bands).map(t => semBucketHash(t, col(s"sb$t"))),
-      probeCol = "maybe_sem",
-      confirm = (probed, corpus) => candidateConfirm(probed, "maybe_sem", idCol)(cands =>
-        graft.ops.SemanticIncremental.newDocsCoded(
-          corpus().select((col(idCol) +: col(sem.vecCol) +: sbCols.map(col)): _*),
-          cands, sem.tau, idCol, sem.vecCol, sem.bands)))
-  }
 
   /** THE ingest batch loop — every public ingest entry is this loop
     * over its stage list. Per micro-batch: (first batch) compose the
@@ -689,7 +482,7 @@ object EventStreams {
   private def runIngestStream(docs: DataFrame, landingDir: String,
                               checkpointDir: String, appendFiles: Int,
                               partitionCols: Seq[String],
-                              stages: Seq[IngestStage], obsPrefix: String)
+                              stages: Seq[DedupStage], obsPrefix: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
   startGuarded(docs.sparkSession, landingDir) {
     // Landed row count carried across batches: seeded ONCE (first
@@ -760,7 +553,7 @@ object EventStreams {
                 val carried = carryOf(landingDir, s.name)
                   .filter(c => c.landingFp == fp && landed.get() <= c.capacity)
                   .getOrElse {
-                    val c = buildCarry(s, corpus(), math.max(landed.get(), 1L) * 4, fp)
+                    val c = s.buildCarry(corpus(), math.max(landed.get(), 1L) * 4, fp)
                     setCarries(landingDir, carriesOf(landingDir).updated(s.name, c))
                     c
                   }
@@ -772,7 +565,8 @@ object EventStreams {
                 // StreamingSpec's listener cases), the property that
                 // survives a 100 TB landing. Persisted: the count and
                 // the confirm/write both consume it.
-                val probed = s.prep(cur).withColumn(s.probeCol, probe(s, carried.blob))
+                val probed = s.prep(cur)
+                  .withColumn(s.probeCol, DedupStage.mightContain(s.keys, carried.blob))
                   .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                 persisted ::= probed
                 if (probed.filter(col(s.probeCol)).count() == 0L) probed.drop(s.probeCol)
@@ -785,7 +579,8 @@ object EventStreams {
           // computation of `fresh`, no landing rescan)
           val obs = new org.apache.spark.sql.Observation(s"${obsPrefix}_landed_$batchId")
           val folding = stages.flatMap(s => carryOf(landingDir, s.name).map(c => (s, c.bits)))
-          val metrics = count(lit(1)).as("n") +: folding.flatMap { case (s, bits) => keyAggs(s, bits) }
+          val metrics = count(lit(1)).as("n") +: folding.flatMap { case (s, bits) =>
+            DedupStage.keyAggs(s.name, s.keys, bits) }
           appendToLanding(fresh, landingDir, appendFiles, partitionCols, obs, metrics)
           postAppendHook(landingDir, batchId)
           val observed = obs.get
@@ -795,7 +590,8 @@ object EventStreams {
             seedFromAppend(spark, landingDir, fresh, landed.get(), stages)
           else
             foldCarries(spark, landingDir, preParts, appended, landed.get(),
-              folding.map { case (s, _) => s.name -> keyBlob(s, observed) }.toMap)
+              folding.map { case (s, _) =>
+                s.name -> DedupStage.keyBlob(s.name, s.keys.size, observed) }.toMap)
         } finally persisted.foreach(_.unpersist(false))
         ()
       }
@@ -2049,9 +1845,8 @@ object EventStreams {
     * mode, on a later restart, silently exempts from dedup forever
     * (null signatures/codes never match a bucket join). Refused
     * loudly — the missing-column direction is guarded separately
-    * ([[requireLandedSemCols]] and the bucket reads themselves). */
-  private val NearStateCols = Set("mh1", "mh2", "mh3", "mh4")
-
+    * (the semantic stage's landing check and the bucket reads
+    * themselves). */
   private def requireNoForeignState(corpus: DataFrame, landingDir: String,
                                     lands: Set[String]): Unit = {
     val StateCol = raw"mh[1-4]|sb\d+".r
@@ -2078,7 +1873,7 @@ object EventStreams {
     * [[runIngestStream]] over the entry's stage list. */
   private def startDedup(docs: DataFrame, landingDir: String, checkpointDir: String,
                          entry: String, keyCols: Seq[String], appendFiles: Int,
-                         partitionCols: Seq[String], stages: Seq[IngestStage],
+                         partitionCols: Seq[String], stages: Seq[DedupStage],
                          obsPrefix: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
@@ -2090,7 +1885,7 @@ object EventStreams {
   }
 
   /** Continuous corpus ingest with CROSS-BATCH exact dedup — the
-    * streaming face of [[graft.ops.IncrementalDedup]] (q74) and the
+    * streaming face of [[graft.ops.DedupStage.newDocs]] (q74) and the
     * contract a training-data pipeline actually needs: a document is
     * a duplicate if its text appeared in ANY earlier batch, not just
     * inside the watermark window ([[dedupeStream]]'s bounded-state
@@ -2117,7 +1912,7 @@ object EventStreams {
                   partitionCols: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestDedup", Seq(textCol, idCol),
-      appendFiles, partitionCols, Seq(exactIngestStage(textCol, idCol)), "ingest")
+      appendFiles, partitionCols, Seq(DedupStage.exact(textCol, idCol)), "ingest")
 
   /** Cross-batch NEAR-dup ingest — [[ingestDedup]]'s MinHash/LSH twin
     * ([[graft.ops.NearDupIncremental]]): a batch doc is dropped when
@@ -2146,7 +1941,7 @@ object EventStreams {
                     partitionCols: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestNearDup", Seq(textCol, idCol),
-      appendFiles, partitionCols, Seq(nearIngestStage(textCol, idCol)), "ingest_nd")
+      appendFiles, partitionCols, Seq(DedupStage.near(textCol, idCol)), "ingest_nd")
 
   /** Continuous corpus ingest with CROSS-BATCH SEMANTIC dedup — the
     * streaming face of [[graft.ops.SemanticIncremental]] (q86), for
@@ -2201,26 +1996,7 @@ object EventStreams {
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestSemantic", Seq(vecCol, idCol),
       appendFiles, partitionCols,
-      Seq(semIngestStage(SemanticStage(tau, vecCol, bits, bands), idCol)), "ingest_sem")
-
-  /** A landing read back by [[ingestSemantic]] must carry exactly this
-    * stream's band-code columns: fewer means it was landed by another
-    * ingest mode (or more bands than now configured would silently
-    * stop landing a code column the layout has), so both directions
-    * are refused loudly. `bits` has no schema footprint — see the
-    * entry's scaladoc for the recall-only drift contract. */
-  private def requireLandedSemCols(corpus: DataFrame, bands: Int,
-                                   landingDir: String): Unit = {
-    val have = corpus.schema.fieldNames.toSet
-    val missing = (0 until bands).map(t => s"sb$t").filterNot(have.contains)
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"landing '$landingDir' lacks code column(s) ${missing.mkString(", ")} — " +
-      s"not written by ingestSemantic with bands=$bands")
-    if (have.contains(s"sb$bands")) throw new IllegalStateException(
-      s"landing '$landingDir' carries code column sb$bands beyond bands=$bands — " +
-      "restarting with fewer bands than landed would strand a code column; " +
-      "use the landing's band count")
-  }
+      Seq(SemanticStage(tau, vecCol, bits, bands).stage(idCol)), "ingest_sem")
 
   // ---------- the frozen-state gates ----------
 
@@ -2487,9 +2263,7 @@ object EventStreams {
         val cand = pin(keyed
           .select(col("__qid"),
             explode_outer(graft.ops.Decontaminate.gramKeys(col(textCol))).as("gx"))
-          .filter(coalesce(
-            call_function("bloom_might_contain", lit(blob), col("gx")),
-            lit(false))))
+          .filter(DedupStage.mightContain(Seq(col("gx")), blob)))
         // bloom-negative is DEFINITIVE absence: a clean batch
         // never reads the landed benchmark set
         val scored =
@@ -2555,6 +2329,10 @@ object EventStreams {
     require(bands >= 1 && bands <= 16, s"bands must be in [1, 16], got $bands")
     require(!tau.isNaN && tau >= -1.0 && tau <= 1.0,
       s"tau must be a cosine in [-1, 1], got $tau")
+
+    /** The ingest dedup stage these parameters describe. */
+    private[graft] def stage(idCol: String): DedupStage =
+      DedupStage.sem(tau, vecCol, bits, bands, idCol)
   }
 
   def ingestPipeline(docs: DataFrame, landingDir: String, checkpointDir: String,
@@ -2572,7 +2350,7 @@ object EventStreams {
     // folds the post-near(-sem) `fresh` — see [[runIngestStream]].
     startDedup(docs, landingDir, checkpointDir, "ingestPipeline",
       Seq(textCol, idCol) ++ semantic.map(_.vecCol), appendFiles, partitionCols,
-      Seq(exactIngestStage(textCol, idCol), nearIngestStage(textCol, idCol)) ++
-        semantic.map(sem => semIngestStage(sem, idCol)),
+      Seq(DedupStage.exact(textCol, idCol), DedupStage.near(textCol, idCol)) ++
+        semantic.map(_.stage(idCol)),
       "ingest_pipe")
 }

@@ -19,7 +19,7 @@ import graft.core.GraftSession
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/root/repo/plans/r21")
+    val outDir = args.headOption.getOrElse("plans/r21")
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-explain-dump")

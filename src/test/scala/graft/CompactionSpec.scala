@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.DedupStage
 import graft.streaming.EventStreams
 
 /** [[EventStreams.compactLanding]] — the maintenance half of the
@@ -563,7 +564,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val key = EventStreams.landingKey(spark, dir)
     val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
     EventStreams.carries.put(key,
-      Map("exact" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 5L, preFp)))
+      Map("exact" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 5L, preFp)))
     try {
       val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
       assert(stats.dirsDropped == 2 && stats.filesDropped >= 2 && stats.carriesKept)
@@ -615,8 +616,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // two stages' carries on the one landing entry: an unexplained
     // delta must drop them both, i.e. the whole entry
     EventStreams.carries.put(key, Map(
-      "exact" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 2L, preFp),
-      "near" -> EventStreams.CarriedBloom(new Array[Byte](32), 128, 2L, preFp)))
+      "exact" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 2L, preFp),
+      "near" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 2L, preFp)))
     // foreign rows land in the surviving month between the pre listing
     // and the deletes — the carried blob lacks their texts, so a
     // re-stamp would admit their duplicates; the carry must drop

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.IncrementalDedup
+import graft.ops.DedupStage
 
 /** Bloom-prefiltered incremental dedup: exactness of the end result
   * (the filter must only prune work, never change the answer), the
@@ -19,7 +19,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     val batch = (100L until 130L)
       .map(i => (i, if (i % 3 == 0) s"text number ${i - 100}" else s"fresh $i"))
       .toDF("doc_id", "text")
-    val got = IncrementalDedup.newDocs(corpus, batch)
+    val got = DedupStage.newDocs(corpus, batch)
       .collect().map { case Row(id: Long, n: Boolean) => id -> n }.toMap
     (100L until 130L).foreach { i =>
       assert(got(i) == (i % 3 != 0), s"doc $i")
@@ -62,17 +62,17 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
   test("empty (zero-row) corpus: every batch row is new") {
     val corpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val batch = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    val got = IncrementalDedup.newDocs(corpus, batch)
+    val got = DedupStage.newDocs(corpus, batch)
       .collect().map { case Row(id: Long, n: Boolean) => (id, n) }.toSet
     assert(got == Set((1L, true), (2L, true)))
   }
 
   test("auto-sized bits track the corpus: unsized caller keeps FP traffic low at 100k rows") {
     // sizedBits: ~16 bits/row rounded up to a power of two, clamped
-    assert(IncrementalDedup.sizedBits(0) == (1 << 13))
-    assert(IncrementalDedup.sizedBits(2000) == (1 << 15))
-    assert(IncrementalDedup.sizedBits(100000) == (1 << 21))
-    assert(IncrementalDedup.sizedBits(1L << 40) == (1 << 30)) // cap: 128 MB blob
+    assert(DedupStage.sizedBits(0) == (1 << 13))
+    assert(DedupStage.sizedBits(2000) == (1 << 15))
+    assert(DedupStage.sizedBits(100000) == (1 << 21))
+    assert(DedupStage.sizedBits(1L << 40) == (1 << 30)) // cap: 128 MB blob
     // a caller who never sizes `bits` on a 100k-row corpus still gets
     // a filter whose FP rate is the designed ~0.5%, not the ~100% a
     // fixed 8 KB default would give (the round-5 ADVICE finding)
@@ -80,7 +80,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     val blob = spark.range(n)
       .select(concat(lit("k"), col("id")).as("s"))
       .agg(call_function("bloom_agg",
-        xxhash64(col("s")), lit(IncrementalDedup.sizedBits(n)), lit(3)).as("bf"))
+        xxhash64(col("s")), lit(DedupStage.sizedBits(n)), lit(3)).as("bf"))
       .collect()(0).getAs[Array[Byte]](0)
     val probes = 50000
     val fps = spark.range(probes)
@@ -99,7 +99,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
         .collect()(0).getAs[Array[Byte]](0)
     val a = blob(Seq("apple", "pear"), 1 << 13, 3)
     val b = blob(Seq("plum"), 1 << 13, 3)
-    val u = IncrementalDedup.unionBloom(a, b)
+    val u = DedupStage.unionBloom(a, b)
     val hits = Seq("apple", "pear", "plum").toDF("s")
       .filter(call_function("bloom_might_contain", lit(u), xxhash64(col("s"))))
       .count()
@@ -107,11 +107,11 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     // same byte LENGTH but different probe-hash count: OR'ing blindly
     // would garble the k header into false negatives — must be refused
     val k4 = blob(Seq("plum"), 1 << 13, 4)
-    val e = intercept[IllegalArgumentException] { IncrementalDedup.unionBloom(a, k4) }
+    val e = intercept[IllegalArgumentException] { DedupStage.unionBloom(a, k4) }
     assert(e.getMessage.contains("header mismatch"))
     // different bit count changes the length — also refused
     val small = blob(Seq("plum"), 1 << 14, 3)
-    intercept[IllegalArgumentException] { IncrementalDedup.unionBloom(a, small) }
+    intercept[IllegalArgumentException] { DedupStage.unionBloom(a, small) }
   }
 
   test("bloom_might_contain: null key or null filter gives null") {

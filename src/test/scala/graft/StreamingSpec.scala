@@ -497,7 +497,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
         // a SEED is a standalone driver collect of a bloom aggregate
-        // over the landing (EventStreams.buildCarry). The batch
+        // over the landing (DedupStage.buildCarry). The batch
         // WRITE also mentions bloom_agg (the observed append metric)
         // and reads the landing (the exact-confirm join) — that is the
         // legitimate confirm path, not a prefilter rebuild, so only
@@ -1728,9 +1728,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       assert(carry.capacity == 16L, s"$stage carry was reseeded, not folded")
       val rebuilt = keys.map(k => landed
           .agg(call_function("bloom_agg", k, lit(carry.bits),
-            lit(graft.ops.IncrementalDedup.ProbeHashes)))
+            lit(graft.ops.DedupStage.ProbeHashes)))
           .collect()(0).getAs[Array[Byte]](0))
-        .reduce(graft.ops.IncrementalDedup.unionBloom)
+        .reduce(graft.ops.DedupStage.unionBloom)
       assert(java.util.Arrays.equals(carry.blob, rebuilt),
         s"$stage carry differs from a bloom rebuilt over the landing")
     }
