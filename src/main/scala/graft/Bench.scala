@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{GraftSession, Tables}
+import graft.queries.Query
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
   *
@@ -24,6 +25,9 @@ import graft.core.{GraftSession, Tables}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Dev aid: SPARK_GRAFT_BENCH_ONLY=q32,q35 times just those queries.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val selected = SparkEntry.select(only)
     // Hygiene first (round-13 forensics): killed sessions orphan
     // blockmgr-*/spark-* dirs — two 11–14 GB ones were found polluting
     // sf10 cells via disk/page-cache pressure. Never fail the bench
@@ -50,13 +54,7 @@ object Bench {
     // that throws is attempted once and reported in `errors`.
     var errors = Map.empty[String, String]
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Dev aid: SPARK_GRAFT_BENCH_ONLY=q32,q35 times just those queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(f => f.exists(n.startsWith))
-    }
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case Query(name, fn, _) =>
       def once(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

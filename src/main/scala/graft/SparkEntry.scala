@@ -1,2391 +1,51 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{Grid, Tables}
-import graft.ops.{AsOf, Clean, Multimodal, PrefixSum, Quality, RangeJoin, Similarity, Text}
+import graft.queries._
 
-/** Driver contract (see SURVEY.md §7 and TESTDATA.md).
-  *
-  * Every query here has a DuckDB-equivalent in [[oracleSql]]; the driver
-  * hash-compares both results, so results must be *bit-identical* across
-  * engines, not just approximately equal. The parity rules used
-  * throughout:
-  *
-  *  - Sums/avgs over doubles are order-dependent in IEEE arithmetic, so
-  *    every such aggregate is computed as an exact DECIMAL sum and only
-  *    then cast to DOUBLE (`dsum`/`davg` here, `CAST(SUM(CAST(x AS
-  *    DECIMAL(30,10))) AS DOUBLE)` in SQL). Inputs have ≤2 decimals so
-  *    the decimal representation is exact; the final decimal→double
-  *    conversion is deterministic.
-  *  - Integer aggregates are cast to BIGINT on both sides (DuckDB's
-  *    SUM(BIGINT) returns HUGEINT, COUNT returns BIGINT).
-  *  - Scalar double math (ratios, scores, distances) keeps the *same
-  *    expression shape* on both sides — IEEE ops are deterministic when
-  *    the operand order matches.
-  *  - Timestamp outputs are cast to TIMESTAMP_NTZ (Spark) / TIMESTAMP
-  *    (DuckDB, microseconds) so the parquet logical types line up.
-  *  - Every query ends in a total ORDER BY.
-  */
+/** The query registry: 100 oracle-checked queries, each one [[Query]]
+  * record (name, Spark build, DuckDB oracle) declared in its family file
+  * under `graft/queries/`. The cross-engine parity rules both sides
+  * follow are documented on [[graft.queries.Parity]]. */
 object SparkEntry {
 
-  // ---------- cross-engine numeric parity helpers ----------
-  /** Exact (order-independent) sum of a ~2-decimal double column, on
-    * the INTEGER fast path: round to cents, sum as BIGINT (HUGEINT in
-    * DuckDB — both exact), one double conversion at the end. Replaces
-    * the earlier DECIMAL(18,2) accumulation, which cost ~0.2 s per
-    * aggregate at sf0.1 (Spark's decimal sum runs ~4× slower than a
-    * long sum); values land on the same doubles because cents sums
-    * stay < 2^53 so the final cast and /100.0 are each correctly
-    * rounded on both engines. */
-  private def cents(c: Column): Column = round(c * 100, 0).cast("long")
-  private def dsum(c: Column): Column = sum(cents(c)).cast("double") / 100.0
-  private def davg(c: Column): Column = dsum(c) / count(c)
-  private val DS = "(CAST(SUM(CAST(round(%s * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)"
-  private def S_DSUM(x: String) = DS.format(x)
-  private def S_DAVG(x: String) = s"(${DS.format(x)} / COUNT($x))"
+  /** Every query, in name order; assembled once per JVM. */
+  val records: Seq[Query] = assemble(
+    RelationalQueries.all ++ OceanQueries.all ++ CorpusTextQueries.all ++
+    CurationQueries.all ++ SimilarityQueries.all ++ SketchQueries.all ++
+    IngestQueries.all)
 
-  /** Banded hyperplane-LSH sizing for the q36/q37/q47 ANN family at
-    * test scale: 2^10 buckets per band × 2 bands. Both knobs are
-    * caller-configurable ([[graft.ops.Similarity.bucketJoin]]); a
-    * 100 TB corpus raises `bits` (buckets = 2^bits, within-bucket pair
-    * count ~ n²/2^bits) and `bands` restores recall. */
-  private val AnnBits = 10
-  private val AnnBands = 2
+  /** The records in name order; a name declared twice is an error. */
+  private[graft] def assemble(all: Seq[Query]): Seq[Query] = {
+    val repeated = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(repeated.isEmpty,
+      s"query name declared more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    all.sortBy(_.name)
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    records.map(q => q.name -> q.build).toMap
+
+  /** The queries a runner's filter names (comma-separated; each entry
+    * selects the names starting with it, so an exact name selects one
+    * query). No filter selects all. A set filter that names nothing,
+    * or an entry matching no query, fails naming it: a broken filter
+    * must never read as an empty, green run. */
+  def select(filter: Option[String]): Seq[Query] = filter.fold(records) { f =>
+    val wanted = f.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(wanted.nonEmpty, s"query filter '$f' names no queries")
+    val unmatched = wanted.filterNot(w => records.exists(_.name.startsWith(w)))
+    require(unmatched.isEmpty,
+      s"query filter entries match no query: ${unmatched.mkString(", ")}")
+    records.filter(q => wanted.exists(q.name.startsWith))
+  }
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows > 0):
     * the 5-table star join q04 at the smallest scale factor. */
   def entry(spark: SparkSession): DataFrame =
     queries("q04_star_join")(spark, "/root/testdata/sf0.001")
 
-  // =====================================================================
-  // Queries — one per implemented operator family (SURVEY.md §2).
-  // =====================================================================
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- relational core: scans, filters, aggregation (A1-A4) ----
-    "q01_pricing_summary" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val p100 = round(col("l_extendedprice") * 100, 0).cast("long")
-      val d100 = round(col("l_discount") * 100, 0).cast("long")
-      val t100 = round(col("l_tax") * 100, 0).cast("long")
-      li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          (sum(p100 * (lit(100L) - d100)).cast("double") / 10000.0).as("sum_disc_price"),
-          (sum(p100 * (lit(100L) - d100) * (lit(100L) + t100)).cast("double") / 1000000.0).as("sum_charge"),
-          davg(col("l_quantity")).as("avg_qty"),
-          davg(col("l_extendedprice")).as("avg_price"),
-          davg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- P2/P4-style predicate + projection (parquet pushdown) ----
-    "q02_filter_project" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-                col("l_shipdate") <  lit("1997-01-01").cast("timestamp") &&
-                col("l_quantity") < 10.0)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ---- broadcast dimension join ----
-    "q03_join_segment" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .join(broadcast(Tables.customer(s, dir)),
-              col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-             dsum(col("o_totalprice")).as("revenue"),
-             davg(col("o_totalprice")).as("avg_order"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // ---- 5-table star join, broadcast dims, shuffled fact joins ----
-    "q04_star_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o  = Tables.orders(s, dir)
-      val c  = Tables.customer(s, dir)
-      val n  = Tables.nation(s, dir)
-      val r  = Tables.region(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg((sum(round(col("l_extendedprice") * 100, 0).cast("long") *
-                  (lit(100L) - round(col("l_discount") * 100, 0).cast("long")))
-                .cast("double") / 10000.0).as("revenue"),
-             count(lit(1)).as("n_lines"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // ---- semi join (EXISTS) ----
-    "q05_semi_join" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .join(Tables.lineitem(s, dir).filter(col("l_discount") > 0.05),
-              col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // ---- anti join (NOT EXISTS) ----
-    "q06_anti_join" -> ((s, dir) => {
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"),
-              "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // ---- top-k (TakeOrderedAndProject) ----
-    "q07_topk_orders" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-        .limit(10)
-    }),
-
-    // ---- window: ranking ----
-    // Same single-exchange shape as q09: RangePartitioning(o_custkey)
-    // serves the window's clustering AND prefix-satisfies the output's
-    // ORDER BY (o_custkey, rn), so only a cheap post-filter local sort
-    // remains — the naive plan re-shuffles the whole table for the
-    // final ordering.
-    "q08_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      Tables.orders(s, dir)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .repartitionByRange(col("o_custkey"))
-        .sortWithinPartitions(col("o_custkey"), desc("o_totalprice"), asc("o_orderkey"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
-    }),
-
-    // ---- window: running aggregate (exact decimal accumulation) ----
-    // The output contract is ORDER BY (l_orderkey, l_linenumber) over
-    // ALL rows, and the window partitions by l_orderkey — so ONE range
-    // exchange serves both: RangePartitioning(l_orderkey) satisfies the
-    // window's ClusteredDistribution, and its ordered partitions make
-    // the final global sort a no-exchange no-op (the within-partition
-    // sort below is exactly the window's required sort order). The
-    // naive form pays hash-exchange + sort for the window PLUS a
-    // range-exchange + sort for the output — two full-data shuffles of
-    // the fact table instead of one, at any scale.
-    "q09_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), cents(col("l_quantity")).as("qc"))
-        .repartitionByRange(col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey", "l_linenumber")
-        .select(col("l_orderkey"), col("l_linenumber"),
-                (sum(col("qc")).over(w).cast("double") / 100.0).as("running_qty"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ---- exact distinct aggregation ----
-    "q10_distinct_agg" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupBy("o_orderstatus")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"),
-             count(lit(1)).as("n_orders"),
-             dsum(col("o_totalprice")).as("revenue"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // ---- grouping sets (ROLLUP) ----
-    "q11_rollup" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("l_returnflag"),
-                coalesce(col("l_linestatus"), lit("ALL")).as("l_linestatus"),
-                col("sum_qty"), col("n"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- set operations ----
-    "q12_intersect" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val y96 = o.filter(year(col("o_orderdate")) === 1996).select("o_custkey")
-      val y97 = o.filter(year(col("o_orderdate")) === 1997).select("o_custkey")
-      y96.intersect(y97).orderBy("o_custkey")
-    }),
-    "q13_except" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val y96 = o.filter(year(col("o_orderdate")) === 1996).select("o_custkey")
-      val y97 = o.filter(year(col("o_orderdate")) === 1997).select("o_custkey")
-      y96.except(y97).orderBy("o_custkey")
-    }),
-
-    // ---- describe-style moments (A7): mean/std via exact sums ----
-    // std uses the all-integer form D = n·Σx₁₀₀² − (Σx₁₀₀)² accumulated
-    // exactly (DECIMAL(38,0) here, HUGEINT in DuckDB), so the only
-    // float step is the final correctly-rounded cast of D — no
-    // catastrophic cancellation in doubles (round-1 ADVICE item).
-    "q14_stats_moments" -> ((s, dir) => {
-      val q100 = round(col("l_quantity") * 100, 0).cast("long")
-      val p100 = round(col("l_extendedprice") * 100, 0).cast("long")
-      val D38 = DecimalType(38, 0)
-      val agg = Tables.lineitem(s, dir).agg(
-        count(lit(1)).as("n"),
-        dsum(col("l_quantity")).as("s_q"),
-        sum(q100.cast(D38)).as("s_q100"),
-        sum((q100 * q100).cast(D38)).as("ss_q100"),
-        min(col("l_quantity")).as("min_qty"),
-        max(col("l_quantity")).as("max_qty"),
-        dsum(col("l_extendedprice")).as("s_p"),
-        sum(p100.cast(D38)).as("s_p100"),
-        sum((p100 * p100).cast(D38)).as("ss_p100"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"))
-      val nd = col("n").cast("double")
-      val dQ = (col("n").cast(D38) * col("ss_q100") - col("s_q100") * col("s_q100")).cast("double")
-      val dP = (col("n").cast(D38) * col("ss_p100") - col("s_p100") * col("s_p100")).cast("double")
-      agg.select(
-        col("n"),
-        round(col("s_q") / nd, 6).as("mean_qty"),
-        round(sqrt(dQ / (nd * (nd - 1.0))) / 100.0, 6).as("std_qty"),
-        col("min_qty"), col("max_qty"),
-        round(col("s_p") / nd, 6).as("mean_price"),
-        round(sqrt(dP / (nd * (nd - 1.0))) / 100.0, 6).as("std_price"),
-        col("min_price"), col("max_price"))
-    }),
-
-    // ---- per-column null counting (A5/A6) ----
-    "q15_null_counts" -> ((s, dir) => {
-      Tables.events(s, dir).agg(
-        count(lit(1)).as("n"),
-        (count(lit(1)) - count(col("value"))).as("null_value"),
-        (count(lit(1)) - count(col("props"))).as("null_props"),
-        (count(lit(1)) - count(col("user_id"))).as("null_user"))
-    }),
-
-    // ---- tumbling time window (batch analog of streaming agg) ----
-    "q16_tumbling_window" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .select(col("hour").cast("timestamp_ntz").as("hour"),
-                col("event_type"), col("n"), col("sum_value"))
-        .orderBy("hour", "event_type")
-    }),
-
-    // ---- sliding window (1h window, 30m slide) ----
-    "q17_sliding_window" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .select(col("window.start").cast("timestamp_ntz").as("ws"),
-                col("n"), col("sum_value"))
-        .orderBy("ws")
-    }),
-
-    // ---- session windows (30m gap) per user ----
-    // Batch-native lag→cumsum sessionize (see sessionizeLag): round-15
-    // A/B vs the `session_window` form (BASELINE.md, Round 15, "q18
-    // sessionize A/B") — parity at sf0.1 (sw 0.69 vs lag 0.76 min, floor
-    // noise both ways), lag ahead at sf1 (1.53 vs 1.64), and
-    // DECISIVE at sf10: lag 5.7/6.8 s stable vs sw 8.2/8.4 s mins
-    // with 16–36 s spill-prone reps — `session_window`'s
-    // Updating/MergingSessions execs degrade under memory pressure
-    // exactly where the 100 TB grade is decided. The STREAMING
-    // sessionize is EventStreams.sessionizeStateful (explicit state).
-    "q18_sessionize" -> ((s, dir) => sessionizeLag(s, dir)),
-
-    // ---- JSON extraction (F11 analog) ----
-    // from_json with a declared schema parses each value once inside
-    // codegen; get_json_object re-ran a JsonPath interpreter per row
-    // (459× the oracle in round 1).
-    "q19_json_extract" -> ((s, dir) => {
-      // Native single-path extractor (functions/JsonField): one
-      // string/escape-aware byte scan per row. get_json_object's full
-      // Jackson tokenization measured 2.1 s steady-state at sf1 vs
-      // 0.25 s for the bare scan; this closes most of that gap.
-      Tables.events(s, dir)
-        .select(col("event_type"),
-                call_function("json_field", col("props"), lit("k"))
-                  .cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-             min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")
-    }),
-
-    // ---- grid-cell mapping (reference F4-F9, via Grid's Column API) ----
-    "q20_grid_cells" -> ((s, dir) => {
-      val lat = lit(10.0) + (col("value") % lit(45.0))
-      val lon = lit(-85.0) + (col("value") % lit(15.0))
-      val latIdx = Grid.latIdxCol(lat)
-      val lonIdx = Grid.lonIdxCol(lon)
-      Tables.events(s, dir).select(
-        col("event_id"),
-        latIdx.as("lat_idx"), lonIdx.as("lon_idx"),
-        Grid.idxToLatCol(latIdx).as("snap_lat"),
-        Grid.idxToLonCol(lonIdx).as("snap_lon"),
-        Grid.timeIdxCol(col("ts")).as("t_idx"),
-        Grid.monthIdxCol(col("ts")).as("m_idx"))
-        .orderBy("event_id")
-    }),
-
-    // ---- exact deduplication over documents ----
-    "q21_dedup_exact" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .groupBy(md5(col("text")).as("text_hash"))
-        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
-        .orderBy("text_hash")
-    }),
-
-    // ---- token statistics per language ----
-    "q22_token_stats" -> ((s, dir) => {
-      val tokens = (length(col("text")) -
-                    length(expr("replace(text, ' ', '')")) + 1).cast("bigint")
-      Tables.documents(s, dir)
-        .select(col("lang"), col("n_chars"), tokens.as("tokens"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-             sum(col("tokens")).as("sum_tokens"),
-             (sum(col("tokens")).cast("double") / count(lit(1))).as("avg_tokens"),
-             (sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---- per-document quality scoring ----
-    // 'the' counted as a whole word from the token array (round 1
-    // counted substrings, so 'other' inflated the stopword signal).
-    "q23_text_quality" -> ((s, dir) => {
-      val tokens = (length(col("text")) -
-                    length(expr("replace(text, ' ', '')")) + 1).cast("bigint")
-      val stopCnt = size(filter(col("toks"), t => t === "the")).cast("bigint")
-      val flags = when(stopCnt === 0, 1).otherwise(0) +
-                  when(col("n_chars") < 100, 1).otherwise(0)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("n_chars"),
-                Text.tokens(col("text")).as("toks"))
-        .select(
-          col("doc_id"), tokens.as("tokens"), stopCnt.as("stop_cnt"),
-          (stopCnt.cast("double") / tokens.cast("double")).as("stop_ratio"),
-          (least(lit(1.0), tokens.cast("double") / 100.0) *
-            (lit(1.0) - lit(0.1) * flags.cast("double"))).as("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- language-ID heuristic (whole-word marker scoring) ----
-    // Counts marker TOKENS on word boundaries (round-1 version counted
-    // substrings, so 'other' scored as 'the'). All five marker counts
-    // come from ONE byte scan (native word_marker_counts) — the HOF
-    // form paid a token-array materialization plus five interpreted
-    // filter lambdas per row (q24 3.09→0.73 s solo at sf1).
-    "q24_langid" -> ((s, dir) => {
-      val markers = Seq("the", "table", "filter", "data", "query")
-      def occ(i: Int): Column = element_at(col("c"), i)
-      val (en, de, fr, es, zh) = (occ(1), occ(2), occ(3), occ(4), occ(5))
-      val pred = when(en >= de && en >= fr && en >= es && en >= zh, "en")
-        .when(de >= fr && de >= es && de >= zh, "de")
-        .when(fr >= es && fr >= zh, "fr")
-        .when(es >= zh, "es")
-        .otherwise("zh")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          call_function("word_marker_counts", col("text"),
-            array(markers.map(lit): _*)).as("c"))
-        .select(
-          col("doc_id"), pred.as("pred_lang"),
-          when(pred === col("lang"), 1).otherwise(0).as("is_match"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- document fingerprint ----
-    "q25_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-                conv(substring(md5(col("text")), 1, 15), 16, 10)
-                  .cast("bigint").as("fingerprint"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- MinHash signatures over 8-char shingles ----
-    // Computed entirely per-row: shingle→hash array via transform(
-    // sequence(...)), then array_min per permutation. Zero explode,
-    // zero shuffle — the round-1 explode+groupBy formulation shuffled
-    // ~8× the corpus bytes, a 100 TB scale-killer (VERDICT r1).
-    "q26_minhash_sig" -> ((s, dir) => {
-      minhashSigsFrame(s, dir).orderBy("doc_id")
-    }),
-
-    // ---- brute-force cosine top-k over embeddings ----
-    // The query vector's norm is computed ONCE on the broadcast side
-    // (round 1 recomputed it per row).
-    "q27_knn_cosine" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("v").as("qv"),
-                sqrt(Similarity.dot(col("v"), col("v"))).as("qnorm"))
-      emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
-        .select(col("vec_id"),
-                round(Similarity.dot(col("v"), col("qv")) /
-                      (sqrt(Similarity.dot(col("v"), col("v"))) * col("qnorm")), 6)
-                  .as("cosine"))
-        .orderBy(desc("cosine"), asc("vec_id"))
-        .limit(20)
-    }),
-
-    // ---- reference clean stage end-to-end (S3/S4, P1, F1-F3, P2, O1) ----
-    // Reads the committed dirty fixture (double header, unsorted,
-    // coerce-failing cells, partial nulls) through the real Clean ops.
-    "q28_clean_pipeline" -> ((s, _) => {
-      Clean.cleanApiResponse(readRawFixture(s))
-    }),
-
-    // ---- quality report A8/P9 over the cleaned fixture ----
-    // Same single-pass aggregate Quality.report runs, with the issue
-    // flags and score expressed as Columns so the whole report is one
-    // SQL-comparable row (formula: extract.py:287-288).
-    "q29_quality_report" -> ((s, _) => {
-      val cleaned = Clean.cleanApiResponse(readRawFixture(s))
-      val a = Quality.aggPlan(cleaned)
-      val n = col("n")
-      val nn = Seq("time", "depth", "latitude", "longitude", "temperature", "salinity")
-        .map(c => col(s"nn_$c")).reduce(_ + _)
-      val completeness = nn.cast("double") / (n * lit(6)).cast("double")
-      val issues =
-        (n < Quality.MinDataPoints).cast("int") +
-        (completeness < lit(1.0) - Quality.MaxMissingRatio).cast("int") +
-        (col("min_temperature") < Quality.TempBounds._1 ||
-         col("max_temperature") > Quality.TempBounds._2).cast("int") +
-        (col("min_salinity") < Quality.SalBounds._1 ||
-         col("max_salinity") > Quality.SalBounds._2).cast("int")
-      a.select(
-        n,
-        round(completeness, 6).as("completeness"),
-        issues.as("n_issues"),
-        round(least(lit(1.0), completeness * (lit(1.0) - issues * lit(0.1))), 6)
-          .as("quality_score"),
-        col("min_temperature").as("temp_min"), col("max_temperature").as("temp_max"),
-        round(col("sum_temperature") / col("cnt_temperature"), 6).as("temp_mean"),
-        col("cnt_temperature").as("temp_count"),
-        col("min_salinity").as("sal_min"), col("max_salinity").as("sal_max"),
-        round(col("sum_salinity") / col("cnt_salinity"), 6).as("sal_mean"),
-        col("cnt_salinity").as("sal_count"))
-    }),
-
-    // ---- nearby-cache lookup semantics (P6 analog, P7, O4, F12) ----
-    // Cache-metadata coordinates synthesized from events (same lat/lon
-    // derivation q20 established); box predicate + Manhattan ranking +
-    // per-row Euclidean distance per cache_manager.py:302-318.
-    "q30_cache_nearby" -> ((s, dir) => {
-      val qLat = 32.0; val qLon = -77.5; val r = 2.0
-      val meta = Tables.events(s, dir)
-        .filter(col("event_id") % 37 === 0)
-        .select(
-          col("event_id"),
-          (lit(10.0) + col("value") % lit(45.0)).as("latitude"),
-          (lit(-85.0) + col("value") % lit(15.0)).as("longitude"))
-      meta
-        .filter(abs(col("latitude") - qLat) < r && abs(col("longitude") - qLon) < r)
-        .select(
-          col("event_id"), col("latitude"), col("longitude"),
-          round(abs(col("latitude") - qLat) + abs(col("longitude") - qLon), 6)
-            .as("manhattan"),
-          round(sqrt(pow(col("latitude") - qLat, 2) + pow(col("longitude") - qLon, 2)), 6)
-            .as("distance_degrees"))
-        .orderBy(asc("manhattan"), asc("event_id"))
-    }),
-
-    // ---- LSH banding join: near-duplicate candidate pairs ----
-    // Bands the q26 signatures (2 bands x 2 rows), self-equi-joins on
-    // the band bucket — the scale path for many-to-many similarity:
-    // shuffle is on (band, bucket) keys, never all-pairs. Estimated
-    // Jaccard = fraction of the 4 signature components that agree.
-    // Signatures are MATERIALIZED first (r21, guide §2.4/§5): the
-    // self-join's two sides are canonically different once AQE
-    // broadcast-converts one, so without the checkpoint the corpus
-    // scan + minhash ran TWICE per execution (executed-plan
-    // fingerprint: scans=2, reused=0).
-    "q31_neardup_pairs" -> ((s, dir) => {
-      bandedPairs(minhashSigsCk(s, dir)).orderBy("doc1", "doc2")
-    }),
-
-    // ---- describe() with exact quartiles (A7, P5; pandas parity) ----
-    // Exact `percentile` (not approx) per SURVEY §7.4; std via the
-    // all-integer D = n*Σx² − (Σx)² trick shared with q14.
-    "q32_describe" -> ((s, dir) => {
-      val D38 = DecimalType(38, 0)
-      val li = Tables.lineitem(s, dir)
-      def stats(c: String, suffix: String): Seq[Column] = {
-        val x100 = round(col(c) * 100, 0).cast("long")
-        Seq(
-          dsum(col(c)).as(s"s_$suffix"),
-          sum(x100.cast(D38)).as(s"s100_$suffix"),
-          sum((x100 * x100).cast(D38)).as(s"ss100_$suffix"),
-          min(col(c)).as(s"min_$suffix"), max(col(c)).as(s"max_$suffix"))
-      }
-      // Exact quartiles through the REGIME CHOOSER: the profile pass
-      // routes l_quantity (~50 distinct) to the value-map regime and
-      // l_extendedprice (~all-distinct, wide binade spread) to a
-      // histogram regime — the plan a regime-aware caller would have
-      // picked, now chosen from the data. The profile SKETCHES A 5%
-      // SAMPLE: its dominant cost is the interpreted per-row HLL
-      // update (approx_count_distinct is an ImperativeAggregate), and
-      // the regime decision tolerates sample-deflated estimates
-      // because every regime is exact (see profileRegimes). Fusing
-      // the profile into the stats agg below was measured OUT in r9 —
-      // the ImperativeAggregate de-codegens the whole fused pass
-      // (solo sf1 1.78 s fused vs 1.49 s split, pre-sampling).
-      val regimes = ops.Percentiles.profileRegimes(
-        li, Seq("l_quantity", "l_extendedprice"), sampleFraction = 0.05)
-      // r22 (guide §2.4): when the chooser picks the VALUE-MAP regime,
-      // its `percentile` aggregate fuses into the stats aggregation —
-      // one scan and one aggregate subtree fewer. This is NOT the r9
-      // rejected fusion (the profile's approx_count_distinct over
-      // every column, which de-codegened a heavy pass): a value-map
-      // column is by definition low-distinct, so the imperative
-      // percentile map stays tiny and the fused pass measured FASTER
-      // (3/3 paired sessions, 0.65–0.82 vs 0.69–0.84 solo min-of-7).
-      // Values identical: l_quantity is already DOUBLE, the exact
-      // input exactByValueMap's cast fed it (oracle gate green).
-      // The other regimes keep their own subtree — their boundedness
-      // machinery (histograms, range sort) cannot ride a global agg.
-      val qtyFused = regimes("l_quantity") == "value-map"
-      val qtyPcts =
-        if (qtyFused) None
-        else Some(ops.Percentiles.exactByRegime(regimes("l_quantity"),
-          li.select(col("l_quantity")), "l_quantity",
-          Seq(0.25, 0.5, 0.75), prefix = "qq"))
-      val pricePcts = ops.Percentiles.exactByRegime(regimes("l_extendedprice"),
-        li.select(col("l_extendedprice")), "l_extendedprice",
-        Seq(0.25, 0.5, 0.75), prefix = "pp")
-      val fusedPct =
-        if (qtyFused)
-          Seq(expr("percentile(l_quantity, array(0.25D, 0.5D, 0.75D))").as("qpcts"))
-        else Nil
-      val agg = li.agg(
-        count(lit(1)).as("n"),
-        (stats("l_quantity", "q") ++ stats("l_extendedprice", "p") ++ fusedPct): _*)
-      val nd = col("n").cast("double")
-      def out(suffix: String, label: String, pct: Int => Column): Seq[Column] = {
-        val d = (col("n").cast(D38) * col(s"ss100_$suffix") -
-                 col(s"s100_$suffix") * col(s"s100_$suffix")).cast("double")
-        Seq(
-          round(col(s"s_$suffix") / nd, 6).as(s"mean_$label"),
-          round(sqrt(d / (nd * (nd - 1.0))) / 100.0, 6).as(s"std_$label"),
-          col(s"min_$suffix").as(s"min_$label"),
-          round(pct(0), 6).as(s"q25_$label"),
-          round(pct(1), 6).as(s"q50_$label"),
-          round(pct(2), 6).as(s"q75_$label"),
-          col(s"max_$suffix").as(s"max_$label"))
-      }
-      val joined = qtyPcts.foldLeft(agg.crossJoin(pricePcts))(_ crossJoin _)
-      val qtyPick = qtyPcts.fold[Int => Column](
-        i => col("qpcts").getItem(i))(_ => i => col(s"qq${25 * (i + 1)}"))
-      joined.select((col("n") +:
-        (out("q", "qty", qtyPick) ++
-         out("p", "price", i => col(s"pp${25 * (i + 1)}")))): _*)
-    }),
-
-    // ---- real tokenizer: arrays, n-grams, word-boundary stopwords ----
-    // (Round-1 text ops were length arithmetic; these produce actual
-    // token/gram arrays the downstream ops consume.)
-    "q33_token_ops" -> ((s, dir) => {
-      // tokenize ONCE in a prior projection: HOF columns are
-      // CodegenFallback, so a projection with four `tokens(text)`
-      // occurrences re-splits the text four times (no CSE outside
-      // codegen).
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-        .select(
-          col("doc_id"),
-          size(col("toks")).as("n_tokens"),
-          size(array_distinct(col("toks"))).as("n_unique_tokens"),
-          size(Text.ngrams(col("toks"), 2)).as("n_bigrams"),
-          round(Text.stopwordRatio(col("toks")), 6).as("stopword_ratio"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- SimHash document fingerprint (native expression) ----
-    "q34_simhash" -> ((s, dir) => {
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        Text.simhash(Text.tokens(col("text"))).as("simhash"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- exact trigram-Jaccard + SimHash-Hamming over LSH candidates ----
-    // The verify step of the near-dup pipeline: banding proposes pairs
-    // (q31), this scores them exactly. Joins are equi-joins on doc_id;
-    // candidate count (not corpus size) bounds the work.
-    "q35_ngram_jaccard" -> ((s, dir) => {
-      // localCheckpoint: the candidate-pair table is tiny (~10
-      // pairs/doc) but its minhash+banding subtree is the most
-      // expensive in the query, and `pairs` has TWO consumers (the
-      // needed-doc semi and the final join) which would each
-      // re-execute it — materializing once is the candidate-table
-      // analog of the driver-resident codebook discipline.
-      val pairs = bandedPairs(minhashSigsCk(s, dir))
-        .select("doc1", "doc2").localCheckpoint()
-      // Expensive per-doc features (grams, simhash) are computed ONLY
-      // for docs that appear in a candidate pair — at scale the
-      // candidate set, not the corpus, bounds this cost.
-      val needed = pairs
-        .select(explode(array(col("doc1"), col("doc2"))).as("doc_id"))
-        .distinct()
-      val docs = Tables.documents(s, dir)
-        .join(needed, Seq("doc_id"), "left_semi")
-        .select(
-          col("doc_id"),
-          // grams as 64-bit fingerprints (word_text_gram_hashes):
-          // jaccard only needs equality, so the feature arrays that
-          // ride the two pair joins are 8 B/gram, not gram strings;
-          // dedupe ONCE per doc (inside the join it would redo per
-          // candidate pair)
-          Text.distinctGramHashesOfText(col("text"), 3).as("g3"),
-          Text.simhash(Text.tokens(col("text"))).as("sh"))
-        // r21: materialize — the feature table has TWO consumers (the
-        // doc1 and doc2 joins below) and the r20 executed plan shows
-        // both subtrees running in full (scans=2 of documents,
-        // reused=0): the semi-join AND the gram/simhash byte scans
-        // were paid twice per execution. Candidate-bounded rows, so
-        // the checkpoint is small by construction.
-        .localCheckpoint()
-      pairs
-        .join(docs.select(col("doc_id").as("doc1"), col("g3").as("g3_1"), col("sh").as("sh_1")), "doc1")
-        .join(docs.select(col("doc_id").as("doc2"), col("g3").as("g3_2"), col("sh").as("sh_2")), "doc2")
-        .select(
-          col("doc1"), col("doc2"),
-          round(Text.jaccard(col("g3_1"), col("g3_2")), 6).as("jaccard3"),
-          Text.hamming32(col("sh_1"), col("sh_2")).as("hamming"))
-        .orderBy("doc1", "doc2")
-    }),
-
-    // ---- ANN: banded random-hyperplane LSH bucket codes ----
-    // bits/bands are the scale knobs (2^bits buckets per band, a pair
-    // is a candidate when ANY band collides — OR-amplification like
-    // the minhash banding). AnnBits/AnnBands here are sized for the
-    // test corpus; a 100 TB run raises bits so n/2^bits stays small.
-    "q36_ann_buckets" -> ((s, dir) => {
-      Similarity.bandedBuckets(Tables.embeddings(s, dir),
-          bits = AnnBits, bands = AnnBands)
-        .select(col("vec_id"), col("band"), col("bucket"))
-        .orderBy("vec_id", "band")
-    }),
-
-    // ---- ANN: many-to-many similarity join via banded bucket joins ----
-    // The scale path q27 lacks: distinct candidates from slim
-    // (id, band, bucket) equi-joins (never all-pairs, vectors don't
-    // ride the banding shuffle), exact cosine only on candidates.
-    "q37_ann_sim_join" -> ((s, dir) => {
-      Similarity.bucketJoin(Tables.embeddings(s, dir),
-          bits = AnnBits, bands = AnnBands)
-        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- multimodal: real BINARY columns through decode + features ----
-    // Payloads are built as actual binary blobs (fake GIMG container
-    // over document text), decoded per-partition in mapPartitions, and
-    // reduced to typed features — the full multimodal plumbing shape;
-    // the oracle recomputes the same statistics from the source text.
-    "q38_multimodal" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal
-        .mediaFromText(Tables.documents(s, dir), "doc_id", "text")
-        .as[Multimodal.Media]
-      Multimodal.features(Multimodal.decode(media))
-        .select(col("media_id"), col("width"), col("height"), col("channels"),
-                col("n_bytes"), round(col("mean_byte"), 6).as("mean_byte"))
-        .orderBy("media_id")
-    }),
-
-    // ---- near-dup DEDUP: keeper selection over the LSH pairs ----
-    // Completes the dedup pipeline (signatures → banding candidates →
-    // keeper): a doc is dropped when it is the HIGHER id of a pair
-    // whose estimated Jaccard ≥ 0.75 ("keep first" policy). Anti-join
-    // on the (tiny, broadcastable) duplicate-id set — at 100 TB the
-    // corpus never shuffles, only the dup ids do.
-    "q39_neardup_dedup" -> ((s, dir) => {
-      val dups = bandedPairs(minhashSigsCk(s, dir))
-        .filter(col("jaccard_est") >= 0.75)
-        .select(col("doc2").as("doc_id")).distinct()
-      Tables.documents(s, dir)
-        .join(broadcast(dups), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- as-of join: each click matched to the user's latest prior purchase ----
-    // Spark has no built-in; ops/AsOf implements the one-shuffle
-    // union+window formulation. Oracle: DuckDB's native ASOF JOIN.
-    "q40_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      AsOf.asofJoin(clicks, purchases,
-                    keyCol = "user_id", tsCol = "ts", tieBreakCol = "event_id")
-        .select(
-          col("event_id"), col("user_id"), col("ts"),
-          col("r_event_id").as("purchase_id"),
-          col("r_ts").as("purchase_ts"),
-          round(col("r_value"), 6).as("purchase_value"),
-          expr("(unix_micros(ts) - unix_micros(r_ts)) div 1000000").as("gap_s"))
-        .orderBy("event_id")
-    }),
-
-    // ---- range join: clicks within ±30 min of each error event ----
-    // Bucketized to an equi-join (ops/RangeJoin) — the naive
-    // inequality join planes to a nested-loop product. Aggregated per
-    // error event so the output stays stable as density grows.
-    "q41_range_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("ts"))
-      RangeJoin.byTime(errors, clicks, "ts", radiusSec = 1800)
-        .groupBy("event_id")
-        .agg(count(lit(1)).as("n_nearby"),
-             min(col("r_event_id")).as("first_click"),
-             max(col("r_event_id")).as("last_click"))
-        .orderBy("event_id")
-    }),
-
-    // ---- IVF coarse assignment (the other ANN scale path) ----
-    "q42_ivf_assign" -> ((s, dir) => {
-      Similarity.ivfAssign(Tables.embeddings(s, dir), k = 8)
-        .select(col("vec_id"), col("centroid"), round(col("dot"), 6).as("dot"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- embedding-cosine near-dup dedup ----
-    // The vector-space member of the dedup family: candidates from the
-    // LSH bucket join, pairs above the cosine threshold mark the
-    // higher id as duplicate, anti-join keeps survivors. (Corpus
-    // embeddings are near-orthogonal — max cosine ≈0.43 — so the 0.4
-    // threshold exercises the path with a real, small drop set.)
-    // Runs the PRODUCTION occupancyBits sizing (r19): fixed bits=10 at
-    // n=200k meant ~195 vectors/bucket → ~39M cosine confirms, the
-    // suite's worst work-bound sf10 cell (8× gross, variance to
-    // minutes); the policy holds occupancy ~8 so the confirm stays
-    // linear in n at every scale. The oracle recomputes the same width
-    // from COUNT(*) (the q99 construction), so the cell stays
-    // value-exact. Fixed-knob banding behavior remains carried by
-    // q36/q37/q55.
-    "q47_embed_dedup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val dups = Similarity.bucketJoin(emb,
-          bits = Similarity.occupancyBits(emb.count()), bands = AnnBands)
-        .filter(col("cosine") >= 0.4)
-        .select(col("id2").as("vec_id")).distinct()
-      emb.join(broadcast(dups), Seq("vec_id"), "left_anti")
-        .select(col("vec_id"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- CUBE grouping sets ----
-    "q43_cube" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy(asc_nulls_last("l_returnflag"), asc_nulls_last("l_linestatus"))
-    }),
-
-    // ---- deterministic hash split (train/val/test assignment) ----
-    // Stable across runs/engines (md5-prefix mod 100, no RNG): the
-    // standard way a training pipeline partitions a corpus so that
-    // re-runs and late-arriving shards land in the same split.
-    "q45_hash_split" -> ((s, dir) => {
-      val bucket = conv(substring(md5(col("text")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-      val split = when(bucket < 80, "train")
-        .when(bucket < 90, "val").otherwise("test")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), split.as("split"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-             sum(col("n_chars")).as("total_chars"),
-             min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-        .orderBy("split")
-    }),
-
-    // ---- BPE-ish token-count estimate ----
-    // Whitespace words chunked into <=4-char subword units — the cheap
-    // estimator a data pipeline uses for budget accounting before any
-    // real tokenizer runs. Exact count q22/q33; this is Σ⌈len/4⌉.
-    "q46_token_estimate" -> ((s, dir) => {
-      val toks = Text.tokens(col("text"))
-      val est = aggregate(toks, lit(0L), (acc, t) => acc + ceil(length(t) / lit(4.0)).cast("long"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), est.as("tokens_est"),
-                size(toks).as("words"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- pivot (conditional-aggregation family) ----
-    "q44_pivot" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      Tables.events(s, dir)
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .select(col("day") +: types.map(t => coalesce(col(t), lit(0L)).as(t)): _*)
-        .orderBy("day")
-    }),
-
-    // ---- repetition / boilerplate quality signals (Gopher-style) ----
-    // Duplicate-word ratio and most-frequent-bigram fraction: the two
-    // cheap repetition filters a pretraining pipeline applies before
-    // any model-based scoring. Pure per-doc projections — zero shuffle.
-    "q48_repetition" -> ((s, dir) => {
-      // One fused byte scan per doc (native `repetition_stats`): token
-      // count, exact distinct-token count, bigram count, and max
-      // bigram multiplicity — replacing the five-array-pass composed
-      // plan (tokens → bigram strings → array_sort → interpreted
-      // aggregate lambda → array_distinct; 1.2 s of q48 at sf1). The
-      // oracle keeps its independent sort-based formulation: identical
-      // counts, different algorithm — a real cross-check.
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-                call_function("repetition_stats", col("text")).as("st"))
-        .select(
-          col("doc_id"),
-          col("st.n_tokens").cast("int").as("n_tokens"),
-          round(when(col("st.n_tokens") === 0, 0.0).otherwise(
-            lit(1.0) - col("st.n_distinct").cast("double") /
-              col("st.n_tokens").cast("double")), 6).as("dup_word_ratio"),
-          round(when(col("st.n_bigrams") === 0, 0.0).otherwise(
-            col("st.top_bigram").cast("double") /
-              col("st.n_bigrams").cast("double")), 6).as("top_bigram_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- benchmark-contamination check (n-gram overlap) ----
-    // Docs sharing any word-trigram with the held-out "benchmark"
-    // slice (doc_id % 20 == 0 — deterministic, oracle-reproducible).
-    // Scale shape: explode to slim (doc, gram) rows, distinct, LEFT
-    // SEMI against the benchmark gram set, count per doc — gram
-    // strings are the shuffle keys, never doc×doc pairs. (Production
-    // runs 8–13-grams; 3 here because the synthetic 40-word vocabulary
-    // makes longer grams collision-free and the carrier vacuous.)
-    "q49_contamination" -> ((s, dir) => {
-      // fused tokenize+gram native expression: one byte scan, no
-      // intermediate token array (and no HOF-inlining hazard — the
-      // round-2 bug where inlined tokens() re-evaluated per
-      // element_at cost 52 s vs 1 s at sf0.1)
-      // grams travel as 64-bit fingerprints, per-doc DISTINCT at
-      // emission (word_text_gram_hashes_distinct — the dedup runs in
-      // the same byte scan): the semi-join and the bit of counting
-      // below have per-doc SET semantics, so within-doc duplicates
-      // never leave the expression, the explode emits fewer rows, and
-      // the post-semi (doc_id, gram) rows are unique BY CONSTRUCTION
-      // — the former `.distinct()` exchange is gone from the plan
-      // explode_outer, not explode: InferFiltersFromGenerate turns a
-      // plain explode into a `size(g3) > 0` pre-filter that RE-computes
-      // the whole gram expression per doc (2-3 evaluations of the byte
-      // scan); the outer variant is exempt, so the expression runs
-      // once and the null row an empty doc produces is dropped by a
-      // cheap isNotNull on the already-exploded column (and a null
-      // gram could never match the semi-join anyway).
-      val grams = Tables.documents(s, dir)
-        .select(col("doc_id"), Text.distinctGramHashesOfText(col("text"), 3).as("g3"))
-      val bench = grams.filter(col("doc_id") % 20 === 0)
-        .select(explode_outer(col("g3")).as("gram"))
-        .filter(col("gram").isNotNull).distinct()
-      val corpus = grams.filter(col("doc_id") % 20 =!= 0)
-      // The bench gram set grows with the corpus (5% slice × grams/doc
-      // × 8 B), so the regime is gated on the doc count (a memoized
-      // parquet-metadata job): ≳20k bench docs ≈ tens of MB of
-      // fingerprints, past which a forced broadcast — which bypasses
-      // autoBroadcastJoinThreshold — would be driver-hostile.
-      val benchDocs = Tables.documentsCount(s, dir) / 20
-      if (benchDocs <= 20000) {
-        // Broadcast regime (the common one): ONE corpus pipeline.
-        // Each per-doc-distinct gram left-joins the broadcast bench
-        // set with a marker, so n_shared = count(hit) per doc — and
-        // because explode_outer keeps empty docs as a null-gram row,
-        // EVERY corpus doc reaches the aggregate. No second documents
-        // scan, no join-back for the zero rows.
-        corpus.select(col("doc_id"), explode_outer(col("g3")).as("gram"))
-          .join(broadcast(bench.withColumn("hit", lit(1))), Seq("gram"), "left")
-          .groupBy("doc_id").agg(count(col("hit")).as("n_shared"))
-          .orderBy("doc_id")
-      } else {
-        // Shuffle regime: the semi prunes to the SHARED grams before
-        // any exchange (contamination is rare by construction), and
-        // the zero rows re-attach through a doc_id-only scan.
-        val hits = corpus
-          .select(col("doc_id"), explode_outer(col("g3")).as("gram"))
-          .filter(col("gram").isNotNull)
-          .join(bench, Seq("gram"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-        corpus.select("doc_id")
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("n_shared"), lit(0L)).as("n_shared"))
-          .orderBy("doc_id")
-      }
-    }),
-
-    // ---- stratified deterministic sampling ----
-    // Per-language 10% sample by md5 bucket: engine-stable (no RNG),
-    // re-runs and late shards land identically — the q45 split
-    // discipline applied per stratum.
-    "q50_stratified_sample" -> ((s, dir) => {
-      val bucket = conv(substring(md5(col("text")), 1, 8), 16, 10)
-        .cast("bigint") % 10
-      Tables.documents(s, dir)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-             count(when(bucket === 0, 1)).as("n_sampled"),
-             min(when(bucket === 0, col("doc_id"))).as("first_sampled"),
-             max(when(bucket === 0, col("doc_id"))).as("last_sampled"))
-        .orderBy("lang")
-    }),
-
-    // ---- k-means update step: per-centroid vector mean ----
-    // The missing half of the IVF pair (q42 assigns, this re-centers):
-    // explode vectors to (centroid, dim, val) rows and aggregate per
-    // (centroid, dim) — THE scale shape for averaging vectors (the
-    // shuffle carries scalar cells keyed by centroid×dim; no vector is
-    // ever buffered whole). Sums accumulate in DECIMAL(38,30) so the
-    // float inputs aggregate order-independently on both engines; one
-    // double conversion + division at the end.
-    "q52_kmeans_step" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfUpdate(emb, Similarity.ivfAssign(emb, k = 8))
-        .select(col("centroid"), col("dim"), round(col("mean_val"), 6).as("mean_val"))
-        .orderBy("centroid", "dim")
-    }),
-
-    // ---- event-transition counts (lead/lag window family) ----
-    // The session-flow matrix: each user's consecutive event pairs,
-    // counted per (from, to). lead() over the per-user time order —
-    // the remaining window surface (rank q08, running q09, lead here);
-    // shuffle is keyed by user, the transition matrix is tiny.
-    "q54_transitions" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("next_type", lead("event_type", 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("from_type", "to_type")
-    }),
-
-    // ---- per-stratum top-k curation ----
-    // Keep the k best documents per language — the "best N per
-    // stratum" selection every curation pipeline ends with, via
-    // ops/TopK: per-partition bounded heaps prune BEFORE the shuffle,
-    // so the per-stratum window sorts k × partitions survivors instead
-    // of the whole stratum (the naive window is one task per stratum
-    // at 100 TB).
-    "q53_top_per_lang" -> ((s, dir) => {
-      ops.TopK.perGroup(
-          Tables.documents(s, dir).select(col("lang"), col("doc_id"), col("n_chars")),
-          groupCols = Seq("lang"), orderCol = "n_chars", tieBreakCol = "doc_id", k = 3)
-        .orderBy("lang", "rk")
-    }),
-
-    // ---- token-budget shard assignment (distributed prefix sums) ----
-    // Pack the corpus into ~2000-token shards in doc_id order: shard =
-    // tokens-before-this-doc ÷ budget. The running total runs through
-    // ops/PrefixSum (range-partitioned chunks + broadcast offsets) —
-    // never the global single-partition window `SUM OVER (ORDER BY)`
-    // plans to, which is the scale trap this query exists to exercise.
-    "q51_token_shards" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"),
-                size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-      PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "cum_tokens")
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
-                expr("CAST((cum_tokens - n_tokens) div 2000 AS BIGINT)").as("shard"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- multi-probe LSH candidate pairs ----
-    // The recall amplifier besides banding: each probe row also visits
-    // every bucket at Hamming distance 1 (bit flips), so a near-miss on
-    // one hyperplane sign still collides. Only slim (id, band, bucket)
-    // rows expand (bits+1 probes per row) — never vectors.
-    "q55_multiprobe_pairs" -> ((s, dir) => {
-      Similarity.multiProbePairs(Tables.embeddings(s, dir),
-          bits = AnnBits, bands = AnnBands)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- salted skew join ≡ plain join (the equivalence IS the test) ----
-    // The salted plan spreads each key over 8 sub-keys
-    // (deterministic hash salt on the big side, explode-replication on
-    // the small side); the oracle runs the PLAIN join — identical
-    // results prove salting changes the distribution, not the answer.
-    "q56_salted_join" -> ((s, dir) => {
-      val large = Tables.orders(s, dir)
-        .select(col("o_custkey").as("custkey"), col("o_orderkey"), col("o_totalprice"))
-      val small = Tables.customer(s, dir)
-        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      ops.Skew.saltedJoin(large, small, "custkey",
-          saltSource = "o_orderkey", saltBuckets = 8)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // ---- exact percentiles via the bounded cents histogram ----
-    // The fixed-precision twin of q32's sort-based selection: every
-    // intermediate is bounded by the VALUE DOMAIN (coarse buckets =
-    // domain/256, fine level <=256 distinct cents per target bucket),
-    // not the corpus — no corpus-wide range shuffle anywhere.
-    "q57_percentile_hist" -> ((s, dir) => {
-      ops.Percentiles.exactByCentsHistogram(
-          Tables.lineitem(s, dir), "l_extendedprice", Seq(0.25, 0.5, 0.75))
-        .select(round(col("p25"), 6).as("p25"), round(col("p50"), 6).as("p50"),
-                round(col("p75"), 6).as("p75"))
-    }),
-
-    // ---- interval join (batch twin of the stream-stream join) ----
-    // EventStreams.clickPurchaseJoin run on the bounded frame: each
-    // click matched to the same user's purchases within the following
-    // hour. The SAME transform drives readStream (StreamingSpec); this
-    // carrier pins its join semantics against the SQL interval join.
-    "q58_interval_join" -> ((s, dir) => {
-      streaming.EventStreams.clickPurchaseJoin(Tables.events(s, dir))
-        .withColumn("purchase_value", round(col("purchase_value"), 6))
-        .orderBy("user_id", "click_id", "purchase_id")
-    }),
-
-    // ---- end-to-end ingest: fetch → clean → land → pruned query ----
-    // The reference's whole pipeline (run_pipeline.py:271-305) as one
-    // driver-checked flow: distributed multi-point fetch (fixtures),
-    // extract-stage clean, month-partitioned parquet landing, then a
-    // partition-pruned point query. The oracle reads the SAME landed
-    // parquet back in DuckDB (IngestSpec proves only one month's files
-    // are opened). Scale-independent inputs: the fixture point set.
-    "q59_ingest_landing" -> ((s, _) =>
-      pipeline.LandedIngest.runAndQuery(s)),
-
-    // ---- near-dup CLUSTER dedup: components over the candidate graph ----
-    // Similarity is not transitive, so pairwise keeper rules can chain-
-    // drop documents wrongly; the production shape is candidates →
-    // connected components → one representative per component. Min-label
-    // propagation gives a deterministic component id (min reachable
-    // doc_id), which a DuckDB recursive CTE reproduces exactly.
-    "q60_neardup_clusters" -> ((s, dir) => {
-      // Star edges, not pairs: the candidate threshold here (0.5) is
-      // implied by any band collision, so the component structure only
-      // depends on bucket CONNECTIVITY — see [[bandedStarEdges]]. The
-      // oracle keeps the pairwise formulation; components are provably
-      // identical (clique and star connect the same bucket).
-      // maxIter 50, not the default 25: a star has diameter 2 where
-      // the clique had 1, so label propagation can need up to ~2× the
-      // rounds on the same bucket-chain — the cap moves with it.
-      val edges = bandedStarEdges(minhashSigsCk(s, dir))
-      ops.ConnectedComponents.minLabel(
-          Tables.documents(s, dir), "doc_id", edges, "doc1", "doc2",
-          maxIter = 50)
-        .select(col("id").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- distinctive-term extraction (tf-idf family) ----
-    // Top-3 terms per document by tf × N/df — the rational-idf variant
-    // (no log damping) so the score is pure IEEE mul/div with the same
-    // expression shape on both engines (ln is libm-dependent and has
-    // no cross-engine bit guarantee). Scale shape: slim (doc, term)
-    // rows shuffle once for tf and once for the per-term window, N
-    // broadcasts as one row; the rank window is per-doc
-    // (high-cardinality → parallel).
-    "q61_tfidf_terms" -> ((s, dir) => {
-      // explode_outer + isNotNull: the plain explode's inferred
-      // size-filter re-evaluates the tokenizer per doc (see q49)
-      val terms = Tables.documents(s, dir)
-        .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-        .select(col("doc_id"), explode_outer(col("toks")).as("term"))
-        .filter(col("term").isNotNull)
-      // ONE term-keyed exchange serves BOTH the tf aggregate and the
-      // df window: hash(term) partitioning satisfies the aggregate's
-      // ClusteredDistribution(doc_id, term) (the subset rule — all
-      // rows of a (doc, term) pair share the term) and the window's
-      // ClusteredDistribution(term), so the explicit repartition
-      // replaces the aggregate's own (doc_id, term) exchange AND the
-      // window's term re-exchange — 2 corpus exchanges in the whole
-      // plan instead of 3 (measured r9: sf10 solo 6.9 → 5.6 s).
-      // Trade-off: the occurrences shuffle raw (map-side combine
-      // needs the agg to own its exchange); within-doc term repeats
-      // are modest, so the removed tf-row exchange carried comparable
-      // volume to what dedup would have saved here.
-      val tf = terms.repartition(col("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      // df = docs containing the term = rows per term in tf ((doc,
-      // term) is distinct there). A count window OVER (PARTITION BY
-      // term) computes it in the same term-clustered pass a separate
-      // groupBy+join would shuffle for twice — one term exchange
-      // instead of an aggregate subtree plus a join re-shuffle (and
-      // the tokenize+explode subtree keeps its ONE consumer; twin
-      // subtrees re-execute, see q35).
-      val wdf = Window.partitionBy("term")
-      // corpus size from the documentsCount metadata memo (the q49
-      // discipline: catalog-statistics class, one metadata job per
-      // session) instead of a second documents-scan subtree + a
-      // broadcast crossJoin of its 1-row result — the scan, the
-      // exchange, and the join all disappear from the plan.
-      val n = Tables.documentsCount(s, dir)
-      val w = Window.partitionBy("doc_id").orderBy(desc("score"), asc("term"))
-      tf.withColumn("df", count(lit(1)).over(wdf))
-        .withColumn("score", col("tf").cast("double") * lit(n) / col("df"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-                round(col("score"), 6).as("score"), col("rk"))
-        .orderBy("doc_id", "rk")
-    }),
-
-    // ---- grouped describe: per-stratum exact quartiles ----
-    // pandas' groupby().describe() shape: count/mean/quartiles of doc
-    // length per language. Groups are stratum-like (few, large), so the
-    // per-group `percentile` value-map aggregate is the right tool here
-    // (distinct n_chars values are bounded); the ~all-distinct global
-    // case is q32's sort-based plan.
-    "q62_grouped_describe" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          (sum(col("n_chars")).cast("double") / count(lit(1))).as("mean_chars"),
-          min(col("n_chars")).as("min_chars"),
-          expr("percentile(n_chars, array(0.25D, 0.5D, 0.75D))").as("pct"),
-          max(col("n_chars")).as("max_chars"))
-        .select(col("lang"), col("n_docs"), round(col("mean_chars"), 6).as("mean_chars"),
-                col("min_chars"),
-                round(col("pct").getItem(0), 6).as("q25_chars"),
-                round(col("pct").getItem(1), 6).as("q50_chars"),
-                round(col("pct").getItem(2), 6).as("q75_chars"),
-                col("max_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---- time-range window frame: 7-day moving average ----
-    // The RANGE-frame window surface (q09 is ROWS-framed): per-type
-    // daily event counts smoothed over the trailing 7 days. The order
-    // key is integer days-since-epoch so the frame arithmetic is
-    // identical on both engines; avg is spelled sum/count (exact
-    // integer sums, one double division).
-    "q63_moving_avg" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
-      val w = Window.partitionBy("event_type").orderBy("day_num")
-        .rangeBetween(-6, Window.currentRow)
-      daily
-        .select(col("event_type"), col("day"), col("n"),
-          (sum("n").over(w).cast("double") / count(lit(1)).over(w)).as("avg_7d"))
-        .orderBy("event_type", "day")
-    }),
-
-    // ---- source-mixture sampling (temperature-weighted corpus mix) ----
-    // Each source gets its own deterministic sampling rate (10/30/50/
-    // 70% by source tier) — how a pretraining mix up/down-weights
-    // sources. Same md5-bucket discipline as q45/q50: no RNG, re-runs
-    // and late shards land identically on every engine.
-    "q64_source_mixture" -> ((s, dir) => {
-      val srcNum = regexp_replace(col("source"), "[^0-9]", "").cast("int")
-      val rate = lit(10) + (srcNum % 4) * 20
-      val bucket = conv(substring(md5(col("text")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-      Tables.documents(s, dir)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-             max(rate).as("rate_pct"),
-             count(when(bucket < rate, 1)).as("n_sampled"),
-             coalesce(sum(when(bucket < rate, col("n_chars"))), lit(0L))
-               .as("sampled_chars"))
-        .orderBy("source")
-    }),
-
-    // ---- per-stratum quantile bucketing (ntile) ----
-    // Curriculum/balance tooling: decile buckets of document length
-    // within each language. The tie-break on doc_id makes the order
-    // total, so ntile's bucket boundaries are engine-identical.
-    "q65_length_buckets" -> ((s, dir) => {
-      val w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-      Tables.documents(s, dir)
-        .withColumn("bucket", ntile(10).over(w))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-             min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
-        .orderBy("lang", "bucket")
-    }),
-
-    // ---- cross-source n-gram overlap matrix ----
-    // Mixture-design tooling: exact Jaccard of 3-gram SETS between
-    // every source pair. Scale shape: one gram-keyed shuffle folds
-    // each gram's sources into a BITMASK (bit_or is idempotent — no
-    // distinct needed), then the mask HISTOGRAM — ≤ 2^|sources| rows
-    // at ANY corpus size, domain-bounded like the cents histogram —
-    // crossJoins the broadcast 190-pair table. Never doc×doc, never
-    // gram×gram, and the corpus-proportional stage carries slim
-    // (gram, mask) rows only.
-    "q66_source_overlap" -> ((s, dir) => {
-      // 'srcN' → bit N (SQL-form shiftleft: the Column API variant
-      // only takes a literal shift amount). try_cast, not cast: a
-      // source outside the srcNN convention yields a NULL bit (the
-      // row contributes nothing to any mask — bit_or skips NULLs)
-      // instead of an ANSI cast failure killing the whole query.
-      // Range-guarded to 0..63 — the driver-side bitOf below uses
-      // the SAME range, so a source numbered ≥64 is absent from both
-      // the masks and the pair table (shiftleft would otherwise wrap
-      // mod 64 and alias another source's bit, corrupting its rows).
-      def onebit(name: String): Column =
-        expr(s"""CASE WHEN try_cast(substring($name, 4, 2) as int)
-                 BETWEEN 0 AND 63
-                 THEN shiftleft(1L, try_cast(substring($name, 4, 2) as int))
-                 END""")
-      // gram identity = 64-bit fingerprint, per-doc distinct at
-      // emission (word_text_gram_hashes_distinct): bit_or is
-      // duplicate-insensitive, so the in-scan dedup is free
-      // semantics-wise and the explode feeds the partial bit_or fewer
-      // rows; the per-gram exchange keys on a long, not a gram string
-      // The explicit repartition after the histogram matters: the
-      // histogram exchange is tiny (≤2^|sources| rows), so AQE
-      // coalesces it to ONE partition — but the 190× pair expansion
-      // happens DOWNSTREAM of that read, so without the pin a single
-      // task pays the whole crossJoin+aggregate (~0.9 s at sf1).
-      // A fixed-N repartition is exempt from AQE coalescing, and the
-      // extra exchange it adds carries only histogram rows.
-      // explode_outer + isNotNull (not plain explode): see q49 — the
-      // inferred `size(g3) > 0` filter would re-run the gram byte scan
-      // per doc; the outer null row is dropped before the fold
-      val masks = Tables.documents(s, dir)
-        .select(col("source"), Text.distinctGramHashesOfText(col("text"), 3).as("g3"))
-        .select(onebit("source").as("m"), explode_outer(col("g3")).as("gram"))
-        .filter(col("gram").isNotNull)
-        .groupBy("gram").agg(expr("bit_or(m)").as("mask"))
-        .groupBy("mask").agg(count(lit(1)).as("c"))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      // the 190-row pair table is built DRIVER-SIDE from the memoized
-      // source domain (bounded metadata, the codebook discipline) — a
-      // LocalTableScan instead of a second corpus scan + distinct
-      // exchange + crossJoin stages per execution; bit columns are
-      // precomputed (same substring(4,2) convention as onebit) so the
-      // crossJoin's per-row work is two AND+compare ops
-      val srcNames = Tables.sourceNames(s, dir)
-      // total (never-throwing) mirror of onebit's try_cast AND its
-      // 0..63 range guard: a name that doesn't parse as srcNN — or
-      // parses outside the representable bit range — gets no bit on
-      // EITHER side, so the two stay consistent and a stray source
-      // value can't throw NumberFormatException on the driver.
-      def bitOf(name: String): Option[Long] =
-        scala.util.Try(name.drop(3).take(2).toInt).toOption
-          .filter(n => n >= 0 && n <= 63).map(1L << _)
-      val pairRows = for {
-        a <- srcNames; b <- srcNames if a < b
-        ba <- bitOf(a); bb <- bitOf(b)
-      } yield (a, b, ba, bb)
-      val pairs = {
-        import s.implicits._
-        pairRows.toDF("src_a", "src_b", "ba", "bb")
-      }
-      def bit(b: String): Column = col("mask").bitwiseAND(col(b)) =!= 0
-      masks.crossJoin(broadcast(pairs))
-        .groupBy("src_a", "src_b")
-        .agg(sum(when(bit("ba") && bit("bb"), col("c"))
-                   .otherwise(0L)).as("n_common"),
-             sum(when(bit("ba") || bit("bb"), col("c"))
-                   .otherwise(0L)).as("n_union"))
-        .select(col("src_a"), col("src_b"), col("n_common"), col("n_union"),
-                round(col("n_common").cast("double") / col("n_union"), 6)
-                  .as("jaccard"))
-        .orderBy("src_a", "src_b")
-    }),
-
-    // ---- product-quantization encoding (IVF-PQ compression) ----
-    // 4 subspaces × 16 dims, 16-entry sub-codebooks from the first 16
-    // corpus vectors: each 64-dim vector compresses to 4 small codes.
-    // Pure projection via argmax_dot per slice — no join/window/row
-    // expansion (ops/Similarity.pqEncode).
-    "q67_pq_encode" -> ((s, dir) => {
-      val enc = ops.Similarity.pqEncode(Tables.embeddings(s, dir), m = 4, ksub = 16)
-      enc.select(col("vec_id") +: (0 until 4).flatMap(j =>
-        Seq(col(s"code_$j"), round(col(s"dot_$j"), 6).as(s"dot_$j"))): _*)
-        .orderBy("vec_id")
-    }),
-
-    // ---- semantic dedup (SemDeDup-style, centroid-anchored) ----
-    // Embedding-space dedup at cluster granularity: one cosine per
-    // row against a broadcast k-row representative table — linear at
-    // any corpus size (ops/Similarity.semanticDedup; the pairwise
-    // member of the family is q47's LSH path). τ=0.4 mirrors q47's
-    // threshold against the near-orthogonal synthetic embeddings.
-    "q68_semantic_dedup" -> ((s, dir) => {
-      ops.Similarity.semanticDedup(Tables.embeddings(s, dir), k = 16, tau = 0.4)
-        .select(col("vec_id"), col("rep_id"),
-                round(col("rep_cos"), 6).as("rep_cos"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- per-group OLS trend (closed-form linear regression) ----
-    // slope/intercept of value over day index per event_type, from
-    // the five classic sums — one aggregation pass, map-side
-    // combinable, no window/sort. Cross-engine parity by the repo's
-    // integer discipline: x (day) and y (cents) are exact integers,
-    // the sums accumulate in DECIMAL(38,0) (DuckDB: HUGEINT), and
-    // both engines evaluate the same closed forms
-    // slope = (n·Σxy − Σx·Σy)/(n·Σx² − (Σx)²),
-    // intercept = (Σy·Σx² − Σx·Σxy)/(n·Σx² − (Σx)²)
-    // as double-division of identical exact integers.
-    "q69_grouped_trend" -> ((s, dir) => {
-      val D38 = DecimalType(38, 0)
-      val x = datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).cast("long")
-      val y = round(col("value") * 100, 0).cast("long")
-      val den = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-      Tables.events(s, dir)
-        .select(col("event_type"), x.as("x"), y.as("y"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).cast(D38).as("n"),
-             sum(col("x").cast(D38)).as("sx"),
-             sum(col("y").cast(D38)).as("sy"),
-             sum((col("x") * col("y")).cast(D38)).as("sxy"),
-             sum((col("x") * col("x")).cast(D38)).as("sxx"))
-        .select(col("event_type"),
-          round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-                  / den / 100.0, 6).as("slope"),
-          round((col("sy") * col("sxx") - col("sx") * col("sxy")).cast("double")
-                  / den / 100.0, 6).as("intercept"))
-        .orderBy("event_type")
-    }),
-
-    // ---- exact quartiles, bits-histogram regime (vs q32's sort) ----
-    // The SAME exact quartiles q32 computes for l_extendedprice, via
-    // the third percentile regime: a two-level histogram over
-    // order-preserving IEEE-754 bits (ops/Percentiles.
-    // exactByBitsHistogram) — no range sampling, no corpus sort;
-    // aggregation-only, bucket count bounded by the data's exponent
-    // spread. Same oracle numbers as q32's pct_p columns; the bench
-    // table shows the two regimes side by side on identical work.
-    "q70_quartiles_hist" -> ((s, dir) => {
-      ops.Percentiles.exactByBitsHistogram(
-        Tables.lineitem(s, dir).select(col("l_extendedprice")),
-        "l_extendedprice", Seq(0.25, 0.5, 0.75), prefix = "pp")
-        .select(round(col("pp25"), 6).as("q25_price"),
-                round(col("pp50"), 6).as("q50_price"),
-                round(col("pp75"), 6).as("q75_price"))
-    }),
-
-    // ---- Z-order (Morton) spatial clustering key ----
-    // The layout trick behind spatial pruning at 100 TB: interleave
-    // the lat/lon grid indices (native `interleave_bits`) so sorting/
-    // bucketing by the z-value makes 2-D-close cells file-contiguous
-    // — a lat/lon box then prunes most z-ranges (the scale path for
-    // the reference's nearby-cache lookup, P7/O4). The carrier
-    // computes z per event cell, its coarse bucket (z >> 6), and
-    // per-bucket extents — the stats a writer would use to lay files
-    // out; the z math itself is the oracle-checked part.
-    "q71_zorder_cells" -> ((s, dir) => {
-      val lat = lit(10.0) + (col("value") % lit(45.0))
-      val lon = lit(-85.0) + (col("value") % lit(15.0))
-      Tables.events(s, dir)
-        .select(col("event_id"),
-          call_function("interleave_bits",
-            Grid.latIdxCol(lat), Grid.lonIdxCol(lon)).as("z"))
-        .groupBy(shiftright(col("z"), 6).as("z_bucket"))
-        .agg(count(lit(1)).as("n_cells"),
-             min("z").as("z_min"), max("z").as("z_max"),
-             min("event_id").as("first_event"))
-        .orderBy("z_bucket")
-    }),
-
-    // ---- PII detection + masking (the pre-training scrub stage) ----
-    // Deterministic doc_id-derived emails/phones/IPs are appended to
-    // the synthetic text (both engines construct the identical string
-    // — the q38 enrichment discipline), then the native single-pass
-    // `pii_scrub` masks and counts all three families at once (the
-    // composed regexp built-ins it replaces paid six regex passes and
-    // five intermediate strings per row). Pure per-row projection:
-    // zero shuffles, and the patterns stay in the regex subset where
-    // Java and RE2 agree.
-    "q72_pii_scrub" -> ((s, dir) => {
-      val enriched = concat(
-        col("text"),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(" reach u"), col("doc_id").cast("string"), lit("@mail"),
-                 (col("doc_id") % 5).cast("string"), lit(".example.com")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0,
-          concat(lit(" call +1-555-"),
-                 lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 13 === 0,
-          concat(lit(" from 10."), (col("doc_id") % 256).cast("string"),
-                 lit(".0."), ((col("doc_id") * 7) % 256).cast("string")))
-          .otherwise(lit("")))
-      // the scrub struct stays behind an alias across two selects
-      // (pqEncode discipline) so CollapseProject cannot re-run the
-      // scan once per consumed field
-      Tables.documents(s, dir)
-        .select(col("doc_id"), ops.Pii.scrub(enriched).as("p"))
-        .select(col("doc_id"),
-          col("p.n_emails").as("n_emails"),
-          col("p.n_phones").as("n_phones"),
-          col("p.n_ips").as("n_ips"),
-          col("p.clean_text").as("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- paragraph(chunk)-level dedup (boilerplate removal) ----
-    // Dolma-style sub-document dedup: an 8-word per-source header is
-    // prepended (identically in both engines), so chunk 0 is shared
-    // boilerplate across each source's documents; ops/ChunkDedup
-    // keeps the corpus-wide first occurrence of every distinct chunk
-    // and reassembles survivors in document order. Shuffle keys are
-    // chunk texts (high-cardinality — the window parallelizes), then
-    // one doc_id regroup; never doc×doc.
-    "q73_chunk_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"),
-        concat(lit("std header boilerplate for source "), col("source"),
-               lit(" v1 end "), col("text")).as("text"))
-      ops.ChunkDedup.dedup(docs, "text", "doc_id", w = 8)
-        .orderBy("doc_id")
-    }),
-
-    // ---- incremental dedup: bloom prefilter + exact confirm ----
-    // The cross-batch form of q21: corpus = doc_id < 400, batch =
-    // doc_id >= 400 with every third document carrying the text of
-    // corpus doc (doc_id − 400) — deterministic overlap constructed
-    // identically by both engines. The native `bloom_agg` blob prunes
-    // the batch before the exact confirm join (ops/DedupStage);
-    // pruning never changes the answer, so the oracle is the plain
-    // NOT IN.
-    "q74_incremental_dedup" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val corpus = d.filter(col("doc_id") < 400).select("doc_id", "text")
-      val donors = d.select((col("doc_id") + 400).as("doc_id"),
-                            col("text").as("donor_text"))
-      val batch = d.filter(col("doc_id") >= 400)
-        .join(donors, Seq("doc_id"))
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0, col("donor_text"))
-            .otherwise(col("text")).as("text"))
-      ops.DedupStage.newDocs(corpus, batch).orderBy("doc_id")
-    }),
-
-    // ---- IVF-PQ probe-time ANN search (ADC) ----
-    // The read path the q42/q67 build steps exist for: prune to the
-    // probe's nprobe=4 coarse clusters, score members by asymmetric
-    // distance (m=4 LUT lookups per row — codes, not vectors), top-20
-    // via TakeOrderedAndProject. Scan → projections → filter → top-k;
-    // no join, no window, no shuffle (ops/Similarity.ivfPqTopK).
-    "q75_ivfpq_search" -> ((s, dir) => {
-      ops.Similarity.ivfPqTopK(Tables.embeddings(s, dir), probeId = 123,
-          coarseK = 16, m = 4, ksub = 16, nprobe = 4, k = 20)
-        .select(col("vec_id"), col("centroid"),
-                round(col("adc"), 6).as("adc"))
-        .orderBy(desc("adc"), col("vec_id"))
-    }),
-
-    // ---- URL/domain analysis + per-domain caps ----
-    // The domain-mixture control every crawl pipeline runs: extract
-    // host (built-in parse_url), reduce to the registered domain
-    // (anchored 3-label regexp — hosts with fewer labels give an
-    // empty domain, fine for this corpus's uniform 4-label hosts; a
-    // general deployment consults a public-suffix list), then
-    // per-domain doc counts + a
-    // per-domain cap — the cap reuses the bounded_topk native
-    // aggregate (q53's operator), so stage-1 memory is 2 rows per
-    // domain per map task and no window sort exists. The 30-row
-    // domain-count table broadcasts back onto the capped rows.
-    "q76_domain_caps" -> ((s, dir) => {
-      val url = concat(lit("https://sub"), (col("doc_id") % 7).cast("string"),
-        lit(".domain"), (col("doc_id") % 30).cast("string"),
-        lit(".example.org/p/"), col("doc_id").cast("string"))
-      val hosted = Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), url.as("url"))
-        .select(col("doc_id"), col("n_chars"),
-          regexp_extract(expr("parse_url(url, 'HOST')"),
-            "([a-z0-9-]+\\.[a-z0-9-]+\\.[a-z]+)$", 1).as("domain"))
-      val counts = hosted.groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"))
-      ops.TopK.perGroup(hosted, Seq("domain"), "n_chars", "doc_id", 2)
-        .join(broadcast(counts), Seq("domain"))
-        .select(col("domain"), col("n_docs"), col("rk"),
-                col("doc_id"), col("n_chars"))
-        .orderBy("domain", "rk")
-    }),
-
-    // ---- Unicode text cleanup (NFC + control strip + collapse) ----
-    // Deterministic dirt is appended (alternating composed é /
-    // decomposed e+U+0301 — both engines build the identical bytes —
-    // plus tab, BEL, double spaces, trailing space); Text.cleanup
-    // NFC-composes (native nfc_normalize — Spark has no built-in;
-    // DuckDB's nfc_normalize is the oracle), strips controls,
-    // collapses runs, trims. Pure projection, zero shuffles.
-    "q77_text_cleanup" -> ((s, dir) => {
-      val dirty = concat(col("text"), lit(" caf"),
-        when(col("doc_id") % 2 === 0, lit("e\u0301")) // decomposed e+combining acute
-          .otherwise(lit("\u00e9")),                  // precomposed \u00e9
-        lit("\tctrl\u0007bell  done "))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), ops.Text.cleanup(dirty).as("clean_text"))
-        .select(col("doc_id"), col("clean_text"),
-                length(col("clean_text")).as("n_cp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- jsonl corpus round-trip (the training-corpus interchange) ----
-    // Spark lands the documents as gzip jsonl shards, reads them back
-    // with an explicit schema, and summarizes; the oracle reads the
-    // SAME shards with DuckDB's independent JSON parser (the q59
-    // landed-artifact discipline), so the green hash proves the
-    // emitted format cross-parses — escaping and numerics included.
-    // md5-distinct and length sums pin text payload fidelity.
-    "q78_jsonl_roundtrip" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-      sources.CorpusJsonl.roundTrip(docs, dir)
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"),
-             sum(col("n_chars")).as("sum_chars"),
-             sum(length(col("text")).cast("long")).as("sum_text_len"),
-             countDistinct(md5(col("text"))).as("n_distinct_text"),
-             min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-        .orderBy("lang", "source")
-    }),
-
-    // ---- batch IVF-PQ search (the serving shape of q75) ----
-    // Q probes against one corpus pass: probe-independent work
-    // (coarse assign + PQ codes) computed once, per-probe LUTs ride a
-    // broadcast (probe_id, centroid, lut) spec table, per-probe
-    // top-k via the bounded_topk aggregate — no corpus re-scan per
-    // probe (PlanSpec pins one parquet scan in the whole plan).
-    "q79_ivfpq_batch" -> ((s, dir) => {
-      ops.Similarity.ivfPqSearch(Tables.embeddings(s, dir),
-          probeIds = Seq(123L, 77L, 401L),
-          coarseK = 16, m = 4, ksub = 16, nprobe = 4, k = 10)
-        .select(col("probe_id"), col("vec_id"), col("centroid"),
-                round(col("adc"), 6).as("adc"), col("rk"))
-        .orderBy("probe_id", "rk")
-    }),
-
-    // ---- REAL audio decode (multimodal, javax.sound) ----
-    // WAV containers are built from each doc's bytes (16-bit PCM,
-    // 8 kHz mono — the producer shape a real ingest lands), then
-    // decoded through the JDK's actual RIFF parser inside
-    // mapPartitions; features = frame count, duration, and a signed
-    // 16-bit LE sample-sum checksum over the DECODED payload. The
-    // oracle recomputes all three independently from the source text
-    // bytes, so a green hash proves the container round-trip is
-    // byte-exact — the audio analog of q38's pixel-exact image check.
-    "q80_audio_decode" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Tables.documents(s, dir)
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-      val media = docs.map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val pcm = java.util.Arrays.copyOf(bytes, bytes.length / 2 * 2)
-        ops.Multimodal.Media(id, "audio", ops.Multimodal.AudioCodec.wavBytes(pcm, 8000))
-      }
-      ops.Multimodal.audioFeatures(media).toDF()
-        .select(col("media_id").as("doc_id"), col("sample_rate"), col("channels"),
-                col("n_frames"), round(col("duration_ms"), 6).as("duration_ms"),
-                col("sum_samples"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- PERSISTED IVF-PQ index: train → land → search from codes ----
-    // The production flow q75/q79 point at: the index lands as parquet
-    // partitioned by coarse centroid, and the search scan reads ONLY
-    // the probed centroids' partitions (partition pruning) and ONLY
-    // the m int codes — never a raw vector (PlanSpec pins both). The
-    // oracle reads the SAME landed parquet (q59/q78 landed-artifact
-    // discipline) and recomputes the LUT scores independently.
-    "q81_ivfpq_index" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idxDir = ops.IvfPqIndex.dirFor(dir)
-      // train once, share the codebooks with the search (r22): the
-      // land+search flow paid the 16-row codebook collect TWICE per
-      // execution — the search now reuses the tables the training
-      // just derived (one fewer driver action; values unchanged, the
-      // rows are the same by construction)
-      val cb = ops.IvfPqIndex.trainCodebooks(emb, coarseK = 16, ksub = 16)
-      ops.IvfPqIndex.landEncoded(emb, idxDir, m = 4, cb)
-      ops.IvfPqIndex.search(s, idxDir, emb, probeIds = Seq(123L, 77L, 401L),
-          coarseK = 16, m = 4, ksub = 16, nprobe = 4, k = 10,
-          codebooksOpt = Some(cb))
-        .select(col("probe_id"), col("vec_id"), col("centroid"),
-                round(col("adc"), 6).as("adc"), col("rk"))
-        .orderBy("probe_id", "rk")
-    }),
-
-    // ---- cross-batch NEAR-dup filter (incremental ingest shape) ----
-    // q74's MinHash/LSH twin (ops/NearDupIncremental): the 5% slice
-    // doc_id % 20 == 0 plays the already-accepted corpus, the rest is
-    // the incoming batch; a batch doc is a near-dup when any of its
-    // LSH band buckets holds a corpus doc (collision ⇒ est ≥ 0.5 by
-    // banding). Scale shape: the corpus side reduces to a DISTINCT
-    // (band, x, y) bucket table — slim triples, one semi-join, doc
-    // pairs never materialize (one hit per colliding batch doc, not
-    // one per corpus bucket-mate). The streaming face is
-    // EventStreams.ingestNearDup, which lands signature columns with
-    // the corpus so this check never re-tokenizes landed text.
-    "q82_neardup_incremental" -> ((s, dir) => {
-      val sigs = minhashSigsCk(s, dir)
-      ops.NearDupIncremental.newDocs(
-          corpusSigs = sigs.filter(col("doc_id") % 20 === 0),
-          batchSigs = sigs.filter(col("doc_id") % 20 =!= 0))
-        .orderBy("doc_id")
-    }),
-
-    // ---- composed ingest: exact + near-dup confirm, one pass ----
-    // Batch twin of EventStreams.ingestPipeline's cross-batch stages
-    // (the streaming in-batch keepers have their own specs): corpus =
-    // every 20th doc, landed; batch = the rest with deterministic
-    // overlap constructed identically in both engines — doc_id%7==1
-    // docs carry an EXACT copy of their base corpus doc (base =
-    // doc_id − doc_id%20), %7==2 docs a suffix-edited NEAR copy. A
-    // batch doc is new iff it survives BOTH confirms: q74's
-    // bloom-pruned exact NOT-IN and q82's landed-bucket collision.
-    // The flags are computed independently and ANDed, which equals
-    // the pipeline's run-near-only-on-exact-survivors because each
-    // flag depends only on the doc itself and the landed corpus.
-    "q83_ingest_pipeline" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      // only multiples of 20 can be bases (base_id = doc_id − doc_id%20),
-      // so the broadcast side is 1/20th of the corpus, not all of it
-      val base = d.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("base_id"), col("text").as("base_text"))
-      val corpus = d.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-      // localCheckpoint: the constructed batch (self-join + text
-      // rewrite) has TWO consumers below (exact confirm, near sigs) —
-      // the q35 twin-subtree discipline; materialize once.
-      val batch = d.filter(col("doc_id") % 20 =!= 0)
-        .join(base, col("base_id") === col("doc_id") - (col("doc_id") % 20))
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 1, col("base_text"))
-            .when(col("doc_id") % 7 === 2,
-              concat(col("base_text"), lit(" ingest edit marker")))
-            .otherwise(col("text")).as("text"))
-        .localCheckpoint()
-      val exactFlag = ops.DedupStage.newDocs(corpus, batch)
-        .select(col("doc_id"), col("is_new").as("exact_new"))
-      val nearFlag = ops.NearDupIncremental.newDocs(
-          ops.NearDupIncremental.withSigs(corpus),
-          // spread: the checkpointed batch is 1 partition at bench
-          // scale and minhash_sigs is the expensive per-row step of
-          // this chain (guide §2.5; see spreadSmallScan — corpus is
-          // 1/20th the rows, below the win threshold, so only the
-          // batch side opts in)
-          ops.NearDupIncremental.withSigs(spreadSmallScan(batch)))
-        .select(col("doc_id"), col("is_new").as("near_new"))
-      exactFlag.join(nearFlag, Seq("doc_id"))
-        .select(col("doc_id"), (col("exact_new") && col("near_new")).as("is_new"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- REAL subword token counts driving shard packing ----
-    // q46/q51's Σ⌈len/4⌉ estimator replaced by the actual greedy
-    // longest-match tokenizer over the committed BpeVocab (native
-    // bpe_token_count — one byte scan, trie-walk matching, no
-    // per-row allocation), feeding the same q51 PrefixSum
-    // shard-packing so token budgets are exact, not estimated. The
-    // DuckDB oracle re-derives every count from the SAME vocab list
-    // via a recursive CTE — the two engines share the merge table by
-    // construction, not by coincidence.
-    "q84_bpe_shards" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"),
-                call_function("bpe_token_count", col("text")).as("n_tokens"))
-      PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "cum_tokens")
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
-                expr("CAST((cum_tokens - n_tokens) div 2000 AS BIGINT)").as("shard"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- context-window chunking by token budget ----
-    // The step between counting (q84) and packing (q51): documents
-    // longer than the model window are cut into ≤64-token pieces at
-    // WORD granularity (greedy — add whole words until the next would
-    // overflow; an over-budget single word gets its own chunk). The
-    // native bpe_chunks emits the chunk array in the same one-byte
-    // scan that counts tokens; per-chunk counts are re-derived with
-    // bpe_token_count (equal to the sum of the chunk's word counts by
-    // construction — the chunk IS its words space-joined). Map-only
-    // until the final sort; the oracle re-derives chunk boundaries
-    // from the same vocab via a recursive greedy accumulate.
-    "q85_token_chunks" -> ((s, dir) => {
-      // posexplode_OUTER + post-filter, not plain posexplode: the
-      // inner form makes the optimizer infer a `size(bpe_chunks(..))
-      // > 0` pre-filter that re-runs the whole byte scan a second
-      // time per doc (the ChunkDedup/Similarity generator discipline)
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-                posexplode_outer(call_function("bpe_chunks", col("text"), lit(64)))
-                  .as(Seq("chunk_id", "chunk_text")))
-        .filter(col("chunk_text").isNotNull)
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-                col("chunk_text"),
-                call_function("bpe_token_count", col("chunk_text")).as("n_tokens"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // ---- incremental SEMANTIC dedup (embedding space) ----
-    // The q83 construction transplanted to vector space: corpus =
-    // every 20th embedding, landed; batch = the rest, with %7==1 rows
-    // carrying an EXACT copy of their base corpus vector and %7==2 a
-    // one-coordinate perturbation (+0.25 on dim 0 — IEEE-exact in
-    // both engines). A batch doc is a dup iff some corpus doc shares
-    // a hyperplane band bucket AND scores cosine >= 0.4 — unlike the
-    // MinHash twin (q82), a hyperplane collision alone proves
-    // nothing, so every candidate is cosine-confirmed (q47's rule
-    // across the corpus/batch boundary). Candidates come from the
-    // slim (id, band, bucket) equi-join; vectors are fetched only for
-    // distinct candidate pairs.
-    "q86_semantic_incremental" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      // only multiples of 20 can be bases — the broadcast side is
-      // 1/20th of the corpus (the q83 sizing discipline)
-      val base = e.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id").as("base_id"),
-                col("embedding").cast("array<double>").as("base_v"))
-      val corpus = e.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id"), col("embedding"))
-      // localCheckpoint: the constructed batch has three consumers in
-      // newDocs (codes, vectors, final flag join) — materialize once
-      val batch = e.filter(col("vec_id") % 20 =!= 0)
-        .join(base, col("base_id") === col("vec_id") - (col("vec_id") % 20))
-        .select(col("vec_id"),
-          when(col("vec_id") % 7 === 1, col("base_v"))
-            .when(col("vec_id") % 7 === 2,
-              transform(col("base_v"),
-                (x, i) => when(i === 0, x + lit(0.25)).otherwise(x)))
-            .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .localCheckpoint()
-      ops.SemanticIncremental.newDocs(corpus, batch, tau = 0.4,
-          bits = AnnBits, bands = AnnBands)
-        .orderBy("vec_id")
-    }),
-
-    // ---- full three-stage ingest: exact ∧ near ∧ semantic ----
-    // Batch twin of EventStreams.ingestPipeline(semantic = Some(..)):
-    // q83's constructed overlap extended with BOTH text and vector
-    // axes over documents ⋈ embeddings. %7==1 copies the base's text
-    // AND vector (exact catches it); %7==2 edits the text and
-    // perturbs the vector (near catches it); %7==3 is the PARAPHRASE
-    // case — the doc's own text (shares no shingles with anything
-    // landed) but the base's exact embedding: only the semantic
-    // stage drops it, which is the reason the third stage exists.
-    // A doc is new iff it survives all three confirms; the flags are
-    // independent of each other (each depends only on the doc and
-    // the landed corpus), so the AND equals the pipeline's
-    // sequential stages — the q83 argument with one more link.
-    "q87_full_ingest" -> ((s, dir) => {
-      val (corpus, batch) = fullIngestBase(s, dir)
-      val (exactFlag, nearFlag, semFlag) = fullIngestFlags(corpus, batch)
-      exactFlag.join(nearFlag, Seq("doc_id")).join(semFlag, Seq("doc_id"))
-        .select(col("doc_id"),
-          (col("exact_new") && col("near_new") && col("sem_new")).as("is_new"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- KMV distinct-count sketch ----
-    // A MERGEABLE sketch per group: the k smallest DISTINCT
-    // md5-derived 60-bit text hashes (native `kmv_agg`,
-    // ObjectHashAggregate with map-side partials — the exchange
-    // carries at most k longs per (partition, lang), never texts),
-    // plus the standard KMV estimate (k-1)/(v_k / 2^60), exact when a
-    // group holds fewer than k distinct texts. At 100 TB this is the
-    // "distinct documents per slice without rescanning" primitive:
-    // per-shard sketches persist and union by re-trimming. All md5
-    // arithmetic (the q25/q45 engine bridge) — zero RNG, so the
-    // DuckDB oracle re-derives the identical sketch and estimate.
-    "q88_kmv_distinct" -> ((s, dir) => {
-      val k = 64
-      val hv = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("bigint")
-      Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .select(col("lang"), hv.as("hv"))
-        .groupBy("lang")
-        .agg(call_function("kmv_agg", col("hv"), lit(k)).as("mins"))
-        .select(
-          col("lang"),
-          size(col("mins")).as("n_kept"),
-          element_at(col("mins"), size(col("mins"))).as("kth_hash"),
-          round(
-            when(size(col("mins")) < k, size(col("mins")).cast("double"))
-              .otherwise(lit((k - 1).toDouble) /
-                (element_at(col("mins"), k).cast("double") /
-                  lit(1152921504606846976.0))), // 2^60, the hash domain
-            6).as("est_distinct"))
-        .orderBy("lang")
-    }),
-
-    // ---- heavy hitters: Misra-Gries prefilter + exact confirm ----
-    // Frequent tokens (>= 0.5% of the stream) in TWO bounded passes:
-    // pass 1 reduces every partition's token stream to a <=256-entry
-    // MG summary + the total count in ONE aggregation (the exchange
-    // carries summaries, never tokens); pass 2 exact-counts ONLY the
-    // candidate set (an InSet map-side filter, so the groupBy
-    // shuffles <=256 distinct keys). MG guarantees every token above
-    // total/257 survives pass 1, and 0.5% > 1/257 — so the confirmed
-    // output is EXACT (and oracle-checkable as a plain GROUP BY ..
-    // HAVING), while a naive formulation shuffles the full exploded
-    // token stream. The 100 TB shape: frequent domains/tokens with
-    // bounded executor state and a candidate-sized shuffle.
-    "q89_heavy_hitters" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(explode(call_function("word_tokens", col("text"))).as("tok"))
-      val r = toks.agg(
-        call_function("mg_agg", col("tok"), lit(256)).as("cand"),
-        count(lit(1)).as("total")).collect()(0)
-      val total = r.getAs[Long]("total")
-      val cands = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("cand")
-        .map(_.getString(0))
-      toks.filter(col("tok").isInCollection(cands))
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .filter(col("n") * 200 >= lit(total))
-        .orderBy(col("n").desc, col("tok"))
-    }),
-
-    // ---- KMV set operations: distinct overlap WITHOUT a join ----
-    // Two sub-corpora (doc_id%2==0 vs doc_id%3==0, overlapping on
-    // %6==0) are each reduced to a k=64 KMV sketch in one grouped
-    // pass, then `kmv_set_est` derives union/intersection/jaccard
-    // estimates from the two ≤64-long arrays alone — the theta-sketch
-    // answer to "how many distinct documents do A and B share" that
-    // at 100 TB replaces a corpus×corpus distinct join with sketch
-    // arithmetic on the driver. θ discipline: below the smaller
-    // saturated k-th value both sketches are uniform samples; when
-    // neither saturates the outputs are EXACT. Deterministic md5
-    // arithmetic — the oracle re-derives identical values.
-    "q90_kmv_setops" -> ((s, dir) => {
-      val k = 64
-      val hv = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("bigint")
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select(col("doc_id"), hv.as("hv"))
-      val sketches = docs
-        .select(col("hv"),
-          (col("doc_id") % 2 === 0).as("in_a"), (col("doc_id") % 3 === 0).as("in_b"))
-        .agg(
-          call_function("kmv_agg", when(col("in_a"), col("hv")), lit(k)).as("sa"),
-          call_function("kmv_agg", when(col("in_b"), col("hv")), lit(k)).as("sb"))
-      sketches
-        .select(call_function("kmv_set_est",
-          col("sa"), col("sb"), lit(k), lit(60)).as("e"))
-        .select(
-          round(col("e.union_est"), 6).as("union_est"),
-          round(col("e.intersect_est"), 6).as("intersect_est"),
-          round(col("e.jaccard_est"), 6).as("jaccard_est"))
-    }),
-
-    // ---- sketch re-aggregation: per-source sketches → corpus sketch ----
-    // The persistence contract as a gate-checked query: one kmv_agg
-    // sketch per source (the per-shard rows a pipeline would LAND),
-    // then kmv_union_agg over just those ≤k-long arrays — never the
-    // raw hashes again — must equal the direct whole-corpus sketch.
-    // KMV union is lossless by construction, so the oracle can derive
-    // the k smallest GLOBAL distinct hashes directly and the hash
-    // match proves the two-level aggregation is exact, not just close.
-    "q91_kmv_reagg" -> ((s, dir) => {
-      val k = 64
-      val hv = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("bigint")
-      val perSource = Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .select(col("source"), hv.as("hv"))
-        .groupBy("source")
-        .agg(call_function("kmv_agg", col("hv"), lit(k)).as("sketch"))
-      perSource
-        .agg(call_function("kmv_union_agg", col("sketch"), lit(k)).as("mins"))
-        .select(
-          size(col("mins")).as("n_kept"),
-          element_at(col("mins"), lit(1)).as("min_hash"),
-          element_at(col("mins"), size(col("mins"))).as("kth_hash"),
-          round(
-            when(size(col("mins")) < k, size(col("mins")).cast("double"))
-              .otherwise(lit((k - 1).toDouble) /
-                (element_at(col("mins"), k).cast("double") /
-                  lit(1152921504606846976.0))),
-            6).as("est_distinct"))
-    }),
-
-    // ---- exact substring-SPAN dedup (arbitrary-offset repeats) ----
-    // The Lee-et-al ExactSubstr family: q73's chunk grid misses
-    // repeats that sit at different word offsets in different
-    // documents; ops/SpanDedup shingles each document into
-    // OVERLAPPING w=8-word spans at stride s=4 and drops a stride
-    // block only when every span covering it was seen before. The
-    // constructed corpus plants a 23-word licence boiler behind a
-    // 0–4-word pad (doc_id % 5) — offsets differing by the stride
-    // phase, the exact case chunk dedup cannot catch. Shuffle keys
-    // are 60-bit md5 span fingerprints (q88 convention — the oracle
-    // re-derives them bit-for-bit), then one doc_id regroup; span
-    // text never shuffles, never doc×doc.
-    "q92_span_dedup" -> ((s, dir) => {
-      val boiler = "terms of service apply to all content in this corpus " +
-        "redistribution prohibited without prior written consent of the " +
-        "publisher all rights reserved worldwide"
-      // spread: word_spans explodes ~len/s spans per doc with an md5
-      // per span — the heaviest per-row step of the query — and the
-      // one-row-group fixture otherwise fuses it into a 1-task scan
-      // (guide §2.5; no-op when the scan already fills the session)
-      val docs = spreadSmallScan(Tables.documents(s, dir))
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          concat(expr("repeat('pad ', CAST(doc_id % 5 AS INT))"),
-                 lit(boiler), lit(" "), col("text")).as("text"))
-      ops.SpanDedup.dedup(docs, "text", "doc_id", w = 8, s = 4)
-        .orderBy("doc_id")
-    }),
-
-    // ---- n-gram LM perplexity quality scoring (CCNet-style) ----
-    // Per-language Laplace bigram LM trained on the doc_id%10==0
-    // reference slice, every doc scored in EXACT fixed-point
-    // micro-nats (ops/NgramLm — the integer-cents discipline applied
-    // to logs; lp(k)=⌊ln(k)·1e6+0.5⌋ verified bit-identical JVM vs
-    // DuckDB over the whole count domain). One union-keyed LM join
-    // (kinds 0/1 = prev-unigram/bigram), grams as 8-byte XXH64
-    // fingerprints (q49 convention), per-doc counts collapse before
-    // any exchange.
-    // Carrier hashes integer columns only: the library also emits the
-    // human-facing rounded-double xent_per_token, but round-half ties
-    // are engine-specific, so the cross-engine gate rides
-    // xent_micronats_per_pos (exact integer division).
-    // scoreRows (the map-fold arm, r18): doc_id is unique in
-    // `documents`, the contract under which it is ≡ score()
-    // (NgramLmSpec A/B pin + this carrier's unchanged oracle hash).
-    "q93_lm_perplexity" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      ops.NgramLm.scoreRows(docs,
-          ops.NgramLm.train(docs.filter(col("doc_id") % 10 === 0)))
-        .drop("xent_per_token")
-        .orderBy("doc_id")
-    }),
-
-    // ---- DSIR importance resampling (hashed-ngram weights) ----
-    // Target = src0 docs, source = the rest; the learned state is two
-    // B-bucket histograms (B=4096 — bounded by the CONSTANT, not the
-    // data, which is what licenses the collect), scoring is map-only
-    // via a folded delta-array literal (ops/Dsir). Exact fixed-point
-    // micro-nat log-weights; selected ⇔ w > 1.
-    "q94_dsir_weights" -> ((s, dir) =>
-      ops.Dsir.importanceWeights(
-          Tables.documents(s, dir), col("source") === "src0")
-        .orderBy("doc_id")),
-
-    // ---- deterministic epoch shuffle + shard packing ----
-    // The per-epoch "global shuffle": permutation position = 60-bit
-    // md5 of (epoch salt, doc_id) — RNG-free, engine-stable — and
-    // q51's greedy token packing applied in PERMUTED order via the
-    // composite-key PrefixSum (range exchange + broadcast offsets,
-    // never a single-partition window).
-    "q95_epoch_shuffle" -> ((s, dir) =>
-      ops.EpochShuffle.shuffleAndPack(
-          Tables.documents(s, dir), epoch = 7, tokensPerShard = 2000L)
-        .orderBy("doc_id")),
-
-    // ---- mergeable quantile sketch (bottom-k sampling) ----
-    // Per-source n_chars quantiles from deterministic bottom-k value
-    // samples (ops/QuantileSketch): built per (source, doc_id%4
-    // SHARD), then MERGED per source — while the oracle computes the
-    // global bottom-k sample directly, so the green hash IS the
-    // mergeability proof (bottom-k of bottom-k's ≡ global bottom-k;
-    // the q56 equivalence trick). Estimates are exact below k=32 and
-    // integer-exact always (index rule, no interpolation).
-    "q96_quantile_sketch" -> ((s, dir) => {
-      val shards = ops.QuantileSketch.build(
-        Tables.documents(s, dir)
-          .withColumn("shard", col("doc_id") % 4),
-        Seq("source", "shard"), "doc_id", "n_chars", k = 32)
-      val merged = ops.QuantileSketch.merge(shards, Seq("source"), k = 32)
-      merged.select(col("source"), col("n_rows").as("n_docs"),
-          size(col("sketch")).cast("bigint").as("n_sample"),
-          ops.QuantileSketch.quantile(col("sketch"), 0.5).as("p50_est"),
-          ops.QuantileSketch.quantile(col("sketch"), 0.9).as("p90_est"))
-        .orderBy("source")
-    }),
-
-    // ---- landed benchmark decontamination (persisted-artifact q49) ----
-    // The benchmark gram set is FIXED while the corpus streams, so it
-    // is landed ONCE (distinct grams under TWO keys — the md5 bridge
-    // for the oracle, xxhash64 for the engine's fused q49 native — plus
-    // a Bloom sidecar; ops/Decontaminate) and every corpus pass probes
-    // the artifact; the oracle re-reads the very files the engine
-    // landed (the q81 discipline). Benchmark slice = doc_id%20==0
-    // (q49's), corpus = the rest. Engine and oracle count hits through
-    // DIFFERENT hash families, so counts agree absent a 64-bit
-    // collision in either — the same accepted q49/q93 tradeoff.
-    "q97_decontaminate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val benchDir = ops.Decontaminate.dirFor(dir)
-      ops.Decontaminate.landBenchmark(d.filter(col("doc_id") % 20 === 0), benchDir)
-      ops.Decontaminate.probe(d.filter(col("doc_id") % 20 =!= 0), benchDir)
-        .orderBy("doc_id")
-    }),
-
-    // ---- landed epoch-shard manifests (persisted q95) ----
-    // The epoch shuffle's assignments, LANDED as servable
-    // epoch=N/shard=K manifests and read back: the carrier's output is
-    // derived entirely from the landed files, while the oracle
-    // re-derives both epochs' permutations from the documents table
-    // from scratch — a green hash proves the round trip preserved
-    // every assignment (the q81 landed-artifact proof shape). Two
-    // epochs land so the manifest layout, not one permutation, is
-    // what is exercised.
-    "q98_epoch_manifests" -> ((s, dir) => {
-      val mDir = ops.EpochShuffle.dirFor(dir)
-      ops.EpochShuffle.landManifests(
-        Tables.documents(s, dir), mDir, epochs = Seq(7, 8), tokensPerShard = 2000L)
-      ops.EpochShuffle.manifestSummary(s, mDir)
-    }),
-
-    // ---- ANN: the occupancyBits PRODUCTION sizing policy, oracled ----
-    // q36/q55 pin fixed (bits, bands) knobs; this carrier runs the
-    // policy a production ingest actually uses — bits grown with the
-    // corpus so expected bucket occupancy stays ~8 and candidate pairs
-    // stay LINEAR in n (BASELINE.md, "The `occupancyBits` production
-    // knob, measured end-to-end": ×17–20 pairs per ×10 corpus vs ×100
-    // under fixed bits). One count job sizes the code; the oracle
-    // recomputes the identical width from COUNT(*) in SQL, so the
-    // policy arithmetic AND the plane codes at that width are both
-    // value-checked at every scale factor (the chosen width
-    // rides along as a column). Occupancy summary per band on top: the
-    // policy's TARGET (mean occupancy ≈ 8, never a quadratic bucket)
-    // is what the carrier asserts, not just the code bits. The mean is
-    // emitted in FIXED-POINT MICRO-UNITS as BIGINT — round-half-up via
-    // exact integer arithmetic, (2e6·rows + buckets) div (2·buckets) —
-    // because a round(avg,6) DOUBLE compared bit-for-bit across engines
-    // is a half-way-boundary hash hazard (Spark rounds BigDecimal
-    // HALF_UP on the shortest-decimal repr, DuckDB float-multiplies
-    // then std::round), the same integer-only-output-columns lesson
-    // the suite learned in round 15.
-    "q99_occupancy_policy" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val bits = Similarity.occupancyBits(emb.count())
-      Similarity.bandedBuckets(emb, bits = bits, bands = AnnBands)
-        .groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("occupancy"))
-        .groupBy(col("band"))
-        .agg(lit(bits).as("bits"),
-             count(lit(1)).as("n_buckets"),
-             sum(col("occupancy")).as("n_rows"),
-             max(col("occupancy")).as("max_occupancy"))
-        .withColumn("mean_occupancy_micro",
-          expr("CAST((2000000 * n_rows + n_buckets) DIV (2 * n_buckets) AS BIGINT)"))
-        .orderBy("band")
-    }),
-
-    // ---- aggregate-through-join: q56's PRODUCTION plan, oracled ----
-    // The same answer as q56 over the same tables, computed the way a
-    // 100 TB job should (Skew.aggThroughJoin): orders pre-aggregated
-    // by custkey BEFORE the join — 6M facts collapse to one partial
-    // (count, cents-sum) per customer, the join moves one row per key
-    // instead of one per order (~13× less), and key skew never forms
-    // because a hot customer's orders combine in the map-side partial
-    // aggregate. q56 stays the salting≡plain equivalence carrier; this
-    // carrier oracles the plan production code should actually run.
-    // Plan pin (partial Aggregate BELOW the join) in ScaleOpsSpec;
-    // salted/plain/pre-agg A/B in BASELINE.md, Round 20, "q56
-    // production plan A/B".
-    "q100_agg_through_join" -> ((s, dir) => {
-      val large = Tables.orders(s, dir)
-        .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-      val small = Tables.customer(s, dir)
-        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      ops.Skew.aggThroughJoin(large, small, "custkey",
-          partialAggs = Seq(count(lit(1)).as("pn"),
-                            sum(cents(col("o_totalprice"))).as("ps")),
-          groupCols = Seq("c_mktsegment"),
-          finalAggs = Seq(sum(col("pn")).as("n_orders"),
-                          (sum(col("ps")).cast("double") / 100.0).as("revenue")))
-        .orderBy("c_mktsegment")
-    })
-  )
-
-  /** Committed dirty sea_surface fixture exercising every clean-stage
-    * edge: double header, mixed ISO offsets, coerce failures, partial
-    * and total key-var nulls, out-of-range measures, unsorted rows.
-    * Resolved against the working directory — the project root for
-    * `sbt run`/`Test` and `tools/verify.sh` — so the queries and their
-    * DuckDB oracles read the fixture of the checkout they run from. */
-  private def rawFixtureCsv: String =
-    java.nio.file.Paths.get("data/fixtures/sea_surface_raw.csv").toAbsolutePath.toString
-
-  /** q28/q29's input; a missing fixture fails the query naming the path. */
-  private def readRawFixture(s: SparkSession): DataFrame = {
-    val path = rawFixtureCsv
-    require(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path)),
-      s"raw sea_surface fixture not found at $path; run from the project root")
-    s.read.option("header", "true").csv(path)
-  }
-
-  /** The q18 batch sessionize (accepted over `session_window` on the
-    * round-15 A/B — BASELINE.md, Round 15, "q18 sessionize A/B"):
-    * break when the gap to the previous event is >= 30 min (lag),
-    * session id = running break count (cumsum), then one aggregation.
-    * Plan shape: ONE user_id exchange serves both window passes AND
-    * the (user_id, sid)
-    * aggregation (hash-partitioning on a PREFIX of the grouping keys
-    * satisfies ClusteredDistribution, so no re-shuffle), where
-    * `session_window` plans UpdatingSessions/MergingSessions execs —
-    * parity at sf0.1/sf1, but at sf10 those execs spill (8.2 s mins,
-    * 16–36 s reps) while this stays flat at ~6 s. Tie rows (equal ts)
-    * are gap-0 — session assignment is order-independent, so the
-    * result is deterministic. */
-  private def sessionizeLag(s: SparkSession, dir: String): DataFrame = {
-    val byUser = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("ts")
-    val prev = lag(col("ts"), 1).over(byUser)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("ts"))
-      .withColumn("brk",
-        when(prev.isNull ||
-             unix_micros(col("ts")) - unix_micros(prev) >= lit(1800L * 1000000L),
-             1L).otherwise(0L))
-      .withColumn("sid", sum(col("brk")).over(
-        byUser.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(count(lit(1)).as("n_events"),
-           min(col("ts")).as("session_start"),
-           max(col("ts")).as("session_end"))
-      .select(col("user_id"),
-              col("session_start").cast("timestamp_ntz").as("session_start"),
-              col("session_end").cast("timestamp_ntz").as("session_end"),
-              col("n_events"))
-      .orderBy("user_id", "session_start")
-  }
-
-  /** q87's constructed corpus/batch pair (documents ⋈ embeddings with
-    * the %7 text/vector overlap construction). BOTH sides are
-    * localCheckpointed: the batch has three direct consumers per
-    * chain, and the corpus is consumed FOUR times across the chains
-    * (the exact stage's bloom-blob collect + confirm join, the near
-    * stage's signing, the semantic stage's coding) — without the
-    * checkpoint each consumer re-runs the documents ⋈ embeddings
-    * join (BASELINE.md, Round 15, "q87 phase table": the
-    * re-derivation was ~30% of the cell at sf0.1). In the STREAMING
-    * twin this materialize-once role is played by the landing dir
-    * itself. */
-  private def fullIngestBase(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // r21: materialize the doc⨝embedding base ONCE — it feeds THREE
-    // subtrees (base, corpus, batch), and without the checkpoint the
-    // r20 executed plan re-ran the two scans + the join per subtree
-    // (q87 scans=11). One join per execution, re-run from parquet
-    // every execution.
-    val de = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .join(Tables.embeddings(s, dir)
-        .select(col("vec_id").as("doc_id"),
-                col("embedding").cast("array<double>").as("vec")),
-        Seq("doc_id"))
-      .localCheckpoint()
-    val base = de.filter(col("doc_id") % 20 === 0)
-      .select(col("doc_id").as("base_id"), col("text").as("base_text"),
-              col("vec").as("base_v"))
-    val corpus = de.filter(col("doc_id") % 20 === 0).localCheckpoint()
-    val batch = de.filter(col("doc_id") % 20 =!= 0)
-      .join(base, col("base_id") === col("doc_id") - (col("doc_id") % 20))
-      .select(col("doc_id"),
-        when(col("doc_id") % 7 === 1, col("base_text"))
-          .when(col("doc_id") % 7 === 2,
-            concat(col("base_text"), lit(" ingest edit marker")))
-          .otherwise(col("text")).as("text"),
-        when(col("doc_id") % 7 === 1, col("base_v"))
-          .when(col("doc_id") % 7 === 2,
-            transform(col("base_v"),
-              (x, i) => when(i === 0, x + lit(0.25)).otherwise(x)))
-          .when(col("doc_id") % 7 === 3, col("base_v"))
-          .otherwise(col("vec")).as("vec"))
-      .localCheckpoint() // many consumers below — q83/q86 discipline
-    (corpus, batch)
-  }
-
-  /** The three per-stage is_new flag frames of the q87 carrier. */
-  private def fullIngestFlags(corpus: DataFrame, batch: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val exactFlag = ops.DedupStage.newDocs(
-        corpus.select("doc_id", "text"), batch.select("doc_id", "text"))
-      .select(col("doc_id"), col("is_new").as("exact_new"))
-    // NOT spread (unlike q83's near chain): measured three A/B pairs
-    // at sf0.1 — the extra exchange+stage in this already ~34-job
-    // query costs ~0.15 s more than the parallelized sig scan saves
-    // (the three flag chains overlap, so the sig task is off the
-    // critical path here); see OPTIMIZATION_r21.md.
-    val nearFlag = ops.NearDupIncremental.newDocs(
-        ops.NearDupIncremental.withSigs(corpus.select("doc_id", "text")),
-        ops.NearDupIncremental.withSigs(batch.select("doc_id", "text")))
-      .select(col("doc_id"), col("is_new").as("near_new"))
-    val semFlag = ops.SemanticIncremental.newDocs(
-        corpus.select(col("doc_id").as("vec_id"), col("vec").as("embedding")),
-        batch.select(col("doc_id").as("vec_id"), col("vec").as("embedding")),
-        tau = 0.4, bits = AnnBits, bands = AnnBands)
-      .select(col("vec_id").as("doc_id"), col("is_new").as("sem_new"))
-    (exactFlag, nearFlag, semFlag)
-  }
-
-  /** Spread a scan whose split count under-fills the session across
-    * the cores before an EXPENSIVE per-row expression (guide §2.5's
-    * unsplittable-input fix: parquet cannot split below a row group,
-    * so a single-row-group file pins everything fused into its scan
-    * stage to ONE task no matter the core count). The repartition is
-    * CONDITIONAL on the planned scan parallelism, not unconditional:
-    * at the 100 TB design point the corpus arrives in thousands of
-    * row groups, splits ≥ cores holds, and this is structurally a
-    * no-op — an unconditional repartition there would shuffle the
-    * full text payload, the exact §8 anti-pattern. Partition count
-    * check is plan-time only (split arithmetic; no job runs).
-    * Correctness: every consumer aggregates with order-independent
-    * functions (min/bit_or/exact sums) and ends in a total ORDER BY,
-    * so row placement cannot change any result; round-robin stays
-    * deterministic under retry via sortBeforeRepartition (default
-    * on). Only worth it when the per-row expression dominates the
-    * exchange cost — minhash_sigs (4 perms × every shingle) gains
-    * 0.38 → 0.19 s at sf0.1, while bpe_token_count / gram-hash
-    * scans LOSE ~40 ms to the added exchange (OPTIMIZATION_r21.md,
-    * "Change 5"), so only the signature frame opts in. */
-  private[graft] def spreadSmallScan(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    // r22 (VERDICT r21 item 6): BYTES bound before the partition-count
-    // probe. The count-only trigger was payload-blind — at mid scale
-    // (say a 100-file corpus on a 512-core cluster) it would round-
-    // robin-shuffle the full text payload, the guide-§8 anti-pattern
-    // this helper documents avoiding. The bound sums the FILE-BACKED
-    // leaves' sizeInBytes (actual file bytes), NOT the top-level plan
-    // estimate: a checkpointed-RDD input reports unknown/defaulted
-    // stats (q83's batch frame read as Long.MaxValue and lost its
-    // measured spread — caught by the r22 fingerprint drift check),
-    // and join-product estimates inflate the same way. Frames with no
-    // file leaves fall through to the partition probe, exactly the
-    // r21 behavior. Parameterised (conf, not a constant) with a local
-    // default that keeps every bench SF firing exactly as before
-    // (documents: 0.6 MB at sf0.1, ~6 MB at sf1); production sets it
-    // per deployment like shuffle.partitions. The file check is
-    // plan-only and SHORT-CIRCUITS the .rdd partition probe below —
-    // which builds a full physical plan — so big scans never pay
-    // that planning either (ADVICE r21).
-    val maxBytes = scala.util.Try(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        df.sparkSession.conf.get("spark.graft.spread.maxBytes", "256m")))
-      .getOrElse(256L * 1024 * 1024)
-    // saturating: non-file relations may report Long.MaxValue, and two
-    // of those must not wrap negative and slip under the veto
-    val fileLeafBytes = df.queryExecution.optimizedPlan.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.sizeInBytes
-    }.foldLeft(0L) { (acc, b) =>
-      if (b >= Long.MaxValue - acc) Long.MaxValue else acc + b
-    }
-    if (fileLeafBytes > maxBytes) df
-    // partition probe: the INITIAL (non-adaptive) split count — plan-
-    // time file-split arithmetic, no job. That is the right quantity
-    // here: the question is how many map tasks the SCAN yields (AQE
-    // only resizes reduce sides, never map-side splits).
-    else if (df.rdd.getNumPartitions * 2 <= cores) df.repartition(cores)
-    else df
-  }
-
-  /** MinHash signature frame shared by q26 and q31: the native
-    * [[graft.functions.MinHashSigs]] expression computes all four
-    * permutations in one pass per row (registered by GraftSession;
-    * the composed transform+array_min form it replaces ran the HOF
-    * lambda interpreted per shingle — 7.5 s vs <1 s at sf0.1). */
-  private[graft] def minhashSigsFrame(s: SparkSession, dir: String): DataFrame =
-    spreadSmallScan(Tables.documents(s, dir))
-      .select(col("doc_id"), expr("minhash_sigs(text)").as("sig"))
-      .select(col("doc_id"),
-        col("sig").getItem(0).as("mh1"), col("sig").getItem(1).as("mh2"),
-        col("sig").getItem(2).as("mh3"), col("sig").getItem(3).as("mh4"))
-
-  /** [[minhashSigsFrame]] MATERIALIZED (localCheckpoint) for consumers
-    * that read the signatures more than once per execution (q31's
-    * banding self-join, q35/q39 via [[bandedPairs]], q60's star-edge
-    * hub join, q82's corpus/batch split). Without it each consumer
-    * subtree re-runs the corpus scan + the minhash byte scan: the two
-    * sides of the banding self-join stop being canonically equal the
-    * moment AQE broadcast-converts one, so exchange reuse never fires
-    * (r20 executed-plan fingerprints: q31 scans=2, q39 scans=3,
-    * reused=0). The checkpointed frame is 5 longs/doc — the slim
-    * "decide on proxies, not payloads" table of guide §8 — and is
-    * recomputed from parquet on EVERY execution (a per-run
-    * materialization inside the timed region, not a cross-run cache).
-    * At 100 TB this is exactly the landed-signature-column discipline
-    * the incremental ingest path already uses
-    * (EventStreams.ingestNearDup). */
-  private[graft] def minhashSigsCk(s: SparkSession, dir: String): DataFrame =
-    minhashSigsFrame(s, dir).localCheckpoint()
-
-  /** LSH banding self-join (2 bands × 2 rows) over a signature frame:
-    * candidate near-dup pairs with estimated Jaccard = fraction of the
-    * 4 signature components agreeing. Shuffle keys are (band, bucket)
-    * — never all-pairs (shared by q31 and q35). */
-  private[graft] def bandedPairs(sigs: DataFrame): DataFrame = {
-    val bands = sigs.select(col("*"),
-      explode(array(
-        struct(lit(1).as("band"), col("mh1").as("x"), col("mh2").as("y")),
-        struct(lit(2).as("band"), col("mh3").as("x"), col("mh4").as("y")))).as("b"))
-      .select(col("doc_id"), col("mh1"), col("mh2"), col("mh3"), col("mh4"),
-              col("b.band").as("band"), col("b.x").as("x"), col("b.y").as("y"))
-    val a = bands.as("a"); val b = bands.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") &&
-        col("a.x") === col("b.x") && col("a.y") === col("b.y") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"),
-        (((col("a.mh1") === col("b.mh1")).cast("int") +
-          (col("a.mh2") === col("b.mh2")).cast("int") +
-          (col("a.mh3") === col("b.mh3")).cast("int") +
-          (col("a.mh4") === col("b.mh4")).cast("int")) / lit(4.0)).as("jaccard_est"))
-      .distinct()
-  }
-
-  /** Per-bucket STAR edges over the same banding collision graph:
-    * `(bucket_min, member)` instead of every in-bucket pair. For any
-    * consumer that only needs CONNECTIVITY (connected-components
-    * dedup, q60) this is exactly equivalent — a bucket's members form
-    * a clique under [[bandedPairs]] and a star under this generator,
-    * and both connect the same set — but the edge count per bucket is
-    * O(members), not O(members²). That is the difference between a
-    * near-dup clustering that survives a pathological mega-dup-group
-    * (boilerplate duplicated millions of times at 100 TB would emit
-    * ~10^12 clique pairs from ONE bucket) and one that OOMs on it.
-    * Note every banded pair carries `jaccard_est >= 0.5` by
-    * construction (a band collision fixes 2 of the 4 signature
-    * components), so q60's `>= 0.5` candidate threshold is already
-    * implied and no per-pair estimate is lost. Consumers that filter
-    * on a HIGHER estimate (q39's 0.75) still need the pairwise form.
-    * Shape: one bucket-keyed aggregate for the hubs, a join back on
-    * the same key (the exchange is shared), and an edge distinct —
-    * every shuffled row is slim (ids + bucket key). */
-  private[graft] def bandedStarEdges(sigs: DataFrame): DataFrame = {
-    val bands = sigs.select(col("doc_id"),
-      explode(array(
-        struct(lit(1).as("band"), col("mh1").as("x"), col("mh2").as("y")),
-        struct(lit(2).as("band"), col("mh3").as("x"), col("mh4").as("y")))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"),
-              col("b.x").as("x"), col("b.y").as("y"))
-    val hubs = bands.groupBy("band", "x", "y").agg(min("doc_id").as("hub"))
-    bands.join(hubs, Seq("band", "x", "y"))
-      .filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("doc1"), col("doc_id").as("doc2"))
-      .distinct()
-  }
-
-
-  // =====================================================================
-  // DuckDB oracles — same semantics, same output column names, same
-  // ORDER BY, same numeric parity tricks.
-  // =====================================================================
   /** Driver contract (no-arg): the q78/q81/q97 landed dirs come from
     * the last roundTrip/land in this JVM. `Verify` instead calls
     * [[oracleSqlFor]] with dirs DERIVED from its own data dir, so a
@@ -2396,2125 +56,8 @@ object SparkEntry {
       ops.Decontaminate.lastDir)
 
   def oracleSqlFor(q78Dir: String, q81Dir: String,
-                   q97Dir: String): Map[String, String] = Map(
-
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  ${S_DSUM("l_quantity")} AS sum_qty,
-         |  ${S_DSUM("l_extendedprice")} AS sum_base_price,
-         |  CAST(SUM(CAST(round(l_extendedprice*100,0) AS BIGINT) * (100 - CAST(round(l_discount*100,0) AS BIGINT))) AS DOUBLE) / 10000.0 AS sum_disc_price,
-         |  CAST(SUM(CAST(round(l_extendedprice*100,0) AS BIGINT) * (100 - CAST(round(l_discount*100,0) AS BIGINT)) * (100 + CAST(round(l_tax*100,0) AS BIGINT))) AS DOUBLE) / 1000000.0 AS sum_charge,
-         |  ${S_DAVG("l_quantity")} AS avg_qty,
-         |  ${S_DAVG("l_extendedprice")} AS avg_price,
-         |  ${S_DAVG("l_discount")} AS avg_disc,
-         |  CAST(COUNT(*) AS BIGINT) AS count_order
-         |FROM lineitem
-         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_quantity < 10.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q03_join_segment" ->
-      s"""SELECT c_mktsegment,
-         |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-         |  ${S_DSUM("o_totalprice")} AS revenue,
-         |  ${S_DAVG("o_totalprice")} AS avg_order
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin,
-
-    "q04_star_join" ->
-      """SELECT r_name, n_name,
-        |  CAST(SUM(CAST(round(l_extendedprice*100,0) AS BIGINT) * (100 - CAST(round(l_discount*100,0) AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue,
-        |  CAST(COUNT(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q05_semi_join" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q06_anti_join" ->
-      """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_customers
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q07_topk_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q08_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-
-    "q09_window_running" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(SUM(CAST(round(l_quantity * 100, 0) AS BIGINT)) OVER (
-        |    PARTITION BY l_orderkey ORDER BY l_linenumber
-        |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0
-        |    AS running_qty
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q10_distinct_agg" ->
-      s"""SELECT o_orderstatus,
-         |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
-         |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-         |  ${S_DSUM("o_totalprice")} AS revenue
-         |FROM orders
-         |GROUP BY o_orderstatus
-         |ORDER BY o_orderstatus""".stripMargin,
-
-    "q11_rollup" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-         |  COALESCE(l_linestatus, 'ALL') AS l_linestatus,
-         |  ${S_DSUM("l_quantity")} AS sum_qty,
-         |  CAST(COUNT(*) AS BIGINT) AS n
-         |FROM lineitem
-         |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q12_intersect" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q13_except" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q14_stats_moments" ->
-      """SELECT n,
-        |  round(s_q / CAST(n AS DOUBLE), 6) AS mean_qty,
-        |  round(sqrt(d_q / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) / 100.0, 6) AS std_qty,
-        |  min_qty, max_qty,
-        |  round(s_p / CAST(n AS DOUBLE), 6) AS mean_price,
-        |  round(sqrt(d_p / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) / 100.0, 6) AS std_price,
-        |  min_price, max_price
-        |FROM (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s_q,
-        |    CAST(COUNT(*) * SUM(q100 * q100) - SUM(q100) * SUM(q100) AS DOUBLE) AS d_q,
-        |    MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s_p,
-        |    CAST(COUNT(*) * SUM(p100 * p100) - SUM(p100) * SUM(p100) AS DOUBLE) AS d_p,
-        |    MIN(l_extendedprice) AS min_price, MAX(l_extendedprice) AS max_price
-        |  FROM (SELECT l_quantity, l_extendedprice,
-        |          CAST(round(l_quantity * 100, 0) AS BIGINT) AS q100,
-        |          CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS p100
-        |        FROM lineitem) raw) t""".stripMargin,
-
-    "q15_null_counts" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(COUNT(*) - COUNT(value) AS BIGINT) AS null_value,
-        |  CAST(COUNT(*) - COUNT(props) AS BIGINT) AS null_props,
-        |  CAST(COUNT(*) - COUNT(user_id) AS BIGINT) AS null_user
-        |FROM events""".stripMargin,
-
-    "q16_tumbling_window" ->
-      s"""SELECT CAST(date_trunc('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS hour,
-         |  event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         |  ${S_DSUM("value")} AS sum_value
-         |FROM events
-         |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q17_sliding_window" ->
-      s"""WITH e AS (
-         |  SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS b, value
-         |  FROM events),
-         |w AS (
-         |  SELECT b AS ws, value FROM e
-         |  UNION ALL
-         |  SELECT b - INTERVAL '30 minutes' AS ws, value FROM e)
-         |SELECT ws, CAST(COUNT(*) AS BIGINT) AS n,
-         |  ${S_DSUM("value")} AS sum_value
-         |FROM w
-         |GROUP BY ws
-         |ORDER BY ws""".stripMargin,
-
-    "q18_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |y AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |              >= INTERVAL '30 minutes'
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM x),
-        |z AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM y)
-        |SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM z
-        |GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q19_json_extract" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(k) AS BIGINT) AS sum_k,
-        |  CAST(MIN(k) AS BIGINT) AS min_k, CAST(MAX(k) AS BIGINT) AS max_k
-        |FROM (SELECT event_type,
-        |        TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |      FROM events) t
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "q20_grid_cells" ->
-      """WITH g AS (
-        |  SELECT event_id, ts,
-        |    least(greatest(10.0 + fmod(value, 45.0), 10.0), 55.0) AS clat,
-        |    least(greatest(-85.0 + fmod(value, 15.0), -85.0), -70.0) AS clon
-        |  FROM events),
-        |i AS (
-        |  SELECT event_id, ts,
-        |    CAST(least(greatest(floor((55.0 - clat) / 0.25 + 0.5), 0.0), 90.0) AS BIGINT) AS lat_idx,
-        |    CAST(least(greatest(floor((clon - (-85.0)) / 0.25 + 0.5), 0.0), 60.0) AS BIGINT) AS lon_idx
-        |  FROM g)
-        |SELECT event_id, lat_idx, lon_idx,
-        |  55.0 - CAST(lat_idx AS DOUBLE) * 0.25 AS snap_lat,
-        |  -85.0 + CAST(lon_idx AS DOUBLE) * 0.25 AS snap_lon,
-        |  CAST(least(greatest((year(ts) - 1955) * 12 + month(ts) - 1, 0), 71) AS BIGINT) AS t_idx,
-        |  CAST(((year(ts) - 1955) * 12 + month(ts) - 1) % 72 AS BIGINT) AS m_idx
-        |FROM i
-        |ORDER BY event_id""".stripMargin,
-
-    "q21_dedup_exact" ->
-      """SELECT md5(text) AS text_hash,
-        |  CAST(MIN(doc_id) AS BIGINT) AS keeper,
-        |  CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM documents
-        |GROUP BY md5(text)
-        |ORDER BY text_hash""".stripMargin,
-
-    "q22_token_stats" ->
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(tokens) AS BIGINT) AS sum_tokens,
-        |  CAST(SUM(tokens) AS DOUBLE) / COUNT(*) AS avg_tokens,
-        |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
-        |FROM (SELECT lang, n_chars,
-        |        CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS tokens
-        |      FROM documents) t
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "q23_text_quality" ->
-      """SELECT doc_id, tokens, stop_cnt,
-        |  CAST(stop_cnt AS DOUBLE) / CAST(tokens AS DOUBLE) AS stop_ratio,
-        |  least(1.0, CAST(tokens AS DOUBLE) / 100.0) *
-        |    (1.0 - 0.1 * CAST(flags AS DOUBLE)) AS quality_score
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS tokens,
-        |    CAST(len(list_filter(
-        |      list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0),
-        |      x -> x = 'the')) AS BIGINT) AS stop_cnt,
-        |    (CASE WHEN len(list_filter(
-        |       list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0),
-        |       x -> x = 'the')) = 0 THEN 1 ELSE 0 END
-        |     + CASE WHEN n_chars < 100 THEN 1 ELSE 0 END) AS flags
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q24_langid" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(toks, x -> x = 'the')) AS BIGINT) AS c_en,
-        |    CAST(len(list_filter(toks, x -> x = 'table')) AS BIGINT) AS c_de,
-        |    CAST(len(list_filter(toks, x -> x = 'filter')) AS BIGINT) AS c_fr,
-        |    CAST(len(list_filter(toks, x -> x = 'data')) AS BIGINT) AS c_es,
-        |    CAST(len(list_filter(toks, x -> x = 'query')) AS BIGINT) AS c_zh
-        |  FROM t),
-        |p AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN c_en >= c_de AND c_en >= c_fr AND c_en >= c_es AND c_en >= c_zh THEN 'en'
-        |         WHEN c_de >= c_fr AND c_de >= c_es AND c_de >= c_zh THEN 'de'
-        |         WHEN c_fr >= c_es AND c_fr >= c_zh THEN 'fr'
-        |         WHEN c_es >= c_zh THEN 'es'
-        |         ELSE 'zh' END AS pred_lang
-        |  FROM c)
-        |SELECT doc_id, pred_lang,
-        |  CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS is_match
-        |FROM p
-        |ORDER BY doc_id""".stripMargin,
-
-    "q25_fingerprint" ->
-      """SELECT doc_id,
-        |  CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS fingerprint
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q26_minhash_sig" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-        |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-        |  FROM documents)
-        |SELECT doc_id,
-        |  list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-        |  list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-        |  list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-        |  list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-        |FROM h
-        |ORDER BY doc_id""".stripMargin,
-
-    "q27_knn_cosine" ->
-      """WITH q AS (
-        |  SELECT qv, sqrt(list_dot_product(qv, qv)) AS qnorm
-        |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |        FROM embeddings WHERE vec_id = 0)),
-        |e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id <> 0)
-        |SELECT vec_id,
-        |  round(list_dot_product(v, qv) /
-        |        (sqrt(list_dot_product(v, v)) * qnorm), 6)
-        |    AS cosine
-        |FROM e, q
-        |ORDER BY cosine DESC, vec_id
-        |LIMIT 20""".stripMargin,
-
-    // The clean-stage SQL mirrors Clean.cleanApiResponse step for step:
-    // units-row strip BEFORE casts, normalize names (DuckDB trims the
-    // ' Latitude ' header itself), TRY_CAST coercions, how='all' dropna
-    // on the key vars, nulls-last time sort.
-    "q28_clean_pipeline" ->
-      s"""WITH typed AS (
-        |  SELECT TRY_CAST(time AS TIMESTAMP) AS time,
-        |    TRY_CAST(depth AS DOUBLE) AS depth,
-        |    TRY_CAST("Latitude" AS DOUBLE) AS latitude,
-        |    TRY_CAST(longitude AS DOUBLE) AS longitude,
-        |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
-        |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
-        |  FROM read_csv('$rawFixtureCsv', header=true, all_varchar=true)
-        |  WHERE time IS NULL OR time NOT IN ('UTC', 'units'))
-        |SELECT * FROM typed
-        |WHERE temperature IS NOT NULL OR salinity IS NOT NULL
-        |ORDER BY time NULLS LAST""".stripMargin,
-
-    "q29_quality_report" ->
-      s"""WITH typed AS (
-        |  SELECT TRY_CAST(time AS TIMESTAMP) AS time,
-        |    TRY_CAST(depth AS DOUBLE) AS depth,
-        |    TRY_CAST("Latitude" AS DOUBLE) AS latitude,
-        |    TRY_CAST(longitude AS DOUBLE) AS longitude,
-        |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
-        |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
-        |  FROM read_csv('$rawFixtureCsv', header=true, all_varchar=true)
-        |  WHERE time IS NULL OR time NOT IN ('UTC', 'units')),
-        |cleaned AS (
-        |  SELECT * FROM typed
-        |  WHERE temperature IS NOT NULL OR salinity IS NOT NULL),
-        |a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    COUNT(time) + COUNT(depth) + COUNT(latitude) + COUNT(longitude)
-        |      + COUNT(temperature) + COUNT(salinity) AS nn,
-        |    MIN(temperature) AS min_t, MAX(temperature) AS max_t,
-        |    CAST(SUM(CAST(temperature AS DECIMAL(18,6))) AS DOUBLE) AS sum_t,
-        |    CAST(COUNT(temperature) AS BIGINT) AS cnt_t,
-        |    MIN(salinity) AS min_s, MAX(salinity) AS max_s,
-        |    CAST(SUM(CAST(salinity AS DECIMAL(18,6))) AS DOUBLE) AS sum_s,
-        |    CAST(COUNT(salinity) AS BIGINT) AS cnt_s
-        |  FROM cleaned),
-        |f AS (
-        |  SELECT *,
-        |    CAST(nn AS DOUBLE) / CAST(n * 6 AS DOUBLE) AS completeness,
-        |    CAST(n < 1 AS INT) +
-        |    CAST(CAST(nn AS DOUBLE) / CAST(n * 6 AS DOUBLE) < 0.5 AS INT) +
-        |    CAST(min_t < -5.0 OR max_t > 35.0 AS INT) +
-        |    CAST(min_s < 0.0 OR max_s > 45.0 AS INT) AS n_issues
-        |  FROM a)
-        |SELECT n,
-        |  round(completeness, 6) AS completeness,
-        |  n_issues,
-        |  round(LEAST(1.0, completeness * (1.0 - n_issues * 0.1)), 6) AS quality_score,
-        |  min_t AS temp_min, max_t AS temp_max,
-        |  round(sum_t / cnt_t, 6) AS temp_mean, cnt_t AS temp_count,
-        |  min_s AS sal_min, max_s AS sal_max,
-        |  round(sum_s / cnt_s, 6) AS sal_mean, cnt_s AS sal_count
-        |FROM f""".stripMargin,
-
-    "q30_cache_nearby" ->
-      """WITH meta AS (
-        |  SELECT event_id,
-        |    10.0 + value % 45.0 AS latitude,
-        |    -85.0 + value % 15.0 AS longitude
-        |  FROM events
-        |  WHERE event_id % 37 = 0)
-        |SELECT event_id, latitude, longitude,
-        |  round(ABS(latitude - 32.0) + ABS(longitude - (-77.5)), 6) AS manhattan,
-        |  round(sqrt(power(latitude - 32.0, 2) + power(longitude - (-77.5), 2)), 6)
-        |    AS distance_degrees
-        |FROM meta
-        |WHERE ABS(latitude - 32.0) < 2.0 AND ABS(longitude - (-77.5)) < 2.0
-        |ORDER BY manhattan, event_id""".stripMargin,
-
-    "q31_neardup_pairs" ->
-      s"""WITH $SqlMinhashPairCtes
-        |SELECT doc1, doc2, jaccard_est FROM pairs
-        |ORDER BY doc1, doc2""".stripMargin,
-
-    "q32_describe" ->
-      """WITH raw AS (
-        |  SELECT l_quantity, l_extendedprice,
-        |    CAST(round(l_quantity * 100, 0) AS BIGINT) AS q100,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS p100
-        |  FROM lineitem),
-        |a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s_q,
-        |    CAST(COUNT(*) * SUM(q100 * q100) - SUM(q100) * SUM(q100) AS DOUBLE) AS d_q,
-        |    MIN(l_quantity) AS min_q, MAX(l_quantity) AS max_q,
-        |    quantile_cont(l_quantity, [0.25, 0.5, 0.75]) AS pct_q,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s_p,
-        |    CAST(COUNT(*) * SUM(p100 * p100) - SUM(p100) * SUM(p100) AS DOUBLE) AS d_p,
-        |    MIN(l_extendedprice) AS min_p, MAX(l_extendedprice) AS max_p,
-        |    quantile_cont(l_extendedprice, [0.25, 0.5, 0.75]) AS pct_p
-        |  FROM raw)
-        |SELECT n,
-        |  round(s_q / CAST(n AS DOUBLE), 6) AS mean_qty,
-        |  round(sqrt(d_q / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) / 100.0, 6) AS std_qty,
-        |  min_q AS min_qty,
-        |  round(pct_q[1], 6) AS q25_qty, round(pct_q[2], 6) AS q50_qty,
-        |  round(pct_q[3], 6) AS q75_qty, max_q AS max_qty,
-        |  round(s_p / CAST(n AS DOUBLE), 6) AS mean_price,
-        |  round(sqrt(d_p / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) / 100.0, 6) AS std_price,
-        |  min_p AS min_price,
-        |  round(pct_p[1], 6) AS q25_price, round(pct_p[2], 6) AS q50_price,
-        |  round(pct_p[3], 6) AS q75_price, max_p AS max_price
-        |FROM a""".stripMargin,
-
-    "q33_token_ops" ->
-      s"""WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  CAST(len(list_distinct(toks)) AS INT) AS n_unique_tokens,
-        |  CAST(CASE WHEN len(toks) < 2 THEN 0 ELSE len(toks) - 1 END AS INT) AS n_bigrams,
-        |  round(CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE CAST(len(list_filter(toks, x -> list_contains($SqlStopwords, x))) AS DOUBLE)
-        |         / CAST(len(toks) AS DOUBLE) END, 6) AS stopword_ratio
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q34_simhash" ->
-      s"""WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    list_transform(toks, x -> CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)) AS hs
-        |  FROM t)
-        |SELECT doc_id, $SqlSimhash AS simhash
-        |FROM h
-        |ORDER BY doc_id""".stripMargin,
-
-    "q35_ngram_jaccard" ->
-      s"""WITH hsh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-        |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-        |  FROM documents),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-        |    list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-        |    list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-        |    list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-        |  FROM hsh),
-        |bands AS (
-        |  SELECT doc_id, mh1, mh2, mh3, mh4, 1 AS band, mh1 AS x, mh2 AS y FROM sigs
-        |  UNION ALL
-        |  SELECT doc_id, mh1, mh2, mh3, mh4, 2 AS band, mh3 AS x, mh4 AS y FROM sigs),
-        |pairs AS (
-        |  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.x = b.x AND a.y = b.y AND a.doc_id < b.doc_id),
-        |t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |t2 AS (
-        |  SELECT doc_id, toks,
-        |    list_transform(toks, x -> CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)) AS hs
-        |  FROM t),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(range(0, len(toks) - 2),
-        |                i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])) END AS g3,
-        |    $SqlSimhash AS sh
-        |  FROM t2)
-        |SELECT p.doc1, p.doc2,
-        |  round(CASE WHEN len(list_distinct(list_concat(x.g3, y.g3))) = 0 THEN 0.0
-        |    ELSE CAST(len(list_intersect(x.g3, y.g3)) AS DOUBLE)
-        |         / CAST(len(list_distinct(list_concat(x.g3, y.g3))) AS DOUBLE) END, 6) AS jaccard3,
-        |  CAST(bit_count(xor(x.sh, y.sh)) AS INT) AS hamming
-        |FROM pairs p
-        |JOIN g x ON p.doc1 = x.doc_id
-        |JOIN g y ON p.doc2 = y.doc_id
-        |ORDER BY doc1, doc2""".stripMargin,
-
-    "q36_ann_buckets" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT vec_id, band, bucket FROM (
-        |$sqlBandedBuckets)
-        |ORDER BY vec_id, band""".stripMargin,
-
-    "q37_ann_sim_join" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |bk AS (
-        |$sqlBandedBuckets),
-        |pairs AS (
-        |  SELECT DISTINCT l.vec_id AS id1, r.vec_id AS id2
-        |  FROM bk l JOIN bk r
-        |    ON l.band = r.band AND l.bucket = r.bucket AND l.vec_id < r.vec_id)
-        |SELECT p.id1, p.id2,
-        |  round(list_dot_product(x.v, y.v) /
-        |        (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6)
-        |    AS cosine
-        |FROM pairs p JOIN v x ON p.id1 = x.vec_id JOIN v y ON p.id2 = y.vec_id
-        |ORDER BY id1, id2""".stripMargin,
-
-    // ASCII PRECONDITION: Spark computes n_bytes/mean_byte over the
-    // UTF-8 payload BYTES while this oracle uses length(text)
-    // (characters) and ascii() (code points) — equivalent only because
-    // the synthetic corpus is pure ASCII (as MinHash.scala documents
-    // for the whole text family). A non-ASCII corpus needs the oracle
-    // rewritten over encode(text) for true byte parity.
-    "q38_multimodal" ->
-      """SELECT CAST(doc_id AS BIGINT) AS media_id,
-        |  CAST((doc_id % 16) + 1 AS INT) AS width,
-        |  CAST((doc_id % 8) + 1 AS INT) AS height,
-        |  CAST(1 AS INT) AS channels,
-        |  CAST(length(text) AS BIGINT) AS n_bytes,
-        |  round(CASE WHEN length(text) = 0 THEN 0.0
-        |    ELSE CAST(list_sum(list_transform(range(length(text)),
-        |           i -> ascii(text[i+1]))) AS DOUBLE) / length(text) END, 6) AS mean_byte
-        |FROM documents
-        |ORDER BY media_id""".stripMargin,
-
-    "q39_neardup_dedup" ->
-      """WITH hsh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-        |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-        |  FROM documents),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-        |    list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-        |    list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-        |    list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-        |  FROM hsh),
-        |bands AS (
-        |  SELECT doc_id, mh1, mh2, mh3, mh4, 1 AS band, mh1 AS x, mh2 AS y FROM sigs
-        |  UNION ALL
-        |  SELECT doc_id, mh1, mh2, mh3, mh4, 2 AS band, mh3 AS x, mh4 AS y FROM sigs),
-        |dups AS (
-        |  SELECT DISTINCT b.doc_id
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.x = b.x AND a.y = b.y AND a.doc_id < b.doc_id
-        |  WHERE (CAST(a.mh1 = b.mh1 AS INT) + CAST(a.mh2 = b.mh2 AS INT) +
-        |         CAST(a.mh3 = b.mh3 AS INT) + CAST(a.mh4 = b.mh4 AS INT)) / 4.0 >= 0.75)
-        |SELECT d.doc_id, d.n_chars
-        |FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM dups)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q40_asof_join" ->
-      """WITH c AS (
-        |  SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'),
-        |p AS (
-        |  SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id, c.ts,
-        |  p.event_id AS purchase_id, p.ts AS purchase_ts,
-        |  round(p.value, 6) AS purchase_value,
-        |  CAST((epoch_us(c.ts) - epoch_us(p.ts)) // 1000000 AS BIGINT) AS gap_s
-        |FROM c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    "q41_range_join" ->
-      """WITH e AS (
-        |  SELECT event_id, ts FROM events WHERE event_type = 'error'),
-        |c AS (
-        |  SELECT event_id, ts FROM events WHERE event_type = 'click')
-        |SELECT e.event_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_nearby,
-        |  MIN(c.event_id) AS first_click,
-        |  MAX(c.event_id) AS last_click
-        |FROM e JOIN c
-        |  ON abs(epoch_us(e.ts) - epoch_us(c.ts)) <= 1800 * 1000000
-        |GROUP BY e.event_id
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q42_ivf_assign" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |c AS (
-        |  SELECT vec_id AS centroid, v AS cv FROM v WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT v.vec_id, c.centroid,
-        |    list_dot_product(v.v, c.cv) AS dot,
-        |    row_number() OVER (PARTITION BY v.vec_id
-        |                       ORDER BY list_dot_product(v.v, c.cv) DESC, c.centroid) AS rn
-        |  FROM v CROSS JOIN c)
-        |SELECT vec_id, centroid, round(dot, 6) AS dot
-        |FROM scored WHERE rn = 1
-        |ORDER BY vec_id""".stripMargin,
-
-    // q47: candidates at the PRODUCTION occupancyBits width — the nn/k
-    // CTEs recompute the engine's bits from COUNT(*) (q99 construction)
-    "q47_embed_dedup" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |$sqlDynamicBandedBuckets,
-        |pairs AS (
-        |  SELECT DISTINCT l.vec_id AS id1, r.vec_id AS id2
-        |  FROM bk l JOIN bk r
-        |    ON l.band = r.band AND l.bucket = r.bucket AND l.vec_id < r.vec_id),
-        |dups AS (
-        |  SELECT DISTINCT p.id2 AS vec_id
-        |  FROM pairs p JOIN v x ON p.id1 = x.vec_id JOIN v y ON p.id2 = y.vec_id
-        |  WHERE list_dot_product(x.v, y.v) /
-        |        (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.4)
-        |SELECT e.vec_id
-        |FROM embeddings e
-        |WHERE e.vec_id NOT IN (SELECT vec_id FROM dups)
-        |ORDER BY e.vec_id""".stripMargin,
-
-    "q43_cube" ->
-      s"""SELECT l_returnflag, l_linestatus,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  ${S_DSUM("l_quantity")} AS sum_qty
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST""".stripMargin,
-
-    "q44_pivot" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |  CAST(COUNT(*) FILTER (event_type = 'click') AS BIGINT) AS click,
-        |  CAST(COUNT(*) FILTER (event_type = 'error') AS BIGINT) AS error,
-        |  CAST(COUNT(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase,
-        |  CAST(COUNT(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
-        |  CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT) AS view
-        |FROM events
-        |GROUP BY 1
-        |ORDER BY day""".stripMargin,
-
-    "q48_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, toks,
-        |    CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(range(0, len(toks) - 1),
-        |                i -> concat_ws(' ', toks[i+1], toks[i+2])) END AS bg
-        |  FROM t)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  round(CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
-        |  END, 6) AS dup_word_ratio,
-        |  round(CASE WHEN len(bg) = 0 THEN 0.0
-        |    ELSE CAST(list_max(list_transform(list_distinct(bg),
-        |           g -> len(list_filter(bg, x -> x = g)))) AS DOUBLE)
-        |         / CAST(len(bg) AS DOUBLE)
-        |  END, 6) AS top_bigram_frac
-        |FROM b
-        |ORDER BY doc_id""".stripMargin,
-
-    "q49_contamination" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(range(0, len(toks) - 2),
-        |                i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])) END AS g3
-        |  FROM t),
-        |bench AS (
-        |  SELECT DISTINCT gram FROM (
-        |    SELECT unnest(g3) AS gram FROM g WHERE doc_id % 20 = 0)),
-        |cg AS (
-        |  SELECT DISTINCT doc_id, gram FROM (
-        |    SELECT doc_id, unnest(g3) AS gram FROM g WHERE doc_id % 20 <> 0)),
-        |hits AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared
-        |  FROM cg WHERE gram IN (SELECT gram FROM bench)
-        |  GROUP BY doc_id)
-        |SELECT g.doc_id, COALESCE(h.n_shared, 0) AS n_shared
-        |FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id
-        |WHERE g.doc_id % 20 <> 0
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "q50_stratified_sample" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 10 AS bucket
-        |  FROM documents)
-        |SELECT lang,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COUNT(*) FILTER (bucket = 0) AS BIGINT) AS n_sampled,
-        |  MIN(doc_id) FILTER (bucket = 0) AS first_sampled,
-        |  MAX(doc_id) FILTER (bucket = 0) AS last_sampled
-        |FROM s
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "q54_transitions" ->
-      """WITH t AS (
-        |  SELECT event_type,
-        |    lead(event_type, 1) OVER (PARTITION BY user_id
-        |                              ORDER BY ts, event_id) AS next_type
-        |  FROM events)
-        |SELECT event_type AS from_type, next_type AS to_type,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM t WHERE next_type IS NOT NULL
-        |GROUP BY 1, 2
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    "q53_top_per_lang" ->
-      """SELECT lang, doc_id, n_chars, rk FROM (
-        |  SELECT lang, doc_id, n_chars,
-        |    CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY n_chars DESC, doc_id) AS INT) AS rk
-        |  FROM documents)
-        |WHERE rk <= 3
-        |ORDER BY lang, rk""".stripMargin,
-
-    "q52_kmeans_step" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |c AS (SELECT vec_id AS centroid, v AS cv FROM v WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT v.vec_id, c.centroid,
-        |    row_number() OVER (PARTITION BY v.vec_id
-        |                       ORDER BY list_dot_product(v.v, c.cv) DESC, c.centroid) AS rn
-        |  FROM v CROSS JOIN c),
-        |a AS (SELECT vec_id, centroid FROM scored WHERE rn = 1),
-        |x AS (
-        |  SELECT a.centroid, CAST(r.i AS INT) AS dim, v.v[r.i + 1] AS val
-        |  FROM a JOIN v USING (vec_id) CROSS JOIN range(64) AS r(i))
-        |SELECT centroid, dim,
-        |  round(CAST(SUM(CAST(val AS DECIMAL(38,30))) AS DOUBLE) / COUNT(*), 6) AS mean_val
-        |FROM x
-        |GROUP BY centroid, dim
-        |ORDER BY centroid, dim""".stripMargin,
-
-    "q51_token_shards" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2000 AS BIGINT) AS shard
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q45_hash_split" ->
-      """WITH s AS (
-        |  SELECT doc_id, n_chars,
-        |    CASE WHEN CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
-        |         WHEN CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 < 90 THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents)
-        |SELECT split,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-        |FROM s
-        |GROUP BY split
-        |ORDER BY split""".stripMargin,
-
-    "q46_token_estimate" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(COALESCE(list_sum(list_transform(toks,
-        |    x -> CAST(ceil(len(x) / 4.0) AS BIGINT))), 0) AS BIGINT) AS tokens_est,
-        |  CAST(len(toks) AS INT) AS words
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-
-    // probe side: the exact bucket plus every single-bit flip — the
-    // same 1 + bits expansion multiProbePairs builds with bitwiseXOR
-    "q55_multiprobe_pairs" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |bk AS (
-        |$sqlBandedBuckets),
-        |probes AS (
-        |  SELECT bk.vec_id AS id1, bk.band, xor(bk.bucket, f.flip) AS bucket
-        |  FROM bk CROSS JOIN (
-        |    SELECT unnest(${(0 +: (0 until AnnBits).map(1 << _)).mkString("[", ", ", "]")}) AS flip) f)
-        |SELECT DISTINCT p.id1, r.vec_id AS id2
-        |FROM probes p JOIN bk r
-        |  ON p.band = r.band AND p.bucket = r.bucket AND p.id1 < r.vec_id
-        |ORDER BY id1, id2""".stripMargin,
-
-    // the PLAIN join: identical output proves the salted plan is a
-    // pure distribution change
-    "q56_salted_join" ->
-      s"""SELECT c_mktsegment,
-        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  ${S_DSUM("o_totalprice")} AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q57_percentile_hist" ->
-      """WITH q AS (
-        |  SELECT quantile_cont(l_extendedprice, [0.25, 0.5, 0.75]) AS p FROM lineitem)
-        |SELECT round(p[1], 6) AS p25, round(p[2], 6) AS p50, round(p[3], 6) AS p75
-        |FROM q""".stripMargin,
-
-    "q58_interval_join" ->
-      """WITH c AS (
-        |  SELECT user_id, ts AS click_ts, event_id AS click_id
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (
-        |  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id, value
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT c.user_id, c.click_id, c.click_ts,
-        |  p.purchase_id, p.purchase_ts, round(p.value, 6) AS purchase_value
-        |FROM c JOIN p
-        |  ON c.user_id = p.user_id
-        | AND p.purchase_ts >= c.click_ts
-        | AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    // reads the parquet the Spark side just landed — the oracle checks
-    // the full fetch→clean→land→query chain, not a re-derivation
-    "q59_ingest_landing" ->
-      s"""SELECT time, latitude, longitude, temperature, salinity
-        |FROM read_parquet(
-        |  '${pipeline.LandedIngest.Q59LandingDir}/month=*/z_bucket=*/*.parquet',
-        |  hive_partitioning = true)
-        |WHERE month = '1960-07' AND latitude = 32.5 AND longitude = -70.0
-        |ORDER BY time""".stripMargin,
-
-    // transitive closure of the thresholded candidate graph; MIN over
-    // reachable ids = the same canonical component id minLabel emits
-    "q60_neardup_clusters" ->
-      s"""WITH RECURSIVE $SqlMinhashPairCtes,
-        |e AS (
-        |  SELECT doc1 AS a, doc2 AS b FROM pairs WHERE jaccard_est >= 0.5
-        |  UNION
-        |  SELECT doc2, doc1 FROM pairs WHERE jaccard_est >= 0.5),
-        |cc(id, comp) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, cc.comp FROM cc JOIN e ON cc.id = e.b)
-        |SELECT id AS doc_id, MIN(comp) AS component
-        |FROM cc
-        |GROUP BY id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q61_tfidf_terms" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                       x -> len(x) > 0)) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        |  FROM t GROUP BY doc_id, term),
-        |df AS (
-        |  SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        |  FROM t GROUP BY term),
-        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |    CAST(tf.tf AS DOUBLE) * n.n / df.df AS score,
-        |    row_number() OVER (PARTITION BY tf.doc_id
-        |      ORDER BY CAST(tf.tf AS DOUBLE) * n.n / df.df DESC, tf.term) AS rk
-        |  FROM tf JOIN df USING (term) CROSS JOIN n)
-        |SELECT doc_id, term, tf, df, round(score, 6) AS score, CAST(rk AS INT) AS rk
-        |FROM scored
-        |WHERE rk <= 3
-        |ORDER BY doc_id, rk""".stripMargin,
-
-    "q62_grouped_describe" ->
-      """SELECT lang,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  round(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*), 6) AS mean_chars,
-        |  MIN(n_chars) AS min_chars,
-        |  round(quantile_cont(n_chars, 0.25), 6) AS q25_chars,
-        |  round(quantile_cont(n_chars, 0.5), 6) AS q50_chars,
-        |  round(quantile_cont(n_chars, 0.75), 6) AS q75_chars,
-        |  MAX(n_chars) AS max_chars
-        |FROM documents
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "q63_moving_avg" ->
-      """WITH d AS (
-        |  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS n,
-        |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num
-        |  FROM events
-        |  GROUP BY event_type, date_trunc('day', ts),
-        |           date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)))
-        |SELECT event_type, day, n,
-        |  CAST(SUM(n) OVER w AS DOUBLE) / COUNT(*) OVER w AS avg_7d
-        |FROM d
-        |WINDOW w AS (PARTITION BY event_type ORDER BY day_num
-        |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, day""".stripMargin,
-
-    "q64_source_mixture" ->
-      """WITH d AS (
-        |  SELECT source, n_chars,
-        |    10 + (CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) % 4) * 20
-        |      AS rate_pct,
-        |    CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 AS bucket
-        |  FROM documents)
-        |SELECT source,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  MAX(rate_pct) AS rate_pct,
-        |  CAST(COUNT(*) FILTER (bucket < rate_pct) AS BIGINT) AS n_sampled,
-        |  CAST(COALESCE(SUM(n_chars) FILTER (bucket < rate_pct), 0) AS BIGINT)
-        |    AS sampled_chars
-        |FROM d
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "q65_length_buckets" ->
-      """WITH b AS (
-        |  SELECT lang, n_chars,
-        |    ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS bucket
-        |  FROM documents)
-        |SELECT lang, CAST(bucket AS INT) AS bucket,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-        |FROM b
-        |GROUP BY lang, bucket
-        |ORDER BY lang, bucket""".stripMargin,
-
-    "q66_source_overlap" ->
-      """WITH t AS (
-        |  SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT source,
-        |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(range(0, len(toks) - 2),
-        |                i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])) END AS g3
-        |  FROM t),
-        |gm AS (
-        |  SELECT gram,
-        |    bit_or(1::BIGINT << CAST(substr(source, 4, 2) AS INT)) AS mask
-        |  FROM (SELECT source, unnest(g3) AS gram FROM g)
-        |  GROUP BY gram),
-        |mc AS (SELECT mask, CAST(count(*) AS BIGINT) AS c FROM gm GROUP BY mask),
-        |srcs AS (SELECT DISTINCT source FROM documents),
-        |pairs AS (
-        |  SELECT a.source AS src_a, b.source AS src_b
-        |  FROM srcs a CROSS JOIN srcs b WHERE a.source < b.source),
-        |agg AS (
-        |  SELECT src_a, src_b,
-        |    CAST(SUM(CASE WHEN
-        |        (mask & (1::BIGINT << CAST(substr(src_a, 4, 2) AS INT))) != 0
-        |        AND (mask & (1::BIGINT << CAST(substr(src_b, 4, 2) AS INT))) != 0
-        |      THEN c ELSE 0 END) AS BIGINT) AS n_common,
-        |    CAST(SUM(CASE WHEN
-        |        (mask & (1::BIGINT << CAST(substr(src_a, 4, 2) AS INT))) != 0
-        |        OR (mask & (1::BIGINT << CAST(substr(src_b, 4, 2) AS INT))) != 0
-        |      THEN c ELSE 0 END) AS BIGINT) AS n_union
-        |  FROM mc CROSS JOIN pairs
-        |  GROUP BY src_a, src_b)
-        |SELECT src_a, src_b, n_common, n_union,
-        |  round(CAST(n_common AS DOUBLE) / n_union, 6) AS jaccard
-        |FROM agg
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    "q67_pq_encode" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < 16),
-        |js AS (SELECT unnest([0, 1, 2, 3]) AS j),
-        |sub AS (SELECT vec_id, j, v[j*16+1 : (j+1)*16] AS sv
-        |        FROM v CROSS JOIN js),
-        |scb AS (SELECT cid, j, cv[j*16+1 : (j+1)*16] AS scv
-        |        FROM cb CROSS JOIN js),
-        |scored AS (
-        |  SELECT vec_id, sub.j AS j, cid,
-        |    list_dot_product(sv, scv) AS dot,
-        |    row_number() OVER (PARTITION BY vec_id, sub.j
-        |                       ORDER BY list_dot_product(sv, scv) DESC, cid) AS rn
-        |  FROM sub JOIN scb ON sub.j = scb.j)
-        |SELECT vec_id,
-        |  CAST(MAX(CASE WHEN j = 0 THEN cid END) AS INT) AS code_0,
-        |  round(MAX(CASE WHEN j = 0 THEN dot END), 6) AS dot_0,
-        |  CAST(MAX(CASE WHEN j = 1 THEN cid END) AS INT) AS code_1,
-        |  round(MAX(CASE WHEN j = 1 THEN dot END), 6) AS dot_1,
-        |  CAST(MAX(CASE WHEN j = 2 THEN cid END) AS INT) AS code_2,
-        |  round(MAX(CASE WHEN j = 2 THEN dot END), 6) AS dot_2,
-        |  CAST(MAX(CASE WHEN j = 3 THEN cid END) AS INT) AS code_3,
-        |  round(MAX(CASE WHEN j = 3 THEN dot END), 6) AS dot_3
-        |FROM scored WHERE rn = 1
-        |GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin,
-
-    "q68_semantic_dedup" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |c AS (SELECT vec_id AS centroid, v AS cv FROM v WHERE vec_id < 16),
-        |scored AS (
-        |  SELECT v.vec_id, c.centroid,
-        |    list_dot_product(v.v, c.cv) AS dot,
-        |    row_number() OVER (PARTITION BY v.vec_id
-        |                       ORDER BY list_dot_product(v.v, c.cv) DESC, c.centroid) AS rn
-        |  FROM v CROSS JOIN c),
-        |asg AS (SELECT vec_id, centroid, dot FROM scored WHERE rn = 1),
-        |reps AS (
-        |  SELECT centroid, vec_id AS rep_id,
-        |    row_number() OVER (PARTITION BY centroid
-        |                       ORDER BY dot DESC, vec_id) AS rr
-        |  FROM asg),
-        |r1 AS (SELECT centroid, rep_id FROM reps WHERE rr = 1),
-        |j AS (
-        |  SELECT a.vec_id, r.rep_id,
-        |    list_dot_product(v1.v, v2.v) /
-        |      (sqrt(list_dot_product(v1.v, v1.v)) *
-        |       sqrt(list_dot_product(v2.v, v2.v))) AS rep_cos
-        |  FROM asg a
-        |  JOIN r1 r ON a.centroid = r.centroid
-        |  JOIN v v1 ON v1.vec_id = a.vec_id
-        |  JOIN v v2 ON v2.vec_id = r.rep_id)
-        |SELECT vec_id, rep_id, round(rep_cos, 6) AS rep_cos
-        |FROM j WHERE vec_id = rep_id OR rep_cos < 0.4
-        |ORDER BY vec_id""".stripMargin,
-
-    "q69_grouped_trend" ->
-      """WITH t AS (
-        |  SELECT event_type,
-        |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS y
-        |  FROM events),
-        |a AS (
-        |  SELECT event_type,
-        |    CAST(COUNT(*) AS HUGEINT) AS n,
-        |    CAST(SUM(x) AS HUGEINT) AS sx,
-        |    CAST(SUM(y) AS HUGEINT) AS sy,
-        |    CAST(SUM(x * y) AS HUGEINT) AS sxy,
-        |    CAST(SUM(x * x) AS HUGEINT) AS sxx
-        |  FROM t GROUP BY event_type)
-        |SELECT event_type,
-        |  round(CAST(n*sxy - sx*sy AS DOUBLE)
-        |          / CAST(n*sxx - sx*sx AS DOUBLE) / 100.0, 6) AS slope,
-        |  round(CAST(sy*sxx - sx*sxy AS DOUBLE)
-        |          / CAST(n*sxx - sx*sx AS DOUBLE) / 100.0, 6) AS intercept
-        |FROM a ORDER BY event_type""".stripMargin,
-
-    "q70_quartiles_hist" ->
-      """SELECT
-        |  round(quantile_cont(l_extendedprice, 0.25), 6) AS q25_price,
-        |  round(quantile_cont(l_extendedprice, 0.5), 6) AS q50_price,
-        |  round(quantile_cont(l_extendedprice, 0.75), 6) AS q75_price
-        |FROM lineitem""".stripMargin,
-
-    "q71_zorder_cells" ->
-      """WITH g AS (
-        |  SELECT event_id,
-        |    least(greatest(10.0 + fmod(value, 45.0), 10.0), 55.0) AS clat,
-        |    least(greatest(-85.0 + fmod(value, 15.0), -85.0), -70.0) AS clon
-        |  FROM events),
-        |i AS (
-        |  SELECT event_id,
-        |    CAST(least(greatest(floor((55.0 - clat) / 0.25 + 0.5), 0.0), 90.0) AS BIGINT) AS lat_idx,
-        |    CAST(least(greatest(floor((clon - (-85.0)) / 0.25 + 0.5), 0.0), 60.0) AS BIGINT) AS lon_idx
-        |  FROM g),
-        |z AS (
-        |  SELECT event_id,
-        |    CAST(list_sum(list_transform(range(0, 8),
-        |      b -> (((lat_idx >> b) & 1) << (2*b))
-        |         + (((lon_idx >> b) & 1) << (2*b + 1)))) AS BIGINT) AS z
-        |  FROM i)
-        |SELECT CAST(z >> 6 AS BIGINT) AS z_bucket,
-        |  CAST(COUNT(*) AS BIGINT) AS n_cells,
-        |  MIN(z) AS z_min, MAX(z) AS z_max,
-        |  MIN(event_id) AS first_event
-        |FROM z GROUP BY z_bucket
-        |ORDER BY z_bucket""".stripMargin,
-
-    "q72_pii_scrub" ->
-      """WITH e AS (
-        |  SELECT doc_id,
-        |    text ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' reach u' || CAST(doc_id AS VARCHAR)
-        |      || '@mail' || CAST(doc_id % 5 AS VARCHAR) || '.example.com'
-        |      ELSE '' END ||
-        |    CASE WHEN doc_id % 11 = 0 THEN ' call +1-555-'
-        |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |      ELSE '' END ||
-        |    CASE WHEN doc_id % 13 = 0 THEN ' from 10.'
-        |      || CAST(doc_id % 256 AS VARCHAR) || '.0.'
-        |      || CAST((doc_id * 7) % 256 AS VARCHAR)
-        |      ELSE '' END AS t2
-        |  FROM documents),
-        |m1 AS (SELECT doc_id, t2,
-        |  regexp_replace(t2,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g') AS s1
-        |  FROM e),
-        |m2 AS (SELECT doc_id, t2, s1,
-        |  regexp_replace(s1,
-        |    '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g') AS s2
-        |  FROM m1)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t2,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS INT) AS n_emails,
-        |  CAST(len(regexp_extract_all(s2,
-        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}')) AS INT) AS n_phones,
-        |  CAST(len(regexp_extract_all(s1,
-        |    '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS INT) AS n_ips,
-        |  regexp_replace(s2,
-        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS clean_text
-        |FROM m2 ORDER BY doc_id""".stripMargin,
-
-    "q73_chunk_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'std header boilerplate for source ' || source || ' v1 end ' || text AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
-        |n AS (SELECT doc_id,
-        |        greatest(CAST(ceil(len(toks) / 8.0) AS BIGINT), 1) AS n_chunks
-        |      FROM t),
-        |c AS (SELECT doc_id, toks,
-        |        CAST(unnest(range(0, greatest(CAST(ceil(len(toks) / 8.0) AS BIGINT), 1))) AS INT) AS pos
-        |      FROM t),
-        |ch AS (SELECT doc_id, pos,
-        |         array_to_string(toks[pos*8+1 : pos*8+8], ' ') AS chunk
-        |       FROM c),
-        |r AS (SELECT doc_id, pos, chunk,
-        |        row_number() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-        |      FROM ch),
-        |k AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |        string_agg(chunk, ' ' ORDER BY pos) AS text_dedup
-        |      FROM r WHERE rn = 1 GROUP BY doc_id)
-        |SELECT n.doc_id, n.n_chunks, COALESCE(k.n_kept, 0) AS n_kept,
-        |       COALESCE(k.text_dedup, '') AS text_dedup
-        |FROM n LEFT JOIN k ON n.doc_id = k.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-
-    "q74_incremental_dedup" ->
-      """WITH b AS (
-        |  SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 3 = 0 THEN o.text ELSE d.text END AS text
-        |  FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 400
-        |  WHERE d.doc_id >= 400)
-        |SELECT doc_id,
-        |  (text NOT IN (SELECT text FROM documents WHERE doc_id < 400)) AS is_new
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    "q75_ivfpq_search" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < 16),
-        |probe AS (SELECT v AS pv FROM v WHERE vec_id = 123),
-        |pc AS (SELECT cid FROM cb, probe
-        |       ORDER BY list_dot_product(pv, cv) DESC, cid LIMIT 4),
-        |asg AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT v.vec_id, cb.cid,
-        |      row_number() OVER (PARTITION BY v.vec_id
-        |                         ORDER BY list_dot_product(v.v, cb.cv) DESC, cb.cid) AS rn
-        |    FROM v CROSS JOIN cb WHERE v.vec_id <> 123) WHERE rn = 1),
-        |js AS (SELECT unnest([0, 1, 2, 3]) AS j),
-        |sub AS (SELECT vec_id, j, v[j*16+1 : (j+1)*16] AS sv
-        |        FROM v CROSS JOIN js WHERE vec_id <> 123),
-        |scb AS (SELECT cid, j, cv[j*16+1 : (j+1)*16] AS scv
-        |        FROM cb CROSS JOIN js),
-        |codes AS (
-        |  SELECT vec_id, j, cid AS code FROM (
-        |    SELECT sub.vec_id, sub.j, scb.cid,
-        |      row_number() OVER (PARTITION BY sub.vec_id, sub.j
-        |                         ORDER BY list_dot_product(sv, scv) DESC, cid) AS rn
-        |    FROM sub JOIN scb ON sub.j = scb.j) WHERE rn = 1),
-        |lut AS (
-        |  SELECT j, cid, list_dot_product(pv[j*16+1 : (j+1)*16], scv) AS term
-        |  FROM probe CROSS JOIN scb),
-        |adc AS (
-        |  SELECT c.vec_id,
-        |    ((MAX(CASE WHEN c.j = 0 THEN l.term END)
-        |      + MAX(CASE WHEN c.j = 1 THEN l.term END))
-        |      + MAX(CASE WHEN c.j = 2 THEN l.term END))
-        |      + MAX(CASE WHEN c.j = 3 THEN l.term END) AS adc
-        |  FROM codes c JOIN lut l ON l.j = c.j AND l.cid = c.code
-        |  GROUP BY c.vec_id),
-        |top AS (
-        |  SELECT a.vec_id, g.cid AS centroid, a.adc
-        |  FROM adc a JOIN asg g ON g.vec_id = a.vec_id
-        |  WHERE g.cid IN (SELECT cid FROM pc)
-        |  ORDER BY a.adc DESC, a.vec_id LIMIT 20)
-        |SELECT vec_id, centroid, round(adc, 6) AS adc
-        |FROM top ORDER BY round(adc, 6) DESC, vec_id""".stripMargin,
-
-    "q76_domain_caps" ->
-      """WITH u AS (
-        |  SELECT doc_id, n_chars,
-        |    'https://sub' || CAST(doc_id % 7 AS VARCHAR) || '.domain'
-        |      || CAST(doc_id % 30 AS VARCHAR) || '.example.org/p/'
-        |      || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |h AS (SELECT doc_id, n_chars,
-        |        regexp_extract(regexp_extract(url, '^https?://([^/]+)', 1),
-        |                       '([a-z0-9-]+\.[a-z0-9-]+\.[a-z]+)$', 1) AS domain
-        |      FROM u),
-        |c AS (SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_docs FROM h GROUP BY domain),
-        |r AS (SELECT domain, doc_id, n_chars,
-        |        row_number() OVER (PARTITION BY domain
-        |                           ORDER BY n_chars DESC, doc_id) AS rk
-        |      FROM h)
-        |SELECT r.domain, c.n_docs, CAST(r.rk AS INT) AS rk, r.doc_id, r.n_chars
-        |FROM r JOIN c ON r.domain = c.domain
-        |WHERE r.rk <= 2
-        |ORDER BY r.domain, r.rk""".stripMargin,
-
-    "q77_text_cleanup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    text || ' caf'
-        |      || CASE WHEN doc_id % 2 = 0 THEN 'e' || chr(769) ELSE chr(233) END
-        |      || chr(9) || 'ctrl' || chr(7) || 'bell  done ' AS t2
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |        trim(regexp_replace(
-        |          regexp_replace(nfc_normalize(t2), '[\x00-\x1f\x7f]', ' ', 'g'),
-        |          '  +', ' ', 'g')) AS clean_text
-        |      FROM d)
-        |SELECT doc_id, clean_text, CAST(length(clean_text) AS INT) AS n_cp
-        |FROM n ORDER BY doc_id""".stripMargin,
-
-    // reads the gzip jsonl shards the Spark side just landed — an
-    // independent parser checking the emitted format itself
-    "q78_jsonl_roundtrip" ->
-      s"""SELECT lang, source,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_text_len,
-        |  CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_distinct_text,
-        |  MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-        |FROM read_json('$q78Dir/*.json.gz',
-        |  format = 'newline_delimited',
-        |  columns = {doc_id: 'BIGINT', text: 'VARCHAR', lang: 'VARCHAR',
-        |             source: 'VARCHAR', n_chars: 'BIGINT'})
-        |GROUP BY lang, source
-        |ORDER BY lang, source""".stripMargin,
-
-    "q79_ivfpq_batch" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < 16),
-        |probes AS (SELECT vec_id AS probe_id, v AS pv FROM v
-        |           WHERE vec_id IN (123, 77, 401)),
-        |pc AS (
-        |  SELECT probe_id, cid FROM (
-        |    SELECT p.probe_id, cb.cid,
-        |      row_number() OVER (PARTITION BY p.probe_id
-        |                         ORDER BY list_dot_product(pv, cv) DESC, cid) AS rn
-        |    FROM probes p CROSS JOIN cb) WHERE rn <= 4),
-        |asg AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT v.vec_id, cb.cid,
-        |      row_number() OVER (PARTITION BY v.vec_id
-        |                         ORDER BY list_dot_product(v.v, cb.cv) DESC, cb.cid) AS rn
-        |    FROM v CROSS JOIN cb) WHERE rn = 1),
-        |js AS (SELECT unnest([0, 1, 2, 3]) AS j),
-        |sub AS (SELECT vec_id, j, v[j*16+1 : (j+1)*16] AS sv FROM v CROSS JOIN js),
-        |scb AS (SELECT cid, j, cv[j*16+1 : (j+1)*16] AS scv FROM cb CROSS JOIN js),
-        |codes AS (
-        |  SELECT vec_id, j, cid AS code FROM (
-        |    SELECT sub.vec_id, sub.j, scb.cid,
-        |      row_number() OVER (PARTITION BY sub.vec_id, sub.j
-        |                         ORDER BY list_dot_product(sv, scv) DESC, cid) AS rn
-        |    FROM sub JOIN scb ON sub.j = scb.j) WHERE rn = 1),
-        |lut AS (
-        |  SELECT probe_id, j, cid,
-        |         list_dot_product(pv[j*16+1 : (j+1)*16], scv) AS term
-        |  FROM probes CROSS JOIN scb),
-        |adc AS (
-        |  SELECT l.probe_id, c.vec_id,
-        |    ((MAX(CASE WHEN c.j = 0 THEN l.term END)
-        |      + MAX(CASE WHEN c.j = 1 THEN l.term END))
-        |      + MAX(CASE WHEN c.j = 2 THEN l.term END))
-        |      + MAX(CASE WHEN c.j = 3 THEN l.term END) AS adc
-        |  FROM codes c JOIN lut l ON l.j = c.j AND l.cid = c.code
-        |  GROUP BY l.probe_id, c.vec_id),
-        |ranked AS (
-        |  SELECT a.probe_id, a.vec_id, g.cid AS centroid, a.adc,
-        |    CAST(row_number() OVER (PARTITION BY a.probe_id
-        |                            ORDER BY a.adc DESC, a.vec_id) AS INT) AS rk
-        |  FROM adc a
-        |  JOIN asg g ON g.vec_id = a.vec_id
-        |  JOIN pc ON pc.probe_id = a.probe_id AND pc.cid = g.cid
-        |  WHERE a.vec_id <> a.probe_id)
-        |SELECT probe_id, vec_id, centroid, round(adc, 6) AS adc, rk
-        |FROM ranked WHERE rk <= 10
-        |ORDER BY probe_id, rk""".stripMargin,
-
-    // recomputes the audio features straight from the source text
-    // bytes (ASCII corpus: ascii() == byte) — frames/duration from
-    // arithmetic, the checksum by assembling each signed 16-bit LE
-    // sample; matching the Spark side proves the WAV round-trip
-    "q80_audio_decode" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, CAST(length(text) // 2 AS BIGINT) AS nf
-        |  FROM documents WHERE length(text) >= 2),
-        |g AS (
-        |  SELECT doc_id, text, CAST(unnest(range(0, nf)) AS BIGINT) AS i FROM t),
-        |v AS (
-        |  SELECT doc_id,
-        |    ascii(substr(text, CAST(2*i+1 AS INT), 1))
-        |      + 256 * ascii(substr(text, CAST(2*i+2 AS INT), 1)) AS v
-        |  FROM g),
-        |s AS (
-        |  SELECT doc_id,
-        |    CAST(COALESCE(SUM(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END), 0)
-        |         AS BIGINT) AS sum_samples
-        |  FROM v GROUP BY doc_id)
-        |SELECT t.doc_id, 8000 AS sample_rate, 1 AS channels, t.nf AS n_frames,
-        |  round(t.nf * 1000.0 / 8000, 6) AS duration_ms, s.sum_samples
-        |FROM t JOIN s USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // reads the LANDED index parquet (codes, centroid partitions) the
-    // Spark side just wrote — the stored-code twin of q79: probes and
-    // LUTs recompute from embeddings, but the corpus-side scores come
-    // from the persisted codes, so a green hash proves the landed
-    // layout round-trips
-    "q81_ivfpq_index" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < 16),
-        |probes AS (SELECT vec_id AS probe_id, v AS pv FROM v
-        |           WHERE vec_id IN (123, 77, 401)),
-        |pc AS (
-        |  SELECT probe_id, cid FROM (
-        |    SELECT p.probe_id, cb.cid,
-        |      row_number() OVER (PARTITION BY p.probe_id
-        |                         ORDER BY list_dot_product(pv, cv) DESC, cid) AS rn
-        |    FROM probes p CROSS JOIN cb) WHERE rn <= 4),
-        |idx AS (
-        |  SELECT vec_id, CAST(centroid AS BIGINT) AS centroid,
-        |         code_0, code_1, code_2, code_3
-        |  FROM read_parquet('$q81Dir/centroid=*/*.parquet',
-        |                    hive_partitioning = true)),
-        |js AS (SELECT unnest([0, 1, 2, 3]) AS j),
-        |scb AS (SELECT cid, j, cv[j*16+1 : (j+1)*16] AS scv FROM cb CROSS JOIN js),
-        |lut AS (
-        |  SELECT probe_id, j, cid,
-        |         list_dot_product(pv[j*16+1 : (j+1)*16], scv) AS term
-        |  FROM probes CROSS JOIN scb),
-        |adc AS (
-        |  SELECT pc.probe_id, i.vec_id, i.centroid,
-        |    ((MAX(CASE WHEN l.j = 0 THEN l.term END)
-        |      + MAX(CASE WHEN l.j = 1 THEN l.term END))
-        |      + MAX(CASE WHEN l.j = 2 THEN l.term END))
-        |      + MAX(CASE WHEN l.j = 3 THEN l.term END) AS adc
-        |  FROM idx i
-        |  JOIN pc ON pc.cid = i.centroid
-        |  JOIN lut l ON l.probe_id = pc.probe_id AND l.cid =
-        |    CASE l.j WHEN 0 THEN i.code_0 WHEN 1 THEN i.code_1
-        |             WHEN 2 THEN i.code_2 ELSE i.code_3 END
-        |  WHERE i.vec_id <> pc.probe_id
-        |  GROUP BY pc.probe_id, i.vec_id, i.centroid),
-        |ranked AS (
-        |  SELECT probe_id, vec_id, centroid, adc,
-        |    CAST(row_number() OVER (PARTITION BY probe_id
-        |                            ORDER BY adc DESC, vec_id) AS INT) AS rk
-        |  FROM adc)
-        |SELECT probe_id, vec_id, centroid, round(adc, 6) AS adc, rk
-        |FROM ranked WHERE rk <= 10
-        |ORDER BY probe_id, rk""".stripMargin,
-
-    "q82_neardup_incremental" ->
-      s"""WITH $SqlMinhashPairCtes,
-        |landed AS (
-        |  SELECT DISTINCT band, x, y FROM bands WHERE doc_id % 20 = 0),
-        |dup AS (
-        |  SELECT DISTINCT b.doc_id
-        |  FROM bands b JOIN landed USING (band, x, y)
-        |  WHERE b.doc_id % 20 <> 0)
-        |SELECT d.doc_id, (dup.doc_id IS NULL) AS is_new
-        |FROM documents d LEFT JOIN dup ON dup.doc_id = d.doc_id
-        |WHERE d.doc_id % 20 <> 0
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Composed ingest: q74's exact NOT-IN AND q82's landed-bucket
-    // collision, over the same constructed batch texts as the Spark
-    // side (exact copy at %7==1, suffix edit at %7==2). The minhash
-    // CTE chain is re-derived over corpus ∪ modified-batch instead of
-    // the raw documents table, constants identical to
-    // SqlMinhashPairCtes (kept in lockstep with the native
-    // minhash_sigs expression).
-    "q83_ingest_pipeline" ->
-      """WITH b AS (
-        |  SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 7 = 1 THEN o.text
-        |         WHEN d.doc_id % 7 = 2 THEN o.text || ' ingest edit marker'
-        |         ELSE d.text END AS text
-        |  FROM documents d JOIN documents o
-        |    ON o.doc_id = d.doc_id - (d.doc_id % 20)
-        |  WHERE d.doc_id % 20 <> 0),
-        |all_docs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0
-        |  UNION ALL
-        |  SELECT doc_id, text FROM b),
-        |h AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-        |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-        |  FROM all_docs),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-        |    list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-        |    list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-        |    list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-        |  FROM h),
-        |bands AS (
-        |  SELECT doc_id, 1 AS band, mh1 AS x, mh2 AS y FROM sigs
-        |  UNION ALL
-        |  SELECT doc_id, 2 AS band, mh3 AS x, mh4 AS y FROM sigs),
-        |landed AS (
-        |  SELECT DISTINCT band, x, y FROM bands WHERE doc_id % 20 = 0),
-        |neardup AS (
-        |  SELECT DISTINCT bd.doc_id
-        |  FROM bands bd JOIN landed USING (band, x, y)
-        |  WHERE bd.doc_id % 20 <> 0)
-        |SELECT b.doc_id,
-        |  (b.text NOT IN (SELECT text FROM documents WHERE doc_id % 20 = 0)
-        |   AND neardup.doc_id IS NULL) AS is_new
-        |FROM b LEFT JOIN neardup ON neardup.doc_id = b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // Greedy longest-match tokenization re-derived from the SAME
-    // committed vocabulary (graft.functions.BpeVocab — interpolated
-    // below, so engine and oracle cannot drift): per word instance,
-    // the recursive CTE repeatedly strips the longest vocab prefix
-    // (or one character when nothing matches), counting one token per
-    // step; the q51 window then packs the exact counts into shards.
-    "q84_bpe_shards" ->
-      s"""WITH RECURSIVE vocab(tok) AS (VALUES ${
-            graft.functions.BpeVocab.Entries.map(v => s"('$v')").mkString(",")}),
-        |words AS (
-        |  SELECT doc_id, w
-        |  FROM (SELECT doc_id,
-        |          unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-        |        FROM documents)
-        |  WHERE w <> ''),
-        |winst AS (SELECT doc_id, w, row_number() OVER () AS wid FROM words),
-        |step AS (
-        |  SELECT wid, doc_id, w AS rem, CAST(0 AS BIGINT) AS ntok FROM winst
-        |  UNION ALL
-        |  SELECT wid, doc_id,
-        |         substr(rem, 1 + coalesce((SELECT max(length(v.tok)) FROM vocab v
-        |                                    WHERE v.tok = substr(rem, 1, length(v.tok))), 1)),
-        |         ntok + 1
-        |  FROM step WHERE rem <> ''),
-        |t AS (
-        |  SELECT d.doc_id, CAST(coalesce(n.n, 0) AS BIGINT) AS n_tokens
-        |  FROM documents d
-        |  LEFT JOIN (SELECT doc_id, SUM(ntok) AS n FROM step WHERE rem = ''
-        |             GROUP BY doc_id) n USING (doc_id))
-        |SELECT doc_id, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2000 AS BIGINT) AS shard
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-
-    // Greedy token-budget chunking re-derived from the SAME vocab:
-    // per-word counts via the strip-longest-prefix recursion (as
-    // q84), then a second recursion accumulates word counts in doc
-    // order, starting a new chunk when the running total would pass
-    // the budget — the exact greedy rule bpe_chunks implements.
-    "q85_token_chunks" ->
-      s"""WITH RECURSIVE vocab(tok) AS (VALUES ${
-            graft.functions.BpeVocab.Entries.map(v => s"('$v')").mkString(",")}),
-        |w0 AS (
-        |  SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS wi0
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '[^a-z0-9]+') AS ws
-        |        FROM documents)),
-        |words AS (
-        |  SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id ORDER BY wi0) AS wi
-        |  FROM w0 WHERE w <> ''),
-        |step AS (
-        |  SELECT doc_id, wi, w AS rem, CAST(0 AS BIGINT) AS ntok FROM words
-        |  UNION ALL
-        |  SELECT doc_id, wi,
-        |         substr(rem, 1 + coalesce((SELECT max(length(v.tok)) FROM vocab v
-        |                                    WHERE v.tok = substr(rem, 1, length(v.tok))), 1)),
-        |         ntok + 1
-        |  FROM step WHERE rem <> ''),
-        |wt AS (
-        |  SELECT s.doc_id, s.wi, w.w, s.ntok AS t
-        |  FROM (SELECT doc_id, wi, ntok FROM step WHERE rem = '') s
-        |  JOIN words w USING (doc_id, wi)),
-        |chunk AS (
-        |  SELECT doc_id, wi, CAST(0 AS BIGINT) AS chunk_id, t AS cur FROM wt WHERE wi = 1
-        |  UNION ALL
-        |  SELECT w.doc_id, w.wi,
-        |         CASE WHEN c.cur + w.t > 64 THEN c.chunk_id + 1 ELSE c.chunk_id END,
-        |         CASE WHEN c.cur + w.t > 64 THEN w.t ELSE c.cur + w.t END
-        |  FROM chunk c JOIN wt w ON w.doc_id = c.doc_id AND w.wi = c.wi + 1)
-        |SELECT c.doc_id, c.chunk_id,
-        |       string_agg(w.w, ' ' ORDER BY c.wi) AS chunk_text,
-        |       CAST(SUM(w.t) AS BIGINT) AS n_tokens
-        |FROM chunk c JOIN wt w USING (doc_id, wi)
-        |GROUP BY c.doc_id, c.chunk_id
-        |ORDER BY c.doc_id, c.chunk_id""".stripMargin,
-
-    // Incremental semantic dedup: the q83 corpus/batch construction in
-    // vector space (exact vector copy at %7==1, +0.25 on dim 0 at
-    // %7==2 — both IEEE-exact), hyperplane codes from the SAME
-    // sqlLshCode integer formulas as the native expression, candidates
-    // from the cross-side (band, bucket) join, dup iff a candidate
-    // corpus partner reaches cosine >= 0.4 (list_dot_product — the
-    // q47-proven parity form of the native array_dot cosine).
-    "q86_semantic_incremental" ->
-      s"""WITH base AS (
-        |  SELECT vec_id AS base_id, CAST(embedding AS DOUBLE[]) AS bv
-        |  FROM embeddings WHERE vec_id % 20 = 0),
-        |b AS (
-        |  SELECT e.vec_id,
-        |    CASE WHEN e.vec_id % 7 = 1 THEN o.bv
-        |         WHEN e.vec_id % 7 = 2 THEN list_transform(range(len(o.bv)),
-        |           d -> CASE WHEN d = 0 THEN o.bv[d+1] + 0.25 ELSE o.bv[d+1] END)
-        |         ELSE CAST(e.embedding AS DOUBLE[]) END AS v
-        |  FROM embeddings e JOIN base o ON o.base_id = e.vec_id - (e.vec_id % 20)
-        |  WHERE e.vec_id % 20 <> 0),
-        |v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id % 20 = 0
-        |  UNION ALL
-        |  SELECT vec_id, v FROM b),
-        |bk AS (
-        |$sqlBandedBuckets),
-        |cand AS (
-        |  SELECT DISTINCT l.vec_id AS batch_id, r.vec_id AS corpus_id
-        |  FROM bk l JOIN bk r ON l.band = r.band AND l.bucket = r.bucket
-        |  WHERE l.vec_id % 20 <> 0 AND r.vec_id % 20 = 0),
-        |dup AS (
-        |  SELECT DISTINCT c.batch_id AS vec_id
-        |  FROM cand c JOIN v x ON x.vec_id = c.batch_id
-        |              JOIN v y ON y.vec_id = c.corpus_id
-        |  WHERE list_dot_product(x.v, y.v) /
-        |        (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.4)
-        |SELECT b.vec_id, (dup.vec_id IS NULL) AS is_new
-        |FROM b LEFT JOIN dup ON dup.vec_id = b.vec_id
-        |ORDER BY b.vec_id""".stripMargin,
-
-    // Three-stage composition: q83's exact NOT-IN + minhash-banding
-    // chain (constants in lockstep with the native minhash_sigs) and
-    // q86's hyperplane-code + cosine chain, over the SAME constructed
-    // batch carrying both axes (text edit + vector perturbation at
-    // %7==2, exact copies at %7==1, base vector under the doc's own
-    // text at %7==3 — the paraphrase only the semantic stage drops).
-    "q87_full_ingest" ->
-      s"""WITH de AS (
-        |  SELECT d.doc_id, d.text, CAST(e.embedding AS DOUBLE[]) AS vec
-        |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id),
-        |base AS (
-        |  SELECT doc_id AS base_id, text AS base_text, vec AS base_v
-        |  FROM de WHERE doc_id % 20 = 0),
-        |b AS (
-        |  SELECT de.doc_id,
-        |    CASE WHEN de.doc_id % 7 = 1 THEN o.base_text
-        |         WHEN de.doc_id % 7 = 2 THEN o.base_text || ' ingest edit marker'
-        |         ELSE de.text END AS text,
-        |    CASE WHEN de.doc_id % 7 = 1 THEN o.base_v
-        |         WHEN de.doc_id % 7 = 2 THEN list_transform(range(len(o.base_v)),
-        |           dd -> CASE WHEN dd = 0 THEN o.base_v[dd+1] + 0.25 ELSE o.base_v[dd+1] END)
-        |         WHEN de.doc_id % 7 = 3 THEN o.base_v
-        |         ELSE de.vec END AS v
-        |  FROM de JOIN base o ON o.base_id = de.doc_id - (de.doc_id % 20)
-        |  WHERE de.doc_id % 20 <> 0),
-        |all_docs AS (
-        |  SELECT doc_id, text FROM de WHERE doc_id % 20 = 0
-        |  UNION ALL
-        |  SELECT doc_id, text FROM b),
-        |h AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-        |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-        |  FROM all_docs),
-        |sigs AS (
-        |  SELECT doc_id,
-        |    list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-        |    list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-        |    list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-        |    list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-        |  FROM h),
-        |bands AS (
-        |  SELECT doc_id, 1 AS band, mh1 AS x, mh2 AS y FROM sigs
-        |  UNION ALL
-        |  SELECT doc_id, 2 AS band, mh3 AS x, mh4 AS y FROM sigs),
-        |landed AS (
-        |  SELECT DISTINCT band, x, y FROM bands WHERE doc_id % 20 = 0),
-        |neardup AS (
-        |  SELECT DISTINCT bd.doc_id
-        |  FROM bands bd JOIN landed USING (band, x, y)
-        |  WHERE bd.doc_id % 20 <> 0),
-        |v AS (
-        |  SELECT doc_id AS vec_id, vec AS v FROM de WHERE doc_id % 20 = 0
-        |  UNION ALL
-        |  SELECT doc_id AS vec_id, v FROM b),
-        |bk AS (
-        |$sqlBandedBuckets),
-        |semcand AS (
-        |  SELECT DISTINCT l.vec_id AS batch_id, r.vec_id AS corpus_id
-        |  FROM bk l JOIN bk r ON l.band = r.band AND l.bucket = r.bucket
-        |  WHERE l.vec_id % 20 <> 0 AND r.vec_id % 20 = 0),
-        |semdup AS (
-        |  SELECT DISTINCT c.batch_id AS doc_id
-        |  FROM semcand c JOIN v x ON x.vec_id = c.batch_id
-        |                 JOIN v y ON y.vec_id = c.corpus_id
-        |  WHERE list_dot_product(x.v, y.v) /
-        |        (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.4)
-        |SELECT b.doc_id,
-        |  (b.text NOT IN (SELECT text FROM de WHERE doc_id % 20 = 0)
-        |   AND neardup.doc_id IS NULL AND semdup.doc_id IS NULL) AS is_new
-        |FROM b LEFT JOIN neardup ON neardup.doc_id = b.doc_id
-        |       LEFT JOIN semdup ON semdup.doc_id = b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // KMV sketch re-derived relationally: the same md5-60-bit hashes,
-    // per-lang distinct, ordered, capped at k=64; the estimate uses
-    // the identical (k-1)/(v_k / 2^60) double arithmetic.
-    "q88_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT lang,
-        |    CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (
-        |  SELECT lang, hv,
-        |    row_number() OVER (PARTITION BY lang ORDER BY hv) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS nd
-        |  FROM h)
-        |SELECT lang,
-        |  CAST(LEAST(MAX(nd), 64) AS INT) AS n_kept,
-        |  CAST(MAX(CASE WHEN rn = LEAST(nd, 64) THEN hv END) AS BIGINT) AS kth_hash,
-        |  round(CASE WHEN MAX(nd) < 64 THEN CAST(MAX(nd) AS DOUBLE)
-        |        ELSE 63.0 / (MAX(CASE WHEN rn = 64 THEN hv END) / 1152921504606846976.0)
-        |        END, 6) AS est_distinct
-        |FROM r WHERE rn <= 64
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    // Exact heavy hitters relationally (the MG prefilter only prunes
-    // work — its guarantee makes the confirmed output identical to
-    // the direct GROUP BY .. HAVING). Tokenization is q46's proven
-    // word_tokens twin.
-    "q89_heavy_hitters" ->
-      """WITH t AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                            w -> w <> '')) AS tok
-        |  FROM documents),
-        |tot AS (SELECT count(*) AS total FROM t)
-        |SELECT tok, CAST(count(*) AS BIGINT) AS n
-        |FROM t
-        |GROUP BY tok
-        |HAVING count(*) * 200 >= (SELECT total FROM tot)
-        |ORDER BY n DESC, tok""".stripMargin,
-
-    // Theta-sketch set estimates re-derived relationally: the same
-    // two k=64 sketches (per-set ordered distinct md5-60-bit hashes,
-    // capped), the same θ = min of saturated k-th values (domain
-    // 2^60 when unsaturated), the same strictly-below-θ union /
-    // intersection counts, and the identical count·(M/θ) double
-    // arithmetic.
-    "q90_kmv_setops" ->
-      """WITH h AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents WHERE text IS NOT NULL),
-        |sa AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn, count(*) OVER () AS nd
-        |       FROM (SELECT DISTINCT hv FROM h WHERE doc_id % 2 = 0)),
-        |sb AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn, count(*) OVER () AS nd
-        |       FROM (SELECT DISTINCT hv FROM h WHERE doc_id % 3 = 0)),
-        |ka AS (SELECT hv FROM sa WHERE rn <= 64),
-        |kb AS (SELECT hv FROM sb WHERE rn <= 64),
-        |theta AS (SELECT LEAST(
-        |  CASE WHEN (SELECT MAX(nd) FROM sa) >= 64
-        |       THEN (SELECT hv FROM sa WHERE rn = 64)
-        |       ELSE 1152921504606846976 END,
-        |  CASE WHEN (SELECT MAX(nd) FROM sb) >= 64
-        |       THEN (SELECT hv FROM sb WHERE rn = 64)
-        |       ELSE 1152921504606846976 END) AS th),
-        |u AS (SELECT count(*) AS cu
-        |      FROM (SELECT hv FROM ka UNION SELECT hv FROM kb) x
-        |      WHERE hv < (SELECT th FROM theta)),
-        |i AS (SELECT count(*) AS ci
-        |      FROM (SELECT hv FROM ka INTERSECT SELECT hv FROM kb) x
-        |      WHERE hv < (SELECT th FROM theta))
-        |SELECT
-        |  round(cu * (1152921504606846976.0 / th), 6) AS union_est,
-        |  round(ci * (1152921504606846976.0 / th), 6) AS intersect_est,
-        |  round(CASE WHEN cu = 0 THEN 0.0
-        |        ELSE CAST(ci AS DOUBLE) / CAST(cu AS DOUBLE) END, 6) AS jaccard_est
-        |FROM u, i, theta""".stripMargin,
-
-    // Losslessness makes the oracle simple: the union of per-source
-    // sketches must equal the k smallest GLOBAL distinct hashes, so
-    // the oracle skips the two-level structure entirely and the hash
-    // match proves it exact.
-    "q91_kmv_reagg" ->
-      """WITH h AS (
-        |  SELECT DISTINCT CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (
-        |  SELECT hv, row_number() OVER (ORDER BY hv) AS rn,
-        |         count(*) OVER () AS nd
-        |  FROM h)
-        |SELECT
-        |  CAST(LEAST(MAX(nd), 64) AS INT) AS n_kept,
-        |  CAST(MIN(hv) AS BIGINT) AS min_hash,
-        |  CAST(MAX(CASE WHEN rn = LEAST(nd, 64) THEN hv END) AS BIGINT) AS kth_hash,
-        |  round(CASE WHEN MAX(nd) < 64 THEN CAST(MAX(nd) AS DOUBLE)
-        |        ELSE 63.0 / (MAX(CASE WHEN rn = 64 THEN hv END) / 1152921504606846976.0)
-        |        END, 6) AS est_distinct
-        |FROM r WHERE rn <= 64""".stripMargin,
-
-    // q92: the oracle re-derives the stride-4 / width-8 shingle grid,
-    // the 60-bit md5 span fingerprints, the corpus-wide
-    // first-occurrence keeper, and the covered-by-any-keeper block
-    // rule relationally. The oracle's span-to-block coverage is a
-    // small range self-join (fine for an oracle); the engine computes
-    // it inside the doc-keyed aggregation instead.
-    "q92_span_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    repeat('pad ', CAST(doc_id % 5 AS INT)) ||
-        |    'terms of service apply to all content in this corpus redistribution prohibited without prior written consent of the publisher all rights reserved worldwide'
-        |    || ' ' || text AS text
-        |  FROM documents WHERE text IS NOT NULL),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM d),
-        |c AS (SELECT doc_id, toks,
-        |        CAST(unnest(range(0, greatest(CAST(ceil(len(toks) / 4.0) AS BIGINT), 1))) AS INT) AS pos
-        |      FROM t),
-        |sp AS (SELECT doc_id, pos,
-        |         array_to_string(toks[pos*4+1 : pos*4+4], ' ') AS block,
-        |         CAST(('0x' || substr(md5(array_to_string(toks[pos*4+1 : pos*4+8], ' ')), 1, 15)) AS BIGINT) AS span_h
-        |       FROM c),
-        |k AS (SELECT doc_id, pos, block,
-        |        (row_number() OVER (PARTITION BY span_h ORDER BY doc_id, pos) = 1) AS keep
-        |      FROM sp),
-        |cov AS (SELECT b.doc_id, b.pos, b.block, bool_or(s2.keep) AS kept
-        |        FROM k b JOIN k s2 ON s2.doc_id = b.doc_id
-        |                          AND s2.pos BETWEEN b.pos - 1 AND b.pos
-        |        GROUP BY b.doc_id, b.pos, b.block),
-        |agg1 AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |           CAST(SUM(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_dup_spans
-        |         FROM k GROUP BY doc_id),
-        |agg2 AS (SELECT doc_id,
-        |           CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept_blocks,
-        |           COALESCE(string_agg(CASE WHEN kept THEN block END, ' ' ORDER BY pos), '') AS text_dedup
-        |         FROM cov GROUP BY doc_id)
-        |SELECT a.doc_id, a.n_spans, a.n_dup_spans, b.n_kept_blocks, b.text_dedup
-        |FROM agg1 a JOIN agg2 b ON a.doc_id = b.doc_id
-        |ORDER BY a.doc_id""".stripMargin,
-
-    // q93: the oracle re-derives the per-language Laplace bigram LM
-    // (reference = doc_id%10==0) and the fixed-point micro-nat
-    // cross-entropy from gram STRINGS (q49 tokenizer twin); the
-    // engine counts 64-bit gram fingerprints instead — identical
-    // counts absent a 64-bit collision (the accepted q49 tradeoff).
-    // lp(k) = floor(ln(k)*1e6 + 0.5) is bit-identical across engines
-    // over the count domain (BASELINE round 15 sweep), so
-    // xent_micronats is integer-EXACT.
-    "q93_lm_perplexity" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |lmpos AS (
-        |  SELECT lang, 0 AS kind, unnest(toks) AS g
-        |  FROM t WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT lang, 1 AS kind,
-        |         unnest(list_transform(range(1, len(toks)),
-        |                               i -> toks[i] || ' ' || toks[i+1])) AS g
-        |  FROM t WHERE doc_id % 10 = 0 AND len(toks) >= 2),
-        |lm AS (
-        |  SELECT lang, kind, g, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lmpos GROUP BY 1, 2, 3),
-        |v AS (
-        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS v
-        |  FROM lm WHERE kind = 0 GROUP BY 1),
-        |scpos AS (
-        |  SELECT doc_id, lang, 0 AS kind,
-        |         unnest(toks[1:len(toks)-1]) AS g
-        |  FROM t WHERE len(toks) >= 2
-        |  UNION ALL
-        |  SELECT doc_id, lang, 1 AS kind,
-        |         unnest(list_transform(range(1, len(toks)),
-        |                               i -> toks[i] || ' ' || toks[i+1])) AS g
-        |  FROM t WHERE len(toks) >= 2),
-        |nk AS (
-        |  SELECT doc_id, lang, kind, g, CAST(COUNT(*) AS BIGINT) AS nk
-        |  FROM scpos GROUP BY 1, 2, 3, 4),
-        |sc AS (
-        |  SELECT nk.doc_id, nk.lang,
-        |    CAST(SUM(nk.nk * CASE WHEN nk.kind = 0
-        |      THEN CAST(floor(ln(CAST(COALESCE(lm.c, 0) + v.v AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      ELSE -CAST(floor(ln(CAST(COALESCE(lm.c, 0) + 1 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      END) AS BIGINT) AS xent_micronats
-        |  FROM nk
-        |  LEFT JOIN lm ON lm.lang = nk.lang AND lm.kind = nk.kind AND lm.g = nk.g
-        |  JOIN v ON v.lang = nk.lang
-        |  GROUP BY 1, 2)
-        |SELECT t.doc_id, t.lang,
-        |  CAST(greatest(len(toks) - 1, 0) AS BIGINT) AS n_pos,
-        |  sc.xent_micronats,
-        |  CASE WHEN len(toks) >= 2
-        |       THEN CAST(sc.xent_micronats // (len(toks) - 1) AS BIGINT) END
-        |    AS xent_micronats_per_pos
-        |FROM t LEFT JOIN sc ON sc.doc_id = t.doc_id AND sc.lang = t.lang
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // q94: the oracle re-derives the two hashed-gram bucket
-    // histograms (md5 bridge — bit-exact across engines), the
-    // fixed-point delta table, and the per-doc folded log-weight.
-    // Buckets a document references always exist in the histogram
-    // (its own grams were counted), so the bucket join loses nothing.
-    "q94_dsir_weights" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, source, unnest(toks) AS g FROM t
-        |  UNION ALL
-        |  SELECT doc_id, source,
-        |         unnest(list_transform(range(1, len(toks)),
-        |                               i -> toks[i] || ' ' || toks[i+1])) AS g
-        |  FROM t WHERE len(toks) >= 2),
-        |bk AS (
-        |  SELECT doc_id, source = 'src0' AS is_t,
-        |         CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) % 4096 AS b
-        |  FROM g),
-        |hist AS (
-        |  SELECT b,
-        |    CAST(SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS tc,
-        |    CAST(SUM(CASE WHEN is_t THEN 0 ELSE 1 END) AS BIGINT) AS sc
-        |  FROM bk GROUP BY b),
-        |tot AS (SELECT SUM(tc) AS tt, SUM(sc) AS ts FROM hist),
-        |delta AS (
-        |  SELECT b,
-        |    CAST(floor(ln(CAST(tc + 1 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) -
-        |    CAST(floor(ln(CAST(sc + 1 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS d
-        |  FROM hist),
-        |score AS (
-        |  SELECT bk.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |         CAST(SUM(delta.d) AS BIGINT) AS base
-        |  FROM bk JOIN delta USING (b) GROUP BY bk.doc_id),
-        |w AS (
-        |  SELECT t.doc_id,
-        |    CAST(COALESCE(score.n_grams, 0) AS BIGINT) AS n_grams,
-        |    CAST(COALESCE(score.base, 0) + COALESCE(score.n_grams, 0) *
-        |      (CAST(floor(ln(CAST(tot.ts + 4096 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) -
-        |       CAST(floor(ln(CAST(tot.tt + 4096 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS logw_micronats
-        |  FROM t LEFT JOIN score ON score.doc_id = t.doc_id, tot)
-        |SELECT doc_id, n_grams, logw_micronats,
-        |  CAST(logw_micronats > 0 AS BIGINT) AS selected
-        |FROM w
-        |ORDER BY doc_id""".stripMargin,
-
-    // q95: the oracle re-derives the epoch-7 permutation key (60-bit
-    // md5 — bit-exact across engines), the running total in permuted
-    // order, and the greedy shard rule as one window.
-    "q95_epoch_shuffle" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(md5('epoch7:' || CAST(doc_id AS VARCHAR)), 1, 15))
-        |         AS BIGINT) AS epoch_key,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, epoch_key, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (ORDER BY epoch_key, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY epoch_key, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2000 AS BIGINT) AS shard
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-
-    // q96: the oracle ranks every doc by its md5 sampling key and
-    // takes the GLOBAL per-source bottom-32 sample; the engine builds
-    // per-shard sketches and merges them — equal results prove the
-    // mergeable property (bottom-k of bottom-k's ≡ global bottom-k).
-    "q96_quantile_sketch" ->
-      """WITH h AS (
-        |  SELECT source, doc_id, n_chars,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents),
-        |r AS (
-        |  SELECT source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM h),
-        |s AS (
-        |  SELECT source, CAST(MAX(n) AS BIGINT) AS n_docs,
-        |    CAST(COUNT(*) AS BIGINT) AS n_sample,
-        |    list_sort(list(n_chars)) AS vals
-        |  FROM r WHERE rn <= 32 GROUP BY source)
-        |SELECT source, n_docs, n_sample,
-        |  vals[CAST(floor(0.5 * (n_sample - 1)) AS BIGINT) + 1] AS p50_est,
-        |  vals[CAST(floor(0.9 * (n_sample - 1)) AS BIGINT) + 1] AS p90_est
-        |FROM s
-        |ORDER BY source""".stripMargin,
-
-    // q97: the oracle re-derives each corpus doc's DISTINCT 3-gram
-    // md5-bridge fingerprints from its text and joins them against the
-    // `gram` column of the parquet the ENGINE landed (the q81
-    // persisted-artifact discipline); the oracle's own join is
-    // md5-bit-identical, while the engine probes the `gx` xxhash64
-    // column — counts agree absent a 64-bit collision in either hash
-    // family (the accepted q49/q93 tradeoff).
-    "q97_decontaminate" ->
-      s"""WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents WHERE doc_id % 20 <> 0),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-        |         ELSE list_transform(range(0, len(toks) - 2),
-        |                i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])) END AS g3
-        |  FROM t),
-        |cg AS (
-        |  SELECT DISTINCT doc_id,
-        |    CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS fp
-        |  FROM (SELECT doc_id, unnest(g3) AS gram FROM g)),
-        |hits AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared
-        |  FROM cg
-        |  WHERE fp IN (SELECT gram FROM read_parquet('$q97Dir/*.parquet'))
-        |  GROUP BY doc_id),
-        |r AS (
-        |  SELECT g.doc_id,
-        |    CAST(COALESCE(h.n_shared, 0) AS BIGINT) AS n_shared
-        |  FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id)
-        |SELECT doc_id, n_shared,
-        |  CAST(n_shared = 0 AS BIGINT) AS clean
-        |FROM r
-        |ORDER BY doc_id""".stripMargin,
-
-    // q98: the oracle re-derives BOTH epochs' permutations and the
-    // greedy packing from the documents table from scratch (no landed
-    // file involved); the engine's result comes entirely from the
-    // landed epoch=N/shard=K manifests — equality proves landing
-    // fidelity (the q81 proof shape).
-    "q98_epoch_manifests" ->
-      """WITH e AS (SELECT unnest([7, 8]) AS epoch),
-        |t AS (
-        |  SELECT e.epoch, doc_id,
-        |    CAST(('0x' || substr(md5('epoch' || CAST(e.epoch AS VARCHAR) || ':'
-        |         || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS epoch_key,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                         x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents CROSS JOIN e),
-        |p AS (
-        |  SELECT epoch, doc_id, n_tokens,
-        |    CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY epoch
-        |        ORDER BY epoch_key, doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2000
-        |      AS BIGINT) AS shard
-        |  FROM t)
-        |SELECT CAST(epoch AS BIGINT) AS epoch, shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
-        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-        |FROM p
-        |GROUP BY 1, 2
-        |ORDER BY epoch, shard""".stripMargin,
-
-    // q99: the production occupancyBits policy, both sides data-driven.
-    // bits = min(24, max(4, ceil(log2(max(1, n div 8))))) is recomputed
-    // from COUNT(*) in SQL (the dynamic twin of Similarity.occupancyBits),
-    // and the per-band codes regenerate the a(j)/b(j) plane formulas
-    // INLINE (sqlLshCode bakes per-plane constants at a fixed width, so
-    // a runtime width needs the closed forms: a(j) = 1 + (37+41j) % 1008,
-    // b(j) = (7+13j) % 1009, j = band*bits + k).
-    // mean in fixed-point micro-units, round-half-up via exact integer
-    // arithmetic — never a cross-engine DOUBLE rounding comparison
-    "q99_occupancy_policy" ->
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |$sqlDynamicBandedBuckets,
-        |occ AS (
-        |  SELECT band, bits, bucket, COUNT(*) AS occupancy
-        |  FROM bk GROUP BY 1, 2, 3)
-        |SELECT band, bits,
-        |  CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |  CAST(SUM(occupancy) AS BIGINT) AS n_rows,
-        |  CAST(MAX(occupancy) AS BIGINT) AS max_occupancy,
-        |  CAST((2000000 * SUM(occupancy) + COUNT(*)) // (2 * COUNT(*)) AS BIGINT)
-        |    AS mean_occupancy_micro
-        |FROM occ
-        |GROUP BY 1, 2
-        |ORDER BY band""".stripMargin,
-
-    // q100: the same plain join the q56 oracle runs — identical output
-    // proves the aggregate-through-join decomposition exact
-    "q100_agg_through_join" ->
-      s"""SELECT c_mktsegment,
-        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  ${S_DSUM("o_totalprice")} AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin
-  )
-
-  /** CTE chain `nn, k, bd, bk` — banded hyperplane codes at the
-    * PRODUCTION width: `bits` recomputed from COUNT(*) in SQL (the
-    * dynamic twin of [[graft.ops.Similarity.occupancyBits]]) and the
-    * a(j)/b(j) plane formulas inlined as closed forms ([[sqlLshCode]]
-    * bakes per-plane constants at a fixed width, so a runtime width
-    * needs the formulas inline). Expects a prior CTE
-    * `v(vec_id, v DOUBLE[])`; yields bk(vec_id, band, bits, bucket).
-    * Shared by q99 (the policy carrier) and q47 (embed dedup at the
-    * production width). */
-  private def sqlDynamicBandedBuckets: String =
-    s"""nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      |k AS (SELECT CAST(LEAST(24, GREATEST(4,
-      |        CAST(CEIL(LOG2(GREATEST(1, n // 8))) AS INTEGER))) AS INTEGER) AS bits
-      |      FROM nn),
-      |bd AS (SELECT CAST(UNNEST(range($AnnBands)) AS INTEGER) AS band),
-      |bk AS (
-      |  SELECT vec_id, band, bits,
-      |    CAST(list_sum(list_transform(range(bits), kk ->
-      |      CASE WHEN COALESCE(list_sum(list_transform(range(len(v)),
-      |          d -> v[d+1] * (((((1 + ((37 + 41*(band*bits+kk)) % 1008)) * (d+1)
-      |                           + ((7 + 13*(band*bits+kk)) % 1009)) % 1009) / 1009.0)
-      |                         - 0.5))), 0.0) >= 0
-      |           THEN (CAST(1 AS BIGINT) << kk) ELSE 0 END)) AS INTEGER) AS bucket
-      |  FROM v CROSS JOIN bd CROSS JOIN k)""".stripMargin
-
-  /** DuckDB expression mirroring HyperplaneLSH over a column `v`
-    * (ARRAY<DOUBLE>): K=8 planes from the same integer formula,
-    * left-to-right double accumulation, sign bits packed LSB-first. */
-  /** DuckDB expression for band `band` of the hyperplane-LSH code over
-    * a column `v` — regenerated from the SAME `a(j)`/`b(j)` integer
-    * formulas as the native [[graft.functions.HyperplaneLSH]], so the
-    * two engines' planes are bit-identical at any (bits, band). */
-  private def sqlLshCode(bits: Int, band: Int): String = {
-    import graft.functions.HyperplaneLSH.{a, b, M}
-    val terms = (0 until bits).map { k =>
-      val j = band * bits + k
-      s"""CASE WHEN COALESCE(list_sum(list_transform(range(len(v)),
-         |  d -> v[d+1] * ((((${a(j)} * (d+1) + ${b(j)}) % $M) / $M.0) - 0.5))), 0.0) >= 0
-         |  THEN ${1 << k} ELSE 0 END""".stripMargin.linesIterator.map(_.trim).mkString(" ")
-    }
-    s"CAST((${terms.mkString(" + ")}) AS INT)"
+                   q97Dir: String): Map[String, String] = {
+    val landed = LandedDirs(q78Dir, q81Dir, q97Dir)
+    records.map(q => q.name -> q.oracle(landed)).toMap
   }
-
-  /** UNION ALL body producing (vec_id, band, bucket) for all bands —
-    * the oracle twin of [[graft.ops.Similarity.bandedBuckets]]. */
-  private def sqlBandedBuckets: String =
-    (0 until AnnBands).map { t =>
-      s"SELECT vec_id, $t AS band, ${sqlLshCode(AnnBits, t)} AS bucket FROM v"
-    }.mkString("\nUNION ALL\n")
-
-  /** Shared CTE chain producing the minhash-banding candidate pair set
-    * `pairs(doc1, doc2, jaccard_est)` — the oracle twin of
-    * [[bandedPairs]]∘[[minhashSigsFrame]], used by q31 (the pair
-    * carrier) and q60 (components over the same graph). */
-  private val SqlMinhashPairCtes: String =
-    """h AS (
-      |  SELECT doc_id,
-      |    list_transform(range(1, greatest(1, length(text) - 7) + 1),
-      |      i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 8)), 1, 8)) AS BIGINT) % 1000003) AS hm
-      |  FROM documents),
-      |sigs AS (
-      |  SELECT doc_id,
-      |    list_min(list_transform(hm, x -> (x * 961748941 + 101) % 1000003)) AS mh1,
-      |    list_min(list_transform(hm, x -> (x * 982451653 + 202) % 1000003)) AS mh2,
-      |    list_min(list_transform(hm, x -> (x * 899809343 + 303) % 1000003)) AS mh3,
-      |    list_min(list_transform(hm, x -> (x * 472882027 + 404) % 1000003)) AS mh4
-      |  FROM h),
-      |bands AS (
-      |  SELECT doc_id, mh1, mh2, mh3, mh4, 1 AS band, mh1 AS x, mh2 AS y FROM sigs
-      |  UNION ALL
-      |  SELECT doc_id, mh1, mh2, mh3, mh4, 2 AS band, mh3 AS x, mh4 AS y FROM sigs),
-      |pairs AS (
-      |  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2,
-      |    (CAST(a.mh1 = b.mh1 AS INT) + CAST(a.mh2 = b.mh2 AS INT) +
-      |     CAST(a.mh3 = b.mh3 AS INT) + CAST(a.mh4 = b.mh4 AS INT)) / 4.0 AS jaccard_est
-      |  FROM bands a JOIN bands b
-      |    ON a.band = b.band AND a.x = b.x AND a.y = b.y AND a.doc_id < b.doc_id)""".stripMargin
-
-  /** DuckDB literal for Text.Stopwords (kept in lockstep). */
-  private def SqlStopwords: String =
-    Text.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** DuckDB expression mirroring the native SimHash32 over a column
-    * `hs` of md5-prefix token hashes: per-bit ±1 votes, ties → 1. */
-  private val SqlSimhash: String =
-    """CAST(list_sum(list_transform(range(32), b ->
-      |    CASE WHEN COALESCE(list_sum(list_transform(hs, x ->
-      |           CASE WHEN (x >> b) & 1 = 1 THEN 1 ELSE -1 END)), 0) >= 0
-      |         THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS BIGINT)"""
-      .stripMargin.linesIterator.map(_.trim).mkString(" ")
 }

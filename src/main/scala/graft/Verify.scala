@@ -1,15 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.Query
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = graft.core.GraftSession.build(
-      "graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    new java.io.File(outDir).mkdirs()
-    // optional subset run (comma-separated names) for scale spot-
+    // optional subset run (names or prefixes) for scale spot-
     // verification: at sf10 a full 98-query dump is hours, but the
     // landed-artifact family's value checks are cheap in isolation.
     // The driver never sets this. A subset run also writes a SUBSET
@@ -17,22 +15,11 @@ object Verify {
     // dirs a previous fuller run left in a reused outDir are never
     // consulted — otherwise stale old-code parquet would be compared
     // against fresh oracles and read green.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { s =>
-      // set-but-empty (e.g. a wrapper exporting "") would run zero
-      // queries and compare green while verifying nothing — refuse.
-      require(s.nonEmpty,
-        "SPARK_GRAFT_VERIFY_ONLY is set but names no queries")
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = graft.core.GraftSession.build(
+      "graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case Query(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,14 +29,11 @@ object Verify {
     // the q78/q81 oracle dirs are derived from THIS run's data dir
     // (not JVM-global last-write-wins vars) so concurrent runs can't
     // cross
-    val allOracles = SparkEntry.oracleSqlFor(
+    val names = selected.map(_.name).toSet
+    val oracles = SparkEntry.oracleSqlFor(
       graft.sources.CorpusJsonl.dirFor(sfDir),
       graft.ops.IvfPqIndex.dirFor(sfDir),
-      graft.ops.Decontaminate.dirFor(sfDir))
-    val oracles = only match {
-      case Some(s) => allOracles.filter { case (n, _) => s(n) }
-      case None    => allOracles
-    }
+      graft.ops.Decontaminate.dirFor(sfDir)).filter { case (n, _) => names(n) }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(oracles))
     spark.stop()
   }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *    Size it so n/2^bits stays O(1..100) at the target corpus.
   *  - `bands` — independent codes per vector (OR-amplification, the
   *    same recall construction as the minhash banding in
-  *    `SparkEntry.bandedPairs`): a pair is a candidate when ANY band
+  *    `SimilarityQueries.bandedPairs`): a pair is a candidate when ANY band
   *    collides, so recall for near-duplicates stays high even as
   *    `bits` grows to keep buckets small.
   *

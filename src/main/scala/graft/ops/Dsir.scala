@@ -45,13 +45,13 @@ object Dsir {
     * an empty document (0 grams, weight 0, not selected) — the
     * relational oracle's unnest-of-NULL emits no rows, so the engine
     * must not propagate NULL into the score. */
-  private def grams(text: Column): Column = {
+  private[graft] def grams(text: Column): Column = {
     val t = coalesce(text, lit(""))
     concat(Text.ngramsOfText(t, 1), Text.ngramsOfText(t, 2))
   }
 
   /** md5-bridge bucket in [0, b): re-derivable in ANSI SQL. */
-  private def bucketOf(g: Column, b: Int): Column =
+  private[graft] def bucketOf(g: Column, b: Int): Column =
     conv(substring(md5(g), 1, 8), 16, 10).cast("long") % b
 
   /** Fixed-point ⌊ln(k)·10⁶ + 0.5⌋ — driver-side twin of
@@ -80,8 +80,8 @@ object Dsir {
     require(buckets >= 2, s"need at least 2 buckets, got $buckets")
     // the histogram explode carries 4-byte bucket ints from the fused
     // single-scan native (r19) — the gram-string explode with md5/conv
-    // layers per gram survives in [[withScoresRelational]]'s grams()
-    // form, and DsirSpec pins the two bucketings identical
+    // layers per gram survives in DsirSpec's relational twin over
+    // [[grams]], which pins the two bucketings identical
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val bucketsCol = ColumnBridge.column(graft.functions.DsirBuckets(
       ColumnBridge.expression(coalesce(col(textCol), lit(""))),
@@ -125,7 +125,7 @@ object Dsir {
                  textCol: String = "text"): DataFrame = {
     // ONE byte scan per doc (fused native, r19): grams are bucketed and
     // the delta fold happens inside the expression — the previous HOF
-    // form (kept below as withScoresRelational, spec-pinned ≡)
+    // form (kept in DsirSpec as the relational twin, pinned ≡)
     // materialized the gram-string array, then per gram paid
     // md5 → substring → conv → element_at interpretation; the A/B read
     // 1.72 → 0.84 s solo at sf0.1 (BASELINE r19)
@@ -141,24 +141,6 @@ object Dsir {
       // cross-engine hashes canonicalization-free (round-15 lesson)
       .withColumn("selected", (col("logw_micronats") > 0).cast("bigint"))
       .drop("_dsir")
-  }
-
-  /** The pre-r19 HOF/relational scoring arm, kept as the A/B twin:
-    * DsirSpec pins [[withScores]] ≡ this row-for-row (same contract as
-    * NgramLm's scoreRows-vs-score pin), so the fused scan and the
-    * compositional form cannot drift. */
-  private[graft] def withScoresRelational(docs: DataFrame, model: DsirModel,
-                                          textCol: String = "text"): DataFrame = {
-    val deltaLit = typedLit(model.delta)
-    val g = grams(col(textCol))
-    docs
-      .withColumn("n_grams", size(g).cast("bigint"))
-      .withColumn("logw_micronats",
-        aggregate(g, lit(0L),
-          (acc, gram) => acc + element_at(deltaLit,
-            (bucketOf(gram, model.buckets) + 1).cast("int")))
-        + col("n_grams") * lit(model.constPerGram))
-      .withColumn("selected", (col("logw_micronats") > 0).cast("bigint"))
   }
 
   /** Score documents against a frozen [[DsirModel]]: (idCol, n_grams,

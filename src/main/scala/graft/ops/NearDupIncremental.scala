@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
 object NearDupIncremental {
 
   /** `(idCol, band, x, y)` bucket rows from signature columns
-    * `mh1..mh4` (2 bands × 2 rows — [[graft.SparkEntry.bandedPairs]]'s
+    * `mh1..mh4` (2 bands × 2 rows — [[graft.queries.SimilarityQueries.bandedPairs]]'s
     * banding, kept in lockstep with the DuckDB oracle CTEs). */
   def bucketsFromSigs(sigs: DataFrame, idCol: String = "doc_id"): DataFrame =
     sigs.select(col(idCol),

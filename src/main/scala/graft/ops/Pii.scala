@@ -15,11 +15,10 @@ import graft.functions.PiiScrub
   * The production path is the native single-pass
   * [[graft.functions.PiiScrub]] expression ([[scrub]]) — one decode,
   * one combined-alternation regex scan, one encode, detection counts
-  * collected for free. The composed built-in forms below
-  * ([[emailCount]]/[[mask]]/…) are kept as the REFERENCE semantics:
-  * they define what the fused pass must compute (PiiSpec pins the
-  * equivalence by fuzz), and they are what a deployment would use for
-  * ad-hoc one-pattern jobs. Patterns deliberately stay in the regex
+  * collected for free. PiiSpec keeps the composed built-in forms
+  * (one `regexp_count` per pattern, a chained `regexp_replace` mask)
+  * as the REFERENCE semantics the fused pass must compute, and pins
+  * the equivalence by fuzz. Patterns deliberately stay in the regex
   * subset whose semantics agree across engines (character classes,
   * bounded and unbounded repetition — no backreferences, no
   * lookaround), so the DuckDB oracle (RE2) finds identical matches.
@@ -38,16 +37,4 @@ object Pii {
     * selecting fields (the pqEncode discipline) so CollapseProject
     * cannot duplicate the scan per consumed field. */
   def scrub(text: Column): Column = call_function("pii_scrub", text)
-
-  def emailCount(text: Column): Column = regexp_count(text, lit(EmailPattern))
-  def phoneCount(text: Column): Column = regexp_count(text, lit(PhonePattern))
-  def ipCount(text: Column): Column = regexp_count(text, lit(Ipv4Pattern))
-
-  /** Composed-built-in mask — the reference semantics [[scrub]] fuses. */
-  def mask(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, EmailPattern, "<EMAIL>"),
-        Ipv4Pattern, "<IP>"),
-      PhonePattern, "<PHONE>")
 }

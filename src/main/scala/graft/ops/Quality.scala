@@ -39,7 +39,7 @@ object Quality {
     val boundedVars = Seq("temperature", "salinity").filter(df.columns.contains)
     val perVar = boundedVars.flatMap { v =>
       // DECIMAL(18,6) sum: order-independent exact accumulation so the
-      // mean is bit-identical across engines (see SparkEntry parity notes).
+      // mean is bit-identical across engines (see graft.queries.Parity).
       Seq(min(col(v)).as(s"min_$v"), max(col(v)).as(s"max_$v"),
           sum(col(v).cast(org.apache.spark.sql.types.DecimalType(18, 6)))
             .cast("double").as(s"sum_$v"),

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Similarity-search operators over embedding columns.
   *
   * Two regimes, as a 100 TB pipeline needs:
-  *  - [[cosineTopK]]: brute-force scan against ONE probe vector
-  *    (broadcast scalar + projection + TakeOrderedAndProject) — right
+  *  - brute-force scan against ONE probe vector (q27: [[cosine]]
+  *    with a broadcast probe + TakeOrderedAndProject) — right
   *    when probes are few; cost is one pass over the corpus.
   *  - [[bucketed]] + [[bucketJoin]]: random-hyperplane LSH code per
   *    vector, then many-to-many candidate generation via an equi-join
@@ -471,19 +471,5 @@ object Similarity {
       .select(col("probe_id"), col(idCol), col("centroid"),
         terms.reduceLeft(_ + _).as("adc"))
     TopK.perGroup(scored, Seq("probe_id"), "adc", idCol, k)
-  }
-
-  /** Brute-force top-k against one probe vector. */
-  def cosineTopK(emb: DataFrame, probeId: Long, k: Int,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val typed = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-    val probe = typed.filter(col(idCol) === probeId)
-      .select(col("v").as("qv"), sqrt(dot(col("v"), col("v"))).as("qnorm"))
-    typed.filter(col(idCol) =!= probeId).crossJoin(broadcast(probe))
-      .select(col(idCol),
-              (dot(col("v"), col("qv")) / (sqrt(dot(col("v"), col("v"))) * col("qnorm")))
-                .as("cosine"))
-      .orderBy(desc("cosine"), asc(idCol))
-      .limit(k)
   }
 }

@@ -93,19 +93,12 @@ object Text {
     * string, and the control classes are composition-invariant), then
     * controls become spaces so the collapse sees them. The space
     * stage is the native one-byte-scan
-    * [[graft.functions.CleanSpaces]]; [[cleanupComposed]] keeps the
-    * regexp built-in form as the reference semantics (TextSpec pins
-    * the equivalence), and its patterns stay in the Java≡RE2 subset
+    * [[graft.functions.CleanSpaces]]; TextSpec keeps the regexp
+    * built-in form as the reference semantics and pins the
+    * equivalence, and its patterns stay in the Java≡RE2 subset
     * so the DuckDB oracle (`nfc_normalize` + the same two regexps)
     * reproduces every byte. Pure per-row projection — zero
     * shuffles. */
   def cleanup(text: Column): Column =
     call_function("clean_spaces", nfc(text))
-
-  /** Composed-built-in cleanup — the reference semantics
-    * [[cleanup]]'s native space stage fuses. */
-  def cleanupComposed(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(nfc(text), "[\\x00-\\x1f\\x7f]", " "),
-      "  +", " "))
 }

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.SimilarityQueries.{bandedPairs, bandedStarEdges, minhashSigsFrame}
+
 /** Dev probe for the q60 scale claim: BSP round count tracks
   * component DIAMETER, not corpus size. Runs the exact q60 pipeline
   * (banded minhash pairs ≥ 0.5 → min-label components) against one or
@@ -16,10 +18,10 @@ object CcRounds {
       val t0 = System.nanoTime()
       val edges =
         if (form == "pairs")
-          graft.SparkEntry.bandedPairs(graft.SparkEntry.minhashSigsFrame(spark, dir))
+          bandedPairs(minhashSigsFrame(spark, dir))
             .filter(col("jaccard_est") >= 0.5)
         else
-          graft.SparkEntry.bandedStarEdges(graft.SparkEntry.minhashSigsFrame(spark, dir))
+          bandedStarEdges(minhashSigsFrame(spark, dir))
       val (labels, rounds) = graft.ops.ConnectedComponents.minLabelWithRounds(
         graft.core.Tables.documents(spark, dir), "doc_id", edges, "doc1", "doc2",
         maxIter = 50)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.core.GraftSession
+import graft.queries.Query
 
 /** Round-21 optimization evidence: dump `.explain("formatted")` for
   * every (or a filtered set of) SparkEntry query to one file per query
@@ -22,14 +23,10 @@ object ExplainDump {
     val outDir = args.headOption.getOrElse("plans/r21")
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val selected = graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.build("graft-explain-dump")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(f => f.exists(n.startsWith))
-    }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case Query(name, fn, _) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(

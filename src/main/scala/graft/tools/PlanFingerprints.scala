@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.core.GraftSession
+import graft.queries.Query
 
 /** Plan-shape fingerprints for the bench gate (r19 verdict item 7):
   * PlanSpec pins plan properties in ScalaTest, but the bench had no
@@ -57,17 +58,13 @@ object PlanFingerprints {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = args.headOption.getOrElse(
       s"/tmp/plan_fingerprints_${new java.io.File(sfDir).getName}.json")
+    val selected = graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.build("graft-plan-fingerprints")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(f => f.exists(n.startsWith))
-    }
 
     def jstr(s: String) =
       "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
 
-    val entries = selected.map { case (name, fn) =>
+    val entries = selected.map { case Query(name, fn, _) =>
       try {
         // shape() executes df's OWN QueryExecution so the adaptive
         // plan finalizes (a noop write would spawn a separate QE)

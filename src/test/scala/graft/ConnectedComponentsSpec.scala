@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ConnectedComponents
+import graft.queries.SimilarityQueries
 
 /** Min-label connected components: correctness on known graphs and
   * the convergence/caps behavior the iterative loop promises. */
@@ -69,8 +70,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
       ConnectedComponents.minLabel(nodes, "doc_id", edges, "doc1", "doc2")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaPairs = labels(
-      SparkEntry.bandedPairs(sigs).filter(col("jaccard_est") >= 0.5))
-    val viaStars = labels(SparkEntry.bandedStarEdges(sigs))
+      SimilarityQueries.bandedPairs(sigs).filter(col("jaccard_est") >= 0.5))
+    val viaStars = labels(SimilarityQueries.bandedStarEdges(sigs))
     assert(viaStars == viaPairs, "star edges must reproduce pairwise components")
     assert(viaStars == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 9L))
@@ -79,7 +80,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
     // band 1: {1,2,3}→(1,2),(1,3); {4,5}→(4,5); {6,7}→(6,7);
     // band 2: {3,4}→(3,4) — five edges for a 5-node component chain
     // plus a 2-clique, where the pairwise form emits 3+1+1+1 = 6
-    val starEdges = SparkEntry.bandedStarEdges(sigs).count()
+    val starEdges = SimilarityQueries.bandedStarEdges(sigs).count()
     assert(starEdges == 5, s"expected 5 star edges, got $starEdges")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +13,24 @@ import graft.ops.Dsir
   * structural (signs, ordering, exact re-computation) rather than
   * hand-derived constants. */
 class DsirSpec extends AnyFunSuite with SparkTestSession {
+
+  /** The pre-r19 HOF/relational scoring arm, kept as the A/B twin: the
+    * fused-scan test pins [[Dsir.withScores]] ≡ this row-for-row (same
+    * contract as NgramLm's scoreRows-vs-score pin), so the fused scan
+    * and the compositional form cannot drift. */
+  private def withScoresRelational(docs: DataFrame, model: Dsir.DsirModel,
+                                   textCol: String = "text"): DataFrame = {
+    val deltaLit = typedLit(model.delta)
+    val g = Dsir.grams(col(textCol))
+    docs
+      .withColumn("n_grams", size(g).cast("bigint"))
+      .withColumn("logw_micronats",
+        aggregate(g, lit(0L),
+          (acc, gram) => acc + element_at(deltaLit,
+            (Dsir.bucketOf(gram, model.buckets) + 1).cast("int")))
+        + col("n_grams") * lit(model.constPerGram))
+      .withColumn("selected", (col("logw_micronats") > 0).cast("bigint"))
+  }
   import spark.implicits._
 
   // target docs speak 'alpha beta', source docs 'gamma delta'
@@ -105,7 +123,7 @@ class DsirSpec extends AnyFunSuite with SparkTestSession {
       d.select("doc_id", "n_grams", "logw_micronats", "selected")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(_._1).toSeq
-    val relational = canon(Dsir.withScoresRelational(df, model))
+    val relational = canon(withScoresRelational(df, model))
     def withConfs(kvs: (String, String)*)(body: => Seq[Any]): Seq[Any] = {
       val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
       kvs.foreach { case (k, v) => spark.conf.set(k, v) }

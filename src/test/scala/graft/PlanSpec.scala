@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.SimilarityQueries
+
 /** Physical-plan audits: the properties that make these queries safe
   * at 100 TB, asserted so a regression (lost pushdown, broadcast
   * becoming a shuffle join, an accidental exchange in a map-only
@@ -72,7 +74,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     // returns the frame unchanged when it opts out) — a double spread
     // or an extra exchange in a non-spreading configuration both fail
     val docs = graft.core.Tables.documents(spark, dir)
-    val spreadFires = !(SparkEntry.spreadSmallScan(docs) eq docs)
+    val spreadFires = !(SimilarityQueries.spreadSmallScan(docs) eq docs)
     if (spreadFires) {
       assert(exchanges == 2, s"expected spread + final sort only, got $exchanges:\n$p")
       assert(p.contains("REPARTITION_BY_NUM") || p.contains("RoundRobinPartitioning"),
@@ -91,14 +93,14 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     val docs = graft.core.Tables.documents(spark, dir)
     val conf = spark.conf
     // under-filled scan + tiny payload → spreads (the r21 behavior)
-    val spread = SparkEntry.spreadSmallScan(docs)
+    val spread = SimilarityQueries.spreadSmallScan(docs)
     assert(spread.queryExecution.explainString(FormattedMode)
              .contains("REPARTITION_BY_NUM"),
            "small fixture scan no longer spreads")
     // same frame with the bound forced below its size → NO repartition
     conf.set("spark.graft.spread.maxBytes", "1")
     try {
-      val vetoed = SparkEntry.spreadSmallScan(docs)
+      val vetoed = SimilarityQueries.spreadSmallScan(docs)
       val p = vetoed.queryExecution.explainString(FormattedMode)
       assert(!p.contains("REPARTITION_BY_NUM") && !p.contains("RoundRobinPartitioning"),
              s"payload above the bytes bound still spread:\n$p")
@@ -122,7 +124,7 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     val df = spark.baseRelationToDataFrame(rel).union(spark.baseRelationToDataFrame(rel))
     assert(df.rdd.getNumPartitions * 2 <= spark.sparkContext.defaultParallelism,
       "precondition: the partition probe alone would spread this frame")
-    val out = SparkEntry.spreadSmallScan(df)
+    val out = SimilarityQueries.spreadSmallScan(df)
     val p = out.queryExecution.explainString(FormattedMode)
     assert((out eq df) && !p.contains("RoundRobinPartitioning"),
       s"Long.MaxValue leaves slipped under the bytes veto:\n$p")
@@ -167,8 +169,8 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     // key plus a doc inequality) would be quadratic in bucket size
     // and is exactly what a mega-dup-group at corpus scale cannot
     // survive.
-    val edges = SparkEntry.bandedStarEdges(
-      SparkEntry.minhashSigsFrame(spark, dir))
+    val edges = SimilarityQueries.bandedStarEdges(
+      SimilarityQueries.minhashSigsFrame(spark, dir))
     val p = edges.queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct"), s"all-pairs join detected:\n$p")
     // the join's build/right side must come through the hub aggregate:

@@ -493,7 +493,7 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     import java.io.File
     import scala.jdk.CollectionConverters._
     val root = new File("src/main/scala/graft")
-    val dirs = Seq("ops", "functions", "streaming", "pipeline", "sources", "cache", "core")
+    val dirs = Seq("ops", "functions", "streaming", "pipeline", "sources", "cache", "core", "queries")
       .map(new File(root, _))
     assert(dirs.forall(_.isDirectory), s"source dirs missing under ${root.getAbsolutePath}")
     def scalaFiles(f: File): Seq[File] =

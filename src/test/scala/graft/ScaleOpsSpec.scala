@@ -313,7 +313,7 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestSession {
         (expr("id div 2") * 19 + 4000000L).as("mh4"))
       val sigs = mega.union(pairs).localCheckpoint()
 
-      val edges = graft.SparkEntry.bandedStarEdges(sigs).localCheckpoint()
+      val edges = graft.queries.SimilarityQueries.bandedStarEdges(sigs).localCheckpoint()
       // star, not clique: edge count is linear in bucket size
       assert(edges.count() == (members - 1) + 2000,
         "star generator emitted a non-linear edge count")

