@@ -250,7 +250,7 @@ object RunCorpus {
             // unpersist() only clears cache-manager entries; the
             // localCheckpoint's RDD blocks live outside it, so go
             // through the shared release helper
-            graft.streaming.EventStreams.releaseFrozenFrame(served)
+            graft.streaming.LandingGuard.releaseFrozenFrame(served)
           val landed = spark.read.parquet(out)
           val n = landed.count()
           val toks = landed.agg(org.apache.spark.sql.functions.sum("n_tokens"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.core.GraftSession
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, LandingMaintenance}
 
 /** CLI driving the composed streaming ingest
   * ([[graft.streaming.EventStreams.ingestPipeline]]) — the streaming
@@ -39,20 +39,20 @@ import graft.streaming.EventStreams
   * created and keep it.
   *
   * `--compact` is the maintenance form: no stream, just
-  * [[graft.streaming.EventStreams.compactLanding]] on `--corpus` —
+  * [[graft.streaming.LandingMaintenance.compactLanding]] on `--corpus` —
   * rewrite the accreted per-batch part files down to `--target-files`
   * (default 4) between stream sessions. Refused (exit 1) while an
   * in-JVM ingest stream holds the landing.
   *
   * `--repair` is the crash-recovery form:
-  * [[graft.streaming.EventStreams.repairLanding]] on `--corpus` —
+  * [[graft.streaming.LandingMaintenance.repairLanding]] on `--corpus` —
   * finish or roll back compaction swaps a crash left half-done
   * (restore aside dirs whose target vanished, finish manifest-proven
   * completed swaps, sweep tmp debris). Exit 1 when an aside dir needs
   * a human decision (its target exists without a matching manifest).
   *
   * `--expire` is the retention form:
-  * [[graft.streaming.EventStreams.expireLanding]] on `--corpus` —
+  * [[graft.streaming.LandingMaintenance.expireLanding]] on `--corpus` —
   * drop every `--partition-col NAME` partition dir whose value sorts
   * strictly before `--before VALUE` (string compare; exact for ISO
   * months/dates and zero-padded numerics). Same single-writer
@@ -248,7 +248,7 @@ object RunIngest {
             case Right(tp) => tp
           }
         return failing {
-          val s = EventStreams.compactLanding(spark, opts("corpus"), target, leafPar)
+          val s = LandingMaintenance.compactLanding(spark, opts("corpus"), target, leafPar)
           if (s.rows < 0L)
             println(s"[ingest] compaction no-op: ${s.filesBefore} file(s) already <= $target")
           else
@@ -258,7 +258,7 @@ object RunIngest {
           0
         }
       case Some("stats") => return failing {
-        val s = EventStreams.landingStats(spark, opts("corpus"))
+        val s = LandingMaintenance.landingStats(spark, opts("corpus"))
         println(f"[ingest] ${opts("corpus")}: ${s.totalFiles} visible file(s), " +
           f"${s.totalBytes / 1e6}%.1f MB across ${s.leaves.size} dir(s)" +
           (if (s.lockHeld) " — MAINTENANCE LOCK HELD" else "") +
@@ -273,7 +273,7 @@ object RunIngest {
         0
       }
       case Some("repair") => return failing {
-        val s = EventStreams.repairLanding(spark, opts("corpus"))
+        val s = LandingMaintenance.repairLanding(spark, opts("corpus"))
         println(s"[ingest] repair of ${opts("corpus")}: ${s.oldsRestored} aside " +
           s"dir(s) restored, ${s.oldsDeleted} completed swap(s) finished, " +
           s"${s.tmpsDeleted} tmp dir(s) and ${s.manifestsCleaned} manifest(s) swept")
@@ -286,7 +286,7 @@ object RunIngest {
         } else 0
       }
       case Some("expire") => return failing {
-        val s = EventStreams.expireLanding(
+        val s = LandingMaintenance.expireLanding(
           spark, opts("corpus"), opts("partition-col"), opts("before"))
         if (s.dirsDropped == 0)
           println(s"[ingest] expiry no-op: no ${opts("partition-col")}= dir sorts " +

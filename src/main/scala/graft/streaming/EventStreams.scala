@@ -217,17 +217,18 @@ object EventStreams {
   // (counts + blooms) only ACCELERATES the confirm: dropping any of it
   // costs one reseed scan, never exactness.
   //
-  // File-count hygiene: each append is repartitioned to `appendFiles`
-  // part files (default 4) before the write. Without it a micro-batch
+  // File-count hygiene: each append is repartitioned to `AppendFiles`
+  // (4) part files before the write. Without it a micro-batch
   // writes one file per shuffle partition (32 here), so a long-running
   // ingest accretes batches×32 tiny files and every confirm/reseed
   // scan pays per-file open cost that grows with STREAM AGE rather
   // than data size — the soak probe (tools/IngestSoakProbe) measured
   // that accretion dominating per-batch time within ~10 batches at
   // test scale. The repartition is a batch-sized shuffle (bounded by
-  // the micro-batch, never the corpus); raise `appendFiles` for very
-  // large micro-batches.
+  // the micro-batch, never the corpus); what accretes with batch
+  // COUNT is [[LandingMaintenance.compactLanding]]'s to rewrite.
   // =====================================================================
+  private val AppendFiles = 4
 
   /** Landed-corpus row counts carried across micro-batches, keyed by
     * landing dir — exposed so StreamingSpec can pin that the count
@@ -283,46 +284,36 @@ object EventStreams {
   private[graft] val carries =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, CarriedBloom]]()
 
-  private def carriesOf(landingDir: String): Map[String, CarriedBloom] =
+  private[streaming] def carriesOf(landingDir: String): Map[String, CarriedBloom] =
     carries.getOrDefault(landingDir, Map.empty)
 
   private[graft] def carryOf(landingDir: String, stage: String): Option[CarriedBloom] =
     carriesOf(landingDir).get(stage)
 
   /** Replace the landing's carries; an empty set removes its entry. */
-  private def setCarries(landingDir: String, m: Map[String, CarriedBloom]): Unit =
+  private[streaming] def setCarries(landingDir: String, m: Map[String, CarriedBloom]): Unit =
     if (m.isEmpty) carries.remove(landingDir) else carries.put(landingDir, m)
 
-  /** One canonical form per physical landing dir — `makeQualified`
-    * resolves scheme/authority/trailing-slash spellings ('/a/b/',
-    * 'file:/a/b') to one string, so the per-landing state maps and the
-    * single-writer guard cannot be split or bypassed by a path alias
-    * (two spellings of one dir would otherwise run two "independent"
-    * carries that invalidate each other's folds every batch). Every
-    * public ingest entry normalizes ONCE; all internal state and I/O
-    * use the canonical form. */
-  private[graft] def landingKey(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  private def landingParts(spark: SparkSession, landingDir: String): Seq[String] =
+  private[streaming] def landingParts(spark: SparkSession, landingDir: String): Seq[String] =
     graft.core.Tables.listing(spark, landingDir)
 
-  private def fpOf(parts: Seq[String]): String = parts.mkString(";")
+  private[streaming] def fpOf(parts: Seq[String]): String = parts.mkString(";")
 
   // ---------- append validation (the fold's TOCTOU guard) ----------
 
   /** `path` of a `path:len:mtime` listing part (len/mtime stripped). */
-  private def partPath(part: String): String = {
+  private[streaming] def partPath(part: String): String = {
     val i = part.lastIndexOf(':')
     part.substring(0, part.lastIndexOf(':', i - 1))
   }
 
-  private def isVisible(part: String): Boolean = {
-    val p = partPath(part)
-    val base = p.substring(p.lastIndexOf('/') + 1)
-    !(base.startsWith("_") || base.startsWith("."))
+  /** A part listed under dir `root` is landing data iff no path
+    * segment below `root` is hidden ([[LandingGuard.isHidden]]): a
+    * killed task's `_temporary/…/part-*` is not. The fingerprint still
+    * hashes every file, so such a leftover forces a reseed. */
+  private[streaming] def visibleUnder(root: String): String => Boolean = {
+    val rootPath = new org.apache.hadoop.fs.Path(root).toUri.getPath
+    part => !partPath(part).stripPrefix(rootPath).split('/').exists(LandingGuard.isHidden)
   }
 
   /** `part-<split>-<job-uuid>…` — every file one Spark write job
@@ -346,18 +337,20 @@ object EventStreams {
     * file even for a zero-row append (verified against this repo's
     * Spark 4.1.2) — an all-duplicate micro-batch must not cost the
     * carries. The caller then confirms the delta is actually ROWLESS
-    * ([[deltaPaths]] + a one-file read): a rowless file is harmless
+    * ([[validAppend]]: a one-file read): a rowless file is harmless
     * whoever wrote it (no rows means nothing the blobs could be
     * missing), while a foreign DATA file masquerading as ours fails
     * the row check and drops the carry. Hidden files (`_SUCCESS`,
-    * checksums) are ignored: the scans that define corpus content
-    * never read them. Conservative by design: anything unexpected
-    * returns false and the caller drops the carry — one reseed scan,
-    * never staleness. */
+    * checksums, anything under `_temporary`) are ignored: the scans
+    * that define corpus content never read them. `root` is the listed
+    * dir ([[visibleUnder]]; the default counts every segment).
+    * Conservative by design: anything unexpected returns false and
+    * the caller drops the carry — one reseed scan, never staleness. */
   private[graft] def appendOnlyDelta(pre: Seq[String], post: Seq[String],
-                                     appendedRows: Long): Boolean = {
-    val preV = pre.filter(isVisible).toSet
-    val postV = post.filter(isVisible).toSet
+                                     appendedRows: Long, root: String = "/"): Boolean = {
+    val visible = visibleUnder(root)
+    val preV = pre.filter(visible).toSet
+    val postV = post.filter(visible).toSet
     preV.subsetOf(postV) && {
       val delta = (postV -- preV).toSeq
       val uuids = delta.map { part =>
@@ -372,31 +365,32 @@ object EventStreams {
     }
   }
 
-  /** The visible delta's file paths (for the zero-row rowless read). */
-  private def deltaPaths(pre: Seq[String], post: Seq[String]): Seq[String] = {
-    val preV = pre.filter(isVisible).toSet
-    post.filter(isVisible).filterNot(preV).map(partPath)
-  }
-
-  /** True iff the delta files hold zero rows in total — the harmless
-    * shape a zero-row append leaves behind. Any read failure counts
-    * as rows (conservative: drop the carry, reseed next batch). The
+  /** The fold's and the seed's one append check: [[appendOnlyDelta]]
+    * and, for a zero-row append, a visible delta whose files hold zero
+    * rows in total — the harmless shape a zero-row append leaves
+    * behind. Any read failure counts as rows (conservative: drop the
+    * carry, reseed next batch). The
     * listing stores SCHEME-STRIPPED paths (fingerprint stability), so
     * they are re-qualified against the LANDING's filesystem — read
     * against the default FS, a landing on s3a/hdfs would fail the
     * read and silently drop the carries on every zero-row fold,
     * forcing the O(corpus) reseed the carry design exists to avoid. */
-  private def deltaRowless(spark: SparkSession, landingDir: String,
-                           paths: Seq[String]): Boolean =
-    paths.isEmpty || {
-      try {
-        val fs = new org.apache.hadoop.fs.Path(landingDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val qualified = paths.map(p =>
-          fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
-        spark.read.parquet(qualified: _*).isEmpty
-      } catch { case _: Throwable => false }
-    }
+  private def validAppend(spark: SparkSession, landingDir: String, pre: Seq[String],
+                          post: Seq[String], appendedRows: Long): Boolean =
+    appendOnlyDelta(pre, post, appendedRows, landingDir) && (appendedRows > 0L || {
+      val visible = visibleUnder(landingDir)
+      val preV = pre.filter(visible).toSet
+      val paths = post.filter(visible).filterNot(preV).map(partPath)
+      paths.isEmpty || {
+        try {
+          val fs = new org.apache.hadoop.fs.Path(landingDir)
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val qualified = paths.map(p =>
+            fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
+          spark.read.parquet(qualified: _*).isEmpty
+        } catch { case _: Throwable => false }
+      }
+    })
 
   /** Test seam: invoked after a batch's append returns and BEFORE the
     * fold re-lists the landing — the exact window the validated fold
@@ -417,10 +411,7 @@ object EventStreams {
                           landedCount: Long,
                           observed: Map[String, Array[Byte]]): Unit = {
     val postParts = landingParts(spark, landingDir)
-    val clean = appendOnlyDelta(preParts, postParts, appendedRows) &&
-      (appendedRows > 0L ||
-        deltaRowless(spark, landingDir, deltaPaths(preParts, postParts)))
-    if (!clean) {
+    if (!validAppend(spark, landingDir, preParts, postParts, appendedRows)) {
       // an unexplained delta poisons EVERY carry on this landing, not
       // just the folding mode's
       carries.remove(landingDir)
@@ -455,10 +446,7 @@ object EventStreams {
                              fresh: DataFrame, landedCount: Long,
                              stages: Seq[DedupStage]): Unit = {
     val post = landingParts(spark, landingDir)
-    val clean = appendOnlyDelta(Seq.empty, post, landedCount) &&
-      (landedCount > 0L ||
-        deltaRowless(spark, landingDir, deltaPaths(Seq.empty, post)))
-    if (!clean) return
+    if (!validAppend(spark, landingDir, Seq.empty, post, landedCount)) return
     val fp = fpOf(post)
     val cap = math.max(landedCount, 1L) * 4
     setCarries(landingDir, stages.map(s => s.name -> s.buildCarry(fresh, cap, fp)).toMap)
@@ -480,11 +468,11 @@ object EventStreams {
     * discipline (only a genuinely-absent dir means "first batch") are
     * shared here — see [[ingestDedup]] for the full contracts. */
   private def runIngestStream(docs: DataFrame, landingDir: String,
-                              checkpointDir: String, appendFiles: Int,
+                              checkpointDir: String,
                               partitionCols: Seq[String],
                               stages: Seq[DedupStage], obsPrefix: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-  startGuarded(docs.sparkSession, landingDir) {
+  LandingGuard.startGuarded(docs.sparkSession, landingDir) { _ =>
     // Landed row count carried across batches: seeded ONCE (first
     // batch that finds an existing dir — one metadata count), then
     // advanced by each batch's observed append size — never a
@@ -495,7 +483,7 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        heartbeatIngestLock(landingDir)
+        LandingGuard.heartbeatIngestLock(landingDir)
         // Only a genuinely-absent landing dir means "first batch".
         // Any other read failure (transient IO, corrupt footer,
         // permissions) must fail the batch so the retry re-runs WITH
@@ -531,7 +519,7 @@ object EventStreams {
               // full-dir relation (whose InMemoryFileIndex re-lists
               // the whole landing — on a 100k-file landing that
               // doubled every clean batch's metadata cost)
-              val schemaSrc = pre.find(isVisible) match {
+              val schemaSrc = pre.find(visibleUnder(landingDir)) match {
                 case Some(part) => spark.read.parquet(partPath(part))
                 case None       => spark.read.parquet(landingDir)
               }
@@ -581,7 +569,7 @@ object EventStreams {
           val folding = stages.flatMap(s => carryOf(landingDir, s.name).map(c => (s, c.bits)))
           val metrics = count(lit(1)).as("n") +: folding.flatMap { case (s, bits) =>
             DedupStage.keyAggs(s.name, s.keys, bits) }
-          appendToLanding(fresh, landingDir, appendFiles, partitionCols, obs, metrics)
+          appendToLanding(fresh, landingDir, partitionCols, obs, metrics)
           postAppendHook(landingDir, batchId)
           val observed = obs.get
           val appended = observed("n").asInstanceOf[Long]
@@ -598,1192 +586,27 @@ object EventStreams {
       .start()
   }
 
-  // ---------- single-writer guard ----------
-
-  private[graft] final class IngestReg(val owner: SparkSession) {
-    @volatile var runId: java.util.UUID = null
-  }
-
-  /** Active ingest streams keyed by landing dir. All carried state
-    * above is keyed by landing dir and tolerates exactly ONE writer:
-    * two concurrent streams would interleave counter updates and bloom
-    * folds, silently corrupting dedup state. Entries self-clear — a
-    * registration whose query is no longer active is taken over by the
-    * next starter. */
-  private[graft] val activeIngests =
-    new java.util.concurrent.ConcurrentHashMap[String, IngestReg]()
-
-  /** Take the landing's single-writer slot or throw. A registration
-    * with `runId == null` counts as active — that is both a stream
-    * between registration and start, and a [[compactLanding]] run,
-    * which holds the slot for its whole duration. A registration
-    * whose stream is no longer active is stale and taken over. */
-  private def acquireLanding(spark: SparkSession, landingDir: String): IngestReg = {
-    val mine = new IngestReg(spark)
-    var placed = false
-    while (!placed) {
-      val cur = activeIngests.putIfAbsent(landingDir, mine)
-      if (cur == null) placed = true
-      else {
-        val stillActive = cur.runId == null ||
-          cur.owner.streams.active.exists(_.runId == cur.runId)
-        if (stillActive)
-          throw new IllegalStateException(
-            s"an ingest stream or compaction is already active on landing dir '$landingDir'; " +
-            "the carried dedup state (landed counts + blooms) is keyed by landing " +
-            "dir and tolerates exactly one writer — stop the existing writer first")
-        placed = activeIngests.replace(landingDir, cur, mine)
-      }
-    }
-    mine
-  }
-
-  // ---------- cross-JVM ingest writer lock ----------
-
-  /** Heartbeat staleness threshold for [[acquireIngestLock]] takeover
-    * (test seam — production default 30 min, generously above any
-    * sane micro-batch interval so a slow batch never loses its
-    * landing to a takeover). */
-  private[graft] var ingestLockStaleMs: Long = 30L * 60 * 1000
-
-  private[graft] final class IngestLock(
-      val fs: org.apache.hadoop.fs.FileSystem,
-      val path: org.apache.hadoop.fs.Path) {
-    @volatile var runId: java.util.UUID = null
-  }
-
-  /** Live file locks of this JVM's active ingest streams, keyed by
-    * canonical landing dir. */
-  private val ingestLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, IngestLock]()
-  /** Stream runId → landing key, so the termination listener can
-    * release the right lock. */
-  private val lockByRun =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
-  /** Stream runId → the gate's frozen-state cleanups (unpersist the
-    * decon confirm set / the quality gate's checkpointed LM, destroy
-    * its probe-map broadcast), drained by the termination listener —
-    * without this a stopped gate's frozen state holds executor
-    * storage for the session lifetime (r17 verdict #7). */
-  private val frozenByRun =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, List[() => Unit]]()
-
-  /** Run one frozen-state cleanup, swallowing failures — cleanup must
-    * never fail a terminating stream. */
-  private def runCleanup(f: () => Unit): Unit =
-    try f() catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Release one frozen frame: the cache-manager entry (persist) and,
-    * for a localCheckpoint'd frame, the underlying checkpointed RDD's
-    * blocks (which live OUTSIDE the cache manager — `unpersist` on the
-    * Dataset alone would leak them). Best-effort: release must never
-    * fail a terminating stream. Shared across the repo: any
-    * localCheckpoint'd frame (e.g. RunCorpus fetch-shard serving)
-    * must release through here, not bare `unpersist`. */
-  private[graft] def releaseFrozenFrame(df: DataFrame): Unit = {
-    try { df.unpersist(false); () }
-    catch { case scala.util.control.NonFatal(_) => () }
-    try df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  private def frameCleanup(df: DataFrame): () => Unit =
-    () => releaseFrozenFrame(df)
-
-  /** Install a gate's frozen-state cleanups under the started query's
-    * runId, then re-check liveness: the termination listener fires
-    * asynchronously, so a query that died during startup can have
-    * terminated BEFORE the put — its listener event found nothing to
-    * drain, and the entry would leak for the session lifetime. The
-    * atomic remove makes whichever side wins run the cleanups exactly
-    * once. */
-  private def registerFrozen(q: org.apache.spark.sql.streaming.StreamingQuery,
-                             frozen: List[() => Unit]): Unit =
-    if (frozen.nonEmpty) {
-      frozenByRun.put(q.runId, frozen)
-      if (!q.isActive) {
-        val f = frozenByRun.remove(q.runId)
-        if (f != null) f.foreach(runCleanup)
-      }
-    }
-  private val lockListenerSessions: java.util.Set[SparkSession] =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  private def ingestLockFile(landingPath: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.Path = {
-    val parent = landingPath.getParent
-    require(parent != null,
-      s"landing '$landingPath' has no parent dir to hold the writer lock")
-    new org.apache.hadoop.fs.Path(parent, s".ingest-writer-lock-${landingPath.getName}")
-  }
-
-  private def lockOwnerPid(fs: org.apache.hadoop.fs.FileSystem,
-                           lock: org.apache.hadoop.fs.Path): Option[Long] =
-    try {
-      val in = fs.open(lock)
-      try {
-        // read to EOF — a single read() may legally return a PREFIX
-        // (remote-FS streams), and a truncated pid would misclassify
-        // a live owner as dead
-        val buf = new java.io.ByteArrayOutputStream(64)
-        val chunk = new Array[Byte](64)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        val s = buf.toString("UTF-8").trim
-        if (s.isEmpty) None else Some(s.toLong)
-      } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def pidAliveElsewhere(pid: Long, self: Long): Boolean =
-    pid != self && {
-      val h = java.lang.ProcessHandle.of(pid)
-      h.isPresent && h.get.isAlive
-    }
-
-  /** What the writer-lock file says about its owner right now. */
-  private final case class LockOwnerState(
-      pid: Option[Long], aliveElsewhere: Boolean, fresh: Boolean, mtime: Long)
-
-  private def lockOwnerState(fs: org.apache.hadoop.fs.FileSystem,
-                             lock: org.apache.hadoop.fs.Path): Option[LockOwnerState] =
-    try {
-      val st = fs.getFileStatus(lock)
-      val pid = lockOwnerPid(fs, lock)
-      val self = java.lang.ProcessHandle.current().pid()
-      Some(LockOwnerState(pid,
-        pid.exists(p => pidAliveElsewhere(p, self)),
-        System.currentTimeMillis() - st.getModificationTime <= ingestLockStaleMs,
-        st.getModificationTime))
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case scala.util.control.NonFatal(_) =>
-        // The judge failed for a reason OTHER than absence (transient
-        // IO, permissions): refuse by default. fresh + unreadable pid
-        // is exactly the shape lockRefusesUs honors, so an fs hiccup
-        // can never license a takeover — nor let maintenance run under
-        // a possibly-live writer. mtime = -1 also makes
-        // deleteIfUnchanged a guaranteed no-op on this state.
-        Some(LockOwnerState(None, aliveElsewhere = false, fresh = true, mtime = -1L))
-    }
-
-  /** The ONE takeover policy, shared by ingest starters and
-    * maintenance so the two sides of the exclusion can never
-    * disagree: an existing lock is honored (refused) iff its
-    * heartbeat is fresh AND it names a live foreign process or its
-    * pid is unreadable (a writer mid-create). Everything else — own
-    * leftover, provably dead pid, stale heartbeat — is takeover-able. */
-  private def lockRefusesUs(st: LockOwnerState): Boolean =
-    st.fresh && (st.aliveElsewhere || st.pid.isEmpty)
-
-  /** Clear `lock` only if it still looks like the version judged
-    * takeover-able (same mtime): a rival that already swapped in its
-    * own FRESH lock must not lose it to our late delete. Returns true
-    * when the judged lock no longer blocks us (deleted, or already
-    * vanished — its owner released); false when a DIFFERENT version
-    * appeared. The re-stat-to-delete gap is the residual race (vs the
-    * previous unbounded judge-to-delete gap); mtime granularity
-    * bounds it further and the fingerprint reseed remains the last
-    * line. */
-  private def deleteIfUnchanged(fs: org.apache.hadoop.fs.FileSystem,
-                                lock: org.apache.hadoop.fs.Path,
-                                judgedMtime: Long): Boolean =
-    (try Some(fs.getFileStatus(lock).getModificationTime)
-     catch { case _: java.io.FileNotFoundException => None }) match {
-      case None => true
-      case Some(m) => m == judgedMtime && { fs.delete(lock, false); true }
-    }
-
-  /** Release a lock this process believes it owns: delete only while
-    * the file still NAMES this pid — after a cross-JVM takeover the
-    * file names the new owner and a late clean-stop release must not
-    * clobber it. Best-effort. */
-  private def releaseOwnLock(fs: org.apache.hadoop.fs.FileSystem,
-                             lock: org.apache.hadoop.fs.Path): Unit =
-    try {
-      if (lockOwnerPid(fs, lock).contains(java.lang.ProcessHandle.current().pid())) {
-        fs.delete(lock, false); ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Take the landing's cross-JVM writer lock or throw — the other
-    * half of the single-writer contract (the in-JVM slot cannot see
-    * another PROCESS; before round 15 a second-JVM ingest was only
-    * absorbed after the fact by the fingerprint-reseed discipline,
-    * which repairs carries but cannot stop two writers interleaving
-    * appends). Create-exclusive `.ingest-writer-lock-<name>` beside
-    * the landing, pid inside, mtime refreshed each micro-batch
-    * ([[heartbeatIngestLock]]). An existing lock is taken over only
-    * when (a) it names THIS pid (a stopped/crashed stream of this
-    * process — the in-JVM slot, already acquired, is the authority
-    * here), (b) its pid is provably dead (`ProcessHandle.of` —
-    * meaningful on a local fs; on a multi-host shared fs a foreign
-    * host's pid number can false-alias a live local process, which
-    * only DELAYS takeover to rule c), or (c) its heartbeat mtime is
-    * older than [[ingestLockStaleMs]]. Otherwise: loud refusal naming
-    * the file.
-    *
-    * HONEST takeover window: the stale-check-then-delete-then-create
-    * is not atomic. Two starters racing a stale lock can both judge
-    * it stale; the delete is therefore guarded by a re-stat
-    * ([[deleteIfUnchanged]] — only the judged VERSION is deleted, so
-    * a rival's already-swapped-in fresh lock survives and the loser's
-    * next create is refused against it), leaving mtime granularity as
-    * the residual sliver. The remaining real hazard is a
-    * live-but-paused writer (GC pause / suspended VM longer than the
-    * threshold): it loses the lock and its next heartbeat silently
-    * recreates it, leaving two writers until its next fingerprint
-    * check reseeds — takeover trades that bounded window for crash
-    * recovery without operator intervention. A fresh
-    * `.maintenance-lock` is refused symmetrically, and the ingest
-    * lock is re-checked against it after creation (either order of
-    * the two creations leaves at most one owner). */
-  private def acquireIngestLock(spark: SparkSession, landingDir: String): IngestLock = {
-    val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = landingPath.getParent
-    require(parent != null,
-      s"landing '$landingPath' has no parent dir to hold the writer lock")
-    if (!fs.exists(parent)) fs.mkdirs(parent)
-    val mLock = new org.apache.hadoop.fs.Path(
-      parent, s".maintenance-lock-${landingPath.getName}")
-    def refuseIfMaintenance(): Unit =
-      if (fs.exists(mLock))
-        throw new IllegalStateException(
-          s"maintenance lock '$mLock' exists — a maintenance run (possibly in " +
-          "another JVM) owns this landing, or a previous one crashed; an ingest " +
-          "stream must not start under it. After confirming nothing is running, " +
-          "delete the lock file and retry")
-    refuseIfMaintenance()
-    val lock = ingestLockFile(landingPath)
-    val self = java.lang.ProcessHandle.current().pid()
-    var out: org.apache.hadoop.fs.FSDataOutputStream = null
-    var attempts = 0
-    while (out == null) {
-      attempts += 1
-      try out = fs.create(lock, false)
-      catch {
-        case e: java.io.IOException =>
-          if (attempts > 3)
-            throw new IllegalStateException(
-              s"could not acquire ingest writer lock '$lock' after $attempts attempts", e)
-          lockOwnerState(fs, lock).foreach { st =>
-            if (lockRefusesUs(st))
-              throw new IllegalStateException(
-                s"ingest writer lock '$lock' is held by pid ${st.pid.getOrElse("?")} " +
-                s"with a fresh heartbeat — another ingest stream (in another JVM) " +
-                "is writing this landing; the carried dedup state tolerates " +
-                "exactly one writer. Stop that stream first, or wait out the " +
-                s"heartbeat staleness window (${ingestLockStaleMs / 1000} s)")
-            // delete only the judged version — a rival's fresh
-            // replacement survives, and our next create is refused
-            // against it
-            deleteIfUnchanged(fs, lock, st.mtime)
-          }
-      }
-    }
-    // a failure between create-exclusive and close would otherwise
-    // orphan an unreadable-pid lock that blocks every foreign starter
-    // for the full staleness window
-    try { out.write(self.toString.getBytes("UTF-8")); out.close() }
-    catch {
-      case t: Throwable =>
-        try { fs.delete(lock, false); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw t
-    }
-    try refuseIfMaintenance()
-    catch {
-      case t: Throwable => fs.delete(lock, false); throw t
-    }
-    new IngestLock(fs, lock)
-  }
-
-  /** Refresh the writer lock's heartbeat mtime (called at the top of
-    * every micro-batch). Best-effort for fs HICCUPS (a lock-metadata
-    * read/write error must not fail a data batch), but a POSITIVE
-    * foreign-pid reading is a fence, not a hiccup: after a cross-JVM
-    * takeover the file names the new owner, and the displaced
-    * writer's heartbeat must neither refresh nor recreate it — doing
-    * so would silently extend the documented two-writer window
-    * forever. Instead the displaced writer fails its batch loudly
-    * (stopping its stream), which CLOSES the live-but-paused-writer
-    * window described on [[acquireIngestLock]]. The file is recreated
-    * only when it is absent AND no maintenance lock holds the landing:
-    * absence can mean operator deletion (no rival — safe to recreate)
-    * but ALSO a maintenance takeover of this writer's stale heartbeat
-    * (withMaintenanceLock clears a judged-stale ingest lock before
-    * compacting), and recreating under live compaction would be the
-    * same two-writer interleaving via the other rival — that case
-    * fences too. */
-  private def heartbeatIngestLock(landingDir: String): Unit = {
-    val h = ingestLocks.get(landingDir)
-    if (h != null) {
-      val self = java.lang.ProcessHandle.current().pid()
-      var fence: String = null
-      try {
-        if (h.fs.exists(h.path)) {
-          lockOwnerPid(h.fs, h.path) match {
-            case Some(p) if p != self =>
-              fence = s"ingest writer lock '${h.path}' now names a different " +
-                "pid — this writer was fenced by a cross-JVM takeover (its " +
-                "heartbeat went stale, or an operator forced the lock)"
-            case Some(_) =>
-              h.fs.setTimes(h.path, System.currentTimeMillis(), -1)
-            case None => () // unreadable mid-write: skip, next batch retries
-          }
-        } else {
-          val name = h.path.getName.stripPrefix(".ingest-writer-lock-")
-          val mLock = new org.apache.hadoop.fs.Path(
-            h.path.getParent, s".maintenance-lock-$name")
-          if (h.fs.exists(mLock))
-            fence = s"ingest writer lock '${h.path}' is gone and maintenance " +
-              s"lock '$mLock' is held — this writer's stale heartbeat was " +
-              "taken over by a maintenance run; recreating the lock would " +
-              "write into the landing mid-swap"
-          else {
-            val o = h.fs.create(h.path, true)
-            o.write(self.toString.getBytes("UTF-8"))
-            o.close()
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-      if (fence != null)
-        throw new IllegalStateException(
-          s"$fence; failing the batch instead of writing alongside the rival")
-    }
-  }
-
-  /** One listener per session releases writer locks on clean stream
-    * termination (crash release is the takeover rule's job). Deletes
-    * only the lock its own run still owns — the in-JVM map guard
-    * covers same-process replacement, and [[releaseOwnLock]]'s pid
-    * check covers a CROSS-JVM takeover (the on-disk file then names
-    * the new owner and must survive our late release). */
-  private def ensureLockReleaseListener(spark: SparkSession): Unit =
-    if (lockListenerSessions.add(spark))
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-          override def onQueryTerminated(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = {
-            val key = lockByRun.remove(e.runId)
-            if (key != null) {
-              val h = ingestLocks.get(key)
-              if (h != null && h.runId == e.runId && ingestLocks.remove(key, h))
-                releaseOwnLock(h.fs, h.path)
-            }
-            val frozen = frozenByRun.remove(e.runId)
-            if (frozen != null) frozen.foreach(runCleanup)
-          }
-        })
-
-  /** Refuse to start a second active ingest stream on a landing dir
-    * (loud error, pinned by StreamingSpec) — the in-JVM slot catches
-    * same-process writers; the `.ingest-writer-lock` file
-    * ([[acquireIngestLock]], round 15) catches writers in OTHER
-    * processes, with heartbeat-mtime staleness + dead-pid takeover.
-    * The fingerprint/validated-fold discipline remains the last line
-    * for whatever slips the locks (reseed, never staleness). */
-  private def startGuarded(spark: SparkSession, landingDir: String)
-      (start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val mine = acquireLanding(spark, landingDir)
-    val flock =
-      try acquireIngestLock(spark, landingDir)
-      catch {
-        case t: Throwable => activeIngests.remove(landingDir, mine); throw t
-      }
-    ensureLockReleaseListener(spark)
-    ingestLocks.put(landingDir, flock)
-    try {
-      val q = start
-      mine.runId = q.runId
-      flock.runId = q.runId
-      lockByRun.put(q.runId, landingDir)
-      // re-check liveness after the put (the registerFrozen
-      // discipline): a query that dies DURING startup can fire
-      // onQueryTerminated before the put — the listener then found
-      // nothing to release and the on-disk writer lock would block
-      // other JVMs for the full staleness window. The atomic removes
-      // make whichever side wins release exactly once.
-      if (!q.isActive) {
-        val key = lockByRun.remove(q.runId)
-        if (key != null) {
-          val h = ingestLocks.get(key)
-          if (h != null && h.runId == q.runId && ingestLocks.remove(key, h))
-            releaseOwnLock(h.fs, h.path)
-        }
-      }
-      q
-    } catch {
-      case t: Throwable =>
-        activeIngests.remove(landingDir, mine)
-        if (ingestLocks.remove(landingDir, flock))
-          releaseOwnLock(flock.fs, flock.path)
-        throw t
-    }
-  }
-
-  // ---------- landing compaction ----------
-
-  /** What [[compactLanding]] did. `rows` is −1 on the no-op path (the
-    * landing was already at or under `targetFiles`; nothing was read).
-    * `carriesKept` is false iff a carried bloom existed and had to be
-    * dropped (stale fingerprint — it was due a reseed anyway). */
-  final case class CompactStats(
-    filesBefore: Int, filesAfter: Int, rows: Long, carriesKept: Boolean)
-
-  /** Cross-JVM maintenance exclusion: an exclusive lock FILE beside
-    * the landing (`.maintenance-lock-<name>` in its parent dir). The
-    * in-JVM single-writer slot cannot see another PROCESS — a cron'd
-    * `--repair` overlapping a live `--compact` would otherwise delete
-    * the compactor's tmp dirs or restore an aside mid-swap. Taken
-    * create-exclusive, deleted on the way out; a crash leaves the
-    * file and every later maintenance run refuses LOUDLY, naming it —
-    * deleting the file after confirming the crashed run is dead is
-    * the operator's acknowledgment (repair must not guess at
-    * staleness: it is exactly the tool that runs after a crash).
-    * Streams do not take the file lock; cross-JVM stream-vs-
-    * maintenance safety rests on the content-verified swaps and the
-    * carry fingerprint discipline instead. */
-  private def withMaintenanceLock[A](fs: org.apache.hadoop.fs.FileSystem,
-                                     landingPath: org.apache.hadoop.fs.Path)
-                                    (body: => A): A = {
-    val parent = landingPath.getParent
-    require(parent != null && fs.exists(parent),
-      s"parent dir of landing '$landingPath' does not exist")
-    val lock = new org.apache.hadoop.fs.Path(
-      parent, s".maintenance-lock-${landingPath.getName}")
-    val out =
-      try fs.create(lock, false)
-      catch {
-        case _: java.io.IOException =>
-          throw new IllegalStateException(
-            s"maintenance lock '$lock' exists — another maintenance run (possibly " +
-            "in another JVM) owns this landing, or a previous one crashed; after " +
-            "confirming nothing is running, delete the lock file and re-run")
-      }
-    try {
-      out.write(s"${java.lang.ProcessHandle.current().pid()}".getBytes("UTF-8"))
-      out.close()
-      // With the maintenance lock HELD (so a starting stream's
-      // post-create re-check sees it), refuse if an ingest stream in
-      // another process is live on this landing. The SAME
-      // [[lockRefusesUs]] policy as ingest starters (one rule, the
-      // two sides of the exclusion cannot disagree): own-pid
-      // leftovers (same-JVM streams were already caught by the
-      // in-JVM slot, so this is a stopped stream's pending release),
-      // dead pids, and stale heartbeats are cleared — version-checked,
-      // so a writer that refreshes concurrently keeps its lock and we
-      // refuse instead.
-      val iLock = ingestLockFile(landingPath)
-      lockOwnerState(fs, iLock).foreach { st =>
-        if (lockRefusesUs(st) || !deleteIfUnchanged(fs, iLock, st.mtime))
-          throw new IllegalStateException(
-            s"ingest writer lock '$iLock' names a live ingest stream in another " +
-            "process — maintenance must not run under an active writer; stop " +
-            "the stream first")
-      }
-      body
-    } finally { fs.delete(lock, false); () }
-  }
-
-  /** Test seam: invoked after the compacted copy is written and BEFORE
-    * the pre-swap listing check — the window an out-of-band writer
-    * would have to race to lose rows. No-op in production. */
-  @volatile private[graft] var preSwapHook: String => Unit = _ => ()
-
-  /** Test seam: invoked after a dir's successful swap (its post
-    * listing taken) and before the parent collects the global post
-    * listing — the window a foreign append must hit to invalidate a
-    * carry re-stamp without aborting the compaction. No-op in
-    * production. */
-  @volatile private[graft] var postSwapHook: String => Unit = _ => ()
-
-  /** Test seam: invoked after the aside rename verified and BEFORE
-    * the swap rename — the window where a foreign writer recreating
-    * the target dir makes Hadoop's rename NEST the compacted output
-    * instead of failing. No-op in production. */
-  @volatile private[graft] var preCommitSwapHook: String => Unit = _ => ()
-
-  /** Maintenance: rewrite an accreted landing dir down to
-    * `targetFiles` part files. [[ingestDedup]]'s per-batch
-    * `appendFiles` cap bounds what each micro-batch adds, but a
-    * long-running stream still accretes files linearly with batch
-    * COUNT (a year of 5-minute batches is ~100k part files), and
-    * every confirm join and reseed scan pays a per-file open. This is
-    * the other half of that story: an offline rewrite, run between
-    * stream sessions, that restores O(targetFiles) listings.
-    *
-    * Shape: ONE corpus read, `coalesce` (narrow — no shuffle: at
-    * 100 TB a compaction must concatenate, not repartition by key),
-    * written to a sibling temp dir, then an atomic-rename swap. The
-    * swap only proceeds if the landing's listing is UNCHANGED since
-    * the read — any out-of-band change aborts with the landing
-    * untouched. The single-writer slot ([[activeIngests]]) is held
-    * throughout, so an ingest stream cannot start mid-compaction and
-    * compaction refuses while a stream is active.
-    *
-    * Carried state: compaction renames files but changes no row, so
-    * the carried blooms remain EXACTLY right — they are re-stamped
-    * with the compacted listing's fingerprint rather than dropped
-    * (a dropped carry would cost the next batch a full reseed scan,
-    * the very cost compaction exists to keep bounded). The re-stamp
-    * is VALIDATED, not assumed: every rewritten dir's own listing
-    * must have been part of the global pre listing, and the global
-    * post listing must be exactly pre with the rewritten dirs' files
-    * swapped — any other delta means a foreign writer landed rows the
-    * blob does not contain, and the carry is dropped so the next
-    * batch reseeds (same discipline as the ingest fold's
-    * append-delta validation). A carry whose fingerprint did not
-    * match the pre-compaction listing was already stale and is
-    * dropped as usual. `landedCounts` is row-based and unaffected.
-    *
-    * Hive-partitioned landings (key=value subdirs — the
-    * month-partitioned or z-order layouts) are compacted PER LEAF
-    * partition directory: each leaf gets the same read → coalesce →
-    * checked-swap treatment with `targetFiles` as a per-leaf budget,
-    * and the directory tree itself is never rewritten, so partition
-    * pruning is untouched. A leaf read omits the partition columns
-    * (they live in the path, not the files) and the rewritten files
-    * land back in the same leaf, so rows round-trip exactly. Leaves
-    * are independent swaps, rewritten `leafParallelism` at a time (a
-    * big layout's maintenance window must scale with data, not leaf
-    * count): a failure part-way leaves every leaf
-    * either fully compacted or untouched, never flattened. A dir
-    * that mixes visible data files WITH partition subdirs at one
-    * level is structurally broken and refused loudly.
-    *
-    * Crash window: a failure between a swap's two renames leaves
-    * that dir's rows intact under a sibling `.compact-old-<dir>-<uuid>`
-    * — [[repairLanding]] restores it (and finishes or sweeps every
-    * other crash artifact). Temp and old dirs are dot-prefixed
-    * so partition discovery and file listings never see them. */
-  def compactLanding(spark: SparkSession, dir: String,
-                     targetFiles: Int = 4,
-                     leafParallelism: Int = 4): CompactStats = {
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    require(leafParallelism > 0,
-      s"leafParallelism must be positive, got $leafParallelism")
-    val landingDir = landingKey(spark, dir)
-    val mine = acquireLanding(spark, landingDir)
-    try {
-      val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-      val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(landingPath), s"landing dir '$landingDir' does not exist")
-      withMaintenanceLock(fs, landingPath) {
-      val pre = landingParts(spark, landingDir)
-      // Leaves rewrite CONCURRENTLY (bounded pool): each leaf is an
-      // independent read→write→swap with no shared mutable state, and
-      // at the 100 TB design point a month×source layout has
-      // thousands of leaves — a serial driver loop would make the
-      // maintenance window scale with leaf COUNT instead of data.
-      // Every future is awaited (success or failure) BEFORE the slot
-      // releases, so no straggler ever mutates the landing after this
-      // call returns; the first failure then propagates, and the
-      // other leaves are each fully compacted or untouched, as the
-      // swap contract promises.
-      val leaves = leafDataDirs(fs, landingPath)
-      val results =
-        if (leaves.lengthCompare(1) <= 0 || leafParallelism <= 1)
-          leaves.map(compactOneDir(spark, fs, _, targetFiles))
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(leafParallelism, leaves.size))
-          try {
-            val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val futures = leaves.map(l =>
-              scala.concurrent.Future(compactOneDir(spark, fs, l, targetFiles))(ec))
-            // catch EVERYTHING per await (Try would let an
-            // InterruptedException escape mid-loop) — every future
-            // must be awaited before the writer slot releases, or a
-            // straggler could still be swapping when a new stream
-            // acquires the landing
-            val outcomes = futures.map { f =>
-              try Right(scala.concurrent.Await.result(
-                f, scala.concurrent.duration.Duration.Inf))
-              catch { case t: Throwable => Left(t) }
-            }
-            outcomes.collectFirst { case Left(t) => throw t }
-            outcomes.collect { case Right(r) => r }
-          } finally { pool.shutdown(); () }
-        }
-      val post = landingParts(spark, landingDir)
-      // Re-stamping the carried blooms asserts "the landing holds
-      // exactly the texts the blob was built from, just in different
-      // files" — which is only true if NOTHING out-of-band landed in
-      // the pre→post window. Validate, don't assume: every rewritten
-      // leaf's own pre listing must have been part of the global pre
-      // listing (nothing snuck in between the two listings and got
-      // rewritten into the compacted files), and the global post must
-      // be exactly pre minus the rewritten leaves' old files plus
-      // their new ones. Any other delta → the carry is dropped (next
-      // batch reseeds from the landing, which self-heals), never
-      // trusted with texts missing from the blob.
-      val preSet = pre.toSet
-      val rewrote = results.filter(_.rewrote)
-      val valid = rewrote.forall(_.preParts.forall(preSet.contains)) && {
-        val expected =
-          (preSet -- rewrote.flatMap(_.preParts) ++ rewrote.flatMap(_.postParts))
-        post.toSet == expected && post.size == expected.size
-      }
-      val rewrittenRows =
-        if (rewrote.isEmpty) -1L else rewrote.map(_.rows).sum
-      CompactStats(
-        results.map(_.preParts.count(isVisible)).sum,
-        results.map(r => (if (r.rewrote) r.postParts else r.preParts).count(isVisible)).sum,
-        rewrittenRows,
-        carriesKept = restampCarries(landingDir, fpOf(pre), fpOf(post), valid))
-      }
-    } finally { activeIngests.remove(landingDir, mine); () }
-  }
-
-  /** Re-stamp the carried blooms with the post-maintenance listing
-    * fingerprint — but ONLY when the caller proved the maintenance
-    * pass was the sole writer (`valid`) and the carry matched the
-    * pre listing; anything else drops the carry so the next batch
-    * reseeds. Returns false iff a carry had to be dropped. */
-  private def restampCarries(landingDir: String, preFp: String, postFp: String,
-                             valid: Boolean): Boolean = {
-    val cur = carriesOf(landingDir)
-    val kept = cur.collect {
-      case (stage, c) if valid && c.landingFp == preFp => stage -> c.copy(landingFp = postFp)
-    }
-    setCarries(landingDir, kept)
-    kept.size == cur.size
-  }
-
-  /** The data-bearing leaf dirs of a landing: the dir itself when
-    * flat, the leaf `key=value` dirs of a (possibly nested) hive
-    * layout otherwise. A level that mixes visible files with
-    * partition subdirs, or partition with non-partition subdirs, has
-    * no sound per-leaf rewrite and is refused. */
-  private def leafDataDirs(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    val visible = fs.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      !(n.startsWith(".") || n.startsWith("_"))
-    }
-    val (dirs, files) = visible.partition(_.isDirectory)
-    val pdirs = dirs.filter(_.getPath.getName.contains("="))
-    if (pdirs.isEmpty) Seq(p)
-    else {
-      if (files.nonEmpty || pdirs.length != dirs.length)
-        throw new IllegalArgumentException(
-          s"dir '$p' mixes hive partition subdirs with " +
-          (if (files.nonEmpty) "data files" else "non-partition subdirs") +
-          " at one level; no per-leaf compaction is sound on a broken layout")
-      pdirs.toSeq.flatMap(d => leafDataDirs(fs, d.getPath))
-    }
-  }
-
-  /** One dir's compaction outcome: its listing before, its listing
-    * after (== before on the no-op path), rewritten row count, and
-    * whether a rewrite actually happened. */
-  private final case class LeafCompact(
-    preParts: Seq[String], postParts: Seq[String], rows: Long, rewrote: Boolean)
-
-  /** The listing relativized to its base dir (`path:len:mtime` with
-    * the dir prefix stripped) — lets a dir's content identity be
-    * compared across a rename (a rename moves files without touching
-    * their lengths or mtimes). */
-  private def relParts(base: org.apache.hadoop.fs.Path, parts: Seq[String]): Seq[String] = {
-    val prefix = base.toUri.getPath
-    parts.map(_.stripPrefix(prefix))
-  }
-
-  /** One flat dir's read → coalesce → checked-swap rewrite. The swap
-    * is verified AFTER the aside rename: the moved-aside dir must
-    * hold exactly the files the rewrite read (rename preserves
-    * lengths and mtimes), so any file a foreign writer committed
-    * since the pre listing is caught while it is still restorable —
-    * the aside dir is renamed back and the compaction aborts with
-    * every committed row intact. A pre-rename listing check could
-    * never close that window (a commit could always land between the
-    * check and the rename); checking the moved dir itself can,
-    * because after the rename a foreign commit lands in the fresh
-    * target path, which the swap preserves. */
-  private def compactOneDir(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                            dirPath: org.apache.hadoop.fs.Path,
-                            targetFiles: Int): LeafCompact = {
-    val dirStr = dirPath.toString
-    val pre = landingParts(spark, dirStr)
-    val preVisible = pre.count(isVisible)
-    if (preVisible <= targetFiles)
-      return LeafCompact(pre, pre, -1L, rewrote = false)
-    val parent = dirPath.getParent
-    // tmp carries its source dir's name too (same reason as the aside
-    // dir below): [[repairLanding]] must be able to attribute a
-    // crashed rewrite's debris at the landing's PARENT level, where
-    // unrelated siblings may keep their own artifacts
-    val tmp = new org.apache.hadoop.fs.Path(
-      parent, s".compact-tmp-${dirPath.getName}-${java.util.UUID.randomUUID()}")
-    try {
-      // one scan; rows counted by the write's own Observation, and
-      // the re-run-on-failure story is "overwrite the tmp dir" so
-      // the v2 task-side committer is safe here
-      val obs = new org.apache.spark.sql.Observation("compact_rows")
-      spark.read.parquet(dirStr)
-        .coalesce(targetFiles)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.options(graft.core.Committers.forRerun(overwrite = true))
-        .mode("overwrite").parquet(tmp.toString)
-      val rows = obs.get("n").asInstanceOf[Long]
-      preSwapHook(dirStr)
-      // breadcrumbs for [[repairLanding]]: the aside dir's NAME carries
-      // the dir it came from, and the compacted output carries a
-      // manifest naming the aside dir it replaces — so a crash between
-      // the swap and the aside delete is mechanically distinguishable
-      // from a landing recreated by a new stream after a crash
-      val old = new org.apache.hadoop.fs.Path(
-        parent, s".compact-old-${dirPath.getName}-${java.util.UUID.randomUUID()}")
-      val manifest = new org.apache.hadoop.fs.Path(tmp, SwapManifest)
-      val mfOut = fs.create(manifest, true)
-      try mfOut.write(old.getName.getBytes("UTF-8")) finally mfOut.close()
-      // Hadoop rename(src, existing-dir) NESTS src inside the target
-      // instead of failing, so a rename's boolean can lie when a
-      // foreign writer recreates the destination in a gap. Every
-      // rename below is therefore VERIFIED by content afterwards, and
-      // a restore never renames into an existing dir (nesting would
-      // make the original rows invisible to every reader).
-      def restoreOrDie(context: String): Nothing = {
-        // verify against old's CURRENT content — on the aborted-race
-        // path it legitimately holds the foreign file that rode in
-        val oldParts = landingParts(spark, old.toString)
-        val back =
-          !fs.exists(dirPath) && fs.rename(old, dirPath) &&
-          relParts(dirPath, landingParts(spark, dirStr)) == relParts(old, oldParts)
-        if (back)
-          throw new IllegalStateException(
-            s"$context; dir restored — re-run when quiet")
-        throw new IllegalStateException(
-          s"$context AND the restore was not possible (a foreign writer " +
-          s"recreated '$dirStr'?); all original rows are intact under '$old' — " +
-          "resolve with repairLanding (--repair)")
-      }
-      // the compacted output's listing, captured before the swap so
-      // the swap itself can be verified by content (rename preserves
-      // lengths and mtimes)
-      val tmpParts = landingParts(spark, tmp.toString)
-      if (!fs.rename(dirPath, old))
-        throw new IllegalStateException(
-          s"could not move '$dirStr' aside for the compaction swap")
-      if (relParts(old, landingParts(spark, old.toString)) != relParts(dirPath, pre)) {
-        // a foreign commit landed since the rewrite's listing — it
-        // rode into the aside dir; put everything back and abort
-        restoreOrDie(s"dir '$dirStr' changed during compaction (out-of-band writer)")
-      }
-      preCommitSwapHook(dirStr)
-      val swapped =
-        try fs.rename(tmp, dirPath)
-        catch { case t: Throwable =>
-          restoreOrDie(s"compaction swap into '$dirStr' failed (${t.getMessage})")
-        }
-      if (!swapped)
-        restoreOrDie(s"could not move compacted files into '$dirStr'")
-      if (relParts(dirPath, landingParts(spark, dirStr)) != relParts(tmp, tmpParts)) {
-        // the rename 'succeeded' but the target does not hold the
-        // compacted files — a foreign writer recreated the dir in the
-        // gap and the output nested inside it as a dot-dir. The
-        // original rows are safe in the aside dir; never delete it.
-        throw new IllegalStateException(
-          s"a foreign writer recreated '$dirStr' during the compaction swap; " +
-          s"all original rows are intact under '$old' — resolve with " +
-          "repairLanding (--repair); the nested rewrite debris is swept by it too")
-      }
-      fs.delete(old, true)
-      // the manifest's job ends with the aside dir; drop it BEFORE the
-      // post listing so the landing fingerprint never contains it
-      fs.delete(new org.apache.hadoop.fs.Path(dirPath, SwapManifest), false)
-      val post = landingParts(spark, dirStr)
-      postSwapHook(dirStr)
-      LeafCompact(pre, post, rows, rewrote = true)
-    } finally { if (fs.exists(tmp)) fs.delete(tmp, true); () }
-  }
-
-  // ---------- landing expiry (retention) ----------
-
-  /** What [[expireLanding]] did. `carriesKept` is false iff a carried
-    * bloom existed and had to be dropped (stale fingerprint, or the
-    * pre→post listing delta was not exactly the expired subtrees). */
-  final case class ExpireStats(
-    dirsDropped: Int, filesDropped: Int, carriesKept: Boolean)
-
-  /** Test seam: invoked after [[expireLanding]]'s pre listing and
-    * before the deletes — the window a foreign append to a surviving
-    * dir must hit to invalidate the carry re-stamp. No-op in
-    * production. */
-  @volatile private[graft] var expireHook: String => Unit = _ => ()
-
-  /** Maintenance: DELETE every `partitionCol=value` subtree of a
-    * hive-partitioned landing whose unescaped value sorts strictly
-    * BEFORE `before` — the retention half of the landing lifecycle
-    * story ([[compactLanding]] is the file-count half). A
-    * month-partitioned landing at the 100 TB design point ages out
-    * data by dropping whole partition directories: pruning-aligned
-    * deletion, zero rows read or rewritten, cost proportional to the
-    * DIRECTORY count, not the data.
-    *
-    * The comparison is a plain string compare on the unescaped
-    * value — exact for ISO dates/months (`2026-01`) and zero-padded
-    * numerics, which is what time-partitioned landings use. The
-    * `partitionCol` may sit at any level of a nested layout (e.g.
-    * `source=…/month=…`): each matching dir's whole subtree goes, the
-    * rest of the tree is untouched, so partition pruning on the
-    * survivors is unaffected. A landing with NO `partitionCol=` dir
-    * anywhere (flat, or a different column) is refused loudly —
-    * expiry on the wrong column must not silently no-op. Spark's
-    * `__HIVE_DEFAULT_PARTITION__` (null-value) dirs never expire.
-    *
-    * Carried state: expiry REMOVES rows, which makes a carried bloom
-    * a SUPERSET of the landing — still sound, because a bloom
-    * positive is never trusted without the exact confirm join
-    * (an expired-then-reposted text probes positive, fails the
-    * confirm against the shrunken landing, and is correctly admitted
-    * as new). The carry is therefore re-stamped with the post-expiry
-    * fingerprint instead of dropped — but only after VALIDATING that
-    * the pre→post listing delta is exactly the expired subtrees: a
-    * foreign append in the window would make the bloom a SUBSET
-    * (false negatives → admitted duplicates), so any unexplained
-    * delta drops the carry and the next batch reseeds. The extra
-    * superset bits only cost confirm probes until the next natural
-    * reseed. `landedCounts` stays an overestimate, which only
-    * over-sizes the next bloom. The single-writer slot is held
-    * throughout, exactly as compaction. */
-  def expireLanding(spark: SparkSession, dir: String, partitionCol: String,
-                    before: String): ExpireStats = {
-    require(partitionCol.nonEmpty && !partitionCol.contains("="),
-      s"partitionCol must be a bare column name, got '$partitionCol'")
-    require(before.nonEmpty, "expiry cutoff must be non-empty")
-    val landingDir = landingKey(spark, dir)
-    val mine = acquireLanding(spark, landingDir)
-    try {
-      val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-      val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(landingPath), s"landing dir '$landingDir' does not exist")
-      withMaintenanceLock(fs, landingPath) {
-      val prefix = partitionCol + "="
-      def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-        fs.listStatus(p).toSeq.filter { s =>
-          val n = s.getPath.getName
-          s.isDirectory && !(n.startsWith(".") || n.startsWith("_"))
-        }.flatMap { s =>
-          if (s.getPath.getName.startsWith(prefix)) Seq(s.getPath)
-          else walk(s.getPath)
-        }
-      val matched = walk(landingPath)
-      if (matched.isEmpty)
-        throw new IllegalArgumentException(
-          s"landing dir '$landingDir' has no '$prefix…' partition dir at any " +
-          "level; refusing to expire on a column the layout does not have")
-      val expired = matched.filter { p =>
-        // Spark's own unescape (the inverse of the %xx escaping its
-        // dynamic-partition writer applies to partition VALUES), so
-        // the comparison stays in lockstep with the writer's rules
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(p.getName.substring(prefix.length))
-        v != "__HIVE_DEFAULT_PARTITION__" && v < before
-      }
-      val pre = landingParts(spark, landingDir)
-      expireHook(landingDir)
-      val expiredPrefixes = expired.map(_.toUri.getPath + "/")
-      def isExpired(part: String): Boolean = {
-        val p = partPath(part)
-        expiredPrefixes.exists(p.startsWith)
-      }
-      val files = pre.count(p => isVisible(p) && isExpired(p))
-      expired.foreach { p =>
-        if (!fs.delete(p, true))
-          throw new IllegalStateException(s"could not delete expired dir '$p'")
-      }
-      val post = landingParts(spark, landingDir)
-      // The re-stamp asserts "the landing is exactly the pre listing
-      // minus the expired subtrees" — validate it. A foreign append to
-      // a SURVIVING dir in this window would make the carried bloom a
-      // subset (false negatives → admitted duplicates), so any
-      // unexplained delta drops the carry instead; a foreign append to
-      // an EXPIRED dir was deleted with it and cannot appear in post.
-      val valid = post == pre.filterNot(isExpired)
-      ExpireStats(expired.size, files,
-        carriesKept = restampCarries(landingDir, fpOf(pre), fpOf(post), valid))
-      }
-    } finally { activeIngests.remove(landingDir, mine); () }
-  }
-
-  // ---------- landing repair (crash recovery) ----------
-
-  /** Name of the breadcrumb file a compaction swap plants in its
-    * output (deleted again on success): its content is the aside
-    * dir's name, proving which `.compact-old-*` dir the swapped-in
-    * files replaced. */
-  private[graft] val SwapManifest = ".swap-manifest"
-
-  /** `.compact-{tmp,old}-<source>-<uuid>` → the embedded source dir
-    * name. The uuid suffix is fixed-width (36 chars + the joining
-    * dash), so the parse is exact even when the source name contains
-    * dashes — a loose prefix match would misattribute a sibling
-    * landing's artifacts (`corpus` vs `corpus-backup`). */
-  private def artifactSourceOf(name: String, prefix: String): Option[String] =
-    if (name.length > prefix.length + 37 && name.startsWith(prefix))
-      Some(name.substring(prefix.length, name.length - 37))
-    else None
-
-  /** What [[repairLanding]] did. `unresolved` lists aside dirs it
-    * refused to touch (their target exists but carries no manifest
-    * naming them — e.g. a new stream recreated the landing after a
-    * crash; merging is a human decision because both dirs hold rows). */
-  final case class RepairStats(
-    tmpsDeleted: Int, oldsRestored: Int, oldsDeleted: Int,
-    manifestsCleaned: Int, unresolved: Seq[String])
-
-  /** Maintenance: finish or roll back compaction swaps a crash left
-    * half-done — the automated form of the scaladoc's "rename it
-    * back". Walks the landing tree (flat or hive-partitioned) and for
-    * each crash artifact applies the one provably-safe action:
-    *
-    *   - `.compact-tmp-*` dirs: always deleted — a rewrite output
-    *     never referenced by anything.
-    *   - `.compact-old-<dir>-<uuid>` with its source dir MISSING: the
-    *     crash hit between the two swap renames; the aside dir IS the
-    *     landing — renamed back (restore).
-    *   - `.compact-old-<dir>-<uuid>` with the source dir present AND
-    *     the source carrying a [[SwapManifest]] naming this aside dir:
-    *     the crash hit after the swap, before the aside delete; the
-    *     landing is the compacted copy — aside + manifest deleted.
-    *   - the same WITHOUT a matching manifest: refused and reported
-    *     (`unresolved`) — a new stream may have recreated the landing
-    *     with rows the aside dir does not have; deleting or restoring
-    *     either side would lose data, so neither happens.
-    *   - stray [[SwapManifest]] files whose named aside dir is gone
-    *     (crash between the aside delete and the manifest delete):
-    *     deleted.
-    *
-    * Carried state is intentionally untouched: a restore changes the
-    * landing listing, so the fingerprint discipline already forces
-    * the next batch to reseed — exactly the self-heal the carries
-    * were designed around. Holds the single-writer slot: repair never
-    * races a stream or another maintenance run in-JVM. */
-  def repairLanding(spark: SparkSession, dir: String): RepairStats = {
-    val landingDir = landingKey(spark, dir)
-    val mine = acquireLanding(spark, landingDir)
-    try {
-      val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-      val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      withMaintenanceLock(fs, landingPath) {
-      var tmps = 0; var restored = 0; var oldsDeleted = 0; var manifests = 0
-      val unresolved = scala.collection.mutable.ArrayBuffer.empty[String]
-      def readManifest(dataDir: org.apache.hadoop.fs.Path): Option[String] = {
-        val mf = new org.apache.hadoop.fs.Path(dataDir, SwapManifest)
-        if (!fs.exists(mf)) None
-        else {
-          val in = fs.open(mf)
-          try {
-            val bytes = new Array[Byte](fs.getFileStatus(mf).getLen.toInt)
-            in.readFully(bytes)
-            Some(new String(bytes, "UTF-8"))
-          } finally in.close()
-        }
-      }
-      def handleOld(oldPath: org.apache.hadoop.fs.Path,
-                    target: org.apache.hadoop.fs.Path): Unit = {
-        if (!fs.exists(target)) {
-          if (!fs.rename(oldPath, target))
-            throw new IllegalStateException(
-              s"could not restore '$oldPath' to '$target'")
-          restored += 1
-        } else if (readManifest(target).contains(oldPath.getName)) {
-          fs.delete(oldPath, true); oldsDeleted += 1
-          fs.delete(new org.apache.hadoop.fs.Path(target, SwapManifest), false)
-          manifests += 1
-        } else unresolved += oldPath.toString
-      }
-      // a manifest whose aside dir is gone: the crash hit between the
-      // aside delete and the manifest delete — remove the breadcrumb
-      // (but keep it as evidence while its pair sits unresolved)
-      def sweepManifest(dataDir: org.apache.hadoop.fs.Path,
-                        level: org.apache.hadoop.fs.Path): Unit =
-        readManifest(dataDir).foreach { named =>
-          if (!fs.exists(new org.apache.hadoop.fs.Path(level, named)) &&
-              !unresolved.exists(_.endsWith("/" + named))) {
-            fs.delete(new org.apache.hadoop.fs.Path(dataDir, SwapManifest), false)
-            manifests += 1
-          }
-        }
-      // ROOT-level artifacts first: a FLAT landing's swap debris are
-      // SIBLINGS of the landing (crash between the two renames even
-      // leaves the landing dir itself missing), attributed by the
-      // source name embedded in the artifact names — unrelated
-      // siblings of the landing are never touched
-      val parent = landingPath.getParent
-      val rootName = landingPath.getName
-      if (parent != null && fs.exists(parent)) {
-        fs.listStatus(parent).foreach { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && artifactSourceOf(n, ".compact-tmp-").contains(rootName)) {
-            fs.delete(s.getPath, true); tmps += 1
-          } else if (s.isDirectory &&
-                     artifactSourceOf(n, ".compact-old-").contains(rootName)) {
-            handleOld(s.getPath, landingPath)
-          }
-        }
-      }
-      if (!fs.exists(landingPath)) {
-        // name any aside-LOOKING siblings repair could not attribute
-        // (e.g. the pre-breadcrumb `.compact-old-<uuid>` format) so
-        // the operator knows where the rows may be instead of reading
-        // "nothing to repair" while they sit in an unparsed dir
-        val candidates =
-          if (parent == null || !fs.exists(parent)) Seq.empty[String]
-          else fs.listStatus(parent).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith(".compact-old-"))
-            .map(_.getPath.toString)
-        throw new IllegalStateException(
-          s"landing dir '$landingDir' does not exist and no aside dir restored it" +
-          (if (candidates.isEmpty) " — nothing to repair"
-           else s" — possibly-related aside dirs repair could not attribute " +
-                s"(inspect and rename back by hand): ${candidates.mkString(", ")}"))
-      }
-      // INNER artifacts (partitioned landings): every artifact under
-      // the landing belongs to it — the single-writer slot guarantees
-      // no other owner
-      def walk(p: org.apache.hadoop.fs.Path): Unit = {
-        val entries = fs.listStatus(p)
-        entries.foreach { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && n.startsWith(".compact-tmp-")) {
-            fs.delete(s.getPath, true); tmps += 1
-          } else if (s.isDirectory && n.startsWith(".compact-old-")) {
-            artifactSourceOf(n, ".compact-old-") match {
-              case None => unresolved += s.getPath.toString
-              case Some(src) => handleOld(s.getPath, new org.apache.hadoop.fs.Path(p, src))
-            }
-          } else if (s.isDirectory && !n.startsWith(".") && !n.startsWith("_")) {
-            walk(s.getPath)
-          }
-        }
-        entries.foreach { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && !n.startsWith(".") && !n.startsWith("_"))
-            sweepManifest(s.getPath, p)
-        }
-      }
-      walk(landingPath)
-      sweepManifest(landingPath, parent)
-      RepairStats(tmps, restored, oldsDeleted, manifests, unresolved.toSeq)
-      }
-    } finally { activeIngests.remove(landingDir, mine); () }
-  }
-
-  // ---------- landing stats (observability) ----------
-
-  /** What [[landingStats]] saw. `leaves` is (leaf dir, visible file
-    * count, visible bytes) — one row per data-bearing dir; `debris`
-    * lists crash artifacts ([[repairLanding]]'s input), `lockHeld`
-    * whether a maintenance lock file currently exists, and
-    * `writerLockHeld` whether an ingest writer lock does (a stream is
-    * — or recently was — writing this landing). */
-  final case class LandingStats(
-    leaves: Seq[(String, Int, Long)], totalFiles: Int, totalBytes: Long,
-    debris: Seq[String], lockHeld: Boolean, writerLockHeld: Boolean = false)
-
-  /** Read-only landing observability — the numbers an operator needs
-    * to DECIDE on maintenance: per-leaf visible file counts and bytes
-    * (is the landing accreted enough that a compaction pays for
-    * itself?), crash debris (`.compact-tmp/old-*`, stray manifests —
-    * is a repair due?), and whether a maintenance lock is held.
-    * Deliberately takes NO slot and NO lock: it must be safe to run
-    * while a stream or a maintenance pass is active, and a pure
-    * listing cannot corrupt anything — at worst it reports a
-    * transient mid-swap state. Listing cost only; no file contents
-    * are read. */
-  def landingStats(spark: SparkSession, dir: String): LandingStats = {
-    val landingDir = landingKey(spark, dir)
-    val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val debris = scala.collection.mutable.ArrayBuffer.empty[String]
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long)]
-    // ROOT-level artifacts first (flat-layout swaps leave them in the
-    // parent, attributed by the EXACT source-name parse repair uses —
-    // a loose prefix would claim a `corpus-backup` sibling's debris
-    // for `corpus`). Scanned BEFORE the existence check: the state
-    // where the landing root is missing but an aside dir holds it is
-    // exactly when the operator most needs the 'run --repair' report.
-    val parent = landingPath.getParent
-    var lock = false
-    var writerLock = false
-    if (parent != null && fs.exists(parent)) {
-      val rootName = landingPath.getName
-      fs.listStatus(parent).foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory &&
-            (artifactSourceOf(n, ".compact-tmp-").contains(rootName) ||
-             artifactSourceOf(n, ".compact-old-").contains(rootName)))
-          debris += s.getPath.toString
-        if (s.isFile && n == s".maintenance-lock-$rootName") lock = true
-        if (s.isFile && n == s".ingest-writer-lock-$rootName") writerLock = true
-      }
-    }
-    if (!fs.exists(landingPath)) {
-      require(debris.nonEmpty,
-        s"landing dir '$landingDir' does not exist and no crash artifact " +
-        "references it")
-      // the landing IS the debris — report it instead of erroring
-      return LandingStats(Nil, 0, 0L, debris.toSeq.sorted, lock, writerLock)
-    }
-    // one listing per dir serves both the debris scan and the file
-    // counts — the promised cost really is one LIST per directory
-    def walk(p: org.apache.hadoop.fs.Path): Unit = {
-      val entries = fs.listStatus(p)
-      var files = 0; var bytes = 0L
-      entries.foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && (n.startsWith(".compact-tmp-") || n.startsWith(".compact-old-")))
-          debris += s.getPath.toString
-        else if (s.isFile && n == SwapManifest)
-          debris += s.getPath.toString
-        else if (s.isFile && !n.startsWith(".") && !n.startsWith("_")) {
-          files += 1; bytes += s.getLen
-        }
-      }
-      if (files > 0) leaves += ((p.toString, files, bytes))
-      entries.foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && !n.startsWith(".") && !n.startsWith("_")) walk(s.getPath)
-      }
-    }
-    walk(landingPath)
-    LandingStats(leaves.toSeq.sortBy(_._1), leaves.map(_._2).sum,
-      leaves.map(_._3).sum, debris.toSeq.sorted, lock, writerLock)
-  }
-
   // ---------- the three ingest entries ----------
 
   /** The one shared append shape all three ingest entries land with.
-    * Flat (default): `appendFiles` part files per batch. Partitioned
+    * Flat (default): `AppendFiles` part files per batch. Partitioned
     * (`partitionCols` nonempty — e.g. an ingest month): rows
     * hash-repartition ON the partition columns first, so each touched
     * `key=value` leaf receives exactly ONE file per batch (without
     * this, files per batch = tasks × touched leaves — the small-files
     * problem squared), and the landing becomes the layout the
-    * maintenance surface is built for: retention by [[expireLanding]],
-    * per-leaf [[compactLanding]], partition-pruned time-sliced reads.
+    * maintenance surface is built for: retention by [[LandingMaintenance.expireLanding]],
+    * per-leaf [[LandingMaintenance.compactLanding]], partition-pruned time-sliced reads.
     * The dedup state machine is layout-agnostic — carries fold from
     * the write's own Observation and fingerprints are recursive
     * listings, so nothing else changes. */
   private def appendToLanding(fresh: DataFrame, landingDir: String,
-                              appendFiles: Int, partitionCols: Seq[String],
+                              partitionCols: Seq[String],
                               obs: org.apache.spark.sql.Observation,
                               metrics: Seq[Column]): Unit = {
     val shaped =
-      if (partitionCols.isEmpty) fresh.repartition(appendFiles)
-      else fresh.repartition(appendFiles, partitionCols.map(col): _*)
+      if (partitionCols.isEmpty) fresh.repartition(AppendFiles)
+      else fresh.repartition(AppendFiles, partitionCols.map(col): _*)
     val writer = shaped.observe(obs, metrics.head, metrics.tail: _*)
       .write.options(graft.core.Committers.TaskCommitV2)
     (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*))
@@ -1809,7 +632,7 @@ object EventStreams {
     // a `_`/`.`-prefixed column makes every `col=value` dir HIDDEN to
     // Spark's path filter: the landing would accept writes that no
     // read (reseed, stats, compaction) can see — silent dedup loss
-    val hidden = partitionCols.filter(c => c.startsWith("_") || c.startsWith("."))
+    val hidden = partitionCols.filter(LandingGuard.isHidden)
     require(hidden.isEmpty,
       s"partition column(s) ${hidden.mkString(", ")} start with '_'/'.' — their " +
       "hive dirs would be invisible to every parquet read, including this " +
@@ -1869,19 +692,18 @@ object EventStreams {
   /** THE start path of the dedup family ([[ingestDedup]],
     * [[ingestNearDup]], [[ingestSemantic]], [[ingestPipeline]]): the
     * shared start-time refusals run once here, before the stream
-    * starts, then the landing's canonical key ([[landingKey]]) drives
+    * starts, then the landing's canonical key ([[LandingGuard.landingKey]]) drives
     * [[runIngestStream]] over the entry's stage list. */
   private def startDedup(docs: DataFrame, landingDir: String, checkpointDir: String,
-                         entry: String, keyCols: Seq[String], appendFiles: Int,
+                         entry: String, keyCols: Seq[String],
                          partitionCols: Seq[String], stages: Seq[DedupStage],
                          obsPrefix: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(appendFiles > 0, s"appendFiles must be positive, got $appendFiles")
     requireStreamCols(docs, keyCols)
     requireNoReservedCols(docs, entry)
     requirePartitionCols(docs, partitionCols, keyCols)
-    runIngestStream(docs, landingKey(docs.sparkSession, landingDir), checkpointDir,
-      appendFiles, partitionCols, stages, obsPrefix)
+    runIngestStream(docs, LandingGuard.landingKey(docs.sparkSession, landingDir), checkpointDir,
+      partitionCols, stages, obsPrefix)
   }
 
   /** Continuous corpus ingest with CROSS-BATCH exact dedup — the
@@ -1908,11 +730,10 @@ object EventStreams {
     * StreamingSpec's crash-retry case). */
   def ingestDedup(docs: DataFrame, landingDir: String, checkpointDir: String,
                   textCol: String = "text", idCol: String = "doc_id",
-                  appendFiles: Int = 4,
                   partitionCols: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestDedup", Seq(textCol, idCol),
-      appendFiles, partitionCols, Seq(DedupStage.exact(textCol, idCol)), "ingest")
+      partitionCols, Seq(DedupStage.exact(textCol, idCol)), "ingest")
 
   /** Cross-batch NEAR-dup ingest — [[ingestDedup]]'s MinHash/LSH twin
     * ([[graft.ops.NearDupIncremental]]): a batch doc is dropped when
@@ -1937,11 +758,10 @@ object EventStreams {
     * dedup. */
   def ingestNearDup(docs: DataFrame, landingDir: String, checkpointDir: String,
                     textCol: String = "text", idCol: String = "doc_id",
-                    appendFiles: Int = 4,
                     partitionCols: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestNearDup", Seq(textCol, idCol),
-      appendFiles, partitionCols, Seq(DedupStage.near(textCol, idCol)), "ingest_nd")
+      partitionCols, Seq(DedupStage.near(textCol, idCol)), "ingest_nd")
 
   /** Continuous corpus ingest with CROSS-BATCH SEMANTIC dedup — the
     * streaming face of [[graft.ops.SemanticIncremental]] (q86), for
@@ -1991,12 +811,10 @@ object EventStreams {
                      tau: Double = 0.9,
                      vecCol: String = "embedding", idCol: String = "doc_id",
                      bits: Int = 8, bands: Int = 2,
-                     appendFiles: Int = 4,
                      partitionCols: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startDedup(docs, landingDir, checkpointDir, "ingestSemantic", Seq(vecCol, idCol),
-      appendFiles, partitionCols,
-      Seq(SemanticStage(tau, vecCol, bits, bands).stage(idCol)), "ingest_sem")
+      partitionCols, Seq(SemanticStage(tau, vecCol, bits, bands).stage(idCol)), "ingest_sem")
 
   // ---------- the frozen-state gates ----------
 
@@ -2011,8 +829,8 @@ object EventStreams {
     * state INSIDE the guard (`freeze`), so a refused start never pays
     * for training. `freeze` registers each frozen-state release
     * through its argument as soon as that state exists; every
-    * registered release runs on a failed start and, via
-    * [[registerFrozen]], on termination (r17 verdict #7: frozen state
+    * registered release runs on a failed start and on termination
+    * ([[LandingGuard.startGuarded]]; r17 verdict #7: frozen state
     * must not hold executor storage past the stream's lifetime).
     *
     * Per batch: heartbeat the writer lock, score (`pin` persists a
@@ -2032,14 +850,13 @@ object EventStreams {
         s"stream schema must not carry '$c' — the $gate reserves it as a " +
         "landing partition, working or score column")
     }
-    val key = landingKey(docs.sparkSession, landingDir)
-    var frozen: List[() => Unit] = Nil
-    val q = try startGuarded(docs.sparkSession, key) {
-      val score = freeze(release => frozen :+= release)
+    val key = LandingGuard.landingKey(docs.sparkSession, landingDir)
+    LandingGuard.startGuarded(docs.sparkSession, key) { release =>
+      val score = freeze(release)
       docs.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeatIngestLock(key)
+          LandingGuard.heartbeatIngestLock(key)
           var pinned: List[DataFrame] = Nil
           try {
             val w = score(batch, df => { pinned ::= df.persist(); pinned.head })
@@ -2050,11 +867,7 @@ object EventStreams {
           ()
         }
         .start()
-    } catch {
-      case t: Throwable => frozen.foreach(runCleanup); throw t
     }
-    registerFrozen(q, frozen)
-    q
   }
 
   /** Streaming maintenance of the persisted IVF-PQ index
@@ -2127,7 +940,7 @@ object EventStreams {
         "xent_per_token")) { release =>
       // the trained LM's checkpointed frame + probe-map broadcast
       val trained = graft.ops.NgramLm.train(reference, textCol, langCol)
-      release(frameCleanup(trained.counts))
+      release(() => LandingGuard.releaseFrozenFrame(trained.counts))
       release(() => trained.releaseMaps())
       (batch, pin) => {
         // The gate sits BEFORE the dedup family, so repeated doc ids
@@ -2251,7 +1064,7 @@ object EventStreams {
       val (blob, gxFiles) = graft.ops.Decontaminate.loadBloomPinned(spark, benchDir)
       val bench = spark.read.parquet(gxFiles: _*).select("gx").persist()
       // registered before the count: a failure inside it still releases
-      release(frameCleanup(bench))
+      release(() => LandingGuard.releaseFrozenFrame(bench))
       val broadcastable =
         bench.count() <= graft.ops.Decontaminate.BroadcastableRows
       (batch, pin) => {
@@ -2337,7 +1150,6 @@ object EventStreams {
 
   def ingestPipeline(docs: DataFrame, landingDir: String, checkpointDir: String,
                      textCol: String = "text", idCol: String = "doc_id",
-                     appendFiles: Int = 4,
                      partitionCols: Seq[String] = Nil,
                      semantic: Option[SemanticStage] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -2349,7 +1161,7 @@ object EventStreams {
     // landed corpus is exactly the final survivors, so the exact bloom
     // folds the post-near(-sem) `fresh` — see [[runIngestStream]].
     startDedup(docs, landingDir, checkpointDir, "ingestPipeline",
-      Seq(textCol, idCol) ++ semantic.map(_.vecCol), appendFiles, partitionCols,
+      Seq(textCol, idCol) ++ semantic.map(_.vecCol), partitionCols,
       Seq(DedupStage.exact(textCol, idCol), DedupStage.near(textCol, idCol)) ++
         semantic.map(_.stage(idCol)),
       "ingest_pipe")

@@ -21,11 +21,11 @@ import graft.streaming.EventStreams
   *    the landing, the documented bounded residual. Expect growth
   *    with corpus size here; the probe quantifies it.
   *
-  * The probe's first finding (pre-`appendFiles`): per-batch time grew
+  * The probe's first finding (pre-`AppendFiles`): per-batch time grew
   * visibly within ~10 batches in BOTH mixes because each micro-batch
   * appended one part file per shuffle partition — corpus scans paid
   * per-file open cost growing with stream AGE, not data. That led to
-  * the `appendFiles` batch repartition in the ingest writes.
+  * the `AppendFiles` batch repartition in the ingest writes.
   *
   * Deterministic: seeded RNG, fixed word pool.
   *
@@ -100,7 +100,7 @@ object IngestSoakProbe {
           q.processAllAvailable()
           times(b) = (System.nanoTime() - t0) / 1e9
           println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${graft.streaming.EventStreams
-            .landedCounts.get(graft.streaming.EventStreams.landingKey(spark, landing)).get()}, bits=$bits)")
+            .landedCounts.get(graft.streaming.LandingGuard.landingKey(spark, landing)).get()}, bits=$bits)")
         }
       } finally q.stop()
     } else if (mix == "decon") {
@@ -166,7 +166,7 @@ object IngestSoakProbe {
         q.processAllAvailable()
         times(b) = (System.nanoTime() - t0) / 1e9
         println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${graft.streaming.EventStreams
-          .landedCounts.get(graft.streaming.EventStreams.landingKey(spark, landing)).get()})")
+          .landedCounts.get(graft.streaming.LandingGuard.landingKey(spark, landing)).get()})")
       }
     } finally q.stop()
     }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
 
 /** Maintenance-UNDER-LOAD soak: what a live pipeline pays when the
   * landing is compacted mid-stream. CompactionSpec proves ingest and
@@ -107,7 +107,7 @@ object MaintenanceSoakProbe {
     reader.start()
     val filesBefore = spark.read.parquet(landing).inputFiles.length
     val tC0 = System.nanoTime()
-    val stats = EventStreams.compactLanding(spark, landing,
+    val stats = LandingMaintenance.compactLanding(spark, landing,
       targetFiles = targetFiles, leafParallelism = 4)
     val compactWall = (System.nanoTime() - tC0) / 1e9
     maintaining = false
@@ -115,7 +115,7 @@ object MaintenanceSoakProbe {
     val filesAfter = spark.read.parquet(landing).inputFiles.length
 
     // ---- phase 3: resume — fresh checkpoint, carried count evicted ----
-    EventStreams.landedCounts.remove(EventStreams.landingKey(spark, landing))
+    EventStreams.landedCounts.remove(LandingGuard.landingKey(spark, landing))
     val in2 = MemoryStream[(Long, String, Long)]
     val q2 = EventStreams.ingestPipeline(
       in2.toDF().toDF("doc_id", "text", "bucket"), landing,

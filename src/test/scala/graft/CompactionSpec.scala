@@ -4,11 +4,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.DedupStage
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
 
-/** [[EventStreams.compactLanding]] — the maintenance half of the
-  * landing file-count story: `appendFiles` bounds what each
-  * micro-batch adds, compaction rewrites the linear-in-batch-count
+/** [[LandingMaintenance.compactLanding]] — the maintenance half of the
+  * landing file-count story: the ingest append's fixed file count
+  * bounds what each micro-batch adds, compaction rewrites the linear-in-batch-count
   * accretion back to O(targetFiles) between stream sessions, without
   * changing a row and without costing the carried blooms a reseed. */
 class CompactionSpec extends AnyFunSuite with SparkTestSession {
@@ -37,7 +37,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = tmpDir(prefix) + "/corpus"
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     val input = MemoryStream[(Long, String)]
     val q = ingest(input.toDF().toDF("doc_id", "text"), landing, tmpDir(prefix + "-ck"))
     try {
@@ -54,7 +54,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     stages.foreach(st =>
       assert(EventStreams.carryOf(key, st).isDefined, s"$st carry expected before compaction"))
 
-    val stats = EventStreams.compactLanding(spark, landing, targetFiles = 2)
+    val stats = LandingMaintenance.compactLanding(spark, landing, targetFiles = 2)
     assert(stats.filesBefore > 2 && stats.filesAfter <= 2)
     assert(stats.rows == 9L && stats.carriesKept)
     assert(visibleFiles(landing).size == stats.filesAfter)
@@ -99,17 +99,38 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       input.addData((1L, "alpha")); q.processAllAvailable()
     } finally q.stop()
     val before = graft.core.Tables.listing(spark, landing)
-    val stats = EventStreams.compactLanding(spark, landing, targetFiles = 8)
+    val stats = LandingMaintenance.compactLanding(spark, landing, targetFiles = 8)
     assert(stats.rows == -1L && stats.filesBefore == stats.filesAfter)
     assert(graft.core.Tables.listing(spark, landing) == before,
       "no-op must not touch the landing")
+  }
+
+  test("compactLanding counts what landingStats counts: a _temporary leftover is no file") {
+    import spark.implicits._
+    val landing = tmpDir("graft-compact-tmpleft") + "/corpus"
+    for (i <- 1 to 3)
+      Seq((i.toLong, s"text $i")).toDF("doc_id", "text")
+        .coalesce(1).write.mode("append").parquet(landing)
+    // a killed task's truncated part file under the committer's tree
+    val attempt = java.nio.file.Paths.get(landing, "_temporary", "0", "_temporary",
+      "attempt_202610190000_0001_m_000000_0")
+    java.nio.file.Files.createDirectories(attempt)
+    java.nio.file.Files.write(
+      attempt.resolve(s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"),
+      "PAR1 truncated".getBytes("UTF-8"))
+    val stats = LandingMaintenance.landingStats(spark, landing)
+    assert(stats.totalFiles == 3)
+    val before = graft.core.Tables.listing(spark, landing)
+    val c = LandingMaintenance.compactLanding(spark, landing, targetFiles = 3)
+    assert(c.filesBefore == stats.totalFiles && c.rows == -1L, c)
+    assert(graft.core.Tables.listing(spark, landing) == before, "nothing to rewrite")
   }
 
   test("compactLanding and ingest streams exclude each other on one landing") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = tmpDir("graft-compact-excl") + "/corpus"
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(
       input.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-excl-ck"))
@@ -117,16 +138,16 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       input.addData((1L, "alpha"), (2L, "beta")); q.processAllAvailable()
       // stream active -> compaction refused
       val err = intercept[IllegalStateException] {
-        EventStreams.compactLanding(spark, landing, 1)
+        LandingMaintenance.compactLanding(spark, landing, 1)
       }
       assert(err.getMessage.contains(landing))
     } finally q.stop()
     // compaction holding the slot (runId == null) -> stream refused.
     // (clear the stopped stream's stale registration first — takeover
     // normally happens lazily on the next acquire)
-    EventStreams.activeIngests.remove(key)
-    val held = new EventStreams.IngestReg(spark)
-    assert(EventStreams.activeIngests.putIfAbsent(key, held) == null)
+    LandingGuard.activeIngests.remove(key)
+    val held = new LandingGuard.IngestReg(spark)
+    assert(LandingGuard.activeIngests.putIfAbsent(key, held) == null)
     try {
       val in2 = MemoryStream[(Long, String)]
       intercept[IllegalStateException] {
@@ -134,9 +155,9 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
           in2.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-excl-ck2"))
       }
       intercept[IllegalStateException] {
-        EventStreams.compactLanding(spark, landing, 1)
+        LandingMaintenance.compactLanding(spark, landing, 1)
       }
-    } finally EventStreams.activeIngests.remove(key, held)
+    } finally LandingGuard.activeIngests.remove(key, held)
   }
 
   test("compactLanding: hive-partitioned dir compacted per leaf, pruning layout intact") {
@@ -167,7 +188,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       .select("id", "month", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).sorted.toSeq
 
-    val stats = EventStreams.compactLanding(spark, dir, targetFiles = 1)
+    val stats = LandingMaintenance.compactLanding(spark, dir, targetFiles = 1)
     assert(stats.rows == 24L && stats.filesAfter == 4 && stats.filesAfter < stats.filesBefore)
     // the directory tree is untouched: same leaves, each at/under budget
     assert(leafDirs(root).map(_.getPath).sorted == leavesBefore)
@@ -212,8 +233,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val serial = tmpDir("graft-compact-ser") + "/landing"
     val par = tmpDir("graft-compact-par") + "/landing"
     build(serial); build(par)
-    val s1 = EventStreams.compactLanding(spark, serial, targetFiles = 1, leafParallelism = 1)
-    val s2 = EventStreams.compactLanding(spark, par, targetFiles = 1, leafParallelism = 4)
+    val s1 = LandingMaintenance.compactLanding(spark, serial, targetFiles = 1, leafParallelism = 1)
+    val s2 = LandingMaintenance.compactLanding(spark, par, targetFiles = 1, leafParallelism = 4)
     assert(s1.rows == 24L && s2.rows == 24L)
     assert(s1.filesBefore == s2.filesBefore && s1.filesAfter == s2.filesAfter)
     assert(s2.carriesKept, "a clean concurrent run must re-stamp, not drop")
@@ -223,7 +244,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     assert(rowsS.map(t => (t._1, t._4)) == rowsP.map(t => (t._1, t._4)))
     assert(filesS.map(_.replaceAll("/[^/]*$", "")) == filesP.map(_.replaceAll("/[^/]*$", "")))
     assert(intercept[IllegalArgumentException] {
-      EventStreams.compactLanding(spark, par, 1, leafParallelism = 0)
+      LandingMaintenance.compactLanding(spark, par, 1, leafParallelism = 0)
     }.getMessage.contains("leafParallelism"))
   }
 
@@ -241,7 +262,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     java.nio.file.Files.copy(stray.toPath,
       new java.io.File(dir, stray.getName).toPath)
     val err = intercept[IllegalArgumentException] {
-      EventStreams.compactLanding(spark, dir, 1)
+      LandingMaintenance.compactLanding(spark, dir, 1)
     }
     assert(err.getMessage.contains("mixes hive partition subdirs"))
     // untouched: both partitions still present
@@ -257,17 +278,17 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       .repartition(4)
       .write.partitionBy("lang").parquet(dir)
     val racedLeaf = dir + "/lang=de"
-    EventStreams.preSwapHook = { d =>
+    LandingMaintenance.preSwapHook = { d =>
       if (d.endsWith("lang=de"))
         Seq((99L, "raced")).toDF("id", "text")
           .coalesce(1).write.mode("append").parquet(racedLeaf)
     }
     try {
       val err = intercept[IllegalStateException] {
-        EventStreams.compactLanding(spark, dir, 1)
+        LandingMaintenance.compactLanding(spark, dir, 1)
       }
       assert(err.getMessage.contains("changed during compaction"))
-    } finally EventStreams.preSwapHook = _ => ()
+    } finally LandingMaintenance.preSwapHook = _ => ()
     // every original row AND the raced-in row survive
     val got = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == ((1L to 12L) :+ 99L).sorted)
@@ -288,7 +309,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       input.addData((3L, "gamma"), (4L, "delta")); q.processAllAvailable()
     } finally q.stop()
     val before = landedTexts(landing)
-    EventStreams.preSwapHook = { _ =>
+    LandingMaintenance.preSwapHook = { _ =>
       // a foreign writer lands a row between the compaction read and
       // the swap — exactly the rows a blind swap would destroy
       Seq((99L, "raced")).toDF("doc_id", "text")
@@ -296,10 +317,10 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     }
     try {
       val err = intercept[IllegalStateException] {
-        EventStreams.compactLanding(spark, landing, 1)
+        LandingMaintenance.compactLanding(spark, landing, 1)
       }
       assert(err.getMessage.contains("changed during compaction"))
-    } finally EventStreams.preSwapHook = _ => ()
+    } finally LandingMaintenance.preSwapHook = _ => ()
     // the landing keeps BOTH the original rows and the raced-in row,
     // and no temp debris survives the abort
     assert(landedTexts(landing) == (before :+ (99L, "raced")).sorted)
@@ -312,7 +333,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = tmpDir("graft-compact-postswap") + "/corpus"
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(
       input.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-postswap-ck"))
@@ -327,13 +348,13 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // safe in the new dir), but the post listing now contains a file
     // whose texts the carried blob does NOT — re-stamping would admit
     // every future duplicate of 'sneaky'
-    EventStreams.postSwapHook = { _ =>
+    LandingMaintenance.postSwapHook = { _ =>
       Seq((99L, "sneaky")).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(landing)
     }
     val stats =
-      try EventStreams.compactLanding(spark, landing, targetFiles = 1)
-      finally EventStreams.postSwapHook = _ => ()
+      try LandingMaintenance.compactLanding(spark, landing, targetFiles = 1)
+      finally LandingMaintenance.postSwapHook = _ => ()
     assert(!stats.carriesKept, "unexplained post-listing delta must drop the carry")
     assert(EventStreams.carryOf(key, "exact").isEmpty)
     // every row survived — the compacted five plus the foreign one
@@ -361,15 +382,15 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // recreates the target dir — Hadoop's rename then NESTS the
     // compacted output inside it instead of failing, so a blind
     // delete of the aside dir would destroy every original row
-    EventStreams.preCommitSwapHook = { _ =>
+    LandingMaintenance.preCommitSwapHook = { _ =>
       Seq((99L, "foreign")).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(dir)
     }
     val err =
       try intercept[IllegalStateException] {
-        EventStreams.compactLanding(spark, dir, targetFiles = 1)
+        LandingMaintenance.compactLanding(spark, dir, targetFiles = 1)
       }
-      finally EventStreams.preCommitSwapHook = _ => ()
+      finally LandingMaintenance.preCommitSwapHook = _ => ()
     assert(err.getMessage.contains("recreated") || err.getMessage.contains("restore"),
       s"unexpected message: ${err.getMessage}")
     // the original rows survive in SOME readable place: either the
@@ -386,7 +407,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       s"original rows must be recoverable, saw $recovered")
     // and repair makes the aside case an explicit human decision
     if (asides.nonEmpty) {
-      val stats = EventStreams.repairLanding(spark, dir)
+      val stats = LandingMaintenance.repairLanding(spark, dir)
       assert(stats.unresolved.nonEmpty, "recreated-target aside must be unresolved")
       assert(asides.head.exists(), "unresolved aside must be left intact")
     }
@@ -398,21 +419,21 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val dir = base + "/landing"
     Seq((1L, "alpha")).toDF("doc_id", "text").write.parquet(dir)
     // a successful run takes and releases the lock
-    EventStreams.compactLanding(spark, dir, targetFiles = 8)
+    LandingMaintenance.compactLanding(spark, dir, targetFiles = 8)
     assert(!new java.io.File(base, ".maintenance-lock-landing").exists())
     // a crashed run's leftover lock blocks every maintenance form
     java.nio.file.Files.writeString(
       new java.io.File(base, ".maintenance-lock-landing").toPath, "12345")
     for (run <- Seq(
-        () => EventStreams.compactLanding(spark, dir, 1),
-        () => EventStreams.repairLanding(spark, dir))) {
+        () => LandingMaintenance.compactLanding(spark, dir, 1),
+        () => LandingMaintenance.repairLanding(spark, dir))) {
       val err = intercept[IllegalStateException](run())
       assert(err.getMessage.contains("maintenance lock"))
     }
     // operator deletes the file after confirming nothing runs → works
     assert(new java.io.File(base, ".maintenance-lock-landing").delete())
-    assert(EventStreams.repairLanding(spark, dir) ==
-      EventStreams.RepairStats(0, 0, 0, 0, Nil))
+    assert(LandingMaintenance.repairLanding(spark, dir) ==
+      LandingMaintenance.RepairStats(0, 0, 0, 0, Nil))
   }
 
   test("repairLanding: restores a flat landing a crash left renamed-aside; sweeps tmp debris") {
@@ -430,14 +451,14 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     assert(tmp.mkdirs())
     java.nio.file.Files.writeString(tmp.toPath.resolve("junk"), "partial")
 
-    val stats = EventStreams.repairLanding(spark, landing)
+    val stats = LandingMaintenance.repairLanding(spark, landing)
     assert(stats.oldsRestored == 1 && stats.tmpsDeleted == 1 &&
       stats.oldsDeleted == 0 && stats.unresolved.isEmpty)
     assert(spark.read.parquet(landing).collect().map(_.getLong(0)).sorted.toSeq == rows)
     assert(!old.exists() && !tmp.exists())
     // second run: nothing left to do
-    val again = EventStreams.repairLanding(spark, landing)
-    assert(again == EventStreams.RepairStats(0, 0, 0, 0, Nil))
+    val again = LandingMaintenance.repairLanding(spark, landing)
+    assert(again == LandingMaintenance.RepairStats(0, 0, 0, 0, Nil))
   }
 
   test("repairLanding: finishes a manifest-proven completed swap; refuses an unproven one") {
@@ -456,7 +477,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .repartition(4).write.parquet(old.getPath)
 
-    val stats = EventStreams.repairLanding(spark, landing)
+    val stats = LandingMaintenance.repairLanding(spark, landing)
     assert(stats.oldsDeleted == 1 && stats.manifestsCleaned == 1 &&
       stats.oldsRestored == 0 && stats.unresolved.isEmpty)
     assert(!old.exists())
@@ -468,7 +489,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // sides hold rows, so repair must touch neither
     val old2 = new java.io.File(base, s".compact-old-corpus-${java.util.UUID.randomUUID()}")
     Seq((9L, "gamma")).toDF("doc_id", "text").coalesce(1).write.parquet(old2.getPath)
-    val stats2 = EventStreams.repairLanding(spark, landing)
+    val stats2 = LandingMaintenance.repairLanding(spark, landing)
     assert(stats2.unresolved.map(_.stripPrefix("file:")) == Seq(old2.getPath) &&
       stats2.oldsDeleted == 0)
     assert(old2.exists() && spark.read.parquet(landing).count() == 2)
@@ -490,7 +511,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       new java.io.File(dir, "month=2026-02/.swap-manifest").toPath,
       s".compact-old-month=2026-02-${java.util.UUID.randomUUID()}")
 
-    val stats = EventStreams.repairLanding(spark, dir)
+    val stats = LandingMaintenance.repairLanding(spark, dir)
     assert(stats.oldsRestored == 1 && stats.manifestsCleaned == 1 &&
       stats.unresolved.isEmpty)
     assert(leaf.exists() && !oldLeaf.exists())
@@ -504,7 +525,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val dir = base + "/landing"
     Seq((1L, "2026-01", "a"), (2L, "2026-02", "b")).toDF("id", "month", "text")
       .repartition(2).write.partitionBy("month").parquet(dir)
-    val clean = EventStreams.landingStats(spark, dir)
+    val clean = LandingMaintenance.landingStats(spark, dir)
     assert(clean.leaves.size == 2 && clean.totalFiles == clean.leaves.map(_._2).sum)
     assert(clean.totalBytes > 0 && clean.debris.isEmpty && !clean.lockHeld)
     // debris + lock become visible; the landing itself is untouched
@@ -514,12 +535,12 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       new java.io.File(dir, "month=2026-02/.swap-manifest").toPath, "x")
     java.nio.file.Files.writeString(
       new java.io.File(base, ".maintenance-lock-landing").toPath, "1")
-    val dirty = EventStreams.landingStats(spark, dir)
+    val dirty = LandingMaintenance.landingStats(spark, dir)
     assert(dirty.debris.size == 2 && dirty.lockHeld)
     assert(dirty.totalFiles == clean.totalFiles, "stats must not mutate anything")
     // stats takes neither the slot nor the lock: it ran fine with the
     // lock file present, and the slot is free afterwards
-    assert(!EventStreams.activeIngests.containsKey(EventStreams.landingKey(spark, dir)))
+    assert(!LandingGuard.activeIngests.containsKey(LandingGuard.landingKey(spark, dir)))
   }
 
   test("landingStats: missing landing with an aside dir reports the debris, not an error") {
@@ -531,20 +552,20 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val sibling = new java.io.File(base,
       s".compact-old-corpus-backup-${java.util.UUID.randomUUID()}")
     assert(sibling.mkdirs())
-    val healthy = EventStreams.landingStats(spark, dir)
+    val healthy = LandingMaintenance.landingStats(spark, dir)
     assert(healthy.debris.isEmpty, s"sibling debris misattributed: ${healthy.debris}")
     // crash point 1: the landing renamed aside — stats must point at
     // the debris (the operator's cue to run --repair), not error out
     val old = new java.io.File(base, s".compact-old-corpus-${java.util.UUID.randomUUID()}")
     assert(new java.io.File(dir).renameTo(old))
-    val crashed = EventStreams.landingStats(spark, dir)
+    val crashed = LandingMaintenance.landingStats(spark, dir)
     assert(crashed.leaves.isEmpty && crashed.totalFiles == 0)
     assert(crashed.debris.exists(_.contains(old.getName)))
     // a missing landing with NO attributable artifact is still an error
     assert(old.renameTo(new java.io.File(dir)))
     assert(sibling.delete())
     val err = intercept[IllegalArgumentException] {
-      EventStreams.landingStats(spark, base + "/nope")
+      LandingMaintenance.landingStats(spark, base + "/nope")
     }
     assert(err.getMessage.contains("does not exist"))
   }
@@ -561,12 +582,12 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // seed a carry whose fingerprint matches the current listing — the
     // restamp discipline must keep it (expiry makes the bloom a
     // SUPERSET, which the exact confirm join tolerates)
-    val key = EventStreams.landingKey(spark, dir)
+    val key = LandingGuard.landingKey(spark, dir)
     val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
     EventStreams.carries.put(key,
       Map("exact" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 5L, preFp)))
     try {
-      val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
+      val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
       assert(stats.dirsDropped == 2 && stats.filesDropped >= 2 && stats.carriesKept)
       // expired dirs gone, survivors untouched
       val monthDirs = new java.io.File(dir).listFiles()
@@ -580,7 +601,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       assert(carry != null &&
         carry.landingFp == graft.core.Tables.listing(spark, dir).mkString(";"))
       // nothing sorts before the cutoff now: second run is a no-op
-      val again = EventStreams.expireLanding(spark, dir, "month", "2026-01")
+      val again = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
       assert(again.dirsDropped == 0 && again.filesDropped == 0 && again.carriesKept)
     } finally EventStreams.carries.remove(key)
   }
@@ -593,7 +614,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       (3L, "b", "2025-12", "z"), (4L, "b", "2026-01", "w"))
       .toDF("id", "source", "month", "text")
       .write.partitionBy("source", "month").parquet(dir)
-    val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
+    val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
     assert(stats.dirsDropped == 2)
     val kept = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(kept == Seq(2L, 4L))
@@ -611,7 +632,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     Seq((1L, "2025-12", "old"), (2L, "2026-01", "keep"))
       .toDF("id", "month", "text")
       .write.partitionBy("month").parquet(dir)
-    val key = EventStreams.landingKey(spark, dir)
+    val key = LandingGuard.landingKey(spark, dir)
     val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
     // two stages' carries on the one landing entry: an unexplained
     // delta must drop them both, i.e. the whole entry
@@ -621,19 +642,19 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // foreign rows land in the surviving month between the pre listing
     // and the deletes — the carried blob lacks their texts, so a
     // re-stamp would admit their duplicates; the carry must drop
-    EventStreams.expireHook = { _ =>
+    LandingMaintenance.expireHook = { _ =>
       Seq((99L, "2026-01", "raced")).toDF("id", "month", "text")
         .write.mode("append").partitionBy("month").parquet(dir)
     }
     try {
-      val stats = EventStreams.expireLanding(spark, dir, "month", "2026-01")
+      val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
       assert(stats.dirsDropped == 1 && !stats.carriesKept)
       assert(!EventStreams.carries.containsKey(key), "landing's carry entry survived")
       // the raced-in row and the surviving month are both intact
       val kept = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
       assert(kept == Seq(2L, 99L))
     } finally {
-      EventStreams.expireHook = _ => ()
+      LandingMaintenance.expireHook = _ => ()
       EventStreams.carries.remove(key)
     }
   }
@@ -643,7 +664,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val dir = tmpDir("graft-expire-flat") + "/landing"
     Seq((1L, "a")).toDF("id", "text").write.parquet(dir)
     val err = intercept[IllegalArgumentException] {
-      EventStreams.expireLanding(spark, dir, "month", "2026-01")
+      LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
     }
     assert(err.getMessage.contains("no 'month="))
     assert(spark.read.parquet(dir).count() == 1, "refusal must not touch the landing")

@@ -552,4 +552,17 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     } yield s"${f.getPath}:${i + 1}: ${m.group(1)}"
     assert(hits.isEmpty, s"absolute checkout paths in main: ${hits.mkString(", ")}")
   }
+
+  test("main spells each landing lock and swap-artifact name in one literal") {
+    // The writer guard, maintenance and stats must agree on every name
+    // they keep beside a landing: a second spelling can drift (a lock
+    // one side takes that the other never checks). Each name begins a
+    // string literal exactly once in main.
+    val src = mainSources.flatMap(_._2).mkString("\n")
+    for (name <- Seq(".ingest-writer-lock-", ".maintenance-lock-", ".compact-tmp-",
+                     ".compact-old-", ".swap-manifest")) {
+      val n = ("\"" + java.util.regex.Pattern.quote(name)).r.findAllIn(src).size
+      assert(n == 1, s"string literals beginning '$name' in main: $n")
+    }
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
 import graft.streaming.EventStreams.{Event, Session}
 
 /** Structured Streaming behavior through MemoryStream: incremental
@@ -360,7 +360,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       // append's observed size) — this is what lets sizedBits run
       // without a per-batch metadata count over the growing file
       // listing of the landing dir
-      assert(EventStreams.landedCounts.get(EventStreams.landingKey(spark, landing)).get() == 3L)
+      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
     } finally q.stop()
   }
 
@@ -469,6 +469,33 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     } finally ndQ.stop()
   }
 
+  test("a killed task's _temporary leftover: the next batch lands and dedups exactly") {
+    // A task killed mid-write leaves a truncated part file under the
+    // committer's `_temporary` tree. Spark's reads skip it, so it is
+    // not landing data; taken for data it would also be the
+    // steady-state batch's schema source ('_' sorts before 'p') and
+    // fail the stream on its footer.
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val landing = java.nio.file.Files.createTempDirectory("graft-tmpleft").toString + "/corpus"
+    val input = MemoryStream[(Long, String)]
+    val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing,
+      java.nio.file.Files.createTempDirectory("graft-tmpleft-ck").toString)
+    try {
+      input.addData((1L, "alpha"), (2L, "beta")); q.processAllAvailable()
+      val attempt = java.nio.file.Paths.get(landing, "_temporary", "0", "_temporary",
+        "attempt_202610190000_0001_m_000000_0")
+      java.nio.file.Files.createDirectories(attempt)
+      java.nio.file.Files.write(
+        attempt.resolve(s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"),
+        "PAR1 truncated".getBytes("UTF-8"))
+      input.addData((3L, "alpha"), (4L, "gamma")); q.processAllAvailable()
+      val landed = spark.read.parquet(landing)
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(landed == Seq((1L, "alpha"), (2L, "beta"), (4L, "gamma")))
+    } finally q.stop()
+  }
+
   test("carried bloom: steady-state batches never rescan the landing for the prefilter") {
     // The round-13 carried-bloom discipline: the exact-stage bloom is
     // built over the LANDING at most once per seed (restart / outgrown
@@ -508,7 +535,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
-    EventStreams.carries.remove(EventStreams.landingKey(spark, landing))
+    EventStreams.carries.remove(LandingGuard.landingKey(spark, landing))
     spark.listenerManager.register(listener)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
@@ -525,7 +552,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       Thread.sleep(1500)
       assert(bloomScansOnLanding.get() == 0,
         s"expected 0 landing-scanning bloom builds, got ${bloomScansOnLanding.get()}")
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined, "carry missing after 3 batches")
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined, "carry missing after 3 batches")
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
@@ -565,7 +592,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // pre-exist the corpus so the stream's first batch takes the
     // seed path (a restart over landed state — the expensive case)
     Seq((1L, "alpha")).toDF("doc_id", "text").write.parquet(landing)
-    EventStreams.landedCounts.remove(EventStreams.landingKey(spark, landing)) // simulate a fresh JVM
+    EventStreams.landedCounts.remove(LandingGuard.landingKey(spark, landing)) // simulate a fresh JVM
     spark.listenerManager.register(listener)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(
@@ -593,7 +620,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(countsOnLanding.get() == 1,
         s"expected exactly the one seed count over the landing dir, got ${countsOnLanding.get()}")
-      assert(EventStreams.landedCounts.get(EventStreams.landingKey(spark, landing)).get() == 4L) // 1 seeded + 3 landed
+      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 4L) // 1 seeded + 3 landed
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
@@ -615,7 +642,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       in1.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
       q1.processAllAvailable()
-      assert(EventStreams.landedCounts.get(EventStreams.landingKey(spark, landing)).get() == 3L)
+      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
     } finally q1.stop()
     // wipe the landing; new stream, same dir, fresh checkpoint
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(landing))
@@ -625,7 +652,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       in2.addData((10L, "delta"))
       q2.processAllAvailable()
-      assert(EventStreams.landedCounts.get(EventStreams.landingKey(spark, landing)).get() == 1L,
+      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 1L,
         "carried count did not reset with the recreated landing dir")
       assert(spark.read.parquet(landing).count() == 1L)
     } finally q2.stop()
@@ -684,7 +711,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean near-dup batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "near").isDefined, "bucket carry missing")
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "near").isDefined, "bucket carry missing")
       // and the carry still DEDUPS: a cross-batch near-dup (edited
       // repost of textA) is a candidate, confirmed against the
       // landing (a legitimate read, after disarm), and dropped
@@ -748,12 +775,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       input.addData((1L, "alpha"), (2L, "beta"))
       q.processAllAvailable()
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined)
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined)
       // arm the race: right after batch 2's append returns and before
       // its fold re-lists, a second writer lands (99,"omega")
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
       EventStreams.postAppendHook = (dir, _) =>
-        if (dir == EventStreams.landingKey(spark, landing) && fired.compareAndSet(false, true))
+        if (dir == LandingGuard.landingKey(spark, landing) && fired.compareAndSet(false, true))
           Seq((99L, "omega")).toDF("doc_id", "text")
             .coalesce(1).write.mode("append").parquet(landing)
       input.addData((3L, "gamma"))
@@ -761,7 +788,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       EventStreams.postAppendHook = (_, _) => ()
       assert(fired.get(), "race hook did not fire")
       // the fold saw a delta with two write UUIDs → carry dropped
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isEmpty,
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isEmpty,
         "carry survived an out-of-band append inside the fold window")
       // next batch reseeds from the landing (which includes omega), so
       // the duplicate of the raced-in row is still rejected
@@ -771,7 +798,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(landed == Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"),
                            (5L, "epsilon"), (99L, "omega")))
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "exact").isDefined, "reseed did not restore the carry")
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined, "reseed did not restore the carry")
     } finally {
       EventStreams.postAppendHook = (_, _) => ()
       q.stop()
@@ -835,7 +862,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = java.nio.file.Files.createTempDirectory("graft-alldup").toString + "/corpus"
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-alldup-ckpt").toString
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
@@ -924,36 +951,28 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     }.getMessage.contains("duplicate"))
   }
 
-  test("ingest entries reject a non-positive appendFiles upfront, not in the first batch") {
+  test("ingest entries refused at start leave no writer slot held") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
+    val input = MemoryStream[(Long, String, Long)]
+    val docs = input.toDF().toDF("doc_id", "text", "mh1")
     val landing = java.nio.file.Files.createTempDirectory("graft-af").toString + "/corpus"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-af-ck").toString
-    for (bad <- Seq(0, -1)) {
-      assert(intercept[IllegalArgumentException] {
-        EventStreams.ingestDedup(docs, landing, ckpt, appendFiles = bad)
-      }.getMessage.contains("appendFiles"))
-      assert(intercept[IllegalArgumentException] {
-        EventStreams.ingestNearDup(docs, landing, ckpt, appendFiles = bad)
-      }.getMessage.contains("appendFiles"))
-      assert(intercept[IllegalArgumentException] {
-        EventStreams.ingestPipeline(docs, landing, ckpt, appendFiles = bad)
-      }.getMessage.contains("appendFiles"))
-    }
+    intercept[IllegalArgumentException](EventStreams.ingestDedup(docs, landing, ckpt))
+    intercept[IllegalArgumentException](EventStreams.ingestNearDup(docs, landing, ckpt))
+    intercept[IllegalArgumentException](EventStreams.ingestPipeline(docs, landing, ckpt))
     // the refused starts must not leave the landing's writer slot held
-    val key = EventStreams.landingKey(spark, landing)
-    assert(!EventStreams.activeIngests.containsKey(key),
+    val key = LandingGuard.landingKey(spark, landing)
+    assert(!LandingGuard.activeIngests.containsKey(key),
       "a rejected start must not hold the single-writer slot")
   }
 
   test("landingKey: path spellings of one dir share one state key") {
     val raw = java.nio.file.Files.createTempDirectory("graft-lk").toString + "/corpus"
-    val k1 = EventStreams.landingKey(spark, raw)
-    assert(k1 == EventStreams.landingKey(spark, raw + "/"), "trailing slash split the key")
-    assert(k1 == EventStreams.landingKey(spark, "file:" + raw), "scheme spelling split the key")
-    assert(k1 == EventStreams.landingKey(spark, k1), "normalization not idempotent")
+    val k1 = LandingGuard.landingKey(spark, raw)
+    assert(k1 == LandingGuard.landingKey(spark, raw + "/"), "trailing slash split the key")
+    assert(k1 == LandingGuard.landingKey(spark, "file:" + raw), "scheme spelling split the key")
+    assert(k1 == LandingGuard.landingKey(spark, k1), "normalization not idempotent")
   }
 
   test("single-writer guard: a path ALIAS of an active landing dir is refused too") {
@@ -1014,8 +1033,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     writeLock("1")
     java.nio.file.Files.setLastModifiedTime(lockFile,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    val saved = EventStreams.ingestLockStaleMs
-    EventStreams.ingestLockStaleMs = 60 * 1000
+    val saved = LandingGuard.ingestLockStaleMs
+    LandingGuard.ingestLockStaleMs = 60 * 1000
     try {
       val (in3, q3) = startStream("graft-xjvm-ck3")
       try {
@@ -1028,7 +1047,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         assert(pid == java.lang.ProcessHandle.current().pid().toString,
           "takeover must stamp the new owner's pid")
       } finally q3.stop()
-    } finally EventStreams.ingestLockStaleMs = saved
+    } finally LandingGuard.ingestLockStaleMs = saved
   }
 
   test("cross-JVM writer lock: a displaced writer is FENCED — its heartbeat neither refreshes nor clobbers the usurper's lock, and the batch fails loudly") {
@@ -1114,12 +1133,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val iLock = java.nio.file.Paths.get(root, ".ingest-writer-lock-corpus")
     java.nio.file.Files.write(iLock, "1".getBytes("UTF-8"))
     assert(intercept[IllegalStateException] {
-      EventStreams.compactLanding(spark, landing)
+      LandingMaintenance.compactLanding(spark, landing)
     }.getMessage.contains("live ingest stream"))
     // (3) ...but clears a DEAD writer's leftover and proceeds
     java.nio.file.Files.delete(iLock)
     java.nio.file.Files.write(iLock, "999999999".getBytes("UTF-8"))
-    EventStreams.compactLanding(spark, landing)
+    LandingMaintenance.compactLanding(spark, landing)
     assert(!java.nio.file.Files.exists(iLock),
       "maintenance should clear a dead writer's leftover lock")
     // (3b) a LIVE foreign pid with a STALE heartbeat is cleared too —
@@ -1128,15 +1147,15 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     java.nio.file.Files.write(iLock, "1".getBytes("UTF-8"))
     java.nio.file.Files.setLastModifiedTime(iLock,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    val saved = EventStreams.ingestLockStaleMs
-    EventStreams.ingestLockStaleMs = 60 * 1000
-    try EventStreams.compactLanding(spark, landing)
-    finally EventStreams.ingestLockStaleMs = saved
+    val saved = LandingGuard.ingestLockStaleMs
+    LandingGuard.ingestLockStaleMs = 60 * 1000
+    try LandingMaintenance.compactLanding(spark, landing)
+    finally LandingGuard.ingestLockStaleMs = saved
     assert(!java.nio.file.Files.exists(iLock),
       "maintenance should clear a stale-heartbeat writer lock like an ingest starter would")
     // landing stats reports both lock kinds
     java.nio.file.Files.write(iLock, "1".getBytes("UTF-8"))
-    val stats = EventStreams.landingStats(spark, landing)
+    val stats = LandingMaintenance.landingStats(spark, landing)
     assert(stats.writerLockHeld && !stats.lockHeld)
     java.nio.file.Files.delete(iLock)
   }
@@ -1528,7 +1547,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       // survivors land with their signature columns (near-dup state)
       assert(Seq("mh1", "mh2", "mh3", "mh4").forall(landed.columns.contains))
       // and the carried landed count tracked every append exactly
-      assert(EventStreams.landedCounts.get(EventStreams.landingKey(spark, landing)).get() == 3L)
+      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
     } finally q.stop()
   }
 
@@ -1592,7 +1611,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean semantic batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carryOf(EventStreams.landingKey(spark, landing), "sem").isDefined, "sem bucket carry missing")
+      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "sem").isDefined, "sem bucket carry missing")
       // and the carry still DEDUPS: a scaled repost is a candidate,
       // cosine-confirmed against the landing (legitimate read, after
       // disarm), and dropped
@@ -1712,7 +1731,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     } finally q.stop()
     val landed = spark.read.parquet(landing)
     assert(landed.count() == 12L, "fixture rows must all be fresh")
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     val stageKeys = Seq(
       "exact" -> Seq(when(col("text").isNotNull, xxhash64(col("text")))),
       "near" -> Seq((1, "mh1", "mh2"), (2, "mh3", "mh4")).map { case (band, x, y) =>
@@ -2041,9 +2060,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val root = java.nio.file.Files.createTempDirectory("graft-gatefail").toString
     val landing = root + "/corpus"
     val lockFile = java.nio.file.Paths.get(root, ".ingest-writer-lock-corpus")
-    val key = EventStreams.landingKey(spark, landing)
+    val key = LandingGuard.landingKey(spark, landing)
     def assertReleased(what: String): Unit = {
-      assert(!EventStreams.activeIngests.containsKey(key),
+      assert(!LandingGuard.activeIngests.containsKey(key),
         s"$what: a failed start left the single-writer slot held")
       assert(!java.nio.file.Files.exists(lockFile),
         s"$what: a failed start left the writer lock file")
@@ -2077,5 +2096,36 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     } finally q.stop()
     assert(spark.read.parquet(landing).select("doc_id")
       .collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("termination registry: cleanups registered after termination run once, at registration") {
+    // A stream can terminate before its start path registers what its
+    // termination must release; the registration itself then runs it.
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[Long]
+    val q = input.toDF().writeStream.format("noop").start()
+    // listeners run in registration order on one bus thread: once this
+    // one has seen the termination, every earlier one has too
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val probe = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.runId == q.runId) seen.countDown()
+    }
+    spark.streams.addListener(probe)
+    try {
+      q.stop(); q.awaitTermination()
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val runs = List.fill(3)(new java.util.concurrent.atomic.AtomicInteger())
+      LandingGuard.onTermination(q, runs.map(c => () => { c.incrementAndGet(); () }))
+      assert(runs.map(_.get) == List(1, 1, 1), "each cleanup must run once, at registration")
+      LandingGuard.terminated(q.runId) // a later termination event for the run
+      assert(runs.map(_.get) == List(1, 1, 1), "a later termination event must run none")
+    } finally spark.streams.removeListener(probe)
   }
 }
