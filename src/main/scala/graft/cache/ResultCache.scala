@@ -5,8 +5,9 @@ import java.sql.Timestamp
 import java.time.Instant
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Query-result cache with the reference's semantics
   * (`cache_manager.py:33-337`), re-expressed as a keyed Parquet store:
@@ -18,7 +19,10 @@ import org.apache.spark.sql.functions._
   *  - layout: `dir/data/<hash>/` holds the cached frame as parquet;
   *    `dir/meta/<hash>/` holds its one-row metadata (coords, dates,
   *    variables JSON, row count, fetched_at, expires_at, size).
-  *    INSERT-OR-REPLACE = overwrite both dirs for the key.
+  *    INSERT-OR-REPLACE = overwrite both dirs for the key. Every meta
+  *    read uses [[ResultCache.MetaSchema]], so no read infers a schema
+  *    and a torn meta dir (only `_temporary/`) reads as no rows; a data
+  *    dir is read only once its `_SUCCESS` marker exists.
   *  - TTL 24 h, per-entry size cap 100 MB (`config.py:58-63`), probe
   *    only returns entries with `expires_at > now` (P6), nearby lookup
   *    = spatial box filter ranked by Manhattan distance (P7/O4,
@@ -39,7 +43,7 @@ final class ResultCache(
     ttlHours: Int = ResultCache.TtlHours,
     maxEntryBytes: Long = ResultCache.MaxEntryBytes,
     clock: () => Instant = () => Instant.now()) {
-  import ResultCache.queryHash
+  import ResultCache.{MetaSchema, queryHash}
 
   private val metaRoot = Paths.get(dir, "meta")
   private val dataRoot = Paths.get(dir, "data")
@@ -95,13 +99,10 @@ final class ResultCache(
     val now = clock()
     val expires = now.plusSeconds(ttlHours.toLong * 3600)
     data.write.mode(SaveMode.Overwrite).parquet(dataDir(h).toString)
-    import spark.implicits._
-    Seq((h, lat, lon, startDate, endDate,
-         ResultCache.variablesJson(variables), rowCount,
-         Timestamp.from(now), Timestamp.from(expires), sizeBytes))
-      .toDF("query_hash", "latitude", "longitude", "start_date", "end_date",
-            "variables", "row_count", "fetched_at", "expires_at", "file_size_bytes")
-      .coalesce(1)
+    val meta = Row(h, lat, lon, startDate, endDate, ResultCache.variablesJson(variables),
+                   rowCount, Timestamp.from(now), Timestamp.from(expires), sizeBytes)
+    // a one-row local relation: one partition, so one meta file
+    spark.createDataFrame(java.util.List.of(meta), MetaSchema)
       .write.mode(SaveMode.Overwrite).parquet(metaDir(h).toString)
     true
   }
@@ -112,24 +113,29 @@ final class ResultCache(
           variables: Seq[String]): Option[DataFrame] = {
     val h = queryHash(lat, lon, startDate, endDate, variables)
     if (!Files.exists(metaDir(h))) return None
-    val fresh = spark.read.parquet(metaDir(h).toString)
+    val fresh = !readMeta(Seq(metaDir(h)))
       .filter(col("expires_at") > Timestamp.from(clock()))
-      .limit(1).count() == 1
-    if (fresh && Files.exists(dataDir(h))) Some(spark.read.parquet(dataDir(h).toString))
-    else None
+      .isEmpty
+    if (fresh) readEntry(h) else None
   }
 
   /** The full metadata table (one row per cached query); empty-schema
     * safe when the cache has no entries yet. */
   def metadata: DataFrame = {
     val dirs = listKeys(metaRoot)
-    if (dirs.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(String, Double, Double, String, String, String, Long, Timestamp, Timestamp, Long)]
-        .toDF("query_hash", "latitude", "longitude", "start_date", "end_date",
-              "variables", "row_count", "fetched_at", "expires_at", "file_size_bytes")
-    } else spark.read.parquet(dirs.map(_.toString): _*)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), MetaSchema)
+    else readMeta(dirs).coalesce(1) // bound: one row per cache entry
   }
+
+  private def readMeta(dirs: Seq[Path]): DataFrame =
+    spark.read.schema(MetaSchema).parquet(dirs.map(_.toString): _*)
+
+  /** The cached frame of key `h`, once its write committed: a put killed
+    * mid-write leaves a data dir without `_SUCCESS`, which reads as a
+    * miss. */
+  private def readEntry(h: String): Option[DataFrame] =
+    if (!Files.exists(dataDir(h).resolve("_SUCCESS"))) None
+    else Some(spark.read.parquet(dataDir(h).toString).coalesce(1)) // bound: one entry, ≤ maxEntryBytes
 
   /** O3: the cache listing (`cache_manager.py:248-280`) — unexpired
     * entries ordered `fetched_at DESC`, with the reference's
@@ -156,10 +162,9 @@ final class ResultCache(
     nearby(lat, lon, radiusDegrees)
       .select("query_hash", "latitude", "longitude", "distance_degrees")
       .collect().toSeq
-      .filter(r => Files.exists(dataDir(r.getString(0))))
-      .map { r =>
-        NearbyHit(r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
-                  spark.read.parquet(dataDir(r.getString(0)).toString))
+      .flatMap { r =>
+        readEntry(r.getString(0)).map(
+          NearbyHit(r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), _))
       }
 
   /** P7/O4: nearby-query lookup (`cache_manager.py:295-337`) — box
@@ -229,6 +234,16 @@ object ResultCache {
   val TtlHours = 24            // config.py:61
   val MaxEntryBytes: Long = 100L * 1024 * 1024 // config.py:62 (100 MB)
   val CleanupIntervalHours = 6 // config.py:63 (declared cadence)
+
+  /** The one-row-per-entry metadata table, stated once: `put` writes
+    * it and every meta read declares it. Every field is nullable, as a
+    * Parquet read reports them, so an entry written before this schema
+    * was declared (an inferred one) reads back unchanged. */
+  val MetaSchema: StructType = StructType(Seq(
+    "query_hash" -> StringType, "latitude" -> DoubleType, "longitude" -> DoubleType,
+    "start_date" -> StringType, "end_date" -> StringType, "variables" -> StringType,
+    "row_count" -> LongType, "fetched_at" -> TimestampType, "expires_at" -> TimestampType,
+    "file_size_bytes" -> LongType).map { case (n, t) => StructField(n, t) })
 
   /** F10: the query key, byte-for-byte with the reference
     * (`cache_manager.py:63-74`): Python's `f"{x:.6f}"` ==

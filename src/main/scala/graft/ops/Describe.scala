@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType, StructField, StructType}
@@ -12,10 +14,11 @@ import org.apache.spark.sql.types.{NumericType, StringType, StructField, StructT
   * integer moments)/min/max for every column plus exact quartiles via
   * `percentile`; the tiny result is reshaped driver-side. For
   * all-distinct double columns at large scale prefer
-  * `SparkEntry.exactPercentilesBySort`'s sort-based approach — this
+  * `Percentiles.exactBySort`'s sort-based approach — this
   * API targets the reference's interactive regime (≤72-row frames up
   * to single-table summaries). std is sample std (ddof=1), matching
-  * pandas (SURVEY §7.4).
+  * pandas (SURVEY §7.4). The 8 stat rows come back as a local
+  * relation, so collecting them runs no Spark job.
   */
 object Describe {
   val Stats: Seq[String] = Seq("count", "mean", "std", "min", "25%", "50%", "75%", "max")
@@ -44,7 +47,6 @@ object Describe {
       case "50%" => r.getAs[Seq[Double]](s"pct_$c")(1)
       case "75%" => r.getAs[Seq[Double]](s"pct_$c")(2)
     }
-    val spark = df.sparkSession
     val schema = StructType(
       StructField("summary", StringType, nullable = false) +:
       cols.map(c => StructField(c, org.apache.spark.sql.types.DoubleType, nullable = true)))
@@ -55,6 +57,6 @@ object Describe {
       }
       Row.fromSeq(s +: vals)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    df.sparkSession.createDataFrame(rows.asJava, schema)
   }
 }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,7 +79,11 @@ object LandedIngest {
     * immediately run their own pruned query over the landed dir (the
     * q59 carrier) should not pay a second directory listing for a
     * DataFrame they discard. Its build/write phase split is recorded
-    * in BASELINE.md, Round 8, "q59 cause". */
+    * in BASELINE.md, Round 8, "q59 cause".
+    *
+    * The bodies are recorded fixtures, so a point that fails to fetch
+    * is a bad input, not a flaky server: once the landing has run, the
+    * call fails naming every failed point. */
   def land(spark: SparkSession, landingDir: String,
            points: Seq[(Double, Double)] = Points): Unit = {
     val fx = fixtures(points)
@@ -92,6 +98,11 @@ object LandedIngest {
     graft.sources.ZOrderLanding.land(
       cleaned, landingDir, bucketShift = 6, overwrite = true,
       extraPartitionCols = Seq("month"))
+    // a retried task adds its point's message again: report each once
+    val failed = fetched.failures.value.asScala.distinct.sorted
+    if (failed.nonEmpty)
+      throw new IllegalStateException(
+        s"${failed.size} of ${points.size} points failed to fetch: ${failed.mkString("; ")}")
   }
 
   /** The pruned point query over the landed table: one month, one grid

@@ -148,11 +148,14 @@ final class ErddapSource(
   /** Parse a fetched CSV body into a raw all-string DataFrame (S3:
     * `pd.read_csv(StringIO(text))`, `extract.py:160-162`). The units
     * row survives into the frame exactly as in pandas; cleaning is a
-    * separate stage. Driver-side by design: bodies are ≤72 rows. */
+    * separate stage. Driver-side by design: bodies are ≤72 rows. The
+    * frame is one partition, so the clean's sort and every aggregate
+    * downstream of it plan no exchange. */
   def toRawDataFrame(spark: SparkSession, csvBody: String): DataFrame = {
     import spark.implicits._
     val ds = csvBody.linesIterator.toSeq.toDS()
     spark.read.option("header", "true").option("ignoreLeadingWhiteSpace", "true").csv(ds)
+      .coalesce(1) // bound: one griddap point, a body the driver already holds
   }
 }
 

@@ -176,4 +176,54 @@ class CacheSpec extends AnyFunSuite with SparkTestSession {
     c.clearAll()
     assert(c.metadata.count() == 0)
   }
+
+  test("a torn entry (a put killed mid-write) reads as a miss, and the next put repairs it") {
+    for (side <- Seq("meta", "data")) {
+      val dir = Files.createTempDirectory("graft-cache-torn")
+      val c = new ResultCache(spark, dir.toString)
+      assert(c.put(32.5, -70.0, "1960-01-01", "1960-02-01", vars, sample))
+      // what an overwrite killed after its delete leaves: only _temporary/
+      val torn = dir.resolve(side).resolve(ResultCache.queryHash(32.5, -70.0, "1960-01-01", "1960-02-01", vars))
+      val s = Files.walk(torn)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).forEach(Files.delete(_))
+      finally s.close()
+      val attempt = Files.createDirectories(torn.resolve("_temporary/0/_temporary/attempt_0"))
+      Files.write(attempt.resolve("part-00000.snappy.parquet"), Array[Byte](1, 2, 3))
+
+      assert(c.get(32.5, -70.0, "1960-01-01", "1960-02-01", vars).isEmpty, side)
+      val near = c.nearby(32.5, -70.0).collect()
+      assert(near.length == (if (side == "meta") 0 else 1), side)
+      assert(c.nearbyData(32.5, -70.0).isEmpty, side)
+      c.listEntries.collect()
+      c.stats
+
+      assert(c.put(32.5, -70.0, "1960-01-01", "1960-02-01", vars, sample))
+      assert(c.get(32.5, -70.0, "1960-01-01", "1960-02-01", vars).get.count() == 2, side)
+      assert(c.nearby(32.5, -70.0).count() == 1, side)
+    }
+  }
+
+  test("MetaSchema reads a meta dir written with an inferred schema, rows unchanged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cache-compat")
+    val h = ResultCache.queryHash(32.5, -70.0, "1960-01-01", "1960-02-01", vars)
+    val now = Instant.now()
+    // the entry as a put without a declared schema wrote it: a tuple
+    // frame whose column types Spark infers from the Scala types
+    val metaDir = dir.resolve("meta").resolve(h).toString
+    Seq((h, 32.5, -70.0, "1960-01-01", "1960-02-01", ResultCache.variablesJson(vars), 2L,
+         java.sql.Timestamp.from(now), java.sql.Timestamp.from(now.plusSeconds(3600)), 120L))
+      .toDF(ResultCache.MetaSchema.fieldNames.toIndexedSeq: _*)
+      .coalesce(1).write.parquet(metaDir)
+    sample.write.parquet(dir.resolve("data").resolve(h).toString)
+
+    val inferred = spark.read.parquet(metaDir)
+    assert(inferred.schema.map(f => f.name -> f.dataType) ==
+      ResultCache.MetaSchema.map(f => f.name -> f.dataType))
+    val c = new ResultCache(spark, dir.toString)
+    assert(c.metadata.schema == ResultCache.MetaSchema)
+    assert(c.metadata.collect().toSeq == inferred.collect().toSeq)
+    assert(c.get(32.5, -70.0, "1960-01-01", "1960-02-01", vars).get.count() == 2)
+    assert(c.nearby(32.5, -70.0).select("query_hash").as[String].collect().toSeq == Seq(h))
+  }
 }

@@ -59,4 +59,13 @@ class IngestSpec extends AnyFunSuite with SparkTestSession {
     assert(fetched.failures.value.size() == 1)
     assert(fetched.failures.value.get(0).startsWith("20.0,-75.5"))
   }
+
+  test("land fails naming a point that did not fetch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-bad").toString
+    val e = intercept[IllegalStateException] {
+      LandedIngest.land(spark, dir, LandedIngest.Points :+ (40.0, -70.0)) // outside the grid
+    }
+    assert(e.getMessage.contains("1 of 5 points failed"), e.getMessage)
+    assert(e.getMessage.contains("40.0,-70.0:"), e.getMessage)
+  }
 }

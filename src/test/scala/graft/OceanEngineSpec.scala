@@ -92,6 +92,29 @@ class OceanEngineSpec extends AnyFunSuite with SparkTestSession {
     assert(byStat("50%").getAs[Double]("salinity") == 36.396)
   }
 
+  test("click job budget: a miss click runs at most 6 Spark jobs, a hit click at most 5") {
+    val (e, _) = engine(withCache = true)
+    val sc = spark.sparkContext
+    // one dashboard click through the facade, its jobs counted by group
+    def clickJobs(group: String): (Boolean, Int) = {
+      sc.setJobGroup(group, group)
+      try {
+        val r = e.fetchObservations(32.5, -70.0, "1960-01-01", "1960-02-01")
+        e.summary(r.data).collect()
+        e.nearbyCached(r.snappedLat, r.snappedLon).get.collect()
+        (r.fromCache, sc.statusTracker.getJobIdsForGroup(group).length)
+      } finally sc.clearJobGroup()
+    }
+    val (missHit, missJobs) = clickJobs("click-budget-miss")
+    val (hitHit, hitJobs) = clickJobs("click-budget-hit")
+    assert(!missHit && hitHit)
+    // one job per layer call: on a miss quality, put (size, data,
+    // meta), describe and nearby; on a hit get's freshness probe and
+    // data-schema read, then quality, describe and nearby
+    assert(missJobs <= 6, s"a miss click ran $missJobs jobs")
+    assert(hitJobs <= 5, s"a hit click ran $hitJobs jobs")
+  }
+
   test("queryMetadata: snapping, validity, expected points, URL") {
     val (e, _) = engine()
     val m = e.queryMetadata(32.4, -70.1, "1960-01-01", "1960-03-01")
