@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables}
+import graft.core.{Json, Tables}
 import graft.queries.Query
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
   *
   * Times every SparkEntry query against SPARK_GRAFT_SF_DIR and prints
-  * one JSON line. Results are forced through the "noop" sink so the
+  * one JSON line; the timing reporter over [[QueryRunner]]. Results are forced through the "noop" sink so the
   * full plan executes (a bare .count() would let Catalyst prune
   * projections and undercount the real work).
   *
@@ -27,7 +27,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Dev aid: SPARK_GRAFT_BENCH_ONLY=q32,q35 times just those queries.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val selected = SparkEntry.select(only)
     // Hygiene first (round-13 forensics): killed sessions orphan
     // blockmgr-*/spark-* dirs — two 11–14 GB ones were found polluting
     // sf10 cells via disk/page-cache pressure. Never fail the bench
@@ -36,15 +35,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] stale-dir sweep failed: ${e.getMessage}")
     }
-    val spark = GraftSession.build("graft-bench")
-
-    // Warm-up failure must not abort the run: the measured loop below
-    // reports per-query errors in the JSON, which is strictly more
-    // useful to the driver than a bare stack trace and no output.
-    try warmUp(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
-    }
 
     // Per-query time is the MIN of three executions: the first run of a
     // plan pays its own whole-stage-codegen compilation + JIT (~0.5-1.5s
@@ -52,23 +42,15 @@ object Bench {
     // and n=3 damps the run-to-run scheduler/GC swings that made q37
     // read 0.58 s in one round-2 run and 2.19 s in another. A query
     // that throws is attempted once and reported in `errors`.
-    var errors = Map.empty[String, String]
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val results = selected.map { case Query(name, fn, _) =>
+    val results = QueryRunner.run("bench", sfDir, only, "graft-bench", warmUp = true) {
+      case (spark, Query(_, fn, _)) =>
       def once(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      val elapsed =
-        try Seq.fill(reps)(once()).min
-        catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          errors += name -> msg.linesIterator.next().take(200)
-          System.err.println(s"[bench] $name failed: $msg")
-          0.0
-        }
-      name -> elapsed
+      Seq.fill(reps)(once()).min
     }
     // 3-decimal (millisecond) floats in the summary line (r22,
     // VERDICT r21 item 7): the driver's capture tail-truncates long
@@ -80,19 +62,13 @@ object Bench {
     // the timed region are byte-unchanged (OPTIMIZATION_r22.md).
     def fmt(v: Double): String = // ROOT locale: a comma-decimal host locale would break the JSON
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    def jstr(s: String) =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
-    println(line)
-    // The same line also lands in a FILE: the driver's BENCH_r{N}.json
-    // capture tail-truncates long stdout, which has repeatedly made the
-    // early cells (q01–q20) unrecoverable from the round artifact. The
+    val qs = Json.obj(results.map { case (k, r) => k -> fmt(r.getOrElse(0.0)) })
+    val total = results.flatMap(_._2.toOption).sum
+    val errJson = Json.obj(results.collect { case (k, Left(e)) => k -> Json.str(e) })
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errJson,"sf":${Json.str(sfDir)}}"""
+    // The same line also lands in a FILE (QueryRunner.emit). The
     // default path is inside the repo so the end-of-round snapshot
-    // commit preserves the full per-query map; a write failure must
-    // never fail the bench itself (read-only checkout, missing dir).
+    // commit preserves the full per-query map.
     // Only a FULL-suite run at the driver's bench scale (sf0.1)
     // defaults to the committed artifact — a dev run at another scale
     // must not clobber the round's sf0.1 record (it did once, via the
@@ -102,15 +78,8 @@ object Bench {
     val defaultOut =
       if (sfDir.endsWith("/sf0.1") && only.isEmpty) "BENCH_FULL.json"
       else s"/tmp/bench_full_${new java.io.File(sfDir).getName}.json"
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
-    spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    QueryRunner.emit("bench", line, sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut))
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 
   /** Sweep orphaned Spark local-storage dirs before the run. A killed
@@ -207,7 +176,7 @@ object Bench {
   /** Touch each scan/codegen path the measured queries rely on:
     * parquet vectorized read, whole-stage hash aggregation, shuffle,
     * and the legacy nanos-long events column. */
-  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").agg(count(lit(1)))
       .write.format("noop").mode("overwrite").save()

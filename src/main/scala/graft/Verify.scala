@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Json
 import graft.queries.Query
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The dump
+  * reporter over [[QueryRunner]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,44 +16,26 @@ object Verify {
     // dirs a previous fuller run left in a reused outDir are never
     // consulted — otherwise stale old-code parquet would be compared
     // against fresh oracles and read green.
-    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
-    val spark = graft.core.GraftSession.build(
-      "graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    new java.io.File(outDir).mkdirs()
-    selected.foreach { case Query(name, fn, _) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val outcomes = QueryRunner.run("verify", sfDir, sys.env.get("SPARK_GRAFT_VERIFY_ONLY"),
+        "graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")) {
+      case (spark, Query(name, fn, _)) =>
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // the q78/q81 oracle dirs are derived from THIS run's data dir
     // (not JVM-global last-write-wins vars) so concurrent runs can't
     // cross
-    val names = selected.map(_.name).toSet
+    val names = outcomes.map(_._1).toSet
     val oracles = SparkEntry.oracleSqlFor(
       graft.sources.CorpusJsonl.dirFor(sfDir),
       graft.ops.IvfPqIndex.dirFor(sfDir),
       graft.ops.Decontaminate.dirFor(sfDir)).filter { case (n, _) => names(n) }
+    Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(oracles))
-    spark.stop()
   }
 
-  /** The oracle map as a JSON object. String escape covers backslash,
-    * quote, and ALL control chars (<0x20) — a tab or CR in
-    * builder-authored SQL would otherwise make the driver's json.load
-    * fail and silently zero the round's correctness. VerifySpec parses
-    * the result with a real JSON parser and checks value fidelity. */
-  def oracleJson(oracles: Map[String, String]): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  /** The oracle map as a JSON object, its strings quoted by
+    * [[graft.core.Json]]. VerifySpec parses the result with a real JSON
+    * parser and checks value fidelity. */
+  def oracleJson(oracles: Map[String, String]): String =
+    oracles.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
 }

@@ -1,6 +1,6 @@
 package graft.cache
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.time.Instant
 import java.util.Locale
@@ -8,6 +8,8 @@ import java.util.Locale
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.core.Json
 
 /** Query-result cache with the reference's semantics
   * (`cache_manager.py:33-337`), re-expressed as a keyed Parquet store:
@@ -21,8 +23,9 @@ import org.apache.spark.sql.types._
   *    variables JSON, row count, fetched_at, expires_at, size).
   *    INSERT-OR-REPLACE = overwrite both dirs for the key. Every meta
   *    read uses [[ResultCache.MetaSchema]], so no read infers a schema
-  *    and a torn meta dir (only `_temporary/`) reads as no rows; a data
-  *    dir is read only once its `_SUCCESS` marker exists.
+  *    and a torn meta dir (only `_temporary/`) reads as no rows. A data
+  *    dir is read only once it is committed, with the schema `put`
+  *    stored beside it (`_schema.json`), so a hit infers no schema.
   *  - TTL 24 h, per-entry size cap 100 MB (`config.py:58-63`), probe
   *    only returns entries with `expires_at > now` (P6), nearby lookup
   *    = spatial box filter ranked by Manhattan distance (P7/O4,
@@ -43,7 +46,7 @@ final class ResultCache(
     ttlHours: Int = ResultCache.TtlHours,
     maxEntryBytes: Long = ResultCache.MaxEntryBytes,
     clock: () => Instant = () => Instant.now()) {
-  import ResultCache.{MetaSchema, queryHash}
+  import ResultCache.{MetaSchema, SchemaFile, queryHash}
 
   private val metaRoot = Paths.get(dir, "meta")
   private val dataRoot = Paths.get(dir, "data")
@@ -99,6 +102,11 @@ final class ResultCache(
     val now = clock()
     val expires = now.plusSeconds(ttlHours.toLong * 3600)
     data.write.mode(SaveMode.Overwrite).parquet(dataDir(h).toString)
+    // the schema beside the committed data, written whole or not at all
+    // (temp file + rename); Parquet readers skip `_`-prefixed names
+    val tmp = Files.createTempFile(dataDir(h), "_schema", ".tmp")
+    Files.writeString(tmp, data.schema.json)
+    Files.move(tmp, dataDir(h).resolve(SchemaFile), StandardCopyOption.ATOMIC_MOVE)
     val meta = Row(h, lat, lon, startDate, endDate, ResultCache.variablesJson(variables),
                    rowCount, Timestamp.from(now), Timestamp.from(expires), sizeBytes)
     // a one-row local relation: one partition, so one meta file
@@ -130,12 +138,19 @@ final class ResultCache(
   private def readMeta(dirs: Seq[Path]): DataFrame =
     spark.read.schema(MetaSchema).parquet(dirs.map(_.toString): _*)
 
-  /** The cached frame of key `h`, once its write committed: a put killed
-    * mid-write leaves a data dir without `_SUCCESS`, which reads as a
-    * miss. */
-  private def readEntry(h: String): Option[DataFrame] =
-    if (!Files.exists(dataDir(h).resolve("_SUCCESS"))) None
-    else Some(spark.read.parquet(dataDir(h).toString).coalesce(1)) // bound: one entry, ≤ maxEntryBytes
+  /** The cached frame of key `h`, once its write committed, read with
+    * its stored schema so no job infers it. The schema file is the
+    * commit marker: `put` writes it after the data commits, so a put
+    * killed mid-write reads as a miss. An entry an earlier version
+    * wrote has `_SUCCESS` but no schema file, and is read by inference. */
+  private def readEntry(h: String): Option[DataFrame] = {
+    val schema = dataDir(h).resolve(SchemaFile)
+    val reader =
+      if (Files.exists(schema)) Some(spark.read.schema(DataType.fromJson(Files.readString(schema)).asInstanceOf[StructType]))
+      else if (Files.exists(dataDir(h).resolve("_SUCCESS"))) Some(spark.read)
+      else None
+    reader.map(_.parquet(dataDir(h).toString).coalesce(1)) // bound: one entry, ≤ maxEntryBytes
+  }
 
   /** O3: the cache listing (`cache_manager.py:248-280`) — unexpired
     * entries ordered `fetched_at DESC`, with the reference's
@@ -199,14 +214,23 @@ final class ResultCache(
   }
 
   /** Delete expired entries (`cache_manager.py:179-193`); returns the
-    * number removed. Expired keys are found from the metadata rows
-    * (one row each), then both dirs are dropped. */
+    * number of keys removed. Expired keys are found from the metadata
+    * rows (one row each). Orphaned keys have no row: a meta dir that is
+    * missing (a put killed between its data and meta writes) or not
+    * committed (one killed mid-overwrite). One is swept once nothing
+    * under its dirs was modified within the TTL, so another process's
+    * in-flight put, seconds old, is never swept. Both dirs are dropped. */
   def cleanupExpired(): Int = {
-    val now = Timestamp.from(clock())
-    val expired = metadata.filter(col("expires_at") <= now)
-      .select("query_hash").collect().map(_.getString(0))
-    expired.foreach { h => deleteRecursive(metaDir(h)); deleteRecursive(dataDir(h)) }
-    expired.length
+    val now = clock()
+    val expired = metadata.filter(col("expires_at") <= Timestamp.from(now))
+      .select("query_hash").collect().map(_.getString(0)).toSeq
+    val cutoff = now.minusSeconds(ttlHours.toLong * 3600)
+    val orphans = (listKeys(metaRoot) ++ listKeys(dataRoot)).map(_.getFileName.toString).distinct
+      .filter(h => !Files.exists(metaDir(h).resolve("_SUCCESS")) && Seq(metaDir(h), dataDir(h))
+        .flatMap(tree).forall(Files.getLastModifiedTime(_).toInstant.isBefore(cutoff)))
+    val swept = (expired ++ orphans).distinct
+    swept.foreach { h => deleteRecursive(metaDir(h)); deleteRecursive(dataDir(h)) }
+    swept.length
   }
 
   /** Clear everything (`cache_manager.py:283-293`). */
@@ -222,18 +246,23 @@ final class ResultCache(
       finally s.close()
     }
 
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
+  /** `p` and every path under it, parents first; none when absent. */
+  private def tree(p: Path): Seq[Path] =
+    if (!Files.exists(p)) Seq.empty
+    else {
       val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      try s.iterator().asScala.toSeq
       finally s.close()
     }
+
+  private def deleteRecursive(p: Path): Unit = tree(p).reverse.foreach(Files.delete(_))
 }
 
 object ResultCache {
   val TtlHours = 24            // config.py:61
   val MaxEntryBytes: Long = 100L * 1024 * 1024 // config.py:62 (100 MB)
   val CleanupIntervalHours = 6 // config.py:63 (declared cadence)
+  private val SchemaFile = "_schema.json" // the data schema `put` stores beside an entry's data
 
   /** The one-row-per-entry metadata table, stated once: `put` writes
     * it and every meta read declares it. Every field is nullable, as a
@@ -262,14 +291,5 @@ object ResultCache {
   /** `json.dumps(list)` parity: `["A", "B"]` with ", " separators and
     * string escapes (backslash, quote, control chars) so a variable
     * name containing `"` or `\` still serializes to valid JSON. */
-  def variablesJson(vs: Seq[String]): String =
-    vs.map(v => "\"" + v.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\"").mkString("[", ", ", "]")
+  def variablesJson(vs: Seq[String]): String = vs.map(Json.str).mkString("[", ", ", "]")
 }

@@ -19,9 +19,9 @@ object Tables {
     *
     * A bare `spark.read.parquet(path)` re-infers the schema from
     * parquet footers on EVERY call: measured at ~80 ms per call on
-    * local fixtures (`FloorDecompProbe --tables`; ~10 ms with the
-    * schema supplied), which at 1–3 loads per query was ~25 % of the
-    * per-query floor that dominates the sf0.1 bench. Real deployments
+    * local fixtures (~10 ms with the schema supplied; BASELINE.md,
+    * round 12, third session), which at 1–3 loads per query was ~25 %
+    * of the per-query floor that dominates the sf0.1 bench. Real deployments
     * pay the same tax as a metastore round-trip + footer sample per
     * uncached query. Schema is immutable metadata for a given set of
     * file BYTES, so the memo is keyed by (path, file-status

@@ -38,14 +38,18 @@ object Clean {
   private def normalizeColumns(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(normalizeName): _*)
 
-  /** P1: drop the ERDDAP units row — row whose first column is 'UTC' or
-    * 'units' (`extract.py:199-201`). Value-based rather than positional:
+  /** The first-column values of the ERDDAP units row (`extract.py:199-201`),
+    * for this batch path and the DSv2 reader alike. */
+  val UnitsRowMarkers: Seq[String] = Seq("UTC", "units")
+
+  /** P1: drop the ERDDAP units row — row whose first column is one of
+    * [[UnitsRowMarkers]]. Value-based rather than positional:
     * the double-header shape guarantees the marker values only occur in
     * the units row, and a value filter needs no row ordering (safe under
     * distributed reads). Must run BEFORE casts, as in the reference. */
   def stripUnitsRow(df: DataFrame): DataFrame =
     df.columns.headOption match {
-      case Some(first) => df.filter(!col(first).isin("UTC", "units") || col(first).isNull)
+      case Some(first) => df.filter(!col(first).isin(UnitsRowMarkers: _*) || col(first).isNull)
       case None => df
     }
 

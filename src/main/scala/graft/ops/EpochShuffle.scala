@@ -145,9 +145,8 @@ object EpochShuffle {
       .withColumn("epoch", col("epoch").cast("bigint"))
 
   /** Per-(epoch, shard) summary of a landed manifest dir — the q98
-    * carrier's read side, shared with `ArtifactPhaseProbe` so the
-    * probe times exactly the shape the bench cell times. Partition
-    * columns cast to BIGINT (directory-name inference is
+    * carrier's read side (its land/read split is in BASELINE.md, round
+    * 16). Partition columns cast to BIGINT (directory-name inference is
     * magnitude-dependent). */
   def manifestSummary(spark: SparkSession, dir: String,
                       idCol: String = "doc_id"): DataFrame =

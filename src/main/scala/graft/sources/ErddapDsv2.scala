@@ -216,8 +216,7 @@ final class ErddapReaderFactory(
           // units row detected by VALUE, same as the batch path
           // (Clean.stripUnitsRow): a body without one loses no data row
           val unitsRows = lines.drop(1).headOption.count { l =>
-            val first = l.split(",", -1).headOption.getOrElse("").trim
-            first == "UTC" || first == "units"
+            graft.ops.Clean.UnitsRowMarkers.contains(l.split(",", -1).headOption.getOrElse("").trim)
           }
           lines.iterator.drop(1 + unitsRows).map { line =>
             val f = line.split(",", -1)

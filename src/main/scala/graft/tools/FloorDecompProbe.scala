@@ -1,8 +1,15 @@
 package graft.tools
 
-import graft.core.GraftSession
+import scala.jdk.CollectionConverters._
 
-/** Decompose the per-query floor constant into its phases.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+import graft.QueryRunner
+import graft.queries.Query
+
+/** Decompose the per-query floor constant into its phases, the phases
+  * reporter over [[graft.QueryRunner]].
   *
   * BASELINE.md's round-12 section measures a ~220–320 ms/query floor on
   * the 64 sf0.1 cells where DuckDB finishes under 150 ms — 72 % of the
@@ -16,14 +23,22 @@ import graft.core.GraftSession
   *   exec   — the noop write minus the above (job scheduling, AQE stage
   *            re-planning, task launch, the actual scan/shuffle work)
   *
-  * Steady-state protocol: each query runs REPS times (default 5) and the
-  * per-phase MIN is reported — same discipline as Bench (first run pays
-  * codegen/JIT that no steady-state workload re-pays). Phases are timed
-  * within the same run, so build+plan+exec ≈ the Bench cell for that
-  * query.
+  * Steady-state protocol: after Bench's warm-up, each query runs REPS
+  * times (default 5) and the per-phase MIN is reported — same
+  * discipline as Bench (first run pays codegen/JIT that no steady-state
+  * workload re-pays). Phases are timed within the same run, so
+  * build+plan+exec ≈ the Bench cell for that query.
   *
-  *   sbt "runMain graft.tools.FloorDecompProbe q01_pricing_summary q10_distinct_agg ..."
-  *   (no args → a representative floor-cell set)
+  *   SPARK_GRAFT_SF_DIR=... graft.tools.FloorDecompProbe [--exec] [query...]
+  *   (names or prefixes, as in SPARK_GRAFT_BENCH_ONLY; no names → a
+  *   representative floor-cell set)
+  *
+  * `--exec` adds, under each row, the anatomy of the exec phase: the
+  * best rep's Spark JOB timeline (start offset and duration per job,
+  * and the un-jobbed remainder: driver work between jobs + noop
+  * commit). AQE materializes one job per exchange stage, so a
+  * two-exchange agg shows 3 jobs; the remainder is what neither
+  * planning nor tasks account for.
   */
 object FloorDecompProbe {
   private val DefaultSet = Seq(
@@ -39,105 +54,51 @@ object FloorDecompProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val spark = GraftSession.build("graft-floor-decomp")
-    if (args.contains("--tables")) { tableCost(spark, sfDir, reps); spark.stop(); return }
-    if (args.contains("--exec")) {
-      execAnatomy(spark, sfDir, args.filterNot(_.startsWith("--")).toSeq, reps)
-      spark.stop(); return
-    }
-    val names = if (args.nonEmpty) args.toSeq else DefaultSet
-
-    // Bench's warm-up: touch the scan + codegen paths once.
-    graft.SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-
+    val given = args.filterNot(_.startsWith("--")).toSeq
+    val names = if (given.nonEmpty) given else DefaultSet
     println(f"${"query"}%-24s ${"build"}%8s ${"plan"}%8s ${"exec"}%8s ${"total"}%8s")
-    var sums = (0.0, 0.0, 0.0)
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val phases = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis→physical plan
-        val t2 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t3 = System.nanoTime()
-        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
-      }
-      val b = phases.map(_._1).min
-      val p = phases.map(_._2).min
-      val e = phases.map(_._3).min
-      sums = (sums._1 + b, sums._2 + p, sums._3 + e)
-      println(f"$name%-24s $b%8.3f $p%8.3f $e%8.3f ${b + p + e}%8.3f")
-    }
-    val (sb, sp, se) = sums
+    val rows = QueryRunner.run("floor", sfDir, Some(names.mkString(",")), "graft-floor-decomp",
+      warmUp = true)(phases(sfDir, reps, args.contains("--exec"))).flatMap(_._2.toOption)
+    val (sb, sp, se) = (rows.map(_._1).sum, rows.map(_._2).sum, rows.map(_._3).sum)
     println(f"${"TOTAL"}%-24s $sb%8.3f $sp%8.3f $se%8.3f ${sb + sp + se}%8.3f")
-    spark.stop()
   }
 
-  /** `--exec <query...>`: anatomy of the exec phase — per query, the
-    * best rep's Spark JOB timeline (start offset, duration, task count
-    * per job, and the un-jobbed remainder: driver work between jobs +
-    * noop commit). AQE materializes one job per exchange stage, so a
-    * two-exchange agg shows 3 jobs; the remainder column is what
-    * neither planning nor tasks account for. */
-  private def execAnatomy(spark: org.apache.spark.sql.SparkSession,
-                          sfDir: String, queries: Seq[String], reps: Int): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-    val names = if (queries.nonEmpty) queries else Seq("q53_top_per_lang", "q01_pricing_summary", "q10_distinct_agg")
-    // warm
-    graft.SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      case class Run(total: Double, jobs: Seq[(Double, Double, Int)])
-      val runs = (1 to reps).map { _ =>
-        val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-        val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-        val l = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit =
-            jobStart.put(e.jobId, System.nanoTime())
-          override def onJobEnd(e: SparkListenerJobEnd): Unit =
-            Option(jobStart.get(e.jobId)).foreach(s => jobs.add((s, System.nanoTime())))
-          override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-            tasks.addAndGet(e.stageInfo.numTasks)
-        }
-        spark.sparkContext.addSparkListener(l)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val total = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(50) // let the async listener bus drain the job-end events
-        spark.sparkContext.removeSparkListener(l)
-        import scala.jdk.CollectionConverters._
-        Run(total, jobs.asScala.toSeq.sortBy(_._1).map { case (s, e) =>
-          ((s - t0) / 1e9, (e - s) / 1e9, tasks.get()) })
-      }
-      val best = runs.minBy(_.total)
-      val jobTime = best.jobs.map(_._2).sum
-      println(f"$name%-24s total ${best.total}%6.3f  jobs ${best.jobs.size}  in-job ${jobTime}%6.3f  outside ${best.total - jobTime}%6.3f")
-      best.jobs.zipWithIndex.foreach { case ((off, dur, _), i) =>
-        println(f"    job$i starts +$off%6.3f runs $dur%6.3f")
+  /** One query's build/plan/exec row, each phase the min over `reps`;
+    * with `exec`, the best rep's job timeline under it. */
+  private def phases(sfDir: String, reps: Int, exec: Boolean)
+                    (spark: SparkSession, q: Query): (Double, Double, Double) = {
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobStart.put(e.jobId, System.nanoTime())
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobStart.get(e.jobId)).foreach(s => jobs.add((s, System.nanoTime())))
+    }
+    if (exec) spark.sparkContext.addSparkListener(l)
+    val runs = (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      val df = q.build(spark, sfDir)
+      val t1 = System.nanoTime()
+      df.queryExecution.executedPlan // force analysis→physical plan
+      val t2 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
+      if (exec) Thread.sleep(50) // let the async listener bus drain this rep's job events
+      Seq(t0, t1, t2, t3, System.nanoTime())
+    }
+    spark.sparkContext.removeSparkListener(l)
+    val Seq(b, p, e) = (0 to 2).map(i => runs.map(r => r(i + 1) - r(i)).min / 1e9)
+    println(f"${q.name}%-24s $b%8.3f $p%8.3f $e%8.3f ${b + p + e}%8.3f")
+    if (exec) {
+      val best = runs.minBy(r => r(3) - r(0))
+      val inRun = jobs.asScala.toSeq.filter { case (s, _) => s >= best(0) && s < best(4) }.sortBy(_._1)
+      val jobTime = inRun.map { case (s, e) => e - s }.sum / 1e9
+      println(f"    jobs ${inRun.size}  in-job $jobTime%6.3f  outside ${(best(3) - best(0)) / 1e9 - jobTime}%6.3f")
+      inRun.zipWithIndex.foreach { case ((s, e), i) =>
+        println(f"    job$i starts +${(s - best(0)) / 1e9}%6.3f runs ${(e - s) / 1e9}%6.3f")
       }
     }
-  }
-
-  /** `--tables`: isolate the per-call cost of `Tables.load` — fresh
-    * `spark.read.parquet` (listing + footer schema inference + relation
-    * resolution) vs a read with the schema supplied (no footer read).
-    * If the delta is most of the ~70–150 ms/query "build" phase, a
-    * session-scoped relation memo (a catalog, in effect) is the fix. */
-  private def tableCost(spark: org.apache.spark.sql.SparkSession, sfDir: String, reps: Int): Unit = {
-    Seq("lineitem", "orders", "documents", "region").foreach { t =>
-      val schema = spark.read.parquet(s"$sfDir/$t.parquet").schema // warm + capture
-      def ms(f: => Unit): Double =
-        (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
-        }.min
-      val fresh = ms(spark.read.parquet(s"$sfDir/$t.parquet"))
-      val withSchema = ms(spark.read.schema(schema).parquet(s"$sfDir/$t.parquet"))
-      println(f"$t%-12s fresh $fresh%7.1f ms   schema-supplied $withSchema%7.1f ms")
-    }
+    (b, p, e)
   }
 }

@@ -1,9 +1,15 @@
 package graft.tools
 
-import graft.core.GraftSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.QueryRunner
+import graft.core.Json
 import graft.queries.Query
 
-/** Plan-shape fingerprints for the bench gate (r19 verdict item 7):
+/** Plan-shape fingerprints for the bench gate (r19 verdict item 7), the
+  * shape reporter over [[graft.QueryRunner]]:
   * PlanSpec pins plan properties in ScalaTest, but the bench had no
   * such guard — a Catalyst upgrade or refactor that reintroduces an
   * exchange would surface only as a slow cell. This tool executes
@@ -21,8 +27,12 @@ import graft.queries.Query
   * bench forensics. Shapes are per scale factor — AQE legitimately
   * picks different strategies at different input sizes.
   *
-  *   SPARK_GRAFT_SF_DIR=... graft.tools.PlanFingerprints [out.json]
+  *   SPARK_GRAFT_SF_DIR=... graft.tools.PlanFingerprints [out.json [explainDir]]
   *   (SPARK_GRAFT_BENCH_ONLY=q32,q35 filters, as in graft.Bench)
+  *
+  * With `explainDir`, each query's formatted plan also lands there as
+  * `<name>.txt`: the plan of the frame `shape` executed, whose shape
+  * the line counts.
   */
 object PlanFingerprints {
 
@@ -58,39 +68,20 @@ object PlanFingerprints {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = args.headOption.getOrElse(
       s"/tmp/plan_fingerprints_${new java.io.File(sfDir).getName}.json")
-    val selected = graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    val spark = GraftSession.build("graft-plan-fingerprints")
-
-    def jstr(s: String) =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
-
-    val entries = selected.map { case Query(name, fn, _) =>
-      try {
-        // shape() executes df's OWN QueryExecution so the adaptive
-        // plan finalizes (a noop write would spawn a separate QE)
-        val s = shape(fn(spark, sfDir))
-        name -> (s"""{"exchanges":${s.exchanges},"reused":${s.reused},""" +
-          s""""joins":${jstr(s.joins)},"aggregates":${s.aggregates},"scans":${s.scans}}""")
-      } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[plans] $name failed: $msg")
-          // nextOption: an empty exception message must not crash the
-          // whole fingerprint run from inside its own error handler
-          // (ADVICE r20)
-          name -> s"""{"error":${jstr(
-            msg.linesIterator.nextOption().getOrElse("").take(120))}}"""
-      }
+    val explainDir = args.lift(1).map(Paths.get(_))
+    val shapes = QueryRunner.run("plans", sfDir, sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
+        "graft-plan-fingerprints") { case (spark, Query(name, fn, _)) =>
+      // shape() executes df's OWN QueryExecution so the adaptive
+      // plan finalizes (a noop write would spawn a separate QE)
+      val df = fn(spark, sfDir)
+      val s = shape(df)
+      explainDir.foreach(d => Files.writeString(Files.createDirectories(d).resolve(s"$name.txt"),
+        df.queryExecution.explainString(FormattedMode)))
+      s"""{"exchanges":${s.exchanges},"reused":${s.reused},""" +
+        s""""joins":${Json.str(s.joins)},"aggregates":${s.aggregates},"scans":${s.scans}}"""
     }
-    val line = entries.map { case (k, v) => s"${jstr(k)}:$v" }
-      .mkString(s"""{"sf":${jstr(sfDir)},"plans":{""", ",", "}}")
-    println(line)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[plans] could not write $outPath: ${e.getMessage}")
-    }
-    spark.stop()
+    val plans = Json.obj(shapes.map { case (name, r) =>
+      name -> r.fold(e => Json.obj(Seq("error" -> Json.str(e))), identity) })
+    QueryRunner.emit("plans", s"""{"sf":${Json.str(sfDir)},"plans":$plans}""", outPath)
   }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cache.ResultCache
@@ -225,5 +227,42 @@ class CacheSpec extends AnyFunSuite with SparkTestSession {
     assert(c.metadata.collect().toSeq == inferred.collect().toSeq)
     assert(c.get(32.5, -70.0, "1960-01-01", "1960-02-01", vars).get.count() == 2)
     assert(c.nearby(32.5, -70.0).select("query_hash").as[String].collect().toSeq == Seq(h))
+  }
+
+  test("cleanupExpired sweeps orphaned keys once nothing under them changed within the TTL") {
+    val dir = Files.createTempDirectory("graft-cache-orphan")
+    var now = Instant.now()
+    val c = new ResultCache(spark, dir.toString, clock = () => now)
+    def key(lat: Double) = ResultCache.queryHash(lat, -70.0, "1960-01-01", "1960-02-01", vars)
+    def dirs(h: String) = Seq(dir.resolve("meta").resolve(h), dir.resolve("data").resolve(h))
+    def walk(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.walk(p)
+      try s.iterator().asScala.toSeq
+      finally s.close()
+    }
+    def deleteTree(p: java.nio.file.Path): Unit =
+      walk(p).reverse.foreach(Files.delete(_))
+    // torn: its meta dir holds only an uncommitted `_temporary/`
+    def tear(h: String): Unit = {
+      deleteTree(dirs(h).head)
+      Files.createDirectories(dirs(h).head.resolve("_temporary/0"))
+    }
+    Seq(32.0, 32.25, 32.5).foreach(lat => assert(c.put(lat, -70.0, "1960-01-01", "1960-02-01", vars, sample)))
+    val (oldTorn, dataOnly, freshTorn) = (key(32.0), key(32.25), key(32.5))
+    tear(oldTorn)
+    deleteTree(dirs(dataOnly).head) // a put killed between its data and meta writes
+    tear(freshTorn)
+    // the two old keys: nothing under them modified for 25 h
+    val old = java.nio.file.attribute.FileTime.from(now.minusSeconds(25 * 3600))
+    Seq(oldTorn, dataOnly).flatMap(dirs).filter(Files.exists(_)).flatMap(walk)
+      .foreach(Files.setLastModifiedTime(_, old))
+
+    assert(c.cleanupExpired() == 2)
+    assert(Seq(oldTorn, dataOnly).flatMap(dirs).forall(!Files.exists(_)))
+    assert(dirs(freshTorn).forall(Files.exists(_)), "a fresh torn key may be a put in flight")
+    // the age is read through the injected clock: 25 h on, it is swept too
+    now = now.plusSeconds(25 * 3600)
+    assert(c.cleanupExpired() == 1)
+    assert(dirs(freshTorn).forall(!Files.exists(_)))
   }
 }

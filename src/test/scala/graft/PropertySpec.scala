@@ -565,4 +565,27 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       assert(n == 1, s"string literals beginning '$name' in main: $n")
     }
   }
+
+  test("main spells the ERDDAP units-row marker in one literal") {
+    // The batch clean and the DSv2 reader must drop the same units row;
+    // both read graft.ops.Clean.UnitsRowMarkers. ("UTC" also names the
+    // session time zone, so only "units" is pinned.)
+    val src = mainSources.flatMap(_._2).mkString("\n")
+    val n = "\"units\"".r.findAllIn(src).size
+    assert(n == 1, s"string literals \"units\" in main: $n")
+  }
+
+  test("main keeps one JSON string escaper") {
+    // Every JSON line or file main writes quotes its strings through
+    // graft.core.Json; a second escaper can drift from it (two of the
+    // old copies turned control characters into spaces). An escaper is
+    // a case that maps the quote character. JsonField parses JSON and
+    // is exempt.
+    val escapers = for {
+      (f, lines) <- mainSources if f.getName != "JsonField.scala"
+      (line, i) <- lines.zipWithIndex if line.contains("case '\"'")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(escapers.size == 1 && escapers.head.contains("core/Json.scala:"),
+      s"JSON string escapers in main: ${escapers.mkString(", ")}")
+  }
 }

@@ -25,8 +25,11 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("escaping survives adversarial SQL text") {
-    val nasty = Map("k\"1" -> "SELECT '\\' || \"x\"\n\tFROM t\r WHERE c < '")
-    val node = mapper.readTree(Verify.oracleJson(nasty))
-    assert(node.get("k\"1").asText() == nasty("k\"1"))
+    // graft.core.Json is main's one string escaper: all 32 control
+    // characters, the quote and the backslash must round-trip
+    val nasty = (0 until 32).map(_.toChar).mkString + "\"\\ SELECT '\\' || \"x\" WHERE c < '"
+    assert(mapper.readTree(graft.core.Json.str(nasty)).asText() == nasty)
+    val keyed = Map("k\"1\t" -> nasty)
+    assert(mapper.readTree(Verify.oracleJson(keyed)).get("k\"1\t").asText() == nasty)
   }
 }
