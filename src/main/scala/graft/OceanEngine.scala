@@ -57,29 +57,6 @@ final class OceanEngine(
     }
   }
 
-  /** Batch multi-point fetch (`extract.py:340-364`): distribute the
-    * point list via [[ErddapSource.fetchMany]], then clean the unioned
-    * raw rows in one pass. Failing points are skipped (their messages
-    * land in the returned accumulator), matching the reference's
-    * log-and-continue loop. The requested (req_lat, req_lon) columns
-    * survive the clean so the caller can group per point. */
-  def fetchManyObservations(points: Seq[(Double, Double)],
-                            startDate: String, endDate: String,
-                            variables: Seq[String] = ErddapUrl.DefaultVariables,
-                            backendFactory: () => graft.sources.SourceBackend)
-      : graft.sources.ErddapSource.MultiFetch = {
-    val mf = graft.sources.ErddapSource.fetchMany(
-      spark, points, startDate, endDate, variables, backendFactory)
-    // CSV columns first (the units-row filter keys off the leading
-    // time column, as the raw griddap shape guarantees), request
-    // coords last
-    val reqCols = Seq("req_lat", "req_lon")
-    val ordered = mf.rows.select(
-      (mf.rows.columns.filterNot(reqCols.contains) ++ reqCols)
-        .map(org.apache.spark.sql.functions.col).toSeq: _*)
-    mf.copy(rows = Clean.cleanApiResponse(ordered))
-  }
-
   /** Summary statistics in the reference's display shape
     * (`describe().round(3)`, `app.py:660-663`). */
   def summary(df: DataFrame): DataFrame = Describe.describe(df, round3 = true)

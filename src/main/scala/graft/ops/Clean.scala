@@ -56,8 +56,9 @@ object Clean {
   /** F2/F3: null-on-error coercions, matching pandas `errors='coerce'`.
     * Spark 4 runs ANSI mode by default where plain cast/to_timestamp
     * THROW on malformed input, so the `try_` forms are required for
-    * coerce semantics. Session TZ is UTC (GraftSession) so `Z`-suffixed
-    * and `+00:00` ISO forms resolve identically. */
+    * coerce semantics. ERDDAP's `NaN` for a missing value becomes null,
+    * as in pandas and the DSv2 reader. Session TZ is UTC (GraftSession)
+    * so `Z`-suffixed and `+00:00` ISO forms resolve identically. */
   private def coerceTypes(df: DataFrame): DataFrame = {
     val withTime =
       if (df.columns.contains("time") && df.schema("time").dataType == StringType)
@@ -65,7 +66,7 @@ object Clean {
       else df
     NumericCols.foldLeft(withTime) { (d, c) =>
       if (d.columns.contains(c) && d.schema(c).dataType == StringType)
-        d.withColumn(c, expr(s"try_cast(`$c` AS DOUBLE)"))
+        d.withColumn(c, expr(s"nullif(try_cast(`$c` AS DOUBLE), double('NaN'))"))
       else d
     }
   }
@@ -73,14 +74,17 @@ object Clean {
   private def presentKeyVars(df: DataFrame): Seq[String] =
     KeyVars.filter(df.columns.contains)
 
+  /** P2 (`extract.py:216-221`, `how='all'`): drop rows where every
+    * present key variable is null. */
+  def dropAllNull(df: DataFrame): DataFrame = {
+    val keyVars = presentKeyVars(df)
+    if (keyVars.isEmpty) df else df.filter(keyVars.map(col(_).isNotNull).reduce(_ || _))
+  }
+
   /** The extract-stage clean (`extract.py:192-227`): P1 → F1 → F2/F3 →
     * P2 (`how='all'`) → O1 sort by time. */
   def cleanApiResponse(df: DataFrame): DataFrame = {
-    val typed = coerceTypes(normalizeColumns(stripUnitsRow(df)))
-    val keyVars = presentKeyVars(typed)
-    val kept =
-      if (keyVars.isEmpty) typed
-      else typed.filter(keyVars.map(col(_).isNotNull).reduce(_ || _))
+    val kept = dropAllNull(coerceTypes(normalizeColumns(stripUnitsRow(df))))
     // pandas sort_values places NaT last by default; Spark's plain asc
     // is nulls-first, so nulls-last is spelled out for parity.
     if (kept.columns.contains("time")) kept.orderBy(asc_nulls_last("time")) else kept

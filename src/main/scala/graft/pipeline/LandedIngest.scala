@@ -1,13 +1,13 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Grid
 import graft.ops.Clean
-import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
+import graft.sources.{ErddapTableProvider, ErddapUrl}
 
 /** The reference's WHOLE pipeline as one driver-checkable flow
   * (`run_pipeline.py:271-305`): distributed multi-point fetch →
@@ -15,17 +15,16 @@ import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
   * query over the landed table.
   *
   * This is the 100 TB ingest story end-to-end: the POINT LIST
-  * parallelizes the fetch (one partition per grid point, each with its
-  * own retry/rate-limit discipline), the landing is partitioned by
+  * parallelizes the fetch (the `format("erddap")` scan, one
+  * retry/rate-limit discipline per slot), the landing is partitioned by
   * observation month so per-period queries scan only their partition
   * (scan ∝ selectivity, no shuffle), and the final query's partition
   * filter is visible in the plan (IngestSpec asserts exactly one
   * month's files are read).
   *
-  * Bodies come from deterministic in-memory fixtures (zero egress —
-  * the same [[FixtureBackend]] replay the rest of the source tests
-  * use); swapping `() => new HttpBackend` makes the identical plan run
-  * live. Values are fixed-point formatted strings, so what lands is
+  * Bodies come from deterministic recorded fixtures (zero egress, the
+  * scan's `fixture_dir` replay); without that option the identical
+  * plan runs live. Values are fixed-point formatted strings, so what lands is
   * bit-reproducible and the DuckDB oracle can read the SAME landed
   * parquet back (CORRECTNESS carrier q59).
   */
@@ -61,9 +60,9 @@ object LandedIngest {
       url -> ((Seq(header, units) ++ rows).mkString("\n") + "\n")
     }.toMap
 
-  /** Fetch + clean + land: fetchMany distributes the point list, the
-    * extract-stage clean types and filters the raw union, and the
-    * result lands through [[graft.sources.ZOrderLanding]] as
+  /** Fetch + clean + land: the `format("erddap")` scan distributes the
+    * point list into typed rows, `Clean.dropAllNull` filters them, and
+    * the result lands through [[graft.sources.ZOrderLanding]] as
     * `month=…/z_bucket=…` — ONE landing layout serving both access
     * patterns: per-period queries prune on the month directory,
     * spatial box queries prune on the Morton bucket inside it (the
@@ -81,28 +80,35 @@ object LandedIngest {
     * DataFrame they discard. Its build/write phase split is recorded
     * in BASELINE.md, Round 8, "q59 cause".
     *
-    * The bodies are recorded fixtures, so a point that fails to fetch
-    * is a bad input, not a flaky server: once the landing has run, the
-    * call fails naming every failed point. */
+    * The bodies are recorded fixtures, so a point that cannot be
+    * fetched is a bad input, not a flaky server: the call fails naming
+    * every such point before anything lands. */
   def land(spark: SparkSession, landingDir: String,
            points: Seq[(Double, Double)] = Points): Unit = {
-    val fx = fixtures(points)
-    val fetched = ErddapSource.fetchMany(
-      spark, points, StartDate, EndDate,
-      backendFactory = () => new FixtureBackend(fx),
-      minIntervalMs = 0L, sleeper = _ => ())
-    val cleaned = Clean.cleanApiResponse(fetched.rows.drop("req_lat", "req_lon"))
-      .withColumn("month", date_format(col("time"), "yyyy-MM"))
-      .withColumn("lat_idx", Grid.latIdxCol(col("latitude")).cast("long"))
-      .withColumn("lon_idx", Grid.lonIdxCol(col("longitude")).cast("long"))
-    graft.sources.ZOrderLanding.land(
-      cleaned, landingDir, bucketShift = 6, overwrite = true,
-      extraPartitionCols = Seq("month"))
-    // a retried task adds its point's message again: report each once
-    val failed = fetched.failures.value.asScala.distinct.sorted
+    val failed = points.flatMap { case (lat, lon) =>
+      Grid.validateCoords(lat, lon).left.toOption.map(m => s"$lat,$lon: $m")
+    }
     if (failed.nonEmpty)
       throw new IllegalStateException(
         s"${failed.size} of ${points.size} points failed to fetch: ${failed.mkString("; ")}")
+    val bodies = Files.createTempDirectory("graft-erddap-bodies")
+    try {
+      fixtures(points).foreach { case (url, body) =>
+        Files.write(bodies.resolve(ErddapTableProvider.fixtureKey(url)), body.getBytes("UTF-8"))
+      }
+      val observations = spark.read.format("erddap")
+        .option("fixture_dir", bodies.toString)
+        .option("points", points.map { case (lat, lon) => s"$lat,$lon" }.mkString(";"))
+        .option("start_date", StartDate).option("end_date", EndDate)
+        .load()
+      val cleaned = Clean.dropAllNull(observations)
+        .withColumn("month", date_format(col("time"), "yyyy-MM"))
+        .withColumn("lat_idx", Grid.latIdxCol(col("latitude")).cast("long"))
+        .withColumn("lon_idx", Grid.lonIdxCol(col("longitude")).cast("long"))
+      graft.sources.ZOrderLanding.land(
+        cleaned, landingDir, bucketShift = 6, overwrite = true,
+        extraPartitionCols = Seq("month"))
+    } finally { bodies.toFile.listFiles().foreach(_.delete()); Files.delete(bodies) }
   }
 
   /** The pruned point query over the landed table: one month, one grid

@@ -2,9 +2,7 @@ package graft.sources
 
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Grid
 
@@ -20,8 +18,8 @@ import graft.core.Grid
   *
   * Scale note: each query yields ≤72 rows (one per month), so the fetch
   * is driver-side by design. Fan-out over many grid points is achieved
-  * by distributing the *point list* (see [[ErddapSource.fetchMany]]),
-  * not by parallelizing a single fetch.
+  * by distributing the *point list* (the `format("erddap")` scan,
+  * [[ErddapScan]]), not by parallelizing a single fetch.
   */
 object ErddapUrl {
   /** Public dataset constants, from the reference's ERDDAP_CONFIG
@@ -91,20 +89,18 @@ final class HttpBackend extends SourceBackend {
   * grid point's time series (reference `extract.py:91-190`).
   *
   * @param backend     byte source (fixture in tests, HTTP live)
-  * @param maxRetries  3 attempts (`config.py:18`)
-  * @param retryDelayMs base backoff 1.0 s, doubled per attempt
-  *                     (`config.py:19,53`: factor 2.0)
   * @param minIntervalMs rate limit: 60/30 req-per-min = 2 s between
   *                     requests (`extract.py:53-55`)
   * @param sleeper     injectable clock-sleep for tests
   */
 final class ErddapSource(
     backend: SourceBackend,
-    maxRetries: Int = 3,
-    retryDelayMs: Long = 1000L,
     minIntervalMs: Long = 2000L,
     sleeper: Long => Unit = Thread.sleep) {
 
+  /** 3 attempts, base backoff 1.0 s doubled per attempt (`config.py:18-19,53`). */
+  private val MaxRetries = 3
+  private val RetryDelayMs = 1000L
   private var lastRequestAt = 0L
   /** Wait times actually slept, exposed for tests. */
   val sleptMs = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -124,8 +120,8 @@ final class ErddapSource(
       try { enforceRateLimit(); return backend.get(url) }
       catch {
         case e: Exception =>
-          if (attempt == maxRetries - 1) throw e
-          val wait = (retryDelayMs * math.pow(2.0, attempt)).toLong
+          if (attempt == MaxRetries - 1) throw e
+          val wait = (RetryDelayMs * math.pow(2.0, attempt)).toLong
           sleptMs += wait
           sleeper(wait)
           attempt += 1
@@ -156,87 +152,5 @@ final class ErddapSource(
     val ds = csvBody.linesIterator.toSeq.toDS()
     spark.read.option("header", "true").option("ignoreLeadingWhiteSpace", "true").csv(ds)
       .coalesce(1) // bound: one griddap point, a body the driver already holds
-  }
-}
-
-object ErddapSource {
-
-  /** Result of [[fetchMany]]: the unioned raw rows plus an accumulator
-    * of per-point failure messages ("lat,lon: message"). Accumulators
-    * fill as actions run — read `failures.value` only after consuming
-    * `rows`. */
-  final case class MultiFetch(rows: DataFrame, failures: CollectionAccumulator[String])
-
-  /** Distributed multi-point ingestion — the reference's real usage
-    * pattern (batch fetch `pipeline/extract.py:340-364`, one fetch per
-    * dashboard click `dashboard/app.py:520-554`) and the actual 100 TB
-    * ingest story: the POINT LIST is what parallelizes, never a single
-    * ≤72-row fetch.
-    *
-    * Each partition builds its OWN [[ErddapSource]] from
-    * `backendFactory`, so the retry/backoff/rate-limit discipline is
-    * enforced per executor slot (K slots ⇒ aggregate rate K × 30
-    * req/min — size `partitions` to the server's tolerance, exactly
-    * like the reference sizes its single client). A failing point
-    * contributes zero rows and one `failures` entry; the other points'
-    * data still lands (the reference logs-and-skips the same way,
-    * `extract.py:355-360`).
-    *
-    * Output schema is fixed at plan time: requested (req_lat, req_lon)
-    * plus the griddap CSV columns as raw strings — the units row
-    * included, exactly as [[ErddapSource.toRawDataFrame]] keeps it, so
-    * the [[graft.ops.Clean]] stage applies unchanged downstream.
-    *
-    * @param backendFactory serializable constructor invoked once per
-    *   partition (a fixture map in tests, `() => new HttpBackend` live)
-    * @param partitions fan-out width; 0 ⇒ min(points, default parallelism)
-    */
-  def fetchMany(spark: SparkSession,
-                points: Seq[(Double, Double)],
-                startDate: String, endDate: String,
-                variables: Seq[String] = ErddapUrl.DefaultVariables,
-                backendFactory: () => SourceBackend,
-                maxRetries: Int = 3,
-                retryDelayMs: Long = 1000L,
-                minIntervalMs: Long = 2000L,
-                sleeper: Long => Unit = Thread.sleep,
-                partitions: Int = 0): MultiFetch = {
-    val cols = Seq("time", "depth", "latitude", "longitude") ++ variables
-    val schema = StructType(
-      StructField("req_lat", DoubleType, nullable = false) ::
-      StructField("req_lon", DoubleType, nullable = false) ::
-      cols.toList.map(StructField(_, StringType, nullable = true)))
-    val failures = spark.sparkContext.collectionAccumulator[String]("erddap_failed_points")
-    val width =
-      if (partitions > 0) partitions
-      else math.max(1, math.min(points.size, spark.sparkContext.defaultParallelism))
-    val rdd = spark.sparkContext.parallelize(points, math.max(1, width))
-      .mapPartitions { it =>
-        val src = new ErddapSource(
-          backendFactory(), maxRetries, retryDelayMs, minIntervalMs, sleeper)
-        it.flatMap { case (lat, lon) =>
-          try {
-            val (body, _) = src.fetchRaw(lat, lon, startDate, endDate, variables)
-            val lines = body.linesIterator.filter(_.nonEmpty).toVector
-            if (lines.isEmpty) Iterator.empty
-            else {
-              // map each body through ITS OWN header so a column-order
-              // drift on the server side can't silently shift values
-              val header = lines.head.split(",", -1).map(_.trim)
-              val idx = cols.map(c => header.indexOf(c))
-              lines.iterator.drop(1).map { line =>
-                val f = line.split(",", -1)
-                Row.fromSeq(lat +: lon +: idx.map(i =>
-                  if (i >= 0 && i < f.length) f(i) else null))
-              }
-            }
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              failures.add(s"$lat,$lon: ${e.getMessage}")
-              Iterator.empty
-          }
-        }
-      }
-    MultiFetch(spark.createDataFrame(rdd, schema), failures)
   }
 }

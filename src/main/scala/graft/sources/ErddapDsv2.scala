@@ -2,6 +2,9 @@ package graft.sources
 
 import java.time.Instant
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -29,24 +32,25 @@ import graft.core.Grid
   *  - time bounds → the `[t0:t1]` slice (month granularity; the filter
   *    is also re-applied post-scan, so sub-month bounds stay exact)
   *  - latitude/longitude equality → prunes the point list to the
-  *    matching snapped grid point (partition pruning: one input
-  *    partition per point)
+  *    matching snapped grid point (a pruned point is never requested)
   *  - required columns → the requested variable list (`temperature` →
   *    `Temperature[...]`) — an unrequested variable never leaves the
   *    server
   *
-  * One input partition per grid point: the scan distributes the POINT
-  * LIST exactly like [[ErddapSource.fetchMany]], with the same
-  * retry/rate-limit discipline per partition. Output rows are the
-  * CLEANED observation shape (lowercase names, typed columns, NaN →
-  * null), matching `transform.py:10-28`.
+  * The scan is main's one multi-point read. It spreads the POINT LIST
+  * over `min(points, defaultParallelism)` input partitions whose points
+  * share one [[ErddapSource]], so each slot paces its requests like the
+  * reference's one client (`extract.py:53-55`). A point that still
+  * fails after its retries fails the read, naming the point. Output
+  * rows are the CLEANED observation shape (lowercase names, typed
+  * columns, NaN → null), matching `transform.py:10-28`.
   *
   * Bytes come from `option("fixture_dir", ...)` — a directory of
-  * recorded bodies keyed by the first 16 sha256 hex chars of the URL —
-  * or live HTTP when absent. A sliced URL whose fixture is missing
-  * fails loudly (like a 404), which is what makes the pushdown
-  * OBSERVABLE in tests: recording only the narrowed URL proves the
-  * narrow URL is what the scan requests.
+  * recorded bodies keyed by the first 16 sha256 hex chars of the URL,
+  * replayed without pacing — or live HTTP when absent. A sliced URL
+  * whose fixture is missing fails loudly (like a 404), which is what
+  * makes the pushdown OBSERVABLE in tests: recording only the narrowed
+  * URL proves the narrow URL is what the scan requests.
   */
 class ErddapTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "erddap"
@@ -100,9 +104,12 @@ final class ErddapScanBuilder(options: CaseInsensitiveStringMap)
   }
 
   private var points: Seq[(Double, Double)] =
-    required("points").split(";").toSeq.map { p =>
-      val Array(la, lo) = p.split(",").map(_.trim.toDouble)
-      (la, lo)
+    required("points").split(";", -1).toSeq.map { p =>
+      p.split(",", -1).map(_.trim.toDoubleOption) match {
+        case Array(Some(la), Some(lo)) => (la, lo)
+        case _ => throw new IllegalArgumentException(
+          s"erddap option 'points': malformed entry '$p' (expected lat,lon)")
+      }
     }
   private var start: String = required("start_date")
   private var end: String = required("end_date")
@@ -170,7 +177,8 @@ final class ErddapScanBuilder(options: CaseInsensitiveStringMap)
   }
 }
 
-final case class ErddapPointPartition(lat: Double, lon: Double) extends InputPartition
+/** The points one slot reads, in order, through one [[ErddapSource]]. */
+final case class ErddapPointsPartition(points: Seq[(Double, Double)]) extends InputPartition
 
 final class ErddapScan(
     points: Seq[(Double, Double)], start: String, end: String,
@@ -184,30 +192,37 @@ final class ErddapScan(
     s"ErddapScan(points=${points.mkString(";")}, slice=[$start..$end], " +
       s"vars=${variables.mkString(",")}, PushedFilters=[${pushed.mkString(", ")}])"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    points.map { case (la, lo) => ErddapPointPartition(la, lo) }.toArray
+  override def planInputPartitions(): Array[InputPartition] = {
+    val slots = math.min(points.size, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate(slots) { s =>
+      ErddapPointsPartition(points.zipWithIndex.collect { case (p, i) if i % slots == s => p })
+    }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ErddapReaderFactory(start, end, variables, requiredSchema, fixtureDir)
 }
 
-/** Reads one grid point's slice: build the URL, fetch through the
-  * retry/rate-limit discipline, parse + clean into InternalRows. */
+/** Reads one slot's grid points in turn: build each URL, fetch through
+  * the slot's retry/rate-limit discipline, parse + clean into InternalRows. */
 final class ErddapReaderFactory(
     start: String, end: String, variables: Seq[String],
     requiredSchema: StructType, fixtureDir: Option[String])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ErddapPointPartition]
-    val backend: SourceBackend = fixtureDir match {
-      case Some(dir) => new FixtureDirBackend(dir)
-      case None => new HttpBackend
+    val source = fixtureDir match {
+      case Some(dir) => // replay has no server to spare: not paced
+        new ErddapSource(new FixtureDirBackend(dir), minIntervalMs = 0L, sleeper = _ => ())
+      case None => new ErddapSource(new HttpBackend)
     }
-    val source = new ErddapSource(backend)
+    val points = partition.asInstanceOf[ErddapPointsPartition].points
     new PartitionReader[InternalRow] {
-      private lazy val rows: Iterator[InternalRow] = {
-        val (body, _) = source.fetchRaw(p.lat, p.lon, start, end, variables)
+      private val rows: Iterator[InternalRow] = points.iterator.flatMap { case (lat, lon) =>
+        val (body, _) =
+          try source.fetchRaw(lat, lon, start, end, variables)
+          catch { case NonFatal(e) =>
+            throw new java.io.IOException(s"erddap point $lat,$lon failed to fetch: ${e.getMessage}", e) }
         val lines = body.linesIterator.filter(_.nonEmpty).toVector
         if (lines.isEmpty) Iterator.empty
         else {

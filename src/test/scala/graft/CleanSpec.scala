@@ -84,6 +84,18 @@ class CleanSpec extends AnyFunSuite with SparkTestSession {
     assert(api.filter(col("longitude").isNull).count() == 1)
   }
 
+  test("F2: an ERDDAP NaN cell coerces to null, so a both-NaN row is dropped") {
+    import spark.implicits._
+    val raw = Seq(
+      ("1960-01-16T00:00:00Z", "0.0", "32.5", "-70.0", "NaN", "NaN"),
+      ("1960-02-16T00:00:00Z", "0.0", "32.5", "-70.0", "NaN", "36.4"))
+      .toDF("time", "depth", "latitude", "longitude", "Temperature", "Salinity")
+    val api = Clean.cleanApiResponse(raw).collect()
+    assert(api.length == 1, api.mkString("; "))
+    assert(api.head.isNullAt(4) && api.head.getDouble(5) == 36.4)
+    assert(Clean.cleanTransform(raw).count() == 0)
+  }
+
   test("O1: api clean output is time-sorted with nulls last (pandas parity)") {
     val times = Clean.cleanApiResponse(readCsv(fixture))
       .select("time").collect().map(r => Option(r.getAs[Timestamp](0)))

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Grid
 import graft.sources.{ErddapTableProvider, ErddapUrl}
 
 /** DSv2 ERDDAP source: predicates and required columns must reach the
@@ -101,8 +102,8 @@ class ErddapDsv2Spec extends AnyFunSuite with SparkTestSession {
       .filter(col("longitude") === -70.0)
     val rows = df.collect()
     assert(rows.length == 1 && rows(0).getAs[Double]("longitude") == -70.0)
-    // partition pruning is physical: one input partition per surviving
-    // point, so the pruned scan plans exactly 1
+    // partition pruning is physical: the one surviving point plans
+    // exactly 1 input partition
     assert(df.rdd.getNumPartitions == 1)
   }
 
@@ -171,5 +172,69 @@ class ErddapDsv2Spec extends AnyFunSuite with SparkTestSession {
       .load().collect()
     assert(rows.length == 1)
     assert(rows(0).isNullAt(4) && rows(0).getDouble(5) == 36.4)
+  }
+
+  test("malformed points entries fail naming the entry") {
+    val dir = Files.createTempDirectory("dsv2").toString
+    for (bad <- Seq("32.5", "a,b", "")) {
+      val e = intercept[IllegalArgumentException] {
+        read(dir)
+          .option("points", s"32.5,-70.0;$bad")
+          .option("start_date", "1960-01-01").option("end_date", "1960-01-01")
+          .load().collect()
+      }
+      assert(e.getMessage.contains(s"malformed entry '$bad'"), e.getMessage)
+    }
+  }
+
+  test("two points read into one frame, each row carrying its own snapped coordinates") {
+    val dir = Files.createTempDirectory("dsv2").toString
+    val points = Seq((32.5, -70.0), (30.1, -75.1))
+    for (((lat, lon), sal) <- points.zip(Seq("36.4", "35.1"))) {
+      val (sla, slo) = Grid.snap(lat, lon)
+      record(dir, ErddapUrl.build(lat, lon, "1960-01-01", "1960-02-01"),
+        body(Seq("1960-01", "1960-02"), sla, slo).replace("36.4", sal))
+    }
+    val rows = read(dir)
+      .option("points", points.map { case (la, lo) => s"$la,$lo" }.mkString(";"))
+      .option("start_date", "1960-01-01").option("end_date", "1960-02-01")
+      .load().collect()
+    val byPoint = rows.groupBy(r => (r.getAs[Double]("latitude"), r.getAs[Double]("longitude")))
+    assert(byPoint.keySet == points.map { case (la, lo) => Grid.snap(la, lo) }.toSet)
+    assert(byPoint.values.forall(_.length == 2))
+    assert(byPoint(Grid.snap(30.1, -75.1)).map(_.getAs[Double]("salinity")).toSet == Set(35.1))
+    assert(byPoint((32.5, -70.0)).map(_.getAs[Double]("salinity")).toSet == Set(36.4))
+  }
+
+  test("more points than slots: min(points, parallelism) partitions, every point read once") {
+    val dir = Files.createTempDirectory("dsv2").toString
+    val parallelism = spark.sparkContext.defaultParallelism
+    val points = (0 until parallelism + 2).map(i => (30.0, -70.0 - 0.25 * i))
+    points.foreach { case (lat, lon) =>
+      val (sla, slo) = Grid.snap(lat, lon)
+      record(dir, ErddapUrl.build(lat, lon, "1960-01-01", "1960-01-01"),
+        body(Seq("1960-01"), sla, slo))
+    }
+    val df = read(dir)
+      .option("points", points.map { case (la, lo) => s"$la,$lo" }.mkString(";"))
+      .option("start_date", "1960-01-01").option("end_date", "1960-01-01")
+      .load()
+    assert(df.rdd.getNumPartitions == math.min(points.size, parallelism))
+    val lons = df.collect().map(_.getAs[Double]("longitude")).sorted.toSeq
+    assert(lons == points.map { case (la, lo) => Grid.snap(la, lo)._2 }.sorted)
+  }
+
+  test("a point whose body is missing fails the read naming the point, once per read") {
+    val dir = Files.createTempDirectory("dsv2").toString
+    record(dir, ErddapUrl.build(32.5, -70.0, "1960-01-01", "1960-01-01"),
+      body(Seq("1960-01"), 32.5, -70.0))
+    val df = read(dir)
+      .option("points", "32.5,-70.0;30.0,-75.0") // no body for the second point
+      .option("start_date", "1960-01-01").option("end_date", "1960-01-01")
+      .load()
+    for (_ <- 1 to 2) {
+      val msg = intercept[org.apache.spark.SparkException](df.collect()).getMessage
+      assert("erddap point 30.0,-75.0 failed".r.findAllIn(msg).size == 1, msg)
+    }
   }
 }

@@ -87,72 +87,6 @@ class ErddapSpec extends AnyFunSuite {
   }
 }
 
-/** S1 fan-out: distributed point-list ingestion (reference batch fetch
-  * `extract.py:340-364`; per-click fetch `dashboard/app.py:520-554`). */
-class ErddapFetchManySpec extends AnyFunSuite with SparkTestSession {
-  import graft.sources.ErddapSource
-
-  test("fetchMany unions good points and contains failures per point") {
-    val dates = ("1960-01-01", "1960-01-01")
-    def body(lat: Double, lon: Double, t: Double, s: Double): String =
-      "time,depth,latitude,longitude,Temperature,Salinity\n" +
-      "UTC,m,degrees_north,degrees_east,degree_C,PSU\n" +
-      s"1960-01-16T00:00:00Z,0.0,$lat,$lon,$t,$s\n"
-    // fixtures keyed by the same URLs fetchMany will build
-    val fixtures = Map(
-      ErddapUrl.build(32.5, -70.0, dates._1, dates._2)   -> body(32.5, -70.0, 21.4, 36.4),
-      ErddapUrl.build(32.25, -70.25, dates._1, dates._2) -> body(32.25, -70.25, 20.9, 36.1))
-    val points = Seq(
-      (32.5, -70.0), (32.25, -70.25),
-      (40.0, -100.0), // P8 validation failure (too far west)
-      (30.0, -75.0))  // valid coords, URL not in fixtures -> 404 after retries
-    val mf = ErddapSource.fetchMany(
-      spark, points, dates._1, dates._2,
-      backendFactory = () => new FixtureBackend(fixtures),
-      retryDelayMs = 0, minIntervalMs = 0, sleeper = _ => ())
-
-    val rows = mf.rows.collect()
-    // 2 good points × (units row + 1 data row): the units row survives
-    // for the shared Clean stage, exactly like toRawDataFrame
-    assert(rows.length == 4)
-    assert(mf.rows.columns.toSeq == Seq(
-      "req_lat", "req_lon", "time", "depth", "latitude", "longitude",
-      "Temperature", "Salinity"))
-    val dataRows = rows.filter(_.getString(2) != "UTC")
-    assert(dataRows.map(r => (r.getDouble(0), r.getDouble(1))).toSet ==
-      Set((32.5, -70.0), (32.25, -70.25)))
-    // Temperature column carried through by name
-    assert(dataRows.map(_.getString(6)).toSet == Set("21.4", "20.9"))
-
-    import scala.jdk.CollectionConverters._
-    val fails = mf.failures.value.asScala.toSeq
-    assert(fails.size == 2, s"expected 2 contained failures, got $fails")
-    assert(fails.exists(_.startsWith("40.0,-100.0")))
-    assert(fails.exists(_.startsWith("30.0,-75.0")))
-  }
-
-  test("fetchMany builds one rate-limit domain per partition") {
-    // 4 points in ONE partition must share a single ErddapSource and
-    // therefore sleep between requests (per-slot rate discipline).
-    val dates = ("1960-01-01", "1960-01-01")
-    val pts = Seq((32.5, -70.0), (32.25, -70.25), (32.0, -70.5), (31.75, -70.75))
-    val fixtures = pts.map { case (la, lo) =>
-      ErddapUrl.build(la, lo, dates._1, dates._2) ->
-        "time,depth\nUTC,m\n1960-01-16T00:00:00Z,0.0\n"
-    }.toMap
-    val slept = spark.sparkContext.collectionAccumulator[Long]("slept")
-    val mf = ErddapSource.fetchMany(
-      spark, pts, dates._1, dates._2,
-      backendFactory = () => new FixtureBackend(fixtures),
-      retryDelayMs = 0, minIntervalMs = 2000L,
-      sleeper = w => slept.add(w), partitions = 1)
-    assert(mf.rows.count() == 8) // 4 points × 2 rows
-    import scala.jdk.CollectionConverters._
-    // 3 inter-request gaps inside the single partition
-    assert(slept.value.asScala.count(w => w > 0 && w <= 2000L) >= 3)
-  }
-}
-
 /** S3: raw CSV body → all-string DataFrame (double header intact). */
 class ErddapParseSpec extends AnyFunSuite with SparkTestSession {
   test("toRawDataFrame preserves the units row for the clean stage") {

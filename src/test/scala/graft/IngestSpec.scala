@@ -47,19 +47,6 @@ class IngestSpec extends AnyFunSuite with SparkTestSession {
     assert(rows(0).getTimestamp(0).toInstant.toString.startsWith("1960-07-16"))
   }
 
-  test("a failing point contributes zero rows; the others still land") {
-    val points = LandedIngest.Points :+ (20.0, -75.5) // no fixture recorded
-    val fx = LandedIngest.fixtures() // only the 4 demo points
-    val fetched = graft.sources.ErddapSource.fetchMany(
-      spark, points, LandedIngest.StartDate, LandedIngest.EndDate,
-      backendFactory = () => new graft.sources.FixtureBackend(fx),
-      minIntervalMs = 0L, sleeper = _ => ())
-    val n = fetched.rows.count()
-    assert(n == 4 * 13) // 4 points x (units row + 12 data rows)
-    assert(fetched.failures.value.size() == 1)
-    assert(fetched.failures.value.get(0).startsWith("20.0,-75.5"))
-  }
-
   test("land fails naming a point that did not fetch") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ingest-bad").toString
     val e = intercept[IllegalStateException] {

@@ -58,27 +58,6 @@ class OceanEngineSpec extends AnyFunSuite with SparkTestSession {
     assert(near.length == 1 && near.head.getAs[Double]("latitude") == 32.5)
   }
 
-  test("fetchManyObservations: batch fetch, cleaned union, failures contained") {
-    val dates = ("1960-01-01", "1960-02-01")
-    val fixtures = Map(
-      ErddapUrl.build(32.5, -70.0, dates._1, dates._2) -> body,
-      ErddapUrl.build(32.25, -70.25, dates._1, dates._2) -> body)
-    val (e, _) = engine()
-    val mf = e.fetchManyObservations(
-      Seq((32.5, -70.0), (32.25, -70.25), (30.0, -75.0)), // last has no fixture
-      dates._1, dates._2,
-      backendFactory = () => new FixtureBackend(fixtures))
-    val rows = mf.rows.collect()
-    // cleaned shape: units row stripped, typed time, coords kept per point
-    assert(mf.rows.columns.take(1).head == "time")
-    assert(mf.rows.columns.takeRight(2).toSeq == Seq("req_lat", "req_lon"))
-    assert(rows.nonEmpty)
-    assert(rows.map(_.getAs[Double]("req_lat")).distinct.sorted.toSeq == Seq(32.25, 32.5))
-    assert(mf.rows.schema("time").dataType.typeName == "timestamp")
-    import scala.jdk.CollectionConverters._
-    assert(mf.failures.value.asScala.exists(_.startsWith("30.0,-75.0")))
-  }
-
   test("summary: pandas-describe shape, stats as rows, rounded to 3") {
     val (e, _) = engine()
     val df = e.fetchObservations(32.5, -70.0, "1960-01-01", "1960-02-01").data

@@ -575,6 +575,28 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     assert(n == 1, s"string literals \"units\" in main: $n")
   }
 
+  test("main hand-splits a griddap body only in the DSv2 scan") {
+    // The format("erddap") scan is main's one multi-point read, with
+    // its one units-row, NaN and timestamp coercion; a second hand
+    // split of a CSV body is a twin of it that can drift.
+    val hits = for {
+      (f, lines) <- mainSources if f.getName != "ErddapDsv2.scala"
+      (line, i) <- lines.zipWithIndex if line.contains("split(\",\", -1)")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(hits.isEmpty, s"griddap body splits outside ErddapDsv2.scala: ${hits.mkString(", ")}")
+  }
+
+  test("main holds no collection accumulator") {
+    // An accumulator updated inside a transformation adds again each
+    // time its rows are recomputed, so a failure it collects counts
+    // more than once; a failed read fails the action instead.
+    val hits = for {
+      (f, lines) <- mainSources
+      (line, i) <- lines.zipWithIndex if line.contains("collectionAccumulator")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(hits.isEmpty, s"collection accumulators in main: ${hits.mkString(", ")}")
+  }
+
   test("main keeps one JSON string escaper") {
     // Every JSON line or file main writes quotes its strings through
     // graft.core.Json; a second escaper can drift from it (two of the
