@@ -253,8 +253,7 @@ object RunIngest {
             println(s"[ingest] compaction no-op: ${s.filesBefore} file(s) already <= $target")
           else
             println(s"[ingest] compacted ${opts("corpus")}: ${s.filesBefore} -> " +
-              s"${s.filesAfter} file(s), ${s.rows} rows, carries " +
-              (if (s.carriesKept) "kept" else "DROPPED (stale carry, or a foreign write detected in the window — next batch reseeds)"))
+              s"${s.filesAfter} file(s), ${s.rows} rows")
           0
         }
       case Some("stats") => return failing {
@@ -293,8 +292,7 @@ object RunIngest {
             s"before '${opts("before")}'")
         else
           println(s"[ingest] expired ${s.dirsDropped} partition dir(s), " +
-            s"${s.filesDropped} file(s) from ${opts("corpus")}, carries " +
-            (if (s.carriesKept) "kept" else "DROPPED (stale carry, or a foreign write detected in the window — next batch reseeds)"))
+            s"${s.filesDropped} file(s) from ${opts("corpus")}")
         0
       }
       case _ => ()

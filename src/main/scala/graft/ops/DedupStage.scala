@@ -166,7 +166,7 @@ object DedupStage {
     * blob over the landed rows' [[DedupStage.keys]] (built by
     * [[DedupStage.buildCarry]]), its `bits`, the landed row `capacity`
     * it was sized for, and the landing fingerprint `landingFp` it
-    * covers. Lifecycle: [[graft.streaming.EventStreams.carries]]. */
+    * covers. Lifecycle: [[graft.streaming.LandingGuard.Landing]]. */
   private[graft] final case class CarriedBloom(
     blob: Array[Byte], bits: Int, capacity: Long, landingFp: String)
 

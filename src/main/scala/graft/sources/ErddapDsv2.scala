@@ -1,17 +1,19 @@
 package graft.sources
 
-import java.time.Instant
+import java.time.ZoneOffset
 
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{DoubleType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Grid
 
@@ -239,17 +241,12 @@ final class ErddapReaderFactory(
               if (i < 0 || i >= f.length || f(i).isEmpty || f(i) == "NaN") null
               else field.dataType match {
                 case TimestampType =>
-                  // cleaned semantics: malformed time -> null (the
-                  // try_to_timestamp coerce the Clean stage applies);
-                  // ArithmeticException covers toNanos overflow on
-                  // far-future timestamps
-                  try java.lang.Long.valueOf(
-                    java.time.Duration.between(Instant.EPOCH, Instant.parse(f(i)))
-                      .toNanos / 1000L)
-                  catch {
-                    case _: java.time.format.DateTimeParseException => null
-                    case _: ArithmeticException => null
-                  }
+                  // cleaned semantics: Spark's own cast parser, the one
+                  // Clean's try_to_timestamp runs, at the session's UTC —
+                  // zone-less and date-only cells type as there, and a
+                  // malformed cell is null
+                  DateTimeUtils.stringToTimestamp(UTF8String.fromString(f(i)), ZoneOffset.UTC)
+                    .map(t => java.lang.Long.valueOf(t)).orNull
                 case DoubleType =>
                   // null-on-error like try_cast (pd.to_numeric
                   // errors='coerce', transform.py:23) — one malformed

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ops.DedupStage
-import graft.ops.DedupStage.CarriedBloom
 
 /** Structured Streaming surface over the `events` stream (SURVEY §2.9
   * extended scope; the reference is batch-only, so semantics are
@@ -230,69 +229,50 @@ object EventStreams {
   // =====================================================================
   private val AppendFiles = 4
 
-  /** Landed-corpus row counts carried across micro-batches, keyed by
-    * landing dir — exposed so StreamingSpec can pin that the count
-    * tracks the corpus without per-batch recounting. The count only
-    * SIZES the bloom filters; drift after a partial retry can't break
-    * dedup exactness (the confirm join stays exact). */
-  private[graft] val landedCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
-  /** Every carried bloom ([[graft.ops.DedupStage.CarriedBloom]]):
-    * landing dir → (stage name → carry). A key COLLISION in a stage's
-    * bloom only costs a confirm probe (the row looks like a candidate
-    * and the exact confirm clears it); it can never admit a duplicate,
-    * which is what makes a bloom a sound carrier for a landed key set.
-    * One entry per landing, so whatever poisons a landing drops all of
-    * its carries with one `remove`.
-    *
-    * Rebuilding a carry per batch is a full corpus scan per
-    * micro-batch — O(corpus), the clearest scale-killer in a
-    * long-running ingest — so each is seeded at most once and then
-    * FOLDED forward: after each append, a bloom of just the appended
-    * rows (computed by the write's own Observation — no second pass) is
-    * OR'd in.
-    *
-    * What the carry amortizes — and what it doesn't: the carry removes
-    * the per-batch bloom-BUILD scan, and, with the two-phase confirm
-    * (probe first, join only if any row probes positive), a batch
-    * whose rows all probe bloom-negative touches the landing not at
-    * all. A batch with bloom-positive rows still pays a confirm join
-    * whose corpus side is a scan of the landing's text (exact stage)
-    * or state columns (near/semantic stages) — bounded in frequency
-    * by the dup/FP rate of the probe side, not eliminated.
-    *
-    * Exactness discipline — a bloom MISSING landed rows would admit
-    * duplicates (the false-NEGATIVE direction the confirm join cannot
-    * repair), so a carry is only trusted when `landingFp`, the
-    * file-status fingerprint of the landing recorded by a VALIDATED
-    * fold ([[foldCarries]]), still matches the landing: any
-    * out-of-band change — leftover task files from a crashed batch
-    * attempt, another writer, a manual edit — changes the fingerprint
-    * and forces a reseed scan, restoring the per-batch-rebuild
-    * self-heal exactly when it is needed and only then. The fold
-    * itself verifies the only files that appeared during the append
-    * are the batch's own committed part files (one write-job UUID);
-    * anything else in the delta drops the carry instead of stamping a
-    * fingerprint whose rows the blob does not contain
-    * ([[appendOnlyDelta]] — closes the append→fold race window).
-    * Capacity: blobs are sized for 4× the seed-time corpus (~16
-    * bits/key keeps confirm traffic ~0.5%); growing past that drops
-    * the carry so the next batch reseeds at the new size — amortized
-    * one corpus scan per 4× growth. Every carry is built with
-    * [[graft.ops.DedupStage.ProbeHashes]] probe hashes. */
-  private[graft] val carries =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, CarriedBloom]]()
-
-  private[streaming] def carriesOf(landingDir: String): Map[String, CarriedBloom] =
-    carries.getOrDefault(landingDir, Map.empty)
-
-  private[graft] def carryOf(landingDir: String, stage: String): Option[CarriedBloom] =
-    carriesOf(landingDir).get(stage)
-
-  /** Replace the landing's carries; an empty set removes its entry. */
-  private[streaming] def setCarries(landingDir: String, m: Map[String, CarriedBloom]): Unit =
-    if (m.isEmpty) carries.remove(landingDir) else carries.put(landingDir, m)
+  // Every carried bloom ([[graft.ops.DedupStage.CarriedBloom]]) lives
+  // on the landing's open handle ([[LandingGuard.Landing]]): stage name
+  // → carry, released with the handle when the stream stops. A key
+  // COLLISION in a stage's bloom only costs a confirm probe (the row
+  // looks like a candidate and the exact confirm clears it); it can
+  // never admit a duplicate, which is what makes a bloom a sound
+  // carrier for a landed key set. Whatever poisons a landing drops all
+  // of its carries at once.
+  //
+  // Rebuilding a carry per batch is a full corpus scan per
+  // micro-batch — O(corpus), the clearest scale-killer in a
+  // long-running ingest — so each is seeded at most once per stream
+  // and then FOLDED forward: after each append, a bloom of just the
+  // appended rows (computed by the write's own Observation — no second
+  // pass) is OR'd in.
+  //
+  // What the carry amortizes — and what it doesn't: the carry removes
+  // the per-batch bloom-BUILD scan, and, with the two-phase confirm
+  // (probe first, join only if any row probes positive), a batch
+  // whose rows all probe bloom-negative touches the landing not at
+  // all. A batch with bloom-positive rows still pays a confirm join
+  // whose corpus side is a scan of the landing's text (exact stage)
+  // or state columns (near/semantic stages) — bounded in frequency
+  // by the dup/FP rate of the probe side, not eliminated.
+  //
+  // Exactness discipline — a bloom MISSING landed rows would admit
+  // duplicates (the false-NEGATIVE direction the confirm join cannot
+  // repair), so a carry is only trusted when `landingFp`, the
+  // file-status fingerprint of the landing recorded by a VALIDATED
+  // fold ([[foldCarries]]), still matches the landing: any
+  // out-of-band change — leftover task files from a crashed batch
+  // attempt, another writer, a manual edit — changes the fingerprint
+  // and forces a reseed scan, restoring the per-batch-rebuild
+  // self-heal exactly when it is needed and only then. The fold
+  // itself verifies the only files that appeared during the append
+  // are the batch's own committed part files (one write-job UUID);
+  // anything else in the delta drops the carry instead of stamping a
+  // fingerprint whose rows the blob does not contain
+  // ([[appendOnlyDelta]] — closes the append→fold race window).
+  // Capacity: blobs are sized for 4× the seed-time corpus (~16
+  // bits/key keeps confirm traffic ~0.5%); growing past that drops
+  // the carry so the next batch reseeds at the new size — amortized
+  // one corpus scan per 4× growth. Every carry is built with
+  // [[graft.ops.DedupStage.ProbeHashes]] probe hashes.
 
   private[streaming] def landingParts(spark: SparkSession, landingDir: String): Seq[String] =
     graft.core.Tables.listing(spark, landingDir)
@@ -375,28 +355,20 @@ object EventStreams {
     * against the default FS, a landing on s3a/hdfs would fail the
     * read and silently drop the carries on every zero-row fold,
     * forcing the O(corpus) reseed the carry design exists to avoid. */
-  private def validAppend(spark: SparkSession, landingDir: String, pre: Seq[String],
+  private def validAppend(spark: SparkSession, landing: LandingGuard.Landing, pre: Seq[String],
                           post: Seq[String], appendedRows: Long): Boolean =
-    appendOnlyDelta(pre, post, appendedRows, landingDir) && (appendedRows > 0L || {
-      val visible = visibleUnder(landingDir)
+    appendOnlyDelta(pre, post, appendedRows, landing.key) && (appendedRows > 0L || {
+      val visible = visibleUnder(landing.key)
       val preV = pre.filter(visible).toSet
       val paths = post.filter(visible).filterNot(preV).map(partPath)
       paths.isEmpty || {
         try {
-          val fs = new org.apache.hadoop.fs.Path(landingDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
           val qualified = paths.map(p =>
-            fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
+            landing.fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
           spark.read.parquet(qualified: _*).isEmpty
         } catch { case _: Throwable => false }
       }
     })
-
-  /** Test seam: invoked after a batch's append returns and BEFORE the
-    * fold re-lists the landing — the exact window the validated fold
-    * exists to defend (StreamingSpec races an out-of-band append into
-    * it deterministically). No-op in production. */
-  @volatile private[graft] var postAppendHook: (String, Long) => Unit = (_, _) => ()
 
   /** After a successful append: re-list the landing, verify the delta
     * is exactly this batch's own committed part files, and either fold
@@ -406,21 +378,20 @@ object EventStreams {
     * the next batch reseeds from the landing (which then includes
     * whatever landed out-of-band). Also drops a carry whose capacity
     * the landed count outgrew (next batch reseeds larger). */
-  private def foldCarries(spark: SparkSession, landingDir: String,
+  private def foldCarries(spark: SparkSession, landing: LandingGuard.Landing,
                           preParts: Seq[String], appendedRows: Long,
-                          landedCount: Long,
                           observed: Map[String, Array[Byte]]): Unit = {
-    val postParts = landingParts(spark, landingDir)
-    if (!validAppend(spark, landingDir, preParts, postParts, appendedRows)) {
+    val postParts = landingParts(spark, landing.key)
+    if (!validAppend(spark, landing, preParts, postParts, appendedRows)) {
       // an unexplained delta poisons EVERY carry on this landing, not
       // just the folding mode's
-      carries.remove(landingDir)
+      landing.setCarries(Map.empty)
       return
     }
     val fp = fpOf(postParts)
-    setCarries(landingDir, observed.foldLeft(carriesOf(landingDir)) {
+    landing.setCarries(observed.foldLeft(landing.carries) {
       case (m, (stage, blob)) => m.get(stage) match {
-        case Some(c) if landedCount <= c.capacity => m.updated(stage,
+        case Some(c) if landing.landed.get() <= c.capacity => m.updated(stage,
           c.copy(blob = DedupStage.unionBloom(c.blob, blob), landingFp = fp))
         case Some(_) => m - stage
         case None    => m
@@ -442,14 +413,14 @@ object EventStreams {
     * seeding is skipped (no carry beats a carry missing the raced-in
     * rows; the next batch reseeds from the landing, which by then
     * includes them). */
-  private def seedFromAppend(spark: SparkSession, landingDir: String,
-                             fresh: DataFrame, landedCount: Long,
-                             stages: Seq[DedupStage]): Unit = {
-    val post = landingParts(spark, landingDir)
-    if (!validAppend(spark, landingDir, Seq.empty, post, landedCount)) return
+  private def seedFromAppend(spark: SparkSession, landing: LandingGuard.Landing,
+                             fresh: DataFrame, stages: Seq[DedupStage]): Unit = {
+    val post = landingParts(spark, landing.key)
+    val landedCount = landing.landed.get()
+    if (!validAppend(spark, landing, Seq.empty, post, landedCount)) return
     val fp = fpOf(post)
     val cap = math.max(landedCount, 1L) * 4
-    setCarries(landingDir, stages.map(s => s.name -> s.buildCarry(fresh, cap, fp)).toMap)
+    landing.setCarries(stages.map(s => s.name -> s.buildCarry(fresh, cap, fp)).toMap)
   }
 
   // ---------- the shared ingest batch loop ----------
@@ -467,40 +438,38 @@ object EventStreams {
     * self-heal, the single-writer slot, and the read-failure
     * discipline (only a genuinely-absent dir means "first batch") are
     * shared here — see [[ingestDedup]] for the full contracts. */
-  private def runIngestStream(docs: DataFrame, landingDir: String,
+  private def runIngestStream(docs: DataFrame, landing: LandingGuard.Landing,
                               checkpointDir: String,
                               partitionCols: Seq[String],
                               stages: Seq[DedupStage], obsPrefix: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-  LandingGuard.startGuarded(docs.sparkSession, landingDir) { _ =>
+  landing.startStream { _ =>
     // Landed row count carried across batches: seeded ONCE (first
     // batch that finds an existing dir — one metadata count), then
     // advanced by each batch's observed append size — never a
     // per-batch recount over the landing's growing file listing.
-    val landed = landedCounts.computeIfAbsent(landingDir,
-      _ => new java.util.concurrent.atomic.AtomicLong(-1L))
+    val landed = landing.landed
+    val landingDir = landing.key
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        LandingGuard.heartbeatIngestLock(landingDir)
+        LandingGuard.heartbeatIngestLock(landing)
         // Only a genuinely-absent landing dir means "first batch".
         // Any other read failure (transient IO, corrupt footer,
         // permissions) must fail the batch so the retry re-runs WITH
         // dedup — swallowing it would append duplicates permanently.
-        val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-        val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val firstBatch = !fs.exists(landingPath)
+        val firstBatch = !landing.fs.exists(landing.path)
         var persisted: List[DataFrame] = Nil
         try {
           val (fresh, preParts) =
             if (firstBatch) {
-              // Unconditional reset, not compareAndSet: a stale
-              // carried counter/bloom from a DELETED-and-recreated
-              // landing dir (same JVM, new stream) must reset with
-              // the dir, or sizedBits sizes off a ghost corpus.
+              // Unconditional reset, not compareAndSet: a counter or
+              // bloom from an earlier batch of THIS stream whose
+              // landing dir was deleted must reset with the dir, or
+              // sizedBits sizes off a ghost corpus.
               landed.set(0L)
-              carries.remove(landingDir)
+              landing.setCarries(Map.empty)
               // in-batch keepers only (nothing landed to probe);
               // persisted: the write and EVERY stage's seed consume
               // it — one computed pass, not stages+1
@@ -538,11 +507,11 @@ object EventStreams {
                 // valid carry: fingerprint-fresh and within capacity;
                 // else reseed from the landing (ONE stage-column-
                 // pruned corpus scan) via the one carry constructor
-                val carried = carryOf(landingDir, s.name)
+                val carried = landing.carry(s.name)
                   .filter(c => c.landingFp == fp && landed.get() <= c.capacity)
                   .getOrElse {
                     val c = s.buildCarry(corpus(), math.max(landed.get(), 1L) * 4, fp)
-                    setCarries(landingDir, carriesOf(landingDir).updated(s.name, c))
+                    landing.setCarries(landing.carries.updated(s.name, c))
                     c
                   }
                 // two-phase: (1) probe every row against the carry — a
@@ -566,18 +535,18 @@ object EventStreams {
           // rows' bloom — inside the write action (no second
           // computation of `fresh`, no landing rescan)
           val obs = new org.apache.spark.sql.Observation(s"${obsPrefix}_landed_$batchId")
-          val folding = stages.flatMap(s => carryOf(landingDir, s.name).map(c => (s, c.bits)))
+          val folding = stages.flatMap(s => landing.carry(s.name).map(c => (s, c.bits)))
           val metrics = count(lit(1)).as("n") +: folding.flatMap { case (s, bits) =>
             DedupStage.keyAggs(s.name, s.keys, bits) }
           appendToLanding(fresh, landingDir, partitionCols, obs, metrics)
-          postAppendHook(landingDir, batchId)
+          landing.appended(batchId)
           val observed = obs.get
           val appended = observed("n").asInstanceOf[Long]
           landed.addAndGet(appended)
           if (firstBatch)
-            seedFromAppend(spark, landingDir, fresh, landed.get(), stages)
+            seedFromAppend(spark, landing, fresh, stages)
           else
-            foldCarries(spark, landingDir, preParts, appended, landed.get(),
+            foldCarries(spark, landing, preParts, appended,
               folding.map { case (s, _) =>
                 s.name -> DedupStage.keyBlob(s.name, s.keys.size, observed) }.toMap)
         } finally persisted.foreach(_.unpersist(false))
@@ -692,8 +661,8 @@ object EventStreams {
   /** THE start path of the dedup family ([[ingestDedup]],
     * [[ingestNearDup]], [[ingestSemantic]], [[ingestPipeline]]): the
     * shared start-time refusals run once here, before the stream
-    * starts, then the landing's canonical key ([[LandingGuard.landingKey]]) drives
-    * [[runIngestStream]] over the entry's stage list. */
+    * starts, then the landing's open handle ([[LandingGuard.open]])
+    * drives [[runIngestStream]] over the entry's stage list. */
   private def startDedup(docs: DataFrame, landingDir: String, checkpointDir: String,
                          entry: String, keyCols: Seq[String],
                          partitionCols: Seq[String], stages: Seq[DedupStage],
@@ -702,7 +671,7 @@ object EventStreams {
     requireStreamCols(docs, keyCols)
     requireNoReservedCols(docs, entry)
     requirePartitionCols(docs, partitionCols, keyCols)
-    runIngestStream(docs, LandingGuard.landingKey(docs.sparkSession, landingDir), checkpointDir,
+    runIngestStream(docs, LandingGuard.open(docs.sparkSession, landingDir), checkpointDir,
       partitionCols, stages, obsPrefix)
   }
 
@@ -830,7 +799,7 @@ object EventStreams {
     * for training. `freeze` registers each frozen-state release
     * through its argument as soon as that state exists; every
     * registered release runs on a failed start and on termination
-    * ([[LandingGuard.startGuarded]]; r17 verdict #7: frozen state
+    * ([[LandingGuard.Landing.startStream]]; r17 verdict #7: frozen state
     * must not hold executor storage past the stream's lifetime).
     *
     * Per batch: heartbeat the writer lock, score (`pin` persists a
@@ -850,19 +819,19 @@ object EventStreams {
         s"stream schema must not carry '$c' — the $gate reserves it as a " +
         "landing partition, working or score column")
     }
-    val key = LandingGuard.landingKey(docs.sparkSession, landingDir)
-    LandingGuard.startGuarded(docs.sparkSession, key) { release =>
+    val landing = LandingGuard.open(docs.sparkSession, landingDir)
+    landing.startStream { release =>
       val score = freeze(release)
       docs.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          LandingGuard.heartbeatIngestLock(key)
+          LandingGuard.heartbeatIngestLock(landing)
           var pinned: List[DataFrame] = Nil
           try {
             val w = score(batch, df => { pinned ::= df.persist(); pinned.head })
               .write.options(graft.core.Committers.forRerun(overwrite = true))
             (if (landPartitions.isEmpty) w else w.partitionBy(landPartitions: _*))
-              .mode("overwrite").parquet(s"$key/batch=$batchId")
+              .mode("overwrite").parquet(s"${landing.key}/batch=$batchId")
           } finally pinned.foreach(_.unpersist())
           ()
         }

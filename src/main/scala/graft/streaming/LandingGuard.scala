@@ -1,9 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
-/** A landing's writer guard: single-writer slot, cross-JVM locks, the
-  * names kept beside a landing, and the per-run termination registry. */
+import graft.ops.DedupStage.CarriedBloom
+
+/** A landing's writer guard: the [[LandingGuard.Landing]] handle that
+  * owns one landing's writer state, the one registry of open handles,
+  * the cross-JVM locks, and the names kept beside a landing. */
 object LandingGuard {
   /** What the guard and maintenance keep beside a dir, in its parent;
     * each prefix starts with '.', so [[isHidden]] hides it. */
@@ -36,87 +40,140 @@ object LandingGuard {
   private[streaming] def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
-  // ---------- single-writer guard ----------
+  // ---------- the landing handle and its registry ----------
 
   /** One canonical form per physical landing dir — `makeQualified`
     * resolves scheme/authority/trailing-slash spellings ('/a/b/',
-    * 'file:/a/b') to one string, so the per-landing state maps and the
+    * 'file:/a/b') to one string, so the registry and the
     * single-writer guard cannot be split or bypassed by a path alias
     * (two spellings of one dir would otherwise run two "independent"
-    * carries that invalidate each other's folds every batch). Every
-    * public ingest entry normalizes ONCE; all internal state and I/O
-    * use the canonical form. */
+    * carries that invalidate each other's folds every batch). [[open]]
+    * normalizes ONCE; the handle's state and I/O use the canonical
+    * form. */
   private[graft] def landingKey(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
   }
 
-  private[graft] final class IngestReg(val owner: SparkSession) {
-    @volatile var runId: java.util.UUID = null
+  /** One landing's writer state, from [[open]] to [[close]]: the
+    * canonical key, the single-writer slot, the cross-JVM writer lock
+    * and its heartbeat, the dedup streams' carried blooms and landed
+    * count ([[EventStreams]] holds their discipline), and what the
+    * stream's termination releases. A stream closes its handle on a
+    * failed start and when it terminates; a maintenance bracket
+    * ([[maintaining]]) when it ends. Closing releases all of it, so a
+    * stopped stream's blooms die with it: the next stream on the
+    * landing pays one reseed scan, never exactness. */
+  private[graft] final class Landing private[LandingGuard] (
+      val key: String, owner: SparkSession) {
+    private[streaming] val path = new org.apache.hadoop.fs.Path(key)
+    private[streaming] lazy val fs: org.apache.hadoop.fs.FileSystem =
+      path.getFileSystem(owner.sparkContext.hadoopConfiguration)
+    /** The run holding the slot; null while a stream starts and for a
+      * maintenance bracket, both of which count as live. */
+    @volatile private var runId: java.util.UUID = null
+    /** Landed row count, −1 until seeded. It only SIZES the blooms:
+      * drift after a partial retry cannot break exactness. */
+    private[graft] val landed = new java.util.concurrent.atomic.AtomicLong(-1L)
+    @volatile private var carried = Map.empty[String, CarriedBloom]
+    @volatile private var postAppend: Long => Unit = _ => ()
+    private var cleanups = List.empty[() => Unit] // newest first, guarded by this
+    private var closed = false
+
+    /** Stage name → carried bloom. */
+    private[graft] def carries: Map[String, CarriedBloom] = carried
+    private[graft] def carry(stage: String): Option[CarriedBloom] = carried.get(stage)
+    private[streaming] def setCarries(m: Map[String, CarriedBloom]): Unit = carried = m
+
+    /** Test seam: `f` runs with the batch id after a batch's append
+      * returns and BEFORE its fold re-lists the landing — the window
+      * the validated fold defends. */
+    private[graft] def onPostAppend(f: Long => Unit): Unit = postAppend = f
+    private[streaming] def appended(batchId: Long): Unit = postAppend(batchId)
+
+    private[LandingGuard] def live: Boolean =
+      runId == null || owner.streams.active.exists(_.runId == runId)
+
+    /** Run `f` at [[close]]. */
+    private[streaming] def onClose(f: () => Unit): Unit = synchronized { cleanups ::= f }
+
+    /** Release everything, once: the carries and the count, the
+      * registered releases in registration order, then the slot —
+      * identity-checked and LAST, so no newer handle claims the
+      * landing while this one still releases its lock. A caller
+      * racing a close waits for it. */
+    private[graft] def close(): Unit = synchronized {
+      if (!closed) {
+        closed = true
+        carried = Map.empty
+        landed.set(-1L)
+        cleanups.reverse.foreach(runCleanup)
+        cleanups = Nil
+        registry.remove(key, this)
+      }
+      ()
+    }
+
+    /** Start this landing's stream: take the cross-JVM writer lock
+      * ([[acquireIngestLock]]), run `body` (what it registers through
+      * its argument runs at close), and close at the run's
+      * termination. A failed start closes the handle. */
+    private[graft] def startStream(body: ((() => Unit) => Unit) => StreamingQuery)
+        : StreamingQuery =
+      try {
+        acquireIngestLock(this)
+        // pid-checked: after a cross-JVM takeover the file names the
+        // new owner and this release leaves it alone
+        onClose(() => releaseOwnLock(fs, beside(path, WriterLock)))
+        // one listener per start, removed at close, so a stopped stream
+        // leaves nothing registered on its session
+        val ended = new StreamingQueryListener {
+          override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+          override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+            if (e.runId == runId) close()
+        }
+        owner.streams.addListener(ended)
+        onClose(() => owner.streams.removeListener(ended))
+        val q = body(onClose)
+        runId = q.runId
+        // the listener fires asynchronously: a query that died during
+        // startup can have terminated before its runId was known
+        if (!q.isActive) close()
+        q
+      } catch { case t: Throwable => close(); throw t }
   }
 
-  /** Active ingest streams keyed by landing dir. All carried state
-    * ([[EventStreams]]) is keyed by landing dir and tolerates exactly ONE writer:
-    * two concurrent streams would interleave counter updates and bloom
-    * folds, silently corrupting dedup state. Entries self-clear — a
-    * registration whose query is no longer active is taken over by the
-    * next starter. */
-  private[graft] val activeIngests =
-    new java.util.concurrent.ConcurrentHashMap[String, IngestReg]()
+  /** THE registry of open landings by canonical key, where the
+    * single-writer rule lives: carried dedup state tolerates exactly
+    * ONE writer (two streams would interleave counter updates and
+    * bloom folds, silently corrupting it). */
+  private val registry = new java.util.concurrent.ConcurrentHashMap[String, Landing]()
 
-  /** Take the landing's single-writer slot or throw. A registration
-    * with `runId == null` counts as active — that is both a stream
-    * between registration and start, and a maintenance run
-    * ([[LandingMaintenance]]), which holds the slot for its whole
-    * duration. A registration whose stream is no longer active is
-    * stale and taken over. */
-  private def acquireLanding(spark: SparkSession, landingDir: String): IngestReg = {
-    val mine = new IngestReg(spark)
-    var placed = false
-    while (!placed) {
-      val cur = activeIngests.putIfAbsent(landingDir, mine)
-      if (cur == null) placed = true
-      else {
-        val stillActive = cur.runId == null ||
-          cur.owner.streams.active.exists(_.runId == cur.runId)
-        if (stillActive)
-          throw new IllegalStateException(
-            s"an ingest stream or compaction is already active on landing dir '$landingDir'; " +
-            "the carried dedup state (landed counts + blooms) is keyed by landing " +
-            "dir and tolerates exactly one writer — stop the existing writer first")
-        placed = activeIngests.replace(landingDir, cur, mine)
-      }
+  /** Claim `dir`'s single-writer slot or throw. A handle whose stream
+    * is no longer active (its termination not yet observed) is stale:
+    * it is closed and the slot taken over. */
+  private[graft] def open(spark: SparkSession, dir: String): Landing = {
+    val mine = new Landing(landingKey(spark, dir), spark)
+    var cur = registry.putIfAbsent(mine.key, mine)
+    while (cur != null) {
+      if (cur.live)
+        throw new IllegalStateException(
+          s"an ingest stream or compaction is already active on landing dir '${mine.key}'; " +
+          "the carried dedup state (landed counts + blooms) is keyed by landing " +
+          "dir and tolerates exactly one writer — stop the existing writer first")
+      cur.close()
+      cur = registry.putIfAbsent(mine.key, mine)
     }
     mine
   }
 
-  // ---------- cross-JVM ingest writer lock ----------
+  /** The open handle of `dir`, if any. */
+  private[graft] def active(spark: SparkSession, dir: String): Option[Landing] =
+    Option(registry.get(landingKey(spark, dir)))
 
-  /** Heartbeat staleness threshold for [[acquireIngestLock]] takeover
-    * (test seam — production default 30 min, generously above any
-    * sane micro-batch interval so a slow batch never loses its
-    * landing to a takeover). */
-  private[graft] var ingestLockStaleMs: Long = 30L * 60 * 1000
-
-  private final class IngestLock(
-      val fs: org.apache.hadoop.fs.FileSystem,
-      val path: org.apache.hadoop.fs.Path)
-
-  /** Live file locks of this JVM's active ingest streams, keyed by
-    * canonical landing dir. */
-  private val ingestLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, IngestLock]()
-
-  /** Stream runId → what its termination releases: the writer lock and
-    * a gate's frozen state (the decon confirm set, the quality gate's
-    * checkpointed LM and probe-map broadcast) — without this a stopped
-    * gate's frozen state holds executor storage for the session
-    * lifetime (r17 verdict #7). */
-  private val cleanupsByRun =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, List[() => Unit]]()
-
-  /** Run one frozen-state cleanup, swallowing failures — cleanup must
-    * never fail a terminating stream. */
+  /** Run one release, swallowing failures — a release must never fail
+    * a terminating stream. */
   private def runCleanup(f: () => Unit): Unit =
     try f() catch { case scala.util.control.NonFatal(_) => () }
 
@@ -137,25 +194,12 @@ object LandingGuard {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Install `cleanups` under the query's runId, then re-check
-    * liveness: the listener fires asynchronously, so a query that died
-    * during startup can have terminated BEFORE the put, leaking the
-    * entry (a writer lock would block other JVMs for the staleness
-    * window). The atomic remove in [[terminated]] runs them once. */
-  private[graft] def onTermination(q: org.apache.spark.sql.streaming.StreamingQuery,
-                                   cleanups: List[() => Unit]): Unit =
-    if (cleanups.nonEmpty) {
-      cleanupsByRun.merge(q.runId, cleanups, (a, b) => a ++ b)
-      if (!q.isActive) terminated(q.runId)
-    }
+  // ---------- cross-JVM ingest writer lock ----------
 
-  /** Run (once) whatever is registered under a terminated run. */
-  private[graft] def terminated(runId: java.util.UUID): Unit =
-    Option(cleanupsByRun.remove(runId)).foreach(_.foreach(runCleanup))
-
-  private val listenerSessions: java.util.Set[SparkSession] =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  /** Heartbeat staleness threshold for [[acquireIngestLock]] takeover:
+    * 30 min, generously above any sane micro-batch interval so a slow
+    * batch never loses its landing to a takeover. */
+  private val IngestLockStaleMs: Long = 30L * 60 * 1000
 
   /** A small file's text (a lock's pid, a swap manifest). */
   private[streaming] def readText(fs: org.apache.hadoop.fs.FileSystem,
@@ -196,7 +240,7 @@ object LandingGuard {
       val self = java.lang.ProcessHandle.current().pid()
       Some(LockOwnerState(pid,
         pid.exists(p => pidAliveElsewhere(p, self)),
-        System.currentTimeMillis() - st.getModificationTime <= ingestLockStaleMs,
+        System.currentTimeMillis() - st.getModificationTime <= IngestLockStaleMs,
         st.getModificationTime))
     } catch {
       case _: java.io.FileNotFoundException => None
@@ -263,7 +307,7 @@ object LandingGuard {
     * meaningful on a local fs; on a multi-host shared fs a foreign
     * host's pid number can false-alias a live local process, which
     * only DELAYS takeover to rule c), or (c) its heartbeat mtime is
-    * older than [[ingestLockStaleMs]]. Otherwise: loud refusal naming
+    * older than [[IngestLockStaleMs]]. Otherwise: loud refusal naming
     * the file.
     *
     * HONEST takeover window: the stale-check-then-delete-then-create
@@ -281,12 +325,11 @@ object LandingGuard {
     * `.maintenance-lock` is refused symmetrically, and the ingest
     * lock is re-checked against it after creation (either order of
     * the two creations leaves at most one owner). */
-  private def acquireIngestLock(spark: SparkSession, landingDir: String): IngestLock = {
-    val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lock = beside(landingPath, WriterLock)
+  private def acquireIngestLock(landing: Landing): Unit = {
+    val fs = landing.fs
+    val lock = beside(landing.path, WriterLock)
     if (!fs.exists(lock.getParent)) fs.mkdirs(lock.getParent)
-    val mLock = beside(landingPath, MaintenanceLock)
+    val mLock = beside(landing.path, MaintenanceLock)
     def refuseIfMaintenance(): Unit =
       if (fs.exists(mLock))
         throw new IllegalStateException(
@@ -313,7 +356,7 @@ object LandingGuard {
                 s"with a fresh heartbeat — another ingest stream (in another JVM) " +
                 "is writing this landing; the carried dedup state tolerates " +
                 "exactly one writer. Stop that stream first, or wait out the " +
-                s"heartbeat staleness window (${ingestLockStaleMs / 1000} s)")
+                s"heartbeat staleness window (${IngestLockStaleMs / 1000} s)")
             // delete only the judged version — a rival's fresh
             // replacement survives, and our next create is refused
             // against it
@@ -332,7 +375,6 @@ object LandingGuard {
         catch { case scala.util.control.NonFatal(_) => () }
         throw t
     }
-    new IngestLock(fs, lock)
   }
 
   /** Refresh the writer lock's heartbeat mtime (called at the top of
@@ -352,91 +394,42 @@ object LandingGuard {
     * compacting), and recreating under live compaction would be the
     * same two-writer interleaving via the other rival — that case
     * fences too. */
-  private[streaming] def heartbeatIngestLock(landingDir: String): Unit = {
-    val h = ingestLocks.get(landingDir)
-    if (h != null) {
-      val self = java.lang.ProcessHandle.current().pid()
-      var fence: String = null
-      try {
-        if (h.fs.exists(h.path)) {
-          lockOwnerPid(h.fs, h.path) match {
-            case Some(p) if p != self =>
-              fence = s"ingest writer lock '${h.path}' now names a different " +
-                "pid — this writer was fenced by a cross-JVM takeover (its " +
-                "heartbeat went stale, or an operator forced the lock)"
-            case Some(_) =>
-              h.fs.setTimes(h.path, System.currentTimeMillis(), -1)
-            case None => () // unreadable mid-write: skip, next batch retries
-          }
-        } else {
-          val mLock = beside(new org.apache.hadoop.fs.Path(landingDir), MaintenanceLock)
-          if (h.fs.exists(mLock))
-            fence = s"ingest writer lock '${h.path}' is gone and maintenance " +
-              s"lock '$mLock' is held — this writer's stale heartbeat was " +
-              "taken over by a maintenance run; recreating the lock would " +
-              "write into the landing mid-swap"
-          else {
-            val o = h.fs.create(h.path, true)
-            o.write(self.toString.getBytes("UTF-8"))
-            o.close()
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-      if (fence != null)
-        throw new IllegalStateException(
-          s"$fence; failing the batch instead of writing alongside the rival")
-    }
-  }
-
-  /** One listener per session (crash release is the takeover rule's). */
-  private def ensureTerminationListener(spark: SparkSession): Unit =
-    if (listenerSessions.add(spark))
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-          override def onQueryTerminated(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-            terminated(e.runId)
-        })
-
-  /** Refuse to start a second active ingest stream on a landing dir
-    * (loud error, pinned by StreamingSpec) — the in-JVM slot catches
-    * same-process writers; the `.ingest-writer-lock` file
-    * ([[acquireIngestLock]], round 15) catches writers in OTHER
-    * processes, with heartbeat-mtime staleness + dead-pid takeover.
-    * The fingerprint/validated-fold discipline remains the last line
-    * for whatever slips the locks (reseed, never staleness).
-    * What `start` registers through its argument runs, with the writer
-    * lock's identity-checked release (a same-JVM takeover's lock names
-    * the same pid), on a failed start and on termination. */
-  private[streaming] def startGuarded(spark: SparkSession, landingDir: String)
-      (start: ((() => Unit) => Unit) => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val mine = acquireLanding(spark, landingDir)
-    var cleanups: List[() => Unit] = Nil
+  private[streaming] def heartbeatIngestLock(landing: Landing): Unit = {
+    val (fs, lock) = (landing.fs, beside(landing.path, WriterLock))
+    val self = java.lang.ProcessHandle.current().pid()
+    var fence: String = null
     try {
-      val flock = acquireIngestLock(spark, landingDir)
-      ensureTerminationListener(spark)
-      ingestLocks.put(landingDir, flock)
-      cleanups ::= (() =>
-        if (ingestLocks.remove(landingDir, flock)) releaseOwnLock(flock.fs, flock.path))
-      val q = start(release => cleanups :+= release)
-      mine.runId = q.runId
-      onTermination(q, cleanups)
-      q
-    } catch {
-      case t: Throwable =>
-        activeIngests.remove(landingDir, mine)
-        cleanups.foreach(runCleanup)
-        throw t
-    }
+      if (fs.exists(lock)) {
+        lockOwnerPid(fs, lock) match {
+          case Some(p) if p != self =>
+            fence = s"ingest writer lock '$lock' now names a different " +
+              "pid — this writer was fenced by a cross-JVM takeover (its " +
+              "heartbeat went stale, or an operator forced the lock)"
+          case Some(_) =>
+            fs.setTimes(lock, System.currentTimeMillis(), -1)
+          case None => () // unreadable mid-write: skip, next batch retries
+        }
+      } else {
+        val mLock = beside(landing.path, MaintenanceLock)
+        if (fs.exists(mLock))
+          fence = s"ingest writer lock '$lock' is gone and maintenance " +
+            s"lock '$mLock' is held — this writer's stale heartbeat was " +
+            "taken over by a maintenance run; recreating the lock would " +
+            "write into the landing mid-swap"
+        else {
+          val o = fs.create(lock, true)
+          o.write(self.toString.getBytes("UTF-8"))
+          o.close()
+        }
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
+    if (fence != null)
+      throw new IllegalStateException(
+        s"$fence; failing the batch instead of writing alongside the rival")
   }
 
-  /** THE maintenance bracket of compact, expire and repair: canonical
-    * key → single-writer slot → maintenance lock → release (repair,
+  /** THE maintenance bracket of compact, expire and repair: an open
+    * [[Landing]] → maintenance lock → close (repair,
     * which may restore a missing landing, passes `mustExist` = false).
     * Cross-JVM maintenance exclusion: an exclusive lock FILE beside
     * the landing (`.maintenance-lock-<name>` in its parent dir). The
@@ -452,13 +445,11 @@ object LandingGuard {
     * maintenance safety rests on the content-verified swaps and the
     * carry fingerprint discipline instead. */
   private[streaming] def maintaining[A](spark: SparkSession, dir: String, mustExist: Boolean = true)
-      (body: (String, org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) => A): A = {
-    val landingDir = landingKey(spark, dir)
-    val mine = acquireLanding(spark, landingDir)
+      (body: Landing => A): A = {
+    val landing = open(spark, dir)
     try {
-      val landingPath = new org.apache.hadoop.fs.Path(landingDir)
-      val fs = landingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!mustExist || fs.exists(landingPath), s"landing dir '$landingDir' does not exist")
+      val (landingPath, fs) = (landing.path, landing.fs)
+      require(!mustExist || fs.exists(landingPath), s"landing dir '${landing.key}' does not exist")
       val parent = landingPath.getParent
       require(parent != null && fs.exists(parent),
         s"parent dir of landing '$landingPath' does not exist")
@@ -493,8 +484,8 @@ object LandingGuard {
               "process — maintenance must not run under an active writer; stop " +
               "the stream first")
         }
-        body(landingDir, landingPath, fs)
+        body(landing)
       } finally { fs.delete(lock, false); () }
-    } finally { activeIngests.remove(landingDir, mine); () }
+    } finally landing.close()
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.streaming.EventStreams.{carriesOf, fpOf, landingParts, partPath, setCarries, visibleUnder}
+import graft.streaming.EventStreams.{landingParts, visibleUnder}
 import graft.streaming.LandingGuard.{besideOf, isHidden, maintaining, Beside, CompactOld, CompactTmp}
 
 /** Maintenance of an [[EventStreams]] ingest landing: compaction,
@@ -13,29 +13,19 @@ object LandingMaintenance {
   // ---------- landing compaction ----------
 
   /** What [[compactLanding]] did. `rows` is −1 on the no-op path (the
-    * landing was already at or under `targetFiles`; nothing was read).
-    * `carriesKept` is false iff a carried bloom existed and had to be
-    * dropped (stale fingerprint — it was due a reseed anyway). */
-  final case class CompactStats(
-    filesBefore: Int, filesAfter: Int, rows: Long, carriesKept: Boolean)
+    * landing was already at or under `targetFiles`; nothing was read). */
+  final case class CompactStats(filesBefore: Int, filesAfter: Int, rows: Long)
 
-  /** Test seam: invoked after the compacted copy is written and BEFORE
-    * the pre-swap listing check — the window an out-of-band writer
-    * would have to race to lose rows. No-op in production. */
-  @volatile private[graft] var preSwapHook: String => Unit = _ => ()
-
-  /** Test seam: invoked after a dir's successful swap (its post
-    * listing taken) and before the parent collects the global post
-    * listing — the window a foreign append must hit to invalidate a
-    * carry re-stamp without aborting the compaction. No-op in
-    * production. */
-  @volatile private[graft] var postSwapHook: String => Unit = _ => ()
-
-  /** Test seam: invoked after the aside rename verified and BEFORE
-    * the swap rename — the window where a foreign writer recreating
-    * the target dir makes Hadoop's rename NEST the compacted output
-    * instead of failing. No-op in production. */
-  @volatile private[graft] var preCommitSwapHook: String => Unit = _ => ()
+  /** The two row-loss windows of one dir's compaction swap, where
+    * [[compactLanding]]'s test seam runs. */
+  private[graft] sealed trait SwapWindow
+  /** The compacted copy is written; the dir is not yet moved aside —
+    * an out-of-band append here must abort the swap. */
+  private[graft] case object BeforeAside extends SwapWindow
+  /** The aside rename is verified; the copy is not yet renamed in — a
+    * foreign writer recreating the dir here makes Hadoop's rename NEST
+    * the compacted output instead of failing. */
+  private[graft] case object BeforeSwap extends SwapWindow
 
   /** Maintenance: rewrite an accreted landing dir down to
     * `targetFiles` part files. [[EventStreams.ingestDedup]]'s per-batch
@@ -51,25 +41,13 @@ object LandingMaintenance {
     * written to a sibling temp dir, then an atomic-rename swap. The
     * swap only proceeds if the landing's listing is UNCHANGED since
     * the read — any out-of-band change aborts with the landing
-    * untouched. The single-writer slot
-    * ([[LandingGuard.activeIngests]]) is held throughout, so an
-    * ingest stream cannot start mid-compaction and compaction refuses
-    * while a stream is active.
+    * untouched. The landing's single-writer slot ([[LandingGuard.open]])
+    * is held throughout, so an ingest stream cannot start
+    * mid-compaction and compaction refuses while a stream is active.
     *
-    * Carried state: compaction renames files but changes no row, so
-    * the carried blooms remain EXACTLY right — they are re-stamped
-    * with the compacted listing's fingerprint rather than dropped
-    * (a dropped carry would cost the next batch a full reseed scan,
-    * the very cost compaction exists to keep bounded). The re-stamp
-    * is VALIDATED, not assumed: every rewritten dir's own listing
-    * must have been part of the global pre listing, and the global
-    * post listing must be exactly pre with the rewritten dirs' files
-    * swapped — any other delta means a foreign writer landed rows the
-    * blob does not contain, and the carry is dropped so the next
-    * batch reseeds (same discipline as the ingest fold's
-    * append-delta validation). A carry whose fingerprint did not
-    * match the pre-compaction listing was already stale and is
-    * dropped as usual. `landedCounts` is row-based and unaffected.
+    * Carried state: none exists while the slot is held — a stream's
+    * carries die with its handle — so the next stream seeds its
+    * carries from the compacted landing (one scan).
     *
     * Hive-partitioned landings (key=value subdirs — the
     * month-partitioned or z-order layouts) are compacted PER LEAF
@@ -93,12 +71,20 @@ object LandingMaintenance {
     * so partition discovery and file listings never see them. */
   def compactLanding(spark: SparkSession, dir: String,
                      targetFiles: Int = 4,
-                     leafParallelism: Int = 4): CompactStats = {
+                     leafParallelism: Int = 4): CompactStats =
+    compact(spark, dir, targetFiles, leafParallelism)
+
+  /** [[compactLanding]] with its test seam: `atWindow` runs with each
+    * dir's swap window and the dir. */
+  private[graft] def compact(spark: SparkSession, dir: String, targetFiles: Int,
+                             leafParallelism: Int,
+                             atWindow: (SwapWindow, String) => Unit = (_, _) => ())
+      : CompactStats = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
     require(leafParallelism > 0,
       s"leafParallelism must be positive, got $leafParallelism")
-    maintaining(spark, dir) { (landingDir, landingPath, fs) =>
-      val pre = landingParts(spark, landingDir)
+    maintaining(spark, dir) { landing =>
+      val fs = landing.fs
       // Leaves rewrite CONCURRENTLY (bounded pool): each leaf is an
       // independent read→write→swap with no shared mutable state, and
       // at the 100 TB design point a month×source layout has
@@ -109,17 +95,18 @@ object LandingMaintenance {
       // call returns; the first failure then propagates, and the
       // other leaves are each fully compacted or untouched, as the
       // swap contract promises.
-      val leaves = leafDataDirs(fs, landingPath)
+      val leaves = leafDataDirs(fs, landing.path)
+      val compactLeaf = (leaf: org.apache.hadoop.fs.Path) =>
+        compactOneDir(spark, fs, leaf, targetFiles, atWindow)
       val results =
         if (leaves.lengthCompare(1) <= 0 || leafParallelism <= 1)
-          leaves.map(compactOneDir(spark, fs, _, targetFiles))
+          leaves.map(compactLeaf)
         else {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(
             math.min(leafParallelism, leaves.size))
           try {
             val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val futures = leaves.map(l =>
-              scala.concurrent.Future(compactOneDir(spark, fs, l, targetFiles))(ec))
+            val futures = leaves.map(l => scala.concurrent.Future(compactLeaf(l))(ec))
             // catch EVERYTHING per await (Try would let an
             // InterruptedException escape mid-loop) — every future
             // must be awaited before the writer slot releases, or a
@@ -134,51 +121,15 @@ object LandingMaintenance {
             outcomes.collect { case Right(r) => r }
           } finally { pool.shutdown(); () }
         }
-      val post = landingParts(spark, landingDir)
-      // Re-stamping the carried blooms asserts "the landing holds
-      // exactly the texts the blob was built from, just in different
-      // files" — which is only true if NOTHING out-of-band landed in
-      // the pre→post window. Validate, don't assume: every rewritten
-      // leaf's own pre listing must have been part of the global pre
-      // listing (nothing snuck in between the two listings and got
-      // rewritten into the compacted files), and the global post must
-      // be exactly pre minus the rewritten leaves' old files plus
-      // their new ones. Any other delta → the carry is dropped (next
-      // batch reseeds from the landing, which self-heals), never
-      // trusted with texts missing from the blob.
-      val preSet = pre.toSet
       val rewrote = results.filter(_.rewrote)
-      val valid = rewrote.forall(_.preParts.forall(preSet.contains)) && {
-        val expected =
-          (preSet -- rewrote.flatMap(_.preParts) ++ rewrote.flatMap(_.postParts))
-        post.toSet == expected && post.size == expected.size
-      }
-      val rewrittenRows =
-        if (rewrote.isEmpty) -1L else rewrote.map(_.rows).sum
       // every leaf sits under visible dirs of the landing, so one
       // landing-rooted rule counts them all
-      val visible = visibleUnder(landingDir)
+      val visible = visibleUnder(landing.key)
       CompactStats(
         results.map(_.preParts.count(visible)).sum,
         results.map(r => (if (r.rewrote) r.postParts else r.preParts).count(visible)).sum,
-        rewrittenRows,
-        carriesKept = restampCarries(landingDir, fpOf(pre), fpOf(post), valid))
+        if (rewrote.isEmpty) -1L else rewrote.map(_.rows).sum)
     }
-  }
-
-  /** Re-stamp the carried blooms with the post-maintenance listing
-    * fingerprint — but ONLY when the caller proved the maintenance
-    * pass was the sole writer (`valid`) and the carry matched the
-    * pre listing; anything else drops the carry so the next batch
-    * reseeds. Returns false iff a carry had to be dropped. */
-  private def restampCarries(landingDir: String, preFp: String, postFp: String,
-                             valid: Boolean): Boolean = {
-    val cur = carriesOf(landingDir)
-    val kept = cur.collect {
-      case (stage, c) if valid && c.landingFp == preFp => stage -> c.copy(landingFp = postFp)
-    }
-    setCarries(landingDir, kept)
-    kept.size == cur.size
   }
 
   /** The data-bearing leaf dirs of a landing: the dir itself when
@@ -229,8 +180,8 @@ object LandingMaintenance {
     * because after the rename a foreign commit lands in the fresh
     * target path, which the swap preserves. */
   private def compactOneDir(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                            dirPath: org.apache.hadoop.fs.Path,
-                            targetFiles: Int): LeafCompact = {
+                            dirPath: org.apache.hadoop.fs.Path, targetFiles: Int,
+                            atWindow: (SwapWindow, String) => Unit): LeafCompact = {
     val dirStr = dirPath.toString
     val pre = landingParts(spark, dirStr)
     if (pre.count(visibleUnder(dirStr)) <= targetFiles)
@@ -251,7 +202,7 @@ object LandingMaintenance {
         .write.options(graft.core.Committers.forRerun(overwrite = true))
         .mode("overwrite").parquet(tmp.toString)
       val rows = obs.get("n").asInstanceOf[Long]
-      preSwapHook(dirStr)
+      atWindow(BeforeAside, dirStr)
       // breadcrumbs for [[repairLanding]]: the aside dir's NAME carries
       // the dir it came from, and the compacted output carries a
       // manifest naming the aside dir it replaces — so a crash between
@@ -294,7 +245,7 @@ object LandingMaintenance {
         // rode into the aside dir; put everything back and abort
         restoreOrDie(s"dir '$dirStr' changed during compaction (out-of-band writer)")
       }
-      preCommitSwapHook(dirStr)
+      atWindow(BeforeSwap, dirStr)
       val swapped =
         try fs.rename(tmp, dirPath)
         catch { case t: Throwable =>
@@ -316,25 +267,14 @@ object LandingMaintenance {
       // the manifest's job ends with the aside dir; drop it BEFORE the
       // post listing so the landing fingerprint never contains it
       fs.delete(new org.apache.hadoop.fs.Path(dirPath, SwapManifest), false)
-      val post = landingParts(spark, dirStr)
-      postSwapHook(dirStr)
-      LeafCompact(pre, post, rows, rewrote = true)
+      LeafCompact(pre, landingParts(spark, dirStr), rows, rewrote = true)
     } finally { if (fs.exists(tmp)) fs.delete(tmp, true); () }
   }
 
   // ---------- landing expiry (retention) ----------
 
-  /** What [[expireLanding]] did. `carriesKept` is false iff a carried
-    * bloom existed and had to be dropped (stale fingerprint, or the
-    * pre→post listing delta was not exactly the expired subtrees). */
-  final case class ExpireStats(
-    dirsDropped: Int, filesDropped: Int, carriesKept: Boolean)
-
-  /** Test seam: invoked after [[expireLanding]]'s pre listing and
-    * before the deletes — the window a foreign append to a surviving
-    * dir must hit to invalidate the carry re-stamp. No-op in
-    * production. */
-  @volatile private[graft] var expireHook: String => Unit = _ => ()
+  /** What [[expireLanding]] did. */
+  final case class ExpireStats(dirsDropped: Int, filesDropped: Int)
 
   /** Maintenance: DELETE every `partitionCol=value` subtree of a
     * hive-partitioned landing whose unescaped value sorts strictly
@@ -356,27 +296,16 @@ object LandingMaintenance {
     * expiry on the wrong column must not silently no-op. Spark's
     * `__HIVE_DEFAULT_PARTITION__` (null-value) dirs never expire.
     *
-    * Carried state: expiry REMOVES rows, which makes a carried bloom
-    * a SUPERSET of the landing — still sound, because a bloom
-    * positive is never trusted without the exact confirm join
-    * (an expired-then-reposted text probes positive, fails the
-    * confirm against the shrunken landing, and is correctly admitted
-    * as new). The carry is therefore re-stamped with the post-expiry
-    * fingerprint instead of dropped — but only after VALIDATING that
-    * the pre→post listing delta is exactly the expired subtrees: a
-    * foreign append in the window would make the bloom a SUBSET
-    * (false negatives → admitted duplicates), so any unexplained
-    * delta drops the carry and the next batch reseeds. The extra
-    * superset bits only cost confirm probes until the next natural
-    * reseed. `landedCounts` stays an overestimate, which only
-    * over-sizes the next bloom. The single-writer slot is held
-    * throughout, exactly as compaction. */
+    * Carried state: as for compaction, the single-writer slot is held
+    * throughout, so no carry exists; the next stream seeds its carries
+    * from the shrunken landing (one scan). */
   def expireLanding(spark: SparkSession, dir: String, partitionCol: String,
                     before: String): ExpireStats = {
     require(partitionCol.nonEmpty && !partitionCol.contains("="),
       s"partitionCol must be a bare column name, got '$partitionCol'")
     require(before.nonEmpty, "expiry cutoff must be non-empty")
-    maintaining(spark, dir) { (landingDir, landingPath, fs) =>
+    maintaining(spark, dir) { landing =>
+      val fs = landing.fs
       val prefix = partitionCol + "="
       def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
         fs.listStatus(p).toSeq.filter(s => s.isDirectory && !isHidden(s.getPath.getName))
@@ -384,10 +313,10 @@ object LandingMaintenance {
             if (s.getPath.getName.startsWith(prefix)) Seq(s.getPath)
             else walk(s.getPath)
           }
-      val matched = walk(landingPath)
+      val matched = walk(landing.path)
       if (matched.isEmpty)
         throw new IllegalArgumentException(
-          s"landing dir '$landingDir' has no '$prefix…' partition dir at any " +
+          s"landing dir '${landing.key}' has no '$prefix…' partition dir at any " +
           "level; refusing to expire on a column the layout does not have")
       val expired = matched.filter { p =>
         // Spark's own unescape (the inverse of the %xx escaping its
@@ -397,29 +326,15 @@ object LandingMaintenance {
           .unescapePathName(p.getName.substring(prefix.length))
         v != "__HIVE_DEFAULT_PARTITION__" && v < before
       }
-      val pre = landingParts(spark, landingDir)
-      expireHook(landingDir)
-      val expiredPrefixes = expired.map(_.toUri.getPath + "/")
-      def isExpired(part: String): Boolean = {
-        val p = partPath(part)
-        expiredPrefixes.exists(p.startsWith)
-      }
-      val visible = visibleUnder(landingDir)
-      val files = pre.count(p => visible(p) && isExpired(p))
+      // an expired dir sits under visible dirs of the landing, so its
+      // own visible files are the ones the landing loses
+      val files = expired.map { p =>
+        landingParts(spark, p.toString).count(visibleUnder(p.toString)) }.sum
       expired.foreach { p =>
         if (!fs.delete(p, true))
           throw new IllegalStateException(s"could not delete expired dir '$p'")
       }
-      val post = landingParts(spark, landingDir)
-      // The re-stamp asserts "the landing is exactly the pre listing
-      // minus the expired subtrees" — validate it. A foreign append to
-      // a SURVIVING dir in this window would make the carried bloom a
-      // subset (false negatives → admitted duplicates), so any
-      // unexplained delta drops the carry instead; a foreign append to
-      // an EXPIRED dir was deleted with it and cannot appear in post.
-      val valid = post == pre.filterNot(isExpired)
-      ExpireStats(expired.size, files,
-        carriesKept = restampCarries(landingDir, fpOf(pre), fpOf(post), valid))
+      ExpireStats(expired.size, files)
     }
   }
 
@@ -502,7 +417,8 @@ object LandingMaintenance {
     * were designed around. Holds the single-writer slot: repair never
     * races a stream or another maintenance run in-JVM. */
   def repairLanding(spark: SparkSession, dir: String): RepairStats =
-    maintaining(spark, dir, mustExist = false) { (landingDir, landingPath, fs) =>
+    maintaining(spark, dir, mustExist = false) { landing =>
+      val (landingDir, landingPath, fs) = (landing.key, landing.path, landing.fs)
       var tmps = 0; var restored = 0; var oldsDeleted = 0; var manifests = 0
       val unresolved = scala.collection.mutable.ArrayBuffer.empty[String]
       def readManifest(dataDir: org.apache.hadoop.fs.Path): Option[String] = {

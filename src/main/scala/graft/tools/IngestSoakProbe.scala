@@ -70,6 +70,9 @@ object IngestSoakProbe {
 
     val landing = java.nio.file.Files.createTempDirectory("graft-soak").toString + "/corpus"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-soak-ckpt").toString
+    // the running stream's carried landed count, read off its open handle
+    def landedNow(): Long =
+      graft.streaming.LandingGuard.active(spark, landing).fold(-1L)(_.landed.get())
     val sent = scala.collection.mutable.ArrayBuffer.empty[String]
     var nextId = 0L
 
@@ -99,8 +102,7 @@ object IngestSoakProbe {
           input.addData(docs: _*)
           q.processAllAvailable()
           times(b) = (System.nanoTime() - t0) / 1e9
-          println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${graft.streaming.EventStreams
-            .landedCounts.get(graft.streaming.LandingGuard.landingKey(spark, landing)).get()}, bits=$bits)")
+          println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${landedNow()}, bits=$bits)")
         }
       } finally q.stop()
     } else if (mix == "decon") {
@@ -165,8 +167,7 @@ object IngestSoakProbe {
         input.addData(docs: _*)
         q.processAllAvailable()
         times(b) = (System.nanoTime() - t0) / 1e9
-        println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${graft.streaming.EventStreams
-          .landedCounts.get(graft.streaming.LandingGuard.landingKey(spark, landing)).get()})")
+        println(f"[soak] $mix batch $b%3d  ${times(b)}%6.3f s  (landed≈${landedNow()})")
       }
     } finally q.stop()
     }

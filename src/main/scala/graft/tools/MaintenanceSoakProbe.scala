@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
+import graft.streaming.{EventStreams, LandingMaintenance}
 
 /** Maintenance-UNDER-LOAD soak: what a live pipeline pays when the
   * landing is compacted mid-stream. CompactionSpec proves ingest and
@@ -23,8 +23,9 @@ import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
   *     excluded — swaps are rename-based), recording per-read latency
   *     and any transient failures, against a quiesced baseline taken
   *     just before the window;
-  *  4. a NEW stream (fresh checkpoint, carried count evicted — the
-  *     fresh-JVM worst case) resumes on the compacted landing; the
+  *  4. a NEW stream (fresh checkpoint; the stopped stream's carries
+  *     and count died with it — the fresh-JVM worst case) resumes on
+  *     the compacted landing; the
   *     first batch pays the seed-over-landed-state path and is
   *     reported separately from the steady-state tail.
   *
@@ -114,8 +115,7 @@ object MaintenanceSoakProbe {
     reader.join(30000)
     val filesAfter = spark.read.parquet(landing).inputFiles.length
 
-    // ---- phase 3: resume — fresh checkpoint, carried count evicted ----
-    EventStreams.landedCounts.remove(LandingGuard.landingKey(spark, landing))
+    // ---- phase 3: resume — fresh checkpoint, nothing carried ----
     val in2 = MemoryStream[(Long, String, Long)]
     val q2 = EventStreams.ingestPipeline(
       in2.toDF().toDF("doc_id", "text", "bucket"), landing,

@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.DedupStage
 import graft.streaming.{EventStreams, LandingGuard, LandingMaintenance}
 
 /** [[LandingMaintenance.compactLanding]] — the maintenance half of the
   * landing file-count story: the ingest append's fixed file count
   * bounds what each micro-batch adds, compaction rewrites the linear-in-batch-count
   * accretion back to O(targetFiles) between stream sessions, without
-  * changing a row and without costing the carried blooms a reseed. */
+  * changing a row. */
 class CompactionSpec extends AnyFunSuite with SparkTestSession {
 
   private def tmpDir(prefix: String): String =
@@ -28,8 +27,8 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
 
   /** Land three batches through `ingest`, compact to 2 files, and
-    * check that every one of `stages`' carries survived re-stamped
-    * with the compacted listing's fingerprint — and still dedups. */
+    * check that a new stream on the compacted landing holds every one
+    * of `stages`' carries again (reseeded from it) — and still dedups. */
   private def compactionKeepsCarries(
       prefix: String, stages: Seq[String],
       ingest: (org.apache.spark.sql.DataFrame, String, String) =>
@@ -37,7 +36,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = tmpDir(prefix) + "/corpus"
-    val key = LandingGuard.landingKey(spark, landing)
+    def carries = LandingGuard.active(spark, landing).fold(Set.empty[String])(_.carries.keySet)
     val input = MemoryStream[(Long, String)]
     val q = ingest(input.toDF().toDF("doc_id", "text"), landing, tmpDir(prefix + "-ck"))
     try {
@@ -47,25 +46,17 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       q.processAllAvailable()
       input.addData((7L, "eta"), (8L, "theta"), (9L, "iota"))
       q.processAllAvailable()
+      assert(carries == stages.toSet, s"carries expected before compaction: $stages")
     } finally q.stop()
     val before = landedTexts(landing)
     assert(before.size == 9)
     assert(visibleFiles(landing).size > 2, "fixture must actually be accreted")
-    stages.foreach(st =>
-      assert(EventStreams.carryOf(key, st).isDefined, s"$st carry expected before compaction"))
 
     val stats = LandingMaintenance.compactLanding(spark, landing, targetFiles = 2)
     assert(stats.filesBefore > 2 && stats.filesAfter <= 2)
-    assert(stats.rows == 9L && stats.carriesKept)
+    assert(stats.rows == 9L)
     assert(visibleFiles(landing).size == stats.filesAfter)
     assert(landedTexts(landing) == before, "compaction must not change a row")
-
-    // every carry survived WITH the compacted listing's fingerprint —
-    // the next batch trusts it instead of paying a reseed scan
-    val postFp = graft.core.Tables.listing(spark, landing).mkString(";")
-    stages.foreach(st =>
-      assert(EventStreams.carryOf(key, st).exists(_.landingFp == postFp),
-        s"$st carry not re-stamped with the post-compaction fingerprint"))
 
     // and it still deduplicates: a new stream on the compacted landing
     // rejects a landed text, admits a fresh one
@@ -74,6 +65,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     try {
       in2.addData((10L, "alpha"), (11L, "kappa"))
       q2.processAllAvailable()
+      assert(carries == stages.toSet, s"carries expected after the restart: $stages")
     } finally q2.stop()
     assert(landedTexts(landing) == (before :+ (11L, "kappa")).sorted)
   }
@@ -130,7 +122,6 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = tmpDir("graft-compact-excl") + "/corpus"
-    val key = LandingGuard.landingKey(spark, landing)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(
       input.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-excl-ck"))
@@ -142,12 +133,10 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(err.getMessage.contains(landing))
     } finally q.stop()
-    // compaction holding the slot (runId == null) -> stream refused.
-    // (clear the stopped stream's stale registration first — takeover
-    // normally happens lazily on the next acquire)
-    LandingGuard.activeIngests.remove(key)
-    val held = new LandingGuard.IngestReg(spark)
-    assert(LandingGuard.activeIngests.putIfAbsent(key, held) == null)
+    // a maintenance-style handle holding the slot (no run) -> stream
+    // refused (open takes over the stopped stream's handle if its
+    // termination is not yet observed)
+    val held = LandingGuard.open(spark, landing)
     try {
       val in2 = MemoryStream[(Long, String)]
       intercept[IllegalStateException] {
@@ -157,7 +146,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       intercept[IllegalStateException] {
         LandingMaintenance.compactLanding(spark, landing, 1)
       }
-    } finally LandingGuard.activeIngests.remove(key, held)
+    } finally held.close()
   }
 
   test("compactLanding: hive-partitioned dir compacted per leaf, pruning layout intact") {
@@ -237,7 +226,6 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     val s2 = LandingMaintenance.compactLanding(spark, par, targetFiles = 1, leafParallelism = 4)
     assert(s1.rows == 24L && s2.rows == 24L)
     assert(s1.filesBefore == s2.filesBefore && s1.filesAfter == s2.filesAfter)
-    assert(s2.carriesKept, "a clean concurrent run must re-stamp, not drop")
     // same rows, same per-leaf file counts (file NAMES differ by job uuid)
     val (rowsS, filesS) = shape(serial)
     val (rowsP, filesP) = shape(par)
@@ -278,17 +266,15 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       .repartition(4)
       .write.partitionBy("lang").parquet(dir)
     val racedLeaf = dir + "/lang=de"
-    LandingMaintenance.preSwapHook = { d =>
-      if (d.endsWith("lang=de"))
-        Seq((99L, "raced")).toDF("id", "text")
-          .coalesce(1).write.mode("append").parquet(racedLeaf)
+    val err = intercept[IllegalStateException] {
+      LandingMaintenance.compact(spark, dir, 1, 4, {
+        case (LandingMaintenance.BeforeAside, d) if d.endsWith("lang=de") =>
+          Seq((99L, "raced")).toDF("id", "text")
+            .coalesce(1).write.mode("append").parquet(racedLeaf)
+        case _ => ()
+      })
     }
-    try {
-      val err = intercept[IllegalStateException] {
-        LandingMaintenance.compactLanding(spark, dir, 1)
-      }
-      assert(err.getMessage.contains("changed during compaction"))
-    } finally LandingMaintenance.preSwapHook = _ => ()
+    assert(err.getMessage.contains("changed during compaction"))
     // every original row AND the raced-in row survive
     val got = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == ((1L to 12L) :+ 99L).sorted)
@@ -309,68 +295,23 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       input.addData((3L, "gamma"), (4L, "delta")); q.processAllAvailable()
     } finally q.stop()
     val before = landedTexts(landing)
-    LandingMaintenance.preSwapHook = { _ =>
-      // a foreign writer lands a row between the compaction read and
-      // the swap — exactly the rows a blind swap would destroy
-      Seq((99L, "raced")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(landing)
+    val err = intercept[IllegalStateException] {
+      LandingMaintenance.compact(spark, landing, 1, 4, {
+        // a foreign writer lands a row between the compaction read and
+        // the swap — exactly the rows a blind swap would destroy
+        case (LandingMaintenance.BeforeAside, _) =>
+          Seq((99L, "raced")).toDF("doc_id", "text")
+            .coalesce(1).write.mode("append").parquet(landing)
+        case _ => ()
+      })
     }
-    try {
-      val err = intercept[IllegalStateException] {
-        LandingMaintenance.compactLanding(spark, landing, 1)
-      }
-      assert(err.getMessage.contains("changed during compaction"))
-    } finally LandingMaintenance.preSwapHook = _ => ()
+    assert(err.getMessage.contains("changed during compaction"))
     // the landing keeps BOTH the original rows and the raced-in row,
     // and no temp debris survives the abort
     assert(landedTexts(landing) == (before :+ (99L, "raced")).sorted)
     val parent = new java.io.File(landing).getParentFile
     assert(parent.listFiles().map(_.getName).forall(!_.contains(".compact-tmp-")),
       "aborted compaction must clean its temp dir")
-  }
-
-  test("compactLanding: a foreign append AFTER a swap drops the carry instead of trusting it") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val landing = tmpDir("graft-compact-postswap") + "/corpus"
-    val key = LandingGuard.landingKey(spark, landing)
-    val input = MemoryStream[(Long, String)]
-    val q = EventStreams.ingestDedup(
-      input.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-postswap-ck"))
-    try {
-      input.addData((1L, "alpha"), (2L, "beta")); q.processAllAvailable()
-      input.addData((3L, "gamma"), (4L, "delta")); q.processAllAvailable()
-      input.addData((5L, "epsilon")); q.processAllAvailable()
-    } finally q.stop()
-    assert(EventStreams.carryOf(key, "exact").isDefined)
-    // a foreign writer lands 'sneaky' between the swap and the global
-    // post listing: the compaction itself succeeds (those rows are
-    // safe in the new dir), but the post listing now contains a file
-    // whose texts the carried blob does NOT — re-stamping would admit
-    // every future duplicate of 'sneaky'
-    LandingMaintenance.postSwapHook = { _ =>
-      Seq((99L, "sneaky")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(landing)
-    }
-    val stats =
-      try LandingMaintenance.compactLanding(spark, landing, targetFiles = 1)
-      finally LandingMaintenance.postSwapHook = _ => ()
-    assert(!stats.carriesKept, "unexplained post-listing delta must drop the carry")
-    assert(EventStreams.carryOf(key, "exact").isEmpty)
-    // every row survived — the compacted five plus the foreign one
-    assert(landedTexts(landing).map(_._2).sorted ==
-      Seq("alpha", "beta", "delta", "epsilon", "gamma", "sneaky"))
-    // and the next stream reseeds from the landing, so 'sneaky' IS
-    // deduplicated rather than silently admitted forever
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = EventStreams.ingestDedup(
-      in2.toDF().toDF("doc_id", "text"), landing, tmpDir("graft-compact-postswap-ck2"))
-    try {
-      in2.addData((100L, "sneaky"), (101L, "zeta")); q2.processAllAvailable()
-    } finally q2.stop()
-    assert(landedTexts(landing).count(_._2 == "sneaky") == 1,
-      "reseeded stream must reject the duplicate of the foreign row")
-    assert(landedTexts(landing).exists(_._2 == "zeta"))
   }
 
   test("compactLanding: a foreign writer RECREATING the dir mid-swap never loses a row") {
@@ -382,15 +323,14 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     // recreates the target dir — Hadoop's rename then NESTS the
     // compacted output inside it instead of failing, so a blind
     // delete of the aside dir would destroy every original row
-    LandingMaintenance.preCommitSwapHook = { _ =>
-      Seq((99L, "foreign")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(dir)
+    val err = intercept[IllegalStateException] {
+      LandingMaintenance.compact(spark, dir, 1, 4, {
+        case (LandingMaintenance.BeforeSwap, _) =>
+          Seq((99L, "foreign")).toDF("doc_id", "text")
+            .coalesce(1).write.mode("append").parquet(dir)
+        case _ => ()
+      })
     }
-    val err =
-      try intercept[IllegalStateException] {
-        LandingMaintenance.compactLanding(spark, dir, targetFiles = 1)
-      }
-      finally LandingMaintenance.preCommitSwapHook = _ => ()
     assert(err.getMessage.contains("recreated") || err.getMessage.contains("restore"),
       s"unexpected message: ${err.getMessage}")
     // the original rows survive in SOME readable place: either the
@@ -540,7 +480,7 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     assert(dirty.totalFiles == clean.totalFiles, "stats must not mutate anything")
     // stats takes neither the slot nor the lock: it ran fine with the
     // lock file present, and the slot is free afterwards
-    assert(!LandingGuard.activeIngests.containsKey(LandingGuard.landingKey(spark, dir)))
+    assert(LandingGuard.active(spark, dir).isEmpty)
   }
 
   test("landingStats: missing landing with an aside dir reports the debris, not an error") {
@@ -579,31 +519,18 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
     rows.toDF("id", "month", "text").repartition(2)
       .write.partitionBy("month").parquet(dir)
 
-    // seed a carry whose fingerprint matches the current listing — the
-    // restamp discipline must keep it (expiry makes the bloom a
-    // SUPERSET, which the exact confirm join tolerates)
-    val key = LandingGuard.landingKey(spark, dir)
-    val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
-    EventStreams.carries.put(key,
-      Map("exact" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 5L, preFp)))
-    try {
-      val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
-      assert(stats.dirsDropped == 2 && stats.filesDropped >= 2 && stats.carriesKept)
-      // expired dirs gone, survivors untouched
-      val monthDirs = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("month=")).map(_.getName).sorted
-      assert(monthDirs.toSeq == Seq("month=2026-01", "month=2026-02"))
-      val kept = spark.read.parquet(dir).select("id", "month", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
-      assert(kept == Seq((4L, "2026-01", "keep1"), (5L, "2026-02", "keep2")))
-      // the carry survived, restamped with the post-expiry listing
-      val carry = EventStreams.carryOf(key, "exact").orNull
-      assert(carry != null &&
-        carry.landingFp == graft.core.Tables.listing(spark, dir).mkString(";"))
-      // nothing sorts before the cutoff now: second run is a no-op
-      val again = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
-      assert(again.dirsDropped == 0 && again.filesDropped == 0 && again.carriesKept)
-    } finally EventStreams.carries.remove(key)
+    val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
+    assert(stats.dirsDropped == 2 && stats.filesDropped >= 2)
+    // expired dirs gone, survivors untouched
+    val monthDirs = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("month=")).map(_.getName).sorted
+    assert(monthDirs.toSeq == Seq("month=2026-01", "month=2026-02"))
+    val kept = spark.read.parquet(dir).select("id", "month", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
+    assert(kept == Seq((4L, "2026-01", "keep1"), (5L, "2026-02", "keep2")))
+    // nothing sorts before the cutoff now: second run is a no-op
+    val again = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
+    assert(again.dirsDropped == 0 && again.filesDropped == 0)
   }
 
   test("expireLanding: nested layout expires the column at its level under every parent") {
@@ -623,39 +550,6 @@ class CompactionSpec extends AnyFunSuite with SparkTestSession {
       val months = new java.io.File(s"$dir/source=$src").listFiles()
         .filter(_.isDirectory).map(_.getName).toSeq
       assert(months == Seq("month=2026-01"), s"source=$src kept $months")
-    }
-  }
-
-  test("expireLanding: a foreign append to a SURVIVING dir drops the carry") {
-    import spark.implicits._
-    val dir = tmpDir("graft-expire-race") + "/landing"
-    Seq((1L, "2025-12", "old"), (2L, "2026-01", "keep"))
-      .toDF("id", "month", "text")
-      .write.partitionBy("month").parquet(dir)
-    val key = LandingGuard.landingKey(spark, dir)
-    val preFp = graft.core.Tables.listing(spark, dir).mkString(";")
-    // two stages' carries on the one landing entry: an unexplained
-    // delta must drop them both, i.e. the whole entry
-    EventStreams.carries.put(key, Map(
-      "exact" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 2L, preFp),
-      "near" -> DedupStage.CarriedBloom(new Array[Byte](32), 128, 2L, preFp)))
-    // foreign rows land in the surviving month between the pre listing
-    // and the deletes — the carried blob lacks their texts, so a
-    // re-stamp would admit their duplicates; the carry must drop
-    LandingMaintenance.expireHook = { _ =>
-      Seq((99L, "2026-01", "raced")).toDF("id", "month", "text")
-        .write.mode("append").partitionBy("month").parquet(dir)
-    }
-    try {
-      val stats = LandingMaintenance.expireLanding(spark, dir, "month", "2026-01")
-      assert(stats.dirsDropped == 1 && !stats.carriesKept)
-      assert(!EventStreams.carries.containsKey(key), "landing's carry entry survived")
-      // the raced-in row and the surviving month are both intact
-      val kept = spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(kept == Seq(2L, 99L))
-    } finally {
-      LandingMaintenance.expireHook = _ => ()
-      EventStreams.carries.remove(key)
     }
   }
 

@@ -48,6 +48,26 @@ class ErddapDsv2Spec extends AnyFunSuite with SparkTestSession {
     assert(rows.length == 2)
     assert(rows(0).getTimestamp(0).toInstant.toString.startsWith("1960-01-16"))
     assert(rows(0).getDouble(4) == 20.5 && rows(1).getDouble(4) == 21.5)
+
+    // every time spelling Clean's try_to_timestamp types, the scan types
+    // the same: zone-less, date-only, `T` without a zone, and `Z`
+    val spellings = Seq("1960-03-16 00:00:00", "1960-04-16", "1960-05-16T00:00:00",
+      "1960-06-16T00:00:00Z")
+    val times = "time,depth,latitude,longitude,Temperature,Salinity\n" +
+      "UTC,m,degrees_north,degrees_east,degree_C,PSU\n" +
+      spellings.map(t => s"$t,0.0,32.5,-70.0,20.5,36.4\n").mkString
+    record(dir, ErddapUrl.build(32.5, -70.0, "1960-03-01", "1960-06-01"), times)
+    val scanned = read(dir)
+      .option("points", "32.5,-70.0")
+      .option("start_date", "1960-03-01").option("end_date", "1960-06-01")
+      .load()
+    val cleaned = graft.ops.Clean.cleanApiResponse(
+      new graft.sources.ErddapSource(new graft.sources.FixtureBackend(Map.empty), 0L)
+        .toRawDataFrame(spark, times))
+    assert(scanned.columns.toSeq == cleaned.columns.toSeq)
+    val got = scanned.collect().toSeq.sortBy(_.getTimestamp(0).getTime)
+    assert(got.length == 4 && got.forall(!_.isNullAt(0)), got.mkString("; "))
+    assert(got == cleaned.collect().toSeq)
   }
 
   test("time predicates narrow the URL slice (and stay exact post-scan)") {

@@ -610,4 +610,29 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     assert(escapers.size == 1 && escapers.head.contains("core/Json.scala:"),
       s"JSON string escapers in main: ${escapers.mkString(", ")}")
   }
+
+  test("streaming keeps one landing registry and no global mutable hook") {
+    // A landing's writer state lives on its one open handle
+    // (LandingGuard.Landing) and dies with it: a second JVM-global map
+    // would outlive the stream that filled it, and a global mutable
+    // hook is a test seam every run shares.
+    val streaming = mainSources.filter(_._1.getPath.contains("/graft/streaming/"))
+    val src = streaming.flatMap(_._2).mkString("\n")
+    assert(streaming.nonEmpty, "no streaming sources found")
+    val maps = "ConcurrentHashMap\\[".r.findAllIn(src).size
+    assert(maps == 1, s"ConcurrentHashMap declarations in streaming/: $maps")
+    // (covers `@volatile private[graft] var` too)
+    assert(!src.contains("private[graft] var"), "streaming/ declares a private[graft] var")
+  }
+
+  test("main has no carry re-stamp") {
+    // Maintenance holds the landing's single-writer slot, so no stream
+    // and no carry is open while it runs: the next stream reseeds.
+    val hits = for {
+      (f, lines) <- mainSources
+      (line, i) <- lines.zipWithIndex
+      if line.contains("restampCarries") || line.contains("carriesKept")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(hits.isEmpty, s"carry re-stamp in main: ${hits.mkString(", ")}")
+  }
 }

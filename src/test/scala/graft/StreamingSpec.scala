@@ -21,6 +21,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                  value: Double = 1.0): Event =
     Event(id, ts(minute), user, typ, value)
 
+  /** The open handle of the stream running on `landing`. */
+  private def opened(landing: String): LandingGuard.Landing =
+    LandingGuard.active(spark, landing).getOrElse(fail(s"no open handle on '$landing'"))
+
   test("tumbling window aggregates incrementally (update mode)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -360,7 +364,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       // append's observed size) — this is what lets sizedBits run
       // without a per-batch metadata count over the growing file
       // listing of the landing dir
-      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
+      assert(opened(landing).landed.get() == 3L)
     } finally q.stop()
   }
 
@@ -535,7 +539,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
-    EventStreams.carries.remove(LandingGuard.landingKey(spark, landing))
     spark.listenerManager.register(listener)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
@@ -552,7 +555,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       Thread.sleep(1500)
       assert(bloomScansOnLanding.get() == 0,
         s"expected 0 landing-scanning bloom builds, got ${bloomScansOnLanding.get()}")
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined, "carry missing after 3 batches")
+      assert(opened(landing).carry("exact").isDefined, "carry missing after 3 batches")
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
@@ -592,7 +595,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // pre-exist the corpus so the stream's first batch takes the
     // seed path (a restart over landed state — the expensive case)
     Seq((1L, "alpha")).toDF("doc_id", "text").write.parquet(landing)
-    EventStreams.landedCounts.remove(LandingGuard.landingKey(spark, landing)) // simulate a fresh JVM
     spark.listenerManager.register(listener)
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(
@@ -620,7 +622,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(countsOnLanding.get() == 1,
         s"expected exactly the one seed count over the landing dir, got ${countsOnLanding.get()}")
-      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 4L) // 1 seeded + 3 landed
+      assert(opened(landing).landed.get() == 4L) // 1 seeded + 3 landed
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
@@ -628,10 +630,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("ingestDedup: a deleted-and-recreated landing dir resets the carried count") {
-    // The carried counter is keyed by landing dir and survives query
-    // restarts in one JVM; deleting the dir and starting a NEW stream
-    // on the same path must reset it with the dir (a CAS(-1,0) would
-    // keep sizing the bloom off the ghost corpus forever).
+    // The carried counter lives on the landing's handle; deleting the
+    // dir and starting a NEW stream on the same path must count from
+    // the recreated dir, never size the bloom off the ghost corpus.
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft-recreate").toString
@@ -642,7 +643,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       in1.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
       q1.processAllAvailable()
-      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
+      assert(opened(landing).landed.get() == 3L)
     } finally q1.stop()
     // wipe the landing; new stream, same dir, fresh checkpoint
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(landing))
@@ -652,7 +653,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       in2.addData((10L, "delta"))
       q2.processAllAvailable()
-      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 1L,
+      assert(opened(landing).landed.get() == 1L,
         "carried count did not reset with the recreated landing dir")
       assert(spark.read.parquet(landing).count() == 1L)
     } finally q2.stop()
@@ -711,7 +712,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean near-dup batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "near").isDefined, "bucket carry missing")
+      assert(opened(landing).carry("near").isDefined, "bucket carry missing")
       // and the carry still DEDUPS: a cross-batch near-dup (edited
       // repost of textA) is a candidate, confirmed against the
       // landing (a legitimate read, after disarm), and dropped
@@ -775,20 +776,19 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     try {
       input.addData((1L, "alpha"), (2L, "beta"))
       q.processAllAvailable()
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined)
+      assert(opened(landing).carry("exact").isDefined)
       // arm the race: right after batch 2's append returns and before
       // its fold re-lists, a second writer lands (99,"omega")
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      EventStreams.postAppendHook = (dir, _) =>
-        if (dir == LandingGuard.landingKey(spark, landing) && fired.compareAndSet(false, true))
+      opened(landing).onPostAppend(_ =>
+        if (fired.compareAndSet(false, true))
           Seq((99L, "omega")).toDF("doc_id", "text")
-            .coalesce(1).write.mode("append").parquet(landing)
+            .coalesce(1).write.mode("append").parquet(landing))
       input.addData((3L, "gamma"))
       q.processAllAvailable()
-      EventStreams.postAppendHook = (_, _) => ()
       assert(fired.get(), "race hook did not fire")
       // the fold saw a delta with two write UUIDs → carry dropped
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isEmpty,
+      assert(opened(landing).carry("exact").isEmpty,
         "carry survived an out-of-band append inside the fold window")
       // next batch reseeds from the landing (which includes omega), so
       // the duplicate of the raced-in row is still rejected
@@ -798,11 +798,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(landed == Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"),
                            (5L, "epsilon"), (99L, "omega")))
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "exact").isDefined, "reseed did not restore the carry")
-    } finally {
-      EventStreams.postAppendHook = (_, _) => ()
-      q.stop()
-    }
+      assert(opened(landing).carry("exact").isDefined, "reseed did not restore the carry")
+    } finally q.stop()
   }
 
   test("appendOnlyDelta: only THIS batch's write job's part files validate the fold") {
@@ -862,22 +859,21 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val landing = java.nio.file.Files.createTempDirectory("graft-alldup").toString + "/corpus"
-    val key = LandingGuard.landingKey(spark, landing)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-alldup-ckpt").toString
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.ingestDedup(input.toDF().toDF("doc_id", "text"), landing, ckpt)
     try {
       input.addData((1L, "alpha"), (2L, "beta")); q.processAllAvailable()
-      assert(EventStreams.carryOf(key, "exact").isDefined)
-      val before = EventStreams.carryOf(key, "exact").orNull
+      assert(opened(landing).carry("exact").isDefined)
+      val before = opened(landing).carry("exact").orNull
       // batch 2: every row a cross-batch duplicate — appends 0 rows
       input.addData((3L, "alpha"), (4L, "beta")); q.processAllAvailable()
-      assert(EventStreams.carryOf(key, "exact").isDefined,
+      assert(opened(landing).carry("exact").isDefined,
         "carry dropped by an all-duplicate batch's empty append")
       // the blob folded nothing but the fingerprint advanced with the
       // (empty) part file — still the SAME filter content
       assert(java.util.Arrays.equals(
-        EventStreams.carryOf(key, "exact").orNull.blob, before.blob))
+        opened(landing).carry("exact").orNull.blob, before.blob))
       // and dedup continues exactly
       input.addData((5L, "alpha"), (6L, "gamma")); q.processAllAvailable()
       val landed = spark.read.parquet(landing)
@@ -962,8 +958,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     intercept[IllegalArgumentException](EventStreams.ingestNearDup(docs, landing, ckpt))
     intercept[IllegalArgumentException](EventStreams.ingestPipeline(docs, landing, ckpt))
     // the refused starts must not leave the landing's writer slot held
-    val key = LandingGuard.landingKey(spark, landing)
-    assert(!LandingGuard.activeIngests.containsKey(key),
+    assert(LandingGuard.active(spark, landing).isEmpty,
       "a rejected start must not hold the single-writer slot")
   }
 
@@ -1027,27 +1022,23 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       Thread.sleep(50)
     assert(!java.nio.file.Files.exists(lockFile),
       "clean stream termination must release the writer lock")
-    // (3) a live foreign pid with a STALE heartbeat is taken over
-    // (shrunken staleness seam), and the new stream heartbeats the
-    // lock back to fresh on its first batch
+    // (3) a live foreign pid with a STALE heartbeat (1 h, past the
+    // 30-min threshold) is taken over, and the new stream heartbeats
+    // the lock back to fresh on its first batch
     writeLock("1")
     java.nio.file.Files.setLastModifiedTime(lockFile,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    val saved = LandingGuard.ingestLockStaleMs
-    LandingGuard.ingestLockStaleMs = 60 * 1000
+    val (in3, q3) = startStream("graft-xjvm-ck3")
     try {
-      val (in3, q3) = startStream("graft-xjvm-ck3")
-      try {
-        in3.addData((2L, "beta")); q3.processAllAvailable()
-        assert(java.nio.file.Files.exists(lockFile), "takeover must re-create the lock")
-        val mtime = java.nio.file.Files.getLastModifiedTime(lockFile).toMillis
-        assert(System.currentTimeMillis() - mtime < 60 * 1000,
-          "the new writer's heartbeat must refresh the lock mtime")
-        val pid = new String(java.nio.file.Files.readAllBytes(lockFile), "UTF-8").trim
-        assert(pid == java.lang.ProcessHandle.current().pid().toString,
-          "takeover must stamp the new owner's pid")
-      } finally q3.stop()
-    } finally LandingGuard.ingestLockStaleMs = saved
+      in3.addData((2L, "beta")); q3.processAllAvailable()
+      assert(java.nio.file.Files.exists(lockFile), "takeover must re-create the lock")
+      val mtime = java.nio.file.Files.getLastModifiedTime(lockFile).toMillis
+      assert(System.currentTimeMillis() - mtime < 60 * 1000,
+        "the new writer's heartbeat must refresh the lock mtime")
+      val pid = new String(java.nio.file.Files.readAllBytes(lockFile), "UTF-8").trim
+      assert(pid == java.lang.ProcessHandle.current().pid().toString,
+        "takeover must stamp the new owner's pid")
+    } finally q3.stop()
   }
 
   test("cross-JVM writer lock: a displaced writer is FENCED — its heartbeat neither refreshes nor clobbers the usurper's lock, and the batch fails loudly") {
@@ -1147,10 +1138,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     java.nio.file.Files.write(iLock, "1".getBytes("UTF-8"))
     java.nio.file.Files.setLastModifiedTime(iLock,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    val saved = LandingGuard.ingestLockStaleMs
-    LandingGuard.ingestLockStaleMs = 60 * 1000
-    try LandingMaintenance.compactLanding(spark, landing)
-    finally LandingGuard.ingestLockStaleMs = saved
+    LandingMaintenance.compactLanding(spark, landing)
     assert(!java.nio.file.Files.exists(iLock),
       "maintenance should clear a stale-heartbeat writer lock like an ingest starter would")
     // landing stats reports both lock kinds
@@ -1547,7 +1535,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       // survivors land with their signature columns (near-dup state)
       assert(Seq("mh1", "mh2", "mh3", "mh4").forall(landed.columns.contains))
       // and the carried landed count tracked every append exactly
-      assert(EventStreams.landedCounts.get(LandingGuard.landingKey(spark, landing)).get() == 3L)
+      assert(opened(landing).landed.get() == 3L)
     } finally q.stop()
   }
 
@@ -1611,7 +1599,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       counter.armed.set(false)
       assert(counter.touches.get() == 0,
         s"clean semantic batches touched the landing ${counter.touches.get()} times")
-      assert(EventStreams.carryOf(LandingGuard.landingKey(spark, landing), "sem").isDefined, "sem bucket carry missing")
+      assert(opened(landing).carry("sem").isDefined, "sem bucket carry missing")
       // and the carry still DEDUPS: a scaled repost is a candidate,
       // cosine-confirmed against the landing (legitimate read, after
       // disarm), and dropped
@@ -1723,15 +1711,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val q = EventStreams.ingestPipeline(
       input.toDF().toDF("doc_id", "text", "embedding"), landing, ckpt,
       semantic = Some(EventStreams.SemanticStage(tau = 0.9)))
-    try {
+    // the carries die with the stream: read them while it runs
+    val carries = try {
       for (b <- 0L until 3L) {
         input.addData((1L to 4L).map(j => doc(b * 4 + j)): _*)
         q.processAllAvailable()
       }
+      opened(landing).carries
     } finally q.stop()
     val landed = spark.read.parquet(landing)
     assert(landed.count() == 12L, "fixture rows must all be fresh")
-    val key = LandingGuard.landingKey(spark, landing)
     val stageKeys = Seq(
       "exact" -> Seq(when(col("text").isNotNull, xxhash64(col("text")))),
       "near" -> Seq((1, "mh1", "mh2"), (2, "mh3", "mh4")).map { case (band, x, y) =>
@@ -1740,8 +1729,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       "sem" -> (0 until 2).map(t =>
         when(col(s"sb$t").isNotNull, xxhash64(lit(t), col(s"sb$t")))))
     for ((stage, keys) <- stageKeys) {
-      val carry = EventStreams.carryOf(key, stage)
-        .getOrElse(fail(s"$stage carry missing after 3 batches"))
+      val carry = carries.getOrElse(stage, fail(s"$stage carry missing after 3 batches"))
       // seeded once from batch 1's 4 rows (capacity 4×4): a reseed
       // would have sized for the larger landing, and would not be a fold
       assert(carry.capacity == 16L, s"$stage carry was reseeded, not folded")
@@ -2060,9 +2048,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val root = java.nio.file.Files.createTempDirectory("graft-gatefail").toString
     val landing = root + "/corpus"
     val lockFile = java.nio.file.Paths.get(root, ".ingest-writer-lock-corpus")
-    val key = LandingGuard.landingKey(spark, landing)
     def assertReleased(what: String): Unit = {
-      assert(!LandingGuard.activeIngests.containsKey(key),
+      assert(LandingGuard.active(spark, landing).isEmpty,
         s"$what: a failed start left the single-writer slot held")
       assert(!java.nio.file.Files.exists(lockFile),
         s"$what: a failed start left the writer lock file")
@@ -2105,27 +2092,81 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[Long]
     val q = input.toDF().writeStream.format("noop").start()
-    // listeners run in registration order on one bus thread: once this
-    // one has seen the termination, every earlier one has too
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val probe = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.runId == q.runId) seen.countDown()
+    q.stop(); q.awaitTermination()
+    val landing = java.nio.file.Files.createTempDirectory("graft-term").toString + "/corpus"
+    val handle = LandingGuard.open(spark, landing)
+    val runs = List.fill(3)(new java.util.concurrent.atomic.AtomicInteger())
+    handle.startStream { release =>
+      runs.foreach(c => release(() => { c.incrementAndGet(); () }))
+      q
     }
-    spark.streams.addListener(probe)
+    assert(runs.map(_.get) == List(1, 1, 1), "each cleanup must run once, at registration")
+    assert(LandingGuard.active(spark, landing).isEmpty, "the ended run still holds the slot")
+    handle.close() // a later termination event for the run
+    assert(runs.map(_.get) == List(1, 1, 1), "a later termination event must run none")
+  }
+
+  test("landing release: a stopped stream's handle, carries and count are released; a restart reseeds once and still dedups") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-release").toString
+    val landing = root + "/corpus"
+    val in1 = MemoryStream[(Long, String)]
+    val q1 = EventStreams.ingestPipeline(in1.toDF().toDF("doc_id", "text"), landing, root + "/ck1")
+    val handle = try {
+      in1.addData((1L, "alpha"), (2L, "beta")); q1.processAllAvailable()
+      in1.addData((3L, "gamma")); q1.processAllAvailable()
+      val h = opened(landing)
+      assert(h.carries.keySet == Set("exact", "near") && h.landed.get() == 3L)
+      h
+    } finally q1.stop()
+    // termination is observed asynchronously — poll, as for the lock
+    def released = LandingGuard.active(spark, landing).isEmpty &&
+      handle.carries.isEmpty && handle.landed.get() == -1L
+    val deadline = System.currentTimeMillis() + 15000
+    while (!released && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(LandingGuard.active(spark, landing).isEmpty, "the registry still holds the stopped stream")
+    assert(handle.carries.isEmpty, "the stopped stream's carries survived it")
+    assert(handle.landed.get() == -1L, "the stopped stream's landed count survived it")
+    // a second stream reseeds every stage's carry ONCE (one bloom
+    // build over the landing per stage) and still drops a cross-batch
+    // duplicate on both batches
+    val bloomScans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def touchesLanding(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
+        qe.analyzed.collect {
+          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            lr.relation match {
+              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+                fs.location.rootPaths.exists(_.toString.contains(landing))
+              case _ => false
+            }
+        }.exists(identity)
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "collect" && qe.analyzed.toString.contains("bloom_agg") &&
+            touchesLanding(qe))
+          bloomScans.incrementAndGet()
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val in2 = MemoryStream[(Long, String)]
+    val q2 = EventStreams.ingestPipeline(in2.toDF().toDF("doc_id", "text"), landing, root + "/ck2")
     try {
-      q.stop(); q.awaitTermination()
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      val runs = List.fill(3)(new java.util.concurrent.atomic.AtomicInteger())
-      LandingGuard.onTermination(q, runs.map(c => () => { c.incrementAndGet(); () }))
-      assert(runs.map(_.get) == List(1, 1, 1), "each cleanup must run once, at registration")
-      LandingGuard.terminated(q.runId) // a later termination event for the run
-      assert(runs.map(_.get) == List(1, 1, 1), "a later termination event must run none")
-    } finally spark.streams.removeListener(probe)
+      in2.addData((10L, "alpha"), (11L, "delta")); q2.processAllAvailable()
+      in2.addData((12L, "delta"), (13L, "epsilon")); q2.processAllAvailable()
+      Thread.sleep(1500) // quiesce the async listener bus
+      assert(bloomScans.get() == 2, s"expected one reseed per stage, got ${bloomScans.get()} builds")
+      val landed = spark.read.parquet(landing).select("doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(landed == Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"),
+                           (11L, "delta"), (13L, "epsilon")))
+    } finally {
+      q2.stop()
+      spark.listenerManager.unregister(listener)
+    }
   }
 }
